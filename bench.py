@@ -444,7 +444,7 @@ def _ab_check(
             else {}
         ),
         "timing": "warm_single_run_each"
-        + ("_bracketed" if regressed else ""),
+        + ("_bracketed" if verdicts is not None else ""),
     }
 
 

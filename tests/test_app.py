@@ -237,7 +237,7 @@ def test_planner_routes_flagship_to_incremental(spark, tmp_path):
         .build()
     )
     assert app.maintenance_mode == "incremental"
-    assert app._dim_name == "customer_fx"
+    assert app.maintained_tables() == {"orders_fx", "customer_fx"}
     app.bootstrap()
 
     customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
@@ -658,6 +658,33 @@ def test_describe_compact_vacuum_lifecycle(spark, tmp_path):
     assert d["maintenance_strategy"] == "IncrementalAggMV"
     assert d["mv_pk"] == ["o_orderpriority"]
     assert d["target_version"] is not None and "1" in d["committed_batches"]
+    # the winner is the first table entry: no later matcher ran
+    assert d["routing"] == [{"route": "agg", "verdict": "routed"}]
+
+    # A declared PK the group keys contradict: the agg entry's shape
+    # matches but its gate rejects; every later entry (and the cascade
+    # probe) finds no shape, and the view falls back to recompute —
+    # which refuses an unknown table like every other route.
+    gated = (
+        MVApp.builder(spark)
+        .source("orders_dcv", f"{SF_DIR}/orders.parquet", pk=["o_orderkey"])
+        .query(
+            "SELECT o_orderpriority, count(*) AS n, sum(o_totalprice) AS total "
+            "FROM orders_dcv GROUP BY o_orderpriority"
+        )
+        .target(str(tmp_path / "mv_dcv_gated"), pk=["n"])
+        .build()
+    )
+    routing = gated.describe()["routing"]
+    assert routing[0] == {"route": "agg", "verdict": "gate"}
+    assert routing[-2:] == [
+        {"route": "cascade", "verdict": "no_shape"},
+        {"route": "recompute", "verdict": "routed"},
+    ]
+    assert {r["verdict"] for r in routing[1:-2]} == {"no_shape"}
+    assert gated.maintenance_strategy == "RecomputeMV"
+    with pytest.raises(ValueError, match="maintains only"):
+        gated.refresh({"lineitem": changes}, batch_id=1)
 
     before = {r.o_orderpriority: r.n for r in app.read().collect()}
     app.compact()
@@ -1846,6 +1873,62 @@ def test_group_order_limit_routes_and_converges(spark, tmp_path):
     )
     app.refresh({"f_gol": b1}, batch_id=1)
     assert {(r.cust, r.n) for r in app.read().collect()} == {(4, 6), (1, 4), (2, 4)}
+
+
+def test_group_order_limit_cascade_replays_through_shared_mirror(spark, tmp_path):
+    """The agg-inner / global-top-k-outer cascade reads the inner target
+    through _SharedMirrorStore; a crash after the inner level committed
+    batch 1 replays to the same view."""
+    from tiflink_spark.app import _SharedMirrorStore
+
+    fact = spark.createDataFrame(
+        [(i, i % 5) for i in range(20)], "k int, cust int"
+    )
+    app = (
+        MVApp.builder(spark)
+        .source("f_golr", fact, pk=["k"])
+        .query(
+            "SELECT cust, count(*) AS n FROM f_golr GROUP BY cust "
+            "ORDER BY n DESC, cust LIMIT 3"
+        )
+        .target(str(tmp_path / "golr"))
+        .num_buckets(2)
+        .build()
+    )
+    assert app.describe()["routing"][-1] == {"route": "cascade", "verdict": "routed"}
+    assert app._mv.outer.maintenance_strategy == "IncrementalGlobalTopKMV"
+    assert isinstance(app._mv.outer._stores[app._mv.alias], _SharedMirrorStore)
+    app.bootstrap()
+
+    b1 = spark.createDataFrame(
+        [(100, 4, "+I", 0), (101, 4, "+I", 1), (0, 0, "-D", 2), (5, 0, "-D", 3)],
+        "k int, cust int, __op string, __seq long",
+    )
+    # crash AFTER the inner level committed batch 1, BEFORE the outer
+    app._mv.inner.refresh({"f_golr": b1}, batch_id=1)
+    app.refresh({"f_golr": b1}, batch_id=1)
+    assert {(r.cust, r.n) for r in app.read().collect()} == {(4, 6), (1, 4), (2, 4)}
+    # a fully committed batch replays as a no-op
+    assert app.refresh({"f_golr": b1}, batch_id=1) is False
+
+    b2 = spark.createDataFrame(
+        [(1, 0, "+U", 0), (2, 0, "+U", 1), (3, 0, "+U", 2)],
+        "k int, cust int, __op string, __seq long",
+    )
+    app.refresh({"f_golr": b2}, batch_id=2)
+    assert {(r.cust, r.n) for r in app.read().collect()} == {(4, 6), (0, 5), (1, 3)}
+
+
+def test_shared_mirror_projection_fails_fast_on_missing_column(spark, tmp_path):
+    from tiflink_spark.app import _SharedMirrorStore
+    from tiflink_spark.store import KeyedParquetStore
+
+    store = KeyedParquetStore(spark, str(tmp_path / "tgt"), ["k"], num_buckets=2)
+    store.bootstrap(spark.createDataFrame([(1, 2)], "k int, n long"))
+    assert _SharedMirrorStore(store, ["k", "n"]).read().columns == ["k", "n"]
+    with pytest.raises(ValueError, match=r"lacks planned column\(s\) \['gone'\]") as e:
+        _SharedMirrorStore(store, ["k", "gone"]).read()
+    assert store.path in str(e.value)
 
 
 def test_median_measure_routes_and_converges(spark, tmp_path):

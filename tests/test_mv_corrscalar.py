@@ -430,3 +430,32 @@ class TestScalarSingleInequalityDecomposition:
             num_buckets=2, shuffle_partitions=2,
         )
         assert dmx._ineq_1d() is not None
+
+    def test_mismatched_operand_types_keep_pair_join(self, spark, tmp_path):
+        """A string ie against a numeric oe unions to string (lexicographic
+        order: '100' < '95.0'), while the pair join compares numerically —
+        the prefix path must fail closed to the pair join."""
+        from tiflink_spark.mv import IncrementalCorrScalarAggMV
+        from tests.test_mv_corrsemijoin import _mk
+
+        dim = _mk(spark, [(1, 10, 95.0), (2, 20, 5.0)], "id long, dkey int, bal double")
+        fact = _mk(
+            spark, [(101, 10, "9"), (102, 20, "10"), (103, 10, "100")],
+            "oid long, okey int, price string",
+        )
+
+        def mv(tag, fact_df):
+            return IncrementalCorrScalarAggMV(
+                spark, dim, ["id"], fact_df, ["oid"],
+                akind="count", acol=None, alias="a",
+                corr=[("price", "<", "bal")], out_cols=["id"],
+                work_dir=str(tmp_path / tag), num_buckets=2, shuffle_partitions=2,
+            )
+
+        strv = mv("str", fact)
+        assert strv._ineq_1d() is None
+        got = {r["id"]: r["a"] for r in strv._valued_rows(dim, strv._fact_eval(fact), hint=True).collect()}
+        assert got == {1: 2, 2: 0}
+        # mixed NUMERIC operand types still take the prefix path
+        intv = mv("int", fact.withColumn("price", F.col("price").cast("int")))
+        assert intv._ineq_1d() is not None

@@ -29,15 +29,31 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from tiflink_spark.catalog import Catalog, default_pk
+from tiflink_spark.changelog import apply_filter
 from tiflink_spark.mv import (
     IncrementalAggMV,
+    IncrementalCorrScalarAggMV,
+    IncrementalCorrSemiJoinMV,
+    IncrementalFullOuterJoinMV,
+    IncrementalGlobalTopKMV,
+    IncrementalGroupingSetsMV,
     IncrementalJoinAggMV,
     IncrementalJoinMV,
+    IncrementalJoinProjectionMV,
+    IncrementalProjectionMV,
+    IncrementalSemiJoinMV,
+    IncrementalSetOpMV,
+    IncrementalTemporalJoinMV,
+    IncrementalThetaJoinMV,
     IncrementalTopKMV,
+    IncrementalUnionMV,
+    IncrementalWindowMV,
     RecomputeMV,
 )
 from tiflink_spark.incremental import Measure
@@ -63,6 +79,8 @@ from tiflink_spark.planner import (
     match_topn_shape,
     match_union_all_shape,
     match_window_shape,
+    rewrite_mn_join_agg,
+    rewrite_theta_tree,
     spark_executable_query,
     split_group_order_limit,
     split_nested_query,
@@ -142,6 +160,15 @@ class MVAppBuilder:
         self._num_buckets: int | None = None
         self._shuffle_partitions: int | None = None
         self._ddl_hook = None
+        self._validate_pks = False
+        self._column_names: list[str] | None = None
+        self._window_strategy = "sort"
+        self._drop_old_table = False
+        self._force_new_table = False
+        self._force_recompute = False
+        self._cost_advisor = False
+        self._advisor_threshold: float | None = None
+        self._late_dim = "raise"
 
     def source(
         self,
@@ -236,7 +263,7 @@ class MVAppBuilder:
         O(versions of dirty keys) per dim batch instead of O(δ)."""
         if mode not in ("raise", "reorder"):
             raise ValueError(f"late_dim must be 'raise' or 'reorder', got {mode!r}")
-        self._builder_late_dim = mode
+        self._late_dim = mode
         return self
 
     def cost_advisor(
@@ -321,16 +348,16 @@ class MVAppBuilder:
             self._pk,
             self._num_buckets,
             self._shuffle_partitions,
-            ddl_hook=getattr(self, "_ddl_hook", None),
-            validate_pks=getattr(self, "_validate_pks", False),
-            column_names=getattr(self, "_column_names", None),
-            window_strategy=getattr(self, "_window_strategy", "sort"),
-            drop_old_table=getattr(self, "_drop_old_table", False),
-            force_new_table=getattr(self, "_force_new_table", False),
-            force_recompute=getattr(self, "_force_recompute", False),
-            cost_advisor=getattr(self, "_cost_advisor", False),
-            advisor_threshold=getattr(self, "_advisor_threshold", None),
-            late_dim=getattr(self, "_builder_late_dim", "raise"),
+            ddl_hook=self._ddl_hook,
+            validate_pks=self._validate_pks,
+            column_names=self._column_names,
+            window_strategy=self._window_strategy,
+            drop_old_table=self._drop_old_table,
+            force_new_table=self._force_new_table,
+            force_recompute=self._force_recompute,
+            cost_advisor=self._cost_advisor,
+            advisor_threshold=self._advisor_threshold,
+            late_dim=self._late_dim,
         )
 
 
@@ -364,9 +391,13 @@ class _SharedMirrorStore:
         from tiflink_spark.changelog import OP_COL, SEQ_COL
 
         by_lower = {c.lower(): c for c in df.columns}
-        want = [
-            by_lower[c.lower()] for c in self._cols if c.lower() in by_lower
-        ]
+        missing = [c for c in self._cols if c.lower() not in by_lower]
+        if missing:
+            raise ValueError(
+                f"shared cascade target {self._store.path} lacks planned "
+                f"column(s) {missing}"
+            )
+        want = [by_lower[c.lower()] for c in self._cols]
         have = {w.lower() for w in want}
         tail = [
             c
@@ -438,15 +469,10 @@ class CascadeMV:
         # directly (round 7 — e.g. the theta side of a theta-over-equi
         # tree) flow straight to the outer alongside that diff. A table
         # maintained at both levels goes to both — each keeps its own
-        # store, both see the same changelog.
+        # store, both see the same changelog. MVApp.refresh already
+        # refused tables neither level maintains.
         inner_tabs = self.inner.maintained_tables()
         outer_tabs = self.outer.maintained_tables() - {self.alias}
-        unknown = set(changes) - inner_tabs - outer_tabs
-        if unknown:
-            raise ValueError(
-                f"cascade MV maintains only {sorted(inner_tabs | outer_tabs)}; "
-                f"got changes for {sorted(unknown)}"
-            )
         inner_changes = {k: v for k, v in changes.items() if k in inner_tabs}
         outer_changes = {k: v for k, v in changes.items() if k in outer_tabs}
         # A single-target inner cascades through its target store; a
@@ -498,6 +524,566 @@ class CascadeMV:
 
     def read(self, version: int | None = None):
         return self.outer.read(version)
+
+
+class _Routed(NamedTuple):
+    """What a route's build step hands MVApp's install step: the
+    maintenance object, the MV key it enforces, whether that key is a
+    true unique constraint (union-all, bag set ops, full outer and
+    grouping sets overclaim it — no cascade may build on such a key),
+    the source tables whose changelogs it consumes, their source
+    stores, and how a changes dict reaches ``mv.refresh``."""
+
+    mv: object
+    mv_pk: list
+    tables: frozenset
+    stores: dict
+    feed: Callable
+    pk_is_unique: bool = True
+
+
+def _dict_feed(mv, changes, batch_id):
+    """Multi-table routes take the whole {table: changes} dict."""
+    return mv.refresh(changes, batch_id)
+
+
+def _pair_feed(left, right):
+    """Two-sided routes take ``refresh(left_changes, right_changes)``."""
+
+    def feed(mv, changes, batch_id):
+        ld, rd = changes.get(left), changes.get(right)
+        if ld is None and rd is None:
+            return False
+        return mv.refresh(ld, rd, batch_id)
+
+    return feed
+
+
+def _fact_feed(fact, dim=None, derive=(), where=None):
+    """Fact (+dim) routes: computed keys are derived onto every fact
+    batch and a row-local WHERE follows the stateless changelog filter
+    rule (rows leaving the predicate become -D) — exactly how
+    _fact_frame prepared the bootstrap frame."""
+
+    def feed(mv, changes, batch_id):
+        fd, dd = changes.get(fact), changes.get(dim)
+        if fd is None and dd is None:
+            return False
+        if fd is not None:
+            for alias, expr in derive:
+                fd = fd.withColumn(alias, F.expr(expr))
+            if where is not None:
+                fd = apply_filter(fd, where)
+        if dd is None:
+            return mv.refresh(fd, batch_id)
+        return mv.refresh(fd, batch_id, dim_changes=dd)
+
+    return feed
+
+
+class _Ctx(NamedTuple):
+    """What a route's match and build steps read."""
+
+    spark: SparkSession
+    dfs: dict  # source name -> (TableSpec, DataFrame)
+    query: str  # normalized
+    pk: list | None  # declared target PK
+    default_pk: list  # the first-output-column fallback
+    cols: dict  # source name -> column names
+    kw: dict  # work_dir / num_buckets / shuffle_partitions
+    window_strategy: str
+
+    @property
+    def names(self) -> set:
+        return set(self.dfs)
+
+    @property
+    def pks(self) -> dict:
+        return {n: d[0].pk for n, d in self.dfs.items()}
+
+    def df(self, name):
+        return self.dfs[name][1]
+
+    def pk_of(self, name):
+        return self.dfs[name][0].pk
+
+    def pk_ok(self, want) -> bool:
+        """An undeclared target PK, or one equal to the route's key."""
+        return self.pk is None or list(self.pk) == list(want)
+
+
+def _verdict(shape, ok: bool) -> str:
+    return "routed" if ok else "no_shape" if shape is None else "gate"
+
+
+def _selects(out_cols, keys) -> bool:
+    sel = {c.lower() for c in out_cols}
+    return all(k.lower() in sel for k in keys)
+
+
+def _covers_pk(c: _Ctx, fact, order_cols) -> bool:
+    """Determinism rule of the ranking routes: the ORDER BY column set
+    must cover the fact PK (a provably total order; ORDER BY the PK
+    itself counts) — without it, rank slots on ties are ambiguous."""
+    pk = c.pk_of(fact)
+    return bool(pk) and {p.lower() for p in pk} <= {o.lower() for o in order_cols}
+
+
+def _fact_frame(c: _Ctx, fact, where=None, derive=()):
+    df = c.df(fact)
+    for alias, expr in derive:
+        df = df.withColumn(alias, F.expr(expr))
+    return df if where is None else df.filter(F.expr(where))
+
+
+def _fact_routed(mv, fact, mv_pk, where=None, derive=(), dim=None, unique=True):
+    stores = {fact: mv.fact_store, **({dim: mv.dim_store} if dim else {})}
+    feed = _fact_feed(fact, dim, tuple(derive), where)
+    return _Routed(mv, list(mv_pk), frozenset(stores), stores, feed, unique)
+
+
+def _pair_routed(mv, left, right, mv_pk, lstore, rstore, unique=True):
+    stores = {left: lstore, right: rstore}
+    return _Routed(mv, list(mv_pk), frozenset(stores), stores, _pair_feed(left, right), unique)
+
+
+def _star_routed(mv, fact, dims, mv_pk):
+    stores = {fact: mv.fact_store, **{d.dim: mv.dim_stores[d.dim] for d in dims}}
+    return _Routed(mv, list(mv_pk), frozenset(stores), stores, _dict_feed)
+
+
+# The route table. Each entry is (name, match, accept, build): ``match``
+# calls one planner matcher, ``accept`` is the route's gate (declared-PK
+# agreement, fact PK present, PK columns selected), ``build`` constructs
+# the maintenance class and returns its _Routed record. MVApp._plan
+# walks the entries in registration order and stops at the first
+# accepted one, so ORDER IS PRECEDENCE: every richer shape is tried
+# before the shapes whose syntax it would also satisfy.
+_ROUTES: list[tuple] = []
+
+
+def _route(name, match, accept):
+    def register(build):
+        _ROUTES.append((name, match, accept, build))
+        return build
+
+    return register
+
+
+# The canonical single-table aggregate: per-batch work ∝ changed keys.
+# The group-key set is the derived unique constraint (the reference's
+# first PK-inference rule, TiFlinkApp.java:276-281). Computed group keys
+# (GROUP BY date_trunc(...) AS day) derive onto the fact rows, after
+# which they behave exactly like stored columns.
+@_route(
+    "agg",
+    lambda c: match_agg_shape(c.query, c.names, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok(s.group_keys),
+)
+def _agg(c, s):
+    mv = IncrementalAggMV(
+        c.spark, _fact_frame(c, s.fact, s.where, s.key_exprs), c.pk_of(s.fact),
+        list(s.group_keys), list(s.measures), target_filter=s.having, **c.kw,
+    )
+    return _fact_routed(mv, s.fact, s.group_keys, s.where, s.key_exprs)
+
+
+# GROUPING SETS / ROLLUP / CUBE — one aggregate state per grouping set
+# over a SHARED fact store (SURVEY §2.2 "expand to union of aggs"; the
+# reference gets these from Flink's Expand node, TiFlinkApp.java:270).
+# The view is a bag union (subtotal rows carry NULL keys), so no PK
+# declaration is accepted and the key is not unique.
+@_route(
+    "grouping_sets",
+    lambda c: match_grouping_sets_shape(c.query, c.names, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk is None,
+)
+def _grouping_sets(c, s):
+    mv = IncrementalGroupingSetsMV(
+        c.spark, _fact_frame(c, s.fact, s.where, s.key_exprs), c.pk_of(s.fact),
+        list(s.all_keys), list(s.sets), list(s.measures),
+        grouping_items=list(s.grouping_items), gid_items=list(s.gid_items),
+        tail_order=list(s.tail_order), target_filter=s.having,
+        hidden_measures=list(s.hidden), having_gcalls=list(s.having_gcalls),
+        **c.kw,
+    )
+    return _fact_routed(mv, s.fact, c.default_pk, s.where, s.key_exprs, unique=False)
+
+
+# Global (no GROUP BY) aggregate — the dashboard total, keyed by a
+# derived constant; the one row survives table emptiness at its zero
+# state. The advertised PK stays the first-output-column fallback; the
+# hidden "__g" key never reaches the query schema.
+@_route(
+    "global_agg",
+    lambda c: match_global_agg_shape(c.query, c.names, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk is None,
+)
+def _global_agg(c, s):
+    derive = [("__g", "0")]
+    mv = IncrementalAggMV(
+        c.spark, _fact_frame(c, s.fact, s.where, derive), c.pk_of(s.fact),
+        ["__g"], list(s.measures), global_group=True, **c.kw,
+    )
+    return _fact_routed(mv, s.fact, c.default_pk, s.where, derive)
+
+
+# SELECT DISTINCT — a hidden COUNT(*)-per-key aggregate: a key's first
+# arrival inserts the MV row, its last departure deletes it.
+@_route(
+    "distinct",
+    lambda c: match_distinct_shape(c.query, c.names, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok(s.cols),
+)
+def _distinct(c, s):
+    mv = IncrementalAggMV(
+        c.spark, _fact_frame(c, s.fact, s.where), c.pk_of(s.fact),
+        list(s.cols), [Measure("count", None, "__cnt")], **c.kw,
+    )
+    return _fact_routed(mv, s.fact, s.cols, s.where)
+
+
+# Star/snowflake join aggregate (fact ⋈ dims GROUP BY): dirty-join-key
+# re-derivation of the joined relation feeds the aggregate state merge;
+# changelogs on ALL sides maintain the view.
+@_route(
+    "join_agg",
+    lambda c: match_join_agg_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok(s.group_keys),
+)
+def _join_agg(c, s):
+    mv = IncrementalJoinAggMV(
+        c.spark, fact_name=s.fact, fact=c.df(s.fact), fact_pk=c.pk_of(s.fact),
+        dims=list(s.dims), dim_dfs={d.dim: c.df(d.dim) for d in s.dims},
+        group_keys=list(s.group_keys), measures=list(s.measures),
+        fact_cols=list(s.fact_cols), where=s.where, target_filter=s.having,
+        key_exprs=list(s.key_exprs), **c.kw,
+    )
+    return _star_routed(mv, s.fact, s.dims, s.group_keys)
+
+
+# The reference's flagship: correlated scalar COUNT over a dimension
+# (TiFlinkExample.java:10-16), decorrelated to the dim-joined
+# IncrementalAggMV. A NULL fact FK matches no dim row and would crash
+# the fk-keyed state store, so such rows are dropped at bootstrap AND
+# per batch (the changelog filter demotes an update to a NULL fk to -D).
+@_route(
+    "correlated_count",
+    lambda c: match_correlated_count_shape(c.query, c.names, c.pks, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok([s.dim_key]),
+)
+def _correlated_count(c, s):
+    where = f"{s.fact_key} IS NOT NULL"
+    mv = IncrementalAggMV(
+        c.spark, _fact_frame(c, s.fact, where), c.pk_of(s.fact), s.fact_key,
+        [Measure(s.agg_kind, s.agg_col, s.alias)], dim=c.df(s.dim),
+        dim_key=s.dim_key, dim_cols=list(s.dim_cols), **c.kw,
+    )
+    return _fact_routed(mv, s.fact, [s.dim_key], where, dim=s.dim)
+
+
+# Theta-correlated SCALAR aggregate: per-row sets cannot decorrelate to
+# a keyed GROUP BY, so the aggregate is evaluated exactly per dirty dim
+# row; fact churn re-evaluates only dim rows in theta range.
+@_route(
+    "corr_scalar",
+    lambda c: match_corr_scalar_shape(c.query, c.names, c.pks, c.cols),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok([s.dim_pk]),
+)
+def _corr_scalar(c, s):
+    mv = IncrementalCorrScalarAggMV(
+        c.spark, dim=c.df(s.dim), dim_pk=c.pk_of(s.dim), fact=c.df(s.fact),
+        fact_pk=c.pk_of(s.fact), akind=s.akind, acol=s.acol, alias=s.alias,
+        corr=list(s.corr), out_cols=list(s.out_cols),
+        inner_where=s.inner_where, **c.kw,
+    )
+    return _pair_routed(mv, s.fact, s.dim, [s.dim_pk], mv.fact_store, mv.dim_store)
+
+
+def _semi_gate(c, s) -> bool:
+    """The existence-filter routes are keyed by the fact PK: both sides
+    need a PK, and the fact PK must be selected."""
+    fpk = c.pk_of(s.fact)
+    return bool(fpk and c.pk_of(s.other) and _selects(s.out_cols, fpk) and c.pk_ok(fpk))
+
+
+def _semi_kw(c, s) -> dict:
+    return dict(
+        fact=c.df(s.fact), fact_pk=c.pk_of(s.fact), other=c.df(s.other),
+        other_pk=c.pk_of(s.other), out_cols=list(s.out_cols), anti=s.anti,
+        where=s.where, **c.kw,
+    )
+
+
+def _semi_routed(c, s, mv):
+    return _pair_routed(mv, s.fact, s.other, c.pk_of(s.fact), mv.fact_store, mv.other_store)
+
+
+# EXISTS / NOT EXISTS / IN subquery — the streaming semi/anti join with
+# presence state per key. NOT IN (null_aware) works on any inner column:
+# the MV maintains the inner's null-presence bit explicitly.
+@_route("semijoin", lambda c: match_semijoin_shape(c.query, c.names, c.cols), _semi_gate)
+def _semijoin(c, s):
+    mv = IncrementalSemiJoinMV(
+        c.spark, fact_key=list(s.fact_keys), other_key=list(s.other_keys),
+        null_aware=s.null_aware, **_semi_kw(c, s),
+    )
+    return _semi_routed(c, s, mv)
+
+
+# Filtered / CORRELATED IN-subquery: row-local inner conjuncts keep the
+# presence-state class with the filter applied to the inner store;
+# correlated comparison terms switch to exact per-outer-row membership.
+@_route(
+    "corr_semijoin",
+    lambda c: match_corr_semijoin_shape(c.query, c.names, c.cols),
+    _semi_gate,
+)
+def _corr_semijoin(c, s):
+    keys = dict(fact_key=s.fact_key, other_key=s.other_key, **_semi_kw(c, s))
+    if s.corr:
+        mv = IncrementalCorrSemiJoinMV(
+            c.spark, corr=list(s.corr), inner_where=s.inner_where, **keys
+        )
+    else:
+        mv = IncrementalSemiJoinMV(
+            c.spark, null_aware=s.anti, other_where=s.inner_where, **keys
+        )
+    return _semi_routed(c, s, mv)
+
+
+# Theta-EXISTS: correlation mixing equalities with non-equality terms
+# (or none). Membership is per-row non-emptiness, evaluated exactly per
+# dirty row; equality conjuncts ride as '=' theta terms.
+@_route(
+    "corr_exists",
+    lambda c: match_corr_exists_shape(c.query, c.names, c.cols),
+    _semi_gate,
+)
+def _corr_exists(c, s):
+    mv = IncrementalCorrSemiJoinMV(
+        c.spark, fact_key=None, other_key=None, corr=list(s.corr),
+        inner_where=s.inner_where, exists_mode=True, **_semi_kw(c, s),
+    )
+    return _semi_routed(c, s, mv)
+
+
+def _join_pk(c, s) -> list:
+    return [*c.pk_of(s.left), *c.pk_of(s.right)]
+
+
+# Bare two-sided equi-join: dirty-join-key recompute with changelogs on
+# both sides. Keyed by the concatenated source PKs, all selected.
+@_route(
+    "join",
+    lambda c: match_join_shape(c.query, c.names, c.cols),
+    lambda c, s: c.pk_of(s.left) and c.pk_of(s.right)
+    and _selects(s.out_cols, _join_pk(c, s)) and c.pk_ok(_join_pk(c, s)),
+)
+def _join(c, s):
+    mv = IncrementalJoinMV(
+        c.spark, left=c.df(s.left), left_pk=c.pk_of(s.left), right=c.df(s.right),
+        right_pk=c.pk_of(s.right),
+        join_key=s.join_key if s.right_key is None else (s.join_key, s.right_key),
+        out_cols=list(s.out_cols), where=s.where, **c.kw,
+    )
+    return _pair_routed(mv, s.left, s.right, _join_pk(c, s), mv.left_store, mv.right_store)
+
+
+# Two-sided NON-EQUI join (interval bands, BETWEEN, arbitrary theta):
+# dirty-PK recompute over both post-merge states. After the equi routes.
+@_route(
+    "theta_join",
+    lambda c: match_theta_join_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk_ok(_join_pk(c, s)),
+)
+def _theta_join(c, s):
+    mv = IncrementalThetaJoinMV(
+        c.spark, left=c.df(s.left), left_pk=c.pk_of(s.left), right=c.df(s.right),
+        right_pk=c.pk_of(s.right), predicate=s.predicate,
+        out_cols=list(s.out_cols), **c.kw,
+    )
+    return _pair_routed(mv, s.left, s.right, _join_pk(c, s), mv.left_store, mv.right_store)
+
+
+# FULL OUTER equi-join — dirty-key recompute + diff over a synthetic row
+# identity (dim-only rows carry NULL fact PKs), so the visible output
+# has no unique column.
+@_route(
+    "full_outer",
+    lambda c: match_full_outer_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk is None,
+)
+def _full_outer(c, s):
+    mv = IncrementalFullOuterJoinMV(
+        c.spark, fact=c.df(s.fact), fact_pk=c.pk_of(s.fact), dim=c.df(s.dim),
+        dim_keys=list(s.dim_keys), fact_fks=list(s.fact_fks),
+        out_cols=list(s.out_cols), where=s.where, **c.kw,
+    )
+    return _pair_routed(
+        mv, s.fact, s.dim, c.pk_of(s.fact), mv.fact_store, mv.dim_store, unique=False
+    )
+
+
+# Lookup enrichment — the joined relation itself keyed by the fact PK:
+# fact [LEFT] JOIN dims, each dim entering through its declared PK.
+# After the bare join (which also handles M:N edges); adds LEFT dims,
+# snowflake chains, composite keys and derived row-local expressions.
+@_route(
+    "join_projection",
+    lambda c: match_join_projection_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk_of(s.fact) and c.pk_ok(c.pk_of(s.fact)),
+)
+def _join_projection(c, s):
+    mv = IncrementalJoinProjectionMV(
+        c.spark, fact_name=s.fact, fact=c.df(s.fact), fact_pk=c.pk_of(s.fact),
+        dims=list(s.dims), dim_dfs={d.dim: c.df(d.dim) for d in s.dims},
+        group_keys=[], measures=[], fact_cols=list(s.fact_cols), where=s.where,
+        key_exprs=list(s.key_exprs), out_cols=list(s.out_cols), **c.kw,
+    )
+    return _star_routed(mv, s.fact, s.dims, c.pk_of(s.fact))
+
+
+# Bare multi-branch UNION ALL — stateless under changelogs: each
+# branch's changes project into the target keyed by (branch tag, PK).
+# The advertised key (the shared key column) is unique per branch only.
+@_route(
+    "union_all",
+    lambda c: match_union_all_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk is None,
+)
+def _union_all(c, s):
+    tables = [t for t, _ in s.branches]
+    mv = IncrementalUnionMV(
+        c.spark,
+        branches={t: (c.df(t), c.pk_of(t)[0], list(cols)) for t, cols in s.branches},
+        out_cols=list(s.out_cols), key_pos=s.key_pos,
+        wheres=dict(zip(tables, s.wheres or ())), **c.kw,
+    )
+    return _Routed(mv, [s.out_cols[s.key_pos]], frozenset(tables), {}, _dict_feed, False)
+
+
+def _bag_setop(s) -> bool:
+    return s.op in ("intersect_all", "except_all")
+
+
+# Two-branch INTERSECT/EXCEPT: dual hidden count-per-tuple state,
+# membership re-evaluated only for the tuples a batch touches. The bag
+# (ALL) forms hold duplicate rows, so their key is not unique.
+@_route(
+    "setop",
+    lambda c: match_setop_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk is None if _bag_setop(s) else c.pk_ok(s.out_cols),
+)
+def _setop(c, s):
+    mv = IncrementalSetOpMV(
+        c.spark, op=s.op, left=c.df(s.left), left_pk=c.pk_of(s.left),
+        right=c.df(s.right), right_pk=c.pk_of(s.right),
+        left_cols=list(s.left_cols), right_cols=list(s.right_cols),
+        out_cols=list(s.out_cols), side_names=(s.left, s.right),
+        wheres=(s.left_where, s.right_where), **c.kw,
+    )
+    bag = _bag_setop(s)
+    stores = {s.left: mv._sides["a"].fact_store, s.right: mv._sides["b"].fact_store}
+    return _Routed(
+        mv, c.default_pk if bag else list(s.out_cols), frozenset(stores), stores,
+        _dict_feed, not bag,
+    )
+
+
+# Per-group Top-N (the ROW_NUMBER <= k pattern Flink special-cases):
+# dirty-group re-ranking over the FULL user order spec (+ a no-op
+# trailing PK), so mid-spec tie columns are honored.
+@_route(
+    "topn",
+    lambda c: match_topn_shape(c.query, c.names, c.cols),
+    lambda c, s: _covers_pk(c, s.fact, [s.order_col, *s.tie])
+    and c.pk_ok([s.group_key, s.rank_alias]),
+)
+def _topn(c, s):
+    mv = IncrementalTopKMV(
+        c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
+        group_key=s.group_key,
+        order_spec=[(s.order_col, s.descending)] + [(t, False) for t in s.tie],
+        out_cols=[o for o in s.out_cols if o.lower() != s.rank_alias.lower()],
+        k=s.k, rank_col=s.rank_alias, **c.kw,
+    )
+    return _fact_routed(mv, s.fact, [s.group_key, s.rank_alias], s.where)
+
+
+# Partitioned OVER-window view (running sums, per-group ranks, lag/lead)
+# — dirty-partition recompute, keyed by the fact PK.
+@_route(
+    "window",
+    lambda c: match_window_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk_ok(c.pk_of(s.fact)),
+)
+def _window(c, s):
+    mv = IncrementalWindowMV(
+        c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
+        group_key=list(s.group_keys),
+        select_items=list(s.plain_cols) + [f"{e} AS {a}" for a, e in s.win_items],
+        strategy=c.window_strategy, **c.kw,
+    )
+    return _fact_routed(mv, s.fact, c.pk_of(s.fact), s.where)
+
+
+# Global ORDER BY + LIMIT (top-k without PARTITION BY), keyed by the
+# selected fact PK.
+@_route(
+    "order_limit",
+    lambda c: match_order_limit_shape(c.query, c.names, c.cols),
+    lambda c, s: _covers_pk(c, s.fact, [o for o, _ in s.order_spec])
+    and _selects(s.out_cols, c.pk_of(s.fact)) and c.pk_ok(c.pk_of(s.fact)),
+)
+def _order_limit(c, s):
+    mv = IncrementalGlobalTopKMV(
+        c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
+        order_spec=list(s.order_spec), out_cols=list(s.out_cols), k=s.k, **c.kw,
+    )
+    return _fact_routed(mv, s.fact, c.pk_of(s.fact), s.where)
+
+
+# Stateless projection/filter view — a stateless Calc node in Flink's
+# planner. LAST among the single-table routes: every richer shape has
+# already claimed its syntax. The changelog maps 1:1 onto the target,
+# keyed by the projected fact PK; the route keeps no source store.
+@_route(
+    "projection",
+    lambda c: match_projection_shape(c.query, c.names, c.cols, c.pks),
+    lambda c, s: c.pk_ok(s.pk_out),
+)
+def _projection(c, s):
+    mv = IncrementalProjectionMV(
+        c.spark, fact=_fact_frame(c, s.fact, s.where), items=list(s.items),
+        pk_out=list(s.pk_out), **c.kw,
+    )
+    feed = _fact_feed(s.fact, where=s.where)
+    return _Routed(mv, list(s.pk_out), frozenset({s.fact}), {}, feed)
+
+
+def _nested_spelling(c: _Ctx):
+    """(inner_sql, alias, outer_sql) of the two-level spelling a cascade
+    maintains, or None. Besides a literal ``FROM ( <inner> ) alias``,
+    three flat shapes rewrite to it: GROUP BY … ORDER BY agg LIMIT n
+    (inner aggregate, outer global top-k), a flat M:N join-aggregate
+    (inner two-sided join keyed by both PKs, outer aggregate), and a
+    three-table tree with ONE theta edge (inner equi-join, outer theta
+    join through the cascade's base-table pass-through). Only the
+    nested probe sees a rewrite; recompute keeps the original text."""
+    nested = c.query
+    gol = split_group_order_limit(c.query)
+    if gol is not None:
+        body, tail = gol
+        try:
+            body_cols = [f.name for f in c.spark.sql(body).schema.fields]
+            nested = f"SELECT {', '.join(body_cols)} FROM ( {body} ) __agg {tail}"
+        except Exception:
+            nested = c.query
+    for rewrite in (rewrite_mn_join_agg, rewrite_theta_tree):
+        if nested == c.query:
+            nested = rewrite(c.query, c.names, c.cols, c.pks) or nested
+    return split_nested_query(nested)
 
 
 class MVApp:
@@ -607,13 +1193,6 @@ class MVApp:
         self._ddl_hook = ddl_hook
         self._validate_pks = validate_pks
         self.target_path = target
-        self._stores: dict[str, KeyedParquetStore] = {}
-        # True when the MV class takes a {table: changes} dict refresh
-        # (multi-table maintenance: join-agg trees, union-all)
-        self._dict_refresh = False
-        # (alias, expr) columns derived onto fact changelog batches
-        # (computed group keys); set by the agg route
-        self._derive: list[tuple[str, str]] = []
 
         dfs: dict[str, tuple] = {}
         self._source_event_time: dict[str, str | None] = {}
@@ -629,8 +1208,14 @@ class MVApp:
                 spec = self.catalog.register_dataframe(name, src, spk)
                 df = src
             dfs[name] = (spec, df)
-        # kept for bootstrap-time PK validation (validate_pks)
+        # kept for bootstrap-time PK validation (validate_pks) and the
+        # recompute route's source-store bootstrap
         self._source_frames = {n: (d[0].pk, d[1]) for n, d in dfs.items()}
+        cols = {n: [f.name for f in d[1].schema.fields] for n, d in dfs.items()}
+        kw = dict(
+            work_dir=target, num_buckets=num_buckets,
+            shuffle_partitions=shuffle_partitions,
+        )
 
         # FOR SYSTEM_TIME AS OF (temporal/versioned dim join) routes
         # through its own planner branch BEFORE normalization and the
@@ -651,19 +1236,9 @@ class MVApp:
             if n_pt:
                 query = plain_pt
             else:
-                self._plan_temporal(
-                    spark, dfs, query, target, pk, num_buckets, shuffle_partitions
-                )
+                self._routing = [{"route": "temporal_join", "verdict": "routed"}]
+                self._install(self._plan_temporal(spark, dfs, cols, query, pk, kw))
                 return
-
-        # Whether the advertised MV PK is a TRUE unique constraint of
-        # the result. Every incremental route derives a real key (group
-        # keys, fact PK, …) EXCEPT union-all, whose per-branch key can
-        # repeat across branches (the hidden __src tag is the real
-        # carrier). A cascade must not build on an overclaimed inner
-        # key: the outer's retraction state would collapse distinct
-        # rows that share it (see the cascade probe below).
-        self.pk_is_unique = True
 
         # Normalize before planning: semantics-preserving rewrites
         # (CTE inlining, comma-join -> JOIN ON, GROUP BY / ORDER BY
@@ -671,1161 +1246,196 @@ class MVApp:
         # every matcher's reach; the rewritten text is what the
         # recompute fallback executes too, so a rewrite is never a
         # correctness risk (planner.normalize_query).
-        query = normalize_query(
-            query, {n: [f.name for f in d[1].schema.fields] for n, d in dfs.items()}
-        )
+        query = normalize_query(query, cols)
         self.query = query
 
         # Resolve the query against the catalog: schema + PK inference.
         # (spark_executable_query: subset-GROUPING_ID -> grouping()
         # arithmetic; Spark's analyzer rejects the subset form the
         # engine's SQL surface accepts.)
-        resolved = spark.sql(spark_executable_query(query))
-        self.mv_schema = resolved.schema
-        self.mv_pk = default_pk(self.mv_schema, pk)
-        self._declared_pk = pk
-        self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
+        self.mv_schema = spark.sql(spark_executable_query(query)).schema
+        c = _Ctx(
+            spark, dfs, query, pk, default_pk(self.mv_schema, pk), cols, kw,
+            self._window_strategy,
+        )
 
-        # Explicit escape hatch (builder.force_recompute()): skip every
+        # Explicit escape hatch (builder.force_recompute()) skips every
         # incremental probe — for A/B-measuring incremental maintenance
         # against the recompute baseline (bench.py's mv_refresh block)
         # and for pinning a view to recompute when its churn profile
-        # makes that the cheaper plan (full-table rewrites per batch).
-        if force_recompute:
-            self._setup_recompute(
-                spark, dfs, query, target, num_buckets, shuffle_partitions
-            )
-            return
-
-        # Maintenance-strategy planning (planner.py): the canonical
-        # single-table aggregate shape gets true incremental maintenance
-        # (per-batch work ∝ changed keys); everything else falls back to
-        # recompute with a change-bounded sink. The incremental route
-        # needs a fact PK (retraction lookups) and an undeclared-or-
-        # matching MV PK (a GROUP BY's key set is the derived unique
-        # constraint, the reference's first PK-inference rule,
-        # TiFlinkApp.java:276-281).
-        source_columns = {n: [f.name for f in d[1].schema.fields] for n, d in dfs.items()}
-        shape = match_agg_shape(query, set(dfs), source_columns)
-        spec = dfs[shape.fact][0] if shape is not None else None
-        if (
-            shape is not None
-            and spec.pk
-            and (pk is None or list(pk) == list(shape.group_keys))
-        ):
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = shape.fact, None
-            self._join_names = None
-            # A row-local WHERE stays incremental via the stateless-
-            # filter changelog rule: filtered bootstrap + apply_filter
-            # on every fact batch (rows leaving the predicate -> -D).
-            # Computed group keys (GROUP BY date_trunc(...) AS day) are
-            # derived onto the fact rows the same way — bootstrap here,
-            # every changelog batch in refresh() — after which they
-            # behave exactly like stored columns.
-            self._change_filter = shape.where
-            self._derive = list(shape.key_exprs)
-            fact_df = dfs[shape.fact][1]
-            from pyspark.sql import functions as F
-
-            for alias, expr in self._derive:
-                fact_df = fact_df.withColumn(alias, F.expr(expr))
-            if shape.where is not None:
-                fact_df = fact_df.filter(F.expr(shape.where))
-            self.mv_pk = list(shape.group_keys)
-            # The planner refined the PK (full group-key set); the DDL
-            # must advertise the same constraint the store enforces.
-            self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
-            self._mv = IncrementalAggMV(
-                spark,
-                fact_df,
-                spec.pk,
-                list(shape.group_keys),
-                list(shape.measures),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                target_filter=shape.having,
-            )
-            # The incremental MV's own fact store IS the source store.
-            self._stores = {shape.fact: self._mv.fact_store}
-            return
-
-        # GROUPING SETS / ROLLUP / CUBE — the multi-grain reporting
-        # aggregate, maintained by decomposition into one aggregate
-        # state per grouping set over a SHARED fact store (SURVEY §2.2
-        # "expand to union of aggs"; the reference gets these from
-        # Flink's Expand node, TiFlinkApp.java:270). The view is a bag
-        # union (subtotal rows carry NULL keys), so no PK declaration
-        # is accepted and pk_is_unique turns off (no cascades on top).
-        gs = match_grouping_sets_shape(query, set(dfs), source_columns)
-        if gs is not None and dfs[gs.fact][0].pk and pk is None:
-            from pyspark.sql import functions as F
-            from tiflink_spark.mv import IncrementalGroupingSetsMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = gs.fact, None
-            self._join_names = None
-            self._change_filter = gs.where
-            # Computed grouping keys (ROLLUP(date_trunc(...) AS mon))
-            # derive onto fact rows — bootstrap here, every changelog
-            # batch in refresh() — after which the sub-MVs see them as
-            # stored columns (same mechanism as the flat-agg route).
-            self._derive = list(gs.key_exprs)
-            fact_df = dfs[gs.fact][1]
-            for alias, expr in self._derive:
-                fact_df = fact_df.withColumn(alias, F.expr(expr))
-            if gs.where is not None:
-                fact_df = fact_df.filter(F.expr(gs.where))
-            self.pk_is_unique = False
-            self._mv = IncrementalGroupingSetsMV(
-                spark,
-                fact_df,
-                dfs[gs.fact][0].pk,
-                list(gs.all_keys),
-                list(gs.sets),
-                list(gs.measures),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                grouping_items=list(gs.grouping_items),
-                gid_items=list(gs.gid_items),
-                tail_order=list(gs.tail_order),
-                target_filter=gs.having,
-                hidden_measures=list(gs.hidden),
-                having_gcalls=list(gs.having_gcalls),
-            )
-            self._stores = {gs.fact: self._mv.fact_store}
-            return
-
-        # Global (no GROUP BY) aggregate — the dashboard-total MV.
-        # Routed to IncrementalAggMV keyed by a derived constant; the
-        # one row survives table emptiness at its zero state (COUNT 0,
-        # SUM/MIN/MAX NULL — SQL's empty-input global aggregate). The
-        # advertised MV PK stays the first-output-column fallback (the
-        # reference's rule for keyless outputs, TiFlinkApp.java:276-281);
-        # the hidden "__g" key is the real store address and never
-        # reaches the query schema.
-        ga = match_global_agg_shape(query, set(dfs), source_columns)
-        if ga is not None and dfs[ga.fact][0].pk and pk is None:
-            from pyspark.sql import functions as F
-
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = ga.fact, None
-            self._join_names = None
-            self._change_filter = ga.where
-            self._derive = [("__g", "0")]
-            fact_df = dfs[ga.fact][1].withColumn("__g", F.lit(0))
-            if ga.where is not None:
-                fact_df = fact_df.filter(F.expr(ga.where))
-            self._mv = IncrementalAggMV(
-                spark,
-                fact_df,
-                dfs[ga.fact][0].pk,
-                ["__g"],
-                list(ga.measures),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                global_group=True,
-            )
-            self._stores = {ga.fact: self._mv.fact_store}
-            return
-
-        # SELECT DISTINCT — the dedup view, maintained as a hidden
-        # COUNT(*)-per-key aggregate: a key's first arrival inserts the
-        # MV row, its last departure deletes it (the count-based
-        # DISTINCT maintenance of every update-mode planner). read()
-        # projects the hidden count away via mv_schema.
-        ds = match_distinct_shape(query, set(dfs), source_columns)
-        spec = dfs[ds.fact][0] if ds is not None else None
-        if (
-            ds is not None
-            and spec.pk
-            and (pk is None or list(pk) == list(ds.cols))
-        ):
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = ds.fact, None
-            self._join_names = None
-            self._change_filter = ds.where
-            fact_df = dfs[ds.fact][1]
-            if ds.where is not None:
-                from pyspark.sql import functions as F
-
-                fact_df = fact_df.filter(F.expr(ds.where))
-            self.mv_pk = list(ds.cols)
-            self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
-            self._mv = IncrementalAggMV(
-                spark,
-                fact_df,
-                spec.pk,
-                list(ds.cols),
-                [Measure("count", None, "__cnt")],
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-            )
-            self._stores = {ds.fact: self._mv.fact_store}
-            return
-
-        # The canonical star/snowflake-join aggregate (fact ⋈ dims
-        # GROUP BY) — the shape behind every TPC-H-like MV, which the
-        # reference gets incrementally from Flink's update-mode planner
-        # (TiFlinkApp.java:270). Dirty-join-key re-derivation of the
-        # joined relation feeds the aggregate state merge; changelogs on
-        # ALL sides maintain the view with work ∝ touched keys.
-        ja = match_join_agg_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if (
-            ja is not None
-            and dfs[ja.fact][0].pk
-            and (pk is None or list(pk) == list(ja.group_keys))
-        ):
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = ja.fact, None
-            self._join_names = self._change_filter = None
-            self._dict_refresh = True
-            self._ja_tables = {ja.fact, *(d.dim for d in ja.dims)}
-            self.mv_pk = list(ja.group_keys)
-            self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
-            self._mv = IncrementalJoinAggMV(
-                spark,
-                fact_name=ja.fact,
-                fact=dfs[ja.fact][1],
-                fact_pk=dfs[ja.fact][0].pk,
-                dims=list(ja.dims),
-                dim_dfs={d.dim: dfs[d.dim][1] for d in ja.dims},
-                group_keys=list(ja.group_keys),
-                measures=list(ja.measures),
-                fact_cols=list(ja.fact_cols),
-                work_dir=target,
-                where=ja.where,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                target_filter=ja.having,
-                key_exprs=list(ja.key_exprs),
-            )
-            self._stores = {
-                ja.fact: self._mv.fact_store,
-                **{d.dim: self._mv.dim_stores[d.dim] for d in ja.dims},
-            }
-            return
-
-        # The reference's flagship shape — correlated scalar COUNT over a
-        # dimension (TiFlinkExample.java:10-16) — decorrelates to the
-        # dim-joined IncrementalAggMV: changelogs on the fact AND the dim
-        # maintain the view with work ∝ changed keys.
-        corr = match_correlated_count_shape(
-            query, set(dfs), {n: d[0].pk for n, d in dfs.items()}, source_columns
-        )
-        if (
-            corr is not None
-            and dfs[corr.fact][0].pk
-            and (pk is None or list(pk) == [corr.dim_key])
-        ):
-            self.maintenance_mode = "incremental"
-            from pyspark.sql import functions as F
-
-            self._fact_name, self._dim_name = corr.fact, corr.dim
-            self._join_names = None
-            # A NULL fact FK equality-matches no dim row, so it can
-            # never contribute to any group — and it would crash the
-            # fk-keyed aggregate state store. Drop such rows at
-            # bootstrap AND per batch (the stateless changelog filter
-            # demotes a row UPDATING to NULL fk to -D, retracting its
-            # old group contribution). Round 10 — found by the scalar
-            # theta battery's NULL-key frames.
-            self._change_filter = f"{corr.fact_key} IS NOT NULL"
-            self.mv_pk = [corr.dim_key]
-            # PK refined to the dim key (the derived unique constraint).
-            self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
-            self._mv = IncrementalAggMV(
-                spark,
-                dfs[corr.fact][1].filter(F.expr(self._change_filter)),
-                dfs[corr.fact][0].pk,
-                corr.fact_key,
-                [Measure(corr.agg_kind, corr.agg_col, corr.alias)],
-                work_dir=target,
-                dim=dfs[corr.dim][1],
-                dim_key=corr.dim_key,
-                dim_cols=list(corr.dim_cols),
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-            )
-            self._stores = {
-                corr.fact: self._mv.fact_store,
-                corr.dim: self._mv.dim_store,
-            }
-            return
-
-        # Theta-correlated SCALAR aggregate (round 10): the flagship
-        # shape widened past its single fk = pk equality. Per-row sets
-        # cannot decorrelate to a keyed GROUP BY, so the aggregate is
-        # evaluated exactly per dirty dim row over one theta join
-        # (IncrementalCorrScalarAggMV); fact churn re-evaluates only
-        # dim rows in theta range of the changed rows' old/new values.
-        cagg = match_corr_scalar_shape(
-            query, set(dfs), {n: d[0].pk for n, d in dfs.items()}, source_columns
-        )
-        if (
-            cagg is not None
-            and dfs[cagg.fact][0].pk
-            and (pk is None or list(pk) == [cagg.dim_pk])
-        ):
-            from tiflink_spark.mv import IncrementalCorrScalarAggMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name = self._dim_name = self._change_filter = None
-            self._join_names = (cagg.fact, cagg.dim)
-            self.mv_pk = [cagg.dim_pk]
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
-            )
-            self._mv = IncrementalCorrScalarAggMV(
-                spark,
-                dim=dfs[cagg.dim][1],
-                dim_pk=dfs[cagg.dim][0].pk,
-                fact=dfs[cagg.fact][1],
-                fact_pk=dfs[cagg.fact][0].pk,
-                akind=cagg.akind,
-                acol=cagg.acol,
-                alias=cagg.alias,
-                corr=list(cagg.corr),
-                out_cols=list(cagg.out_cols),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                inner_where=cagg.inner_where,
-            )
-            self._stores = {
-                cagg.fact: self._mv.fact_store,
-                cagg.dim: self._mv.dim_store,
-            }
-            return
-
-        # Correlated-existence filter — EXISTS / NOT EXISTS / IN
-        # subquery — the streaming semi/anti join Flink's update-mode
-        # planner maintains with presence state per key. Fact-side
-        # changes re-evaluate exactly the changed PKs; other-side
-        # changes re-evaluate only the fact rows holding the dirty key
-        # values. The fact PK must be selected (the MV is keyed by it).
-        sj = match_semijoin_shape(query, set(dfs), source_columns)
-        if sj is not None:
-            fspec, ospec = dfs[sj.fact][0], dfs[sj.other][0]
-            sel_lower = {c.lower() for c in sj.out_cols}
-            # NOT IN (null_aware) works on ANY inner column, PK or not:
-            # the MV maintains the inner's null-presence bit explicitly
-            # (an inner NULL empties the view; its appearance/
-            # disappearance re-evaluates every fact row — inherent to
-            # NOT IN semantics).
-            if (
-                fspec.pk
-                and ospec.pk
-                and all(p.lower() in sel_lower for p in fspec.pk)
-                and (pk is None or list(pk) == list(fspec.pk))
-            ):
-                from tiflink_spark.mv import IncrementalSemiJoinMV
-
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = self._change_filter = None
-                self._join_names = (sj.fact, sj.other)
-                self.mv_pk = list(fspec.pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                self._mv = IncrementalSemiJoinMV(
-                    spark,
-                    fact=dfs[sj.fact][1],
-                    fact_pk=fspec.pk,
-                    other=dfs[sj.other][1],
-                    other_pk=ospec.pk,
-                    fact_key=list(sj.fact_keys),
-                    other_key=list(sj.other_keys),
-                    out_cols=list(sj.out_cols),
-                    work_dir=target,
-                    anti=sj.anti,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                    where=sj.where,
-                    null_aware=sj.null_aware,
-                )
-                self._stores = {
-                    sj.fact: self._mv.fact_store,
-                    sj.other: self._mv.other_store,
-                }
+        # makes that the cheaper plan. Otherwise the route table is
+        # walked in order (planner.py matchers + their gates); the
+        # first accepted entry wins, then the two-level cascade, then
+        # recompute — a planner miss is never wrong, only slower.
+        self._routing = routing = []
+        if not force_recompute:
+            for name, match, accept, build in _ROUTES:
+                shape = match(c)
+                ok = shape is not None and bool(accept(c, shape))
+                routing.append({"route": name, "verdict": _verdict(shape, ok)})
+                if ok:
+                    self._install(build(c, shape))
+                    return
+            ns = _nested_spelling(c)
+            r = None if ns is None else self._plan_cascade(c, ns, sources)
+            routing.append({"route": "cascade", "verdict": _verdict(ns, r is not None)})
+            if r is not None:
+                self._install(r)
                 return
+        routing.append({"route": "recompute", "verdict": "routed"})
+        self._install(self._plan_recompute(c))
 
-        # Filtered / CORRELATED IN-subquery (round 10): the inner
-        # SELECT carries its own WHERE. Row-local inner conjuncts keep
-        # the presence-state class with the filter applied to the inner
-        # store; correlated comparison terms (the r9 'NOT IN with
-        # correlated non-equality predicates' recompute tail) switch to
-        # exact per-outer-row membership (IncrementalCorrSemiJoinMV —
-        # no global key state exists when S(c) varies per row).
-        cs = match_corr_semijoin_shape(query, set(dfs), source_columns)
-        if cs is not None:
-            fspec, ospec = dfs[cs.fact][0], dfs[cs.other][0]
-            sel_lower = {c.lower() for c in cs.out_cols}
-            if (
-                fspec.pk
-                and ospec.pk
-                and all(p.lower() in sel_lower for p in fspec.pk)
-                and (pk is None or list(pk) == list(fspec.pk))
-            ):
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = self._change_filter = None
-                self._join_names = (cs.fact, cs.other)
-                self.mv_pk = list(fspec.pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                if cs.corr:
-                    from tiflink_spark.mv import IncrementalCorrSemiJoinMV
-
-                    self._mv = IncrementalCorrSemiJoinMV(
-                        spark,
-                        fact=dfs[cs.fact][1],
-                        fact_pk=fspec.pk,
-                        other=dfs[cs.other][1],
-                        other_pk=ospec.pk,
-                        fact_key=cs.fact_key,
-                        other_key=cs.other_key,
-                        corr=list(cs.corr),
-                        out_cols=list(cs.out_cols),
-                        work_dir=target,
-                        anti=cs.anti,
-                        num_buckets=num_buckets,
-                        shuffle_partitions=shuffle_partitions,
-                        where=cs.where,
-                        inner_where=cs.inner_where,
-                    )
-                else:
-                    from tiflink_spark.mv import IncrementalSemiJoinMV
-
-                    self._mv = IncrementalSemiJoinMV(
-                        spark,
-                        fact=dfs[cs.fact][1],
-                        fact_pk=fspec.pk,
-                        other=dfs[cs.other][1],
-                        other_pk=ospec.pk,
-                        fact_key=cs.fact_key,
-                        other_key=cs.other_key,
-                        out_cols=list(cs.out_cols),
-                        work_dir=target,
-                        anti=cs.anti,
-                        num_buckets=num_buckets,
-                        shuffle_partitions=shuffle_partitions,
-                        where=cs.where,
-                        null_aware=cs.anti,
-                        other_where=cs.inner_where,
-                    )
-                self._stores = {
-                    cs.fact: self._mv.fact_store,
-                    cs.other: self._mv.other_store,
-                }
-                return
-
-        # Theta-EXISTS (round 10): [NOT] EXISTS whose correlation mixes
-        # equalities with non-equality comparisons (or has none) — past
-        # the pure-equality presence-state matcher above. Membership is
-        # bare per-row non-emptiness, evaluated exactly per dirty row;
-        # equality conjuncts ride as '=' theta terms so Catalyst can
-        # still hash-join on them with the theta residual attached.
-        ce = match_corr_exists_shape(query, set(dfs), source_columns)
-        if ce is not None:
-            fspec, ospec = dfs[ce.fact][0], dfs[ce.other][0]
-            sel_lower = {c.lower() for c in ce.out_cols}
-            if (
-                fspec.pk
-                and ospec.pk
-                and all(p.lower() in sel_lower for p in fspec.pk)
-                and (pk is None or list(pk) == list(fspec.pk))
-            ):
-                from tiflink_spark.mv import IncrementalCorrSemiJoinMV
-
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = self._change_filter = None
-                self._join_names = (ce.fact, ce.other)
-                self.mv_pk = list(fspec.pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                self._mv = IncrementalCorrSemiJoinMV(
-                    spark,
-                    fact=dfs[ce.fact][1],
-                    fact_pk=fspec.pk,
-                    other=dfs[ce.other][1],
-                    other_pk=ospec.pk,
-                    fact_key=None,
-                    other_key=None,
-                    corr=list(ce.corr),
-                    out_cols=list(ce.out_cols),
-                    work_dir=target,
-                    anti=ce.anti,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                    where=ce.where,
-                    inner_where=ce.inner_where,
-                    exists_mode=True,
-                )
-                self._stores = {
-                    ce.fact: self._mv.fact_store,
-                    ce.other: self._mv.other_store,
-                }
-                return
-
-        # Bare two-sided equi-join (USING or ON form): dirty-join-key
-        # recompute with changelogs on both sides (IncrementalJoinMV).
-        # The MV PK is the concatenated source PKs; they must all be in
-        # the select list so the MV schema matches the query's.
-        join = match_join_shape(query, set(dfs), source_columns)
-        if join is not None:
-            (lspec, ldf), (rspec, rdf) = dfs[join.left], dfs[join.right]
-            target_pk = [*lspec.pk, *rspec.pk]
-            sel_lower = {c.lower() for c in join.out_cols}
-            if (
-                lspec.pk
-                and rspec.pk
-                and all(c.lower() in sel_lower for c in target_pk)
-                and (pk is None or list(pk) == target_pk)
-            ):
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = self._change_filter = None
-                self._join_names = (join.left, join.right)
-                self.mv_pk = target_pk
-                self.ddl = create_table_ddl(os.path.basename(target), self.mv_schema, self.mv_pk)
-                self._mv = IncrementalJoinMV(
-                    spark,
-                    left=ldf,
-                    left_pk=lspec.pk,
-                    right=rdf,
-                    right_pk=rspec.pk,
-                    join_key=(
-                        (join.join_key, join.right_key)
-                        if join.right_key is not None
-                        else join.join_key
-                    ),
-                    out_cols=list(join.out_cols),
-                    work_dir=target,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                    where=join.where,
-                )
-                self._stores = {
-                    join.left: self._mv.left_store,
-                    join.right: self._mv.right_store,
-                }
-                return
-
-        # Two-sided NON-EQUI join view (interval bands, BETWEEN,
-        # inequalities, arbitrary theta) — dirty-PK recompute over both
-        # post-merge states: the change-bounded version of the inherent
-        # non-equi cost (Flink keeps both sides' full state and probes
-        # per record for the same reason, by delegation
-        # TiFlinkApp.java:270). Tried after the equi matchers.
-        tj = match_theta_join_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
+    def _install(self, r: _Routed) -> None:
+        """The one install step every route goes through."""
+        self._route, self._mv, self._stores = r, r.mv, r.stores
+        self.maintenance_mode = (
+            "recompute" if isinstance(r.mv, RecomputeMV) else "incremental"
         )
-        if tj is not None:
-            lspec, rspec = dfs[tj.left][0], dfs[tj.right][0]
-            target_pk = [*lspec.pk, *rspec.pk]
-            if pk is None or list(pk) == target_pk:
-                from tiflink_spark.mv import IncrementalThetaJoinMV
+        self.mv_pk = list(r.mv_pk)
+        self.pk_is_unique = r.pk_is_unique
+        self.ddl = create_table_ddl(
+            os.path.basename(self.target_path), self.mv_schema, self.mv_pk
+        )
 
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = self._change_filter = None
-                self._join_names = (tj.left, tj.right)
-                self.mv_pk = target_pk
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
+    def _plan_cascade(self, c: _Ctx, ns, sources) -> _Routed | None:
+        """Two-level nesting: SELECT … FROM ( <inner> ) … — an inner MV
+        feeding an outer MV through the store's version-diff changelog
+        (CascadeMV). None unless BOTH levels route incrementally."""
+        inner_sql, alias, outer_sql = ns
+        target = c.kw["work_dir"]
+        inner_dir = os.path.join(target, "inner")
+        inner_app = MVApp(
+            c.spark, sources, inner_sql, inner_dir, None,
+            c.kw["num_buckets"], c.kw["shuffle_partitions"],
+        )
+        outer_app = None
+        # The outer's stores address rows by the inner's key, so it
+        # must be a TRUE unique key. Two ways to have one:
+        # - the inner's advertised PK is genuinely unique
+        #   (pk_is_unique), or
+        # - the inner is a BAG view that exposes its hidden
+        #   uniqueness carrier (union-all's branch tag) via
+        #   cascade_relation(): the outer consumes the relation
+        #   WITH the hidden column, keyed by the target store's
+        #   full compound PK, so cross-branch duplicates never
+        #   collapse — bag semantics flow through the cascade.
+        if inner_app.maintenance_mode == "incremental":
+            rel_fn = getattr(inner_app._mv, "cascade_relation", None)
+            if inner_app.pk_is_unique:
+                placeholder = c.spark.sql(inner_sql)
+                inner_key = inner_app.mv_pk
+            elif rel_fn is not None:
+                placeholder = rel_fn()
+                ctgt = getattr(inner_app._mv, "cascade_target", None)
+                inner_key = list(
+                    ctgt.pk if ctgt is not None else inner_app._mv.target.pk
                 )
-                self._mv = IncrementalThetaJoinMV(
-                    spark,
-                    left=dfs[tj.left][1],
-                    left_pk=lspec.pk,
-                    right=dfs[tj.right][1],
-                    right_pk=rspec.pk,
-                    predicate=tj.predicate,
-                    out_cols=list(tj.out_cols),
-                    work_dir=target,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                )
-                self._stores = {
-                    tj.left: self._mv.left_store,
-                    tj.right: self._mv.right_store,
-                }
-                return
-
-        # FULL OUTER equi-join view — both sides preserved. Flink's
-        # update-mode planner maintains this natively (NULL-extension
-        # retracted when the other side arrives); here the route is
-        # dirty-key recompute + diff over a synthetic row identity,
-        # keyed by that identity because dim-only rows carry NULL fact
-        # PKs. The visible output has no unique column (pk_is_unique
-        # off, same overclaim as the union route).
-        fo = match_full_outer_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if fo is not None and pk is None:
-            from tiflink_spark.mv import IncrementalFullOuterJoinMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name = self._dim_name = self._change_filter = None
-            self._join_names = (fo.fact, fo.dim)
-            self.pk_is_unique = False
-            self.mv_pk = list(dfs[fo.fact][0].pk)
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
-            )
-            self._mv = IncrementalFullOuterJoinMV(
-                spark,
-                fact=dfs[fo.fact][1],
-                fact_pk=dfs[fo.fact][0].pk,
-                dim=dfs[fo.dim][1],
-                dim_keys=list(fo.dim_keys),
-                fact_fks=list(fo.fact_fks),
-                out_cols=list(fo.out_cols),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                where=fo.where,
-            )
-            self._stores = {
-                fo.fact: self._mv.fact_store,
-                fo.dim: self._mv.dim_store,
-            }
-            return
-
-        # Lookup-enrichment view — the joined relation itself, keyed by
-        # the fact PK (orders carrying their customer's name): fact
-        # [LEFT] JOIN dims with every dim entering through its declared
-        # PK. Tried after the two-sided bare join (which also handles
-        # M:N edges); this route adds LEFT dims, snowflake chains,
-        # composite keys, and derived row-local expressions.
-        jp = match_join_projection_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if (
-            jp is not None
-            and dfs[jp.fact][0].pk
-            and (pk is None or list(pk) == list(dfs[jp.fact][0].pk))
-        ):
-            from tiflink_spark.mv import IncrementalJoinProjectionMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = None, None
-            self._join_names = self._change_filter = None
-            self._dict_refresh = True
-            self._ja_tables = {jp.fact, *(d.dim for d in jp.dims)}
-            self.mv_pk = list(dfs[jp.fact][0].pk)
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
-            )
-            self._mv = IncrementalJoinProjectionMV(
-                spark,
-                fact_name=jp.fact,
-                fact=dfs[jp.fact][1],
-                fact_pk=dfs[jp.fact][0].pk,
-                dims=list(jp.dims),
-                dim_dfs={d.dim: dfs[d.dim][1] for d in jp.dims},
-                group_keys=[],
-                measures=[],
-                fact_cols=list(jp.fact_cols),
-                work_dir=target,
-                where=jp.where,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                key_exprs=list(jp.key_exprs),
-                out_cols=list(jp.out_cols),
-            )
-            self._stores = {
-                jp.fact: self._mv.fact_store,
-                **{d.dim: self._mv.dim_stores[d.dim] for d in jp.dims},
-            }
-            return
-
-        # Bare multi-branch UNION ALL — the multi-source ingestion
-        # view, stateless under changelogs: each branch's changes
-        # project straight into the target keyed by (branch tag, PK).
-        # The hidden tag is the real uniqueness carrier; the advertised
-        # MV PK (the shared key column) is unique only per branch — the
-        # same first-column PK overclaim the reference makes for
-        # non-unique query outputs (TiFlinkApp.java:276-281). Publish
-        # targets whose branches can collide on the key need their own
-        # DDL without the PK constraint.
-        ua = match_union_all_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if ua is not None and pk is None:
-            from tiflink_spark.mv import IncrementalUnionMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name = self._dim_name = None
-            self._join_names = self._change_filter = None
-            self._dict_refresh = True
-            self._ja_tables = {t for t, _ in ua.branches}
-            # first-column-style PK overclaim: unique per branch only
-            self.pk_is_unique = False
-            self.mv_pk = [ua.out_cols[ua.key_pos]]
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
-            )
-            wheres = dict(zip([t for t, _ in ua.branches], ua.wheres or ()))
-            self._mv = IncrementalUnionMV(
-                spark,
-                branches={
-                    t: (dfs[t][1], dfs[t][0].pk[0], list(cols))
-                    for t, cols in ua.branches
-                },
-                out_cols=list(ua.out_cols),
-                key_pos=ua.key_pos,
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                wheres=wheres,
-            )
-            self._stores = {}
-            return
-
-        # Two-branch INTERSECT/EXCEPT (set semantics): dual hidden
-        # count-per-tuple state, membership re-evaluated only for the
-        # tuples a batch touches.
-        so = match_setop_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        _bag_op = so is not None and so.op in ("intersect_all", "except_all")
-        if so is not None and (
-            (pk is None) if _bag_op else (pk is None or list(pk) == list(so.out_cols))
-        ):
-            from tiflink_spark.mv import IncrementalSetOpMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name = self._dim_name = None
-            self._join_names = self._change_filter = None
-            self._dict_refresh = True
-            self._ja_tables = {so.left, so.right}
-            if _bag_op:
-                # bag semantics: the view holds duplicate rows, so the
-                # tuple is NOT a unique constraint — first-column PK
-                # overclaim, same as UNION ALL (TiFlinkApp.java:276-281)
-                self.pk_is_unique = False
             else:
-                self.mv_pk = list(so.out_cols)
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
-            )
-            self._mv = IncrementalSetOpMV(
-                spark,
-                op=so.op,
-                left=dfs[so.left][1],
-                left_pk=dfs[so.left][0].pk,
-                right=dfs[so.right][1],
-                right_pk=dfs[so.right][0].pk,
-                left_cols=list(so.left_cols),
-                right_cols=list(so.right_cols),
-                out_cols=list(so.out_cols),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
-                side_names=(so.left, so.right),
-                wheres=(so.left_where, so.right_where),
-            )
-            self._stores = {
-                so.left: self._mv._sides["a"].fact_store,
-                so.right: self._mv._sides["b"].fact_store,
-            }
-            return
+                placeholder = None
+            if placeholder is not None:
+                outer_sources = {alias: (placeholder, inner_key)}
+                # The outer level may reference BASE tables besides
+                # the derived one (round 7: one theta edge over an
+                # otherwise-equi tree — inner equi-join MV, outer
+                # theta join against the third table). Pass those
+                # through; CascadeMV splits each batch's changes
+                # between the levels. Attachment is decided from
+                # the PARSED relation positions (sqlast token
+                # stream), not a regex over raw SQL — a source
+                # name appearing as a column or inside a string
+                # literal must not attach an unused store that
+                # would then be bootstrapped and merged every
+                # batch and silently absorb misdirected
+                # changelogs. Tokenizer bail (None) falls back to
+                # the conservative word-boundary scan.
+                from tiflink_spark.sqlast import relation_names
 
-        # Per-group Top-N (the ROW_NUMBER <= k pattern Flink's
-        # update-mode planner special-cases as its Top-N operator) —
-        # routed to dirty-group re-ranking over the FULL user order
-        # spec. Determinism: the window's ORDER BY column set must
-        # cover the fact PK (provably total per partition); without a
-        # total order, rank slots on ties are ambiguous.
-        tn = match_topn_shape(query, set(dfs), source_columns)
-        if tn is not None:
-            spec = dfs[tn.fact][0]
-            # determinism rule: the rank window's ORDER BY column set
-            # must COVER the fact PK (provably total per partition) —
-            # ORDER BY the PK itself counts, same rule as the per-row
-            # window route. The MV ranks by the FULL user spec (+ a
-            # no-op trailing PK), so mid-spec tie columns are honored.
-            order_cols = {tn.order_col.lower(), *(c.lower() for c in tn.tie)}
-            tie_ok = spec.pk and {p.lower() for p in spec.pk} <= order_cols
-            if tie_ok and (
-                pk is None or list(pk) == [tn.group_key, tn.rank_alias]
-            ):
-                self.maintenance_mode = "incremental"
-                self._fact_name, self._dim_name = tn.fact, None
-                self._join_names = None
-                # rows filtered before ranking: filtered bootstrap +
-                # the stateless changelog filter rule per batch
-                self._change_filter = tn.where
-                fact_df = dfs[tn.fact][1]
-                if tn.where is not None:
-                    from pyspark.sql import functions as F
-
-                    fact_df = fact_df.filter(F.expr(tn.where))
-                self.mv_pk = [tn.group_key, tn.rank_alias]
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
+                rels = relation_names(outer_sql)
+                if rels is None:
+                    rels = {
+                        n2.lower()
+                        for n2 in c.dfs
+                        if re.search(rf"(?is)\b{re.escape(n2)}\b", outer_sql)
+                    }
+                for n2, (spec2, df2) in c.dfs.items():
+                    if n2 != alias and n2.lower() in rels:
+                        outer_sources[n2] = (df2, list(spec2.pk))
+                outer_app = MVApp(
+                    c.spark, outer_sources, outer_sql,
+                    os.path.join(target, "outer"), c.pk,
+                    c.kw["num_buckets"], c.kw["shuffle_partitions"],
                 )
-                self._mv = IncrementalTopKMV(
-                    spark,
-                    fact=fact_df,
-                    fact_pk=spec.pk,
-                    group_key=tn.group_key,
-                    order_spec=[(tn.order_col, tn.descending)]
-                    + [(c, False) for c in tn.tie],
-                    out_cols=[c for c in tn.out_cols if c.lower() != tn.rank_alias.lower()],
-                    k=tn.k,
-                    work_dir=target,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                    rank_col=tn.rank_alias,
-                )
-                self._stores = {tn.fact: self._mv.fact_store}
-                return
-
-        # Partitioned OVER-window view (running sums, per-group ranks,
-        # lag/lead) — dirty-partition recompute: a batch's touched
-        # groups are re-windowed from the fact store and diffed. Keyed
-        # by the fact PK; NULL partitions are first-class.
-        ws = match_window_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if ws is not None:
-            spec = dfs[ws.fact][0]
-            if pk is None or list(pk) == list(spec.pk):
-                from tiflink_spark.mv import IncrementalWindowMV
-
-                self.maintenance_mode = "incremental"
-                self._fact_name, self._dim_name = ws.fact, None
-                self._join_names = None
-                self._change_filter = ws.where
-                fact_df = dfs[ws.fact][1]
-                if ws.where is not None:
-                    from pyspark.sql import functions as F
-
-                    fact_df = fact_df.filter(F.expr(ws.where))
-                self.mv_pk = list(spec.pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                items = list(ws.plain_cols) + [
-                    f"{expr} AS {alias}" for alias, expr in ws.win_items
-                ]
-                self._mv = IncrementalWindowMV(
-                    spark,
-                    fact=fact_df,
-                    fact_pk=spec.pk,
-                    group_key=list(ws.group_keys),
-                    select_items=items,
-                    work_dir=target,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                    strategy=getattr(self, "_window_strategy", "sort"),
-                )
-                self._stores = {ws.fact: self._mv.fact_store}
-                return
-
-        # Global ORDER BY + LIMIT (top-k without PARTITION BY) — keyed
-        # by the fact PK, which must be selected; the ORDER BY column
-        # set must COVER the PK (provably total order, same rule as
-        # the per-row window route — ORDER BY the PK itself counts).
-        ol = match_order_limit_shape(query, set(dfs), source_columns)
-        if ol is not None:
-            spec = dfs[ol.fact][0]
-            sel_lower = {c.lower() for c in ol.out_cols}
-            order_cols = {c.lower() for c, _ in ol.order_spec}
-            tie_ok = spec.pk and {p.lower() for p in spec.pk} <= order_cols
+        if (
+            outer_app is not None
+            and outer_app.maintenance_mode == "incremental"
+            and not isinstance(outer_app._mv, CascadeMV)
+        ):
+            # Share the inner TARGET as the outer's alias mirror:
+            # the mirror held an exact copy the inner refresh had
+            # already committed (see _SharedMirrorStore). Guarded
+            # three ways: the outer route must declare it merges
+            # source changelogs verbatim (_mirrors_sources_verbatim
+            # — grouping sets enrich with a hidden __g, semijoins
+            # pre-filter with WHERE, projections rename: those keep
+            # the physical mirror), the shared side must be a plain
+            # single store (not a composite grouping-sets façade),
+            # and the keys must match.
+            shared_tgt = getattr(inner_app._mv, "cascade_target", None)
+            if shared_tgt is None:
+                shared_tgt = getattr(inner_app._mv, "target", None)
+            old_mirror = outer_app._stores.get(alias)
             if (
-                tie_ok
-                and all(p.lower() in sel_lower for p in spec.pk)
-                and (pk is None or list(pk) == list(spec.pk))
+                getattr(outer_app._mv, "_mirrors_sources_verbatim", False)
+                and isinstance(shared_tgt, KeyedParquetStore)
+                and old_mirror is not None
+                and [c2.lower() for c2 in old_mirror.pk]
+                == [c2.lower() for c2 in shared_tgt.pk]
             ):
-                from tiflink_spark.mv import IncrementalGlobalTopKMV
-
-                self.maintenance_mode = "incremental"
-                self._fact_name, self._dim_name = ol.fact, None
-                self._join_names = None
-                self._change_filter = ol.where
-                fact_df = dfs[ol.fact][1]
-                if ol.where is not None:
-                    from pyspark.sql import functions as F
-
-                    fact_df = fact_df.filter(F.expr(ol.where))
-                self.mv_pk = list(spec.pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                self._mv = IncrementalGlobalTopKMV(
-                    spark,
-                    fact=fact_df,
-                    fact_pk=spec.pk,
-                    order_spec=list(ol.order_spec),
-                    out_cols=list(ol.out_cols),
-                    k=ol.k,
-                    work_dir=target,
-                    num_buckets=num_buckets,
-                    shuffle_partitions=shuffle_partitions,
-                )
-                self._stores = {ol.fact: self._mv.fact_store}
-                return
-
-        # Stateless projection/filter view — SELECT row-local items
-        # FROM t [WHERE row-local] — the simplest maintainable shape
-        # (a stateless Calc node in Flink's planner; the reference gets
-        # it by delegation, TiFlinkApp.java:270). Matched LAST among
-        # the single-table routes: every richer shape (agg, distinct,
-        # top-k, window, order-limit) has already claimed its syntax.
-        # The changelog maps 1:1 onto the target, keyed by the
-        # projected fact PK; a row-local WHERE follows the stateless
-        # filter rule via the shared _change_filter path.
-        ps = match_projection_shape(
-            query, set(dfs), source_columns, {n: d[0].pk for n, d in dfs.items()}
-        )
-        if ps is not None and (pk is None or list(pk) == list(ps.pk_out)):
-            from pyspark.sql import functions as F
-
-            from tiflink_spark.mv import IncrementalProjectionMV
-
-            self.maintenance_mode = "incremental"
-            self._fact_name, self._dim_name = ps.fact, None
-            self._join_names = None
-            self._change_filter = ps.where
-            fact_df = dfs[ps.fact][1]
-            if ps.where is not None:
-                fact_df = fact_df.filter(F.expr(ps.where))
-            self.mv_pk = list(ps.pk_out)
-            self.ddl = create_table_ddl(
-                os.path.basename(target), self.mv_schema, self.mv_pk
+                shared = _SharedMirrorStore(shared_tgt, placeholder.columns)
+                for k2, v2 in list(vars(outer_app._mv).items()):
+                    if v2 is old_mirror:
+                        setattr(outer_app._mv, k2, shared)
+                    elif isinstance(v2, dict):
+                        for dk2, dv2 in list(v2.items()):
+                            if dv2 is old_mirror:
+                                v2[dk2] = shared
+                outer_app._stores[alias] = shared
+            stores = dict(inner_app._stores)
+            for n2, st2 in outer_app._stores.items():
+                if n2 != alias:
+                    stores.setdefault(n2, st2)
+            # The TRUE set the two levels maintain — not set(sources):
+            # a nested cascade (multi-theta tree, round 10) reports its
+            # own union here, and the parent CascadeMV splits batches by
+            # exactly this set. An over-claim would misroute an
+            # outer-only base table's changelog into the inner cascade.
+            tables = inner_app.maintained_tables() | (
+                outer_app.maintained_tables() - {alias}
             )
-            self._mv = IncrementalProjectionMV(
-                spark,
-                fact=fact_df,
-                items=list(ps.items),
-                pk_out=list(ps.pk_out),
-                work_dir=target,
-                num_buckets=num_buckets,
-                shuffle_partitions=shuffle_partitions,
+            return _Routed(
+                CascadeMV(inner_app, outer_app, alias), outer_app.mv_pk,
+                frozenset(tables), stores, _dict_feed,
             )
-            self._stores = {}
-            return
+        # A level fell back: remove the probe's directory skeletons,
+        # but ONLY if they hold no data — a rebuild of a previously
+        # committed cascade target whose planning now falls back
+        # must never destroy committed MV state.
+        for d in (inner_dir, os.path.join(target, "outer")):
+            if os.path.isdir(d) and not any(files for _, _, files in os.walk(d)):
+                import shutil
 
-        # Two-level nesting: SELECT … FROM ( <inner> ) … — decompose
-        # into an inner MV feeding an outer MV through the store's
-        # version-diff changelog (CascadeMV). Only taken when BOTH
-        # levels route incrementally; a planner bail here is never
-        # wrong, only slower (plain recompute below).
-        # Top-group reporting shape — GROUP BY … ORDER BY agg LIMIT n —
-        # rewrites to the nested form so the cascade machinery maintains
-        # it (inner aggregate MV + outer global top-k over its delta).
-        nested_query = query
-        gol = split_group_order_limit(query)
-        if gol is not None:
-            body, tail = gol
-            try:
-                body_cols = [f.name for f in spark.sql(body).schema.fields]
-                nested_query = (
-                    f"SELECT {', '.join(body_cols)} FROM ( {body} ) __agg {tail}"
-                )
-            except Exception:
-                nested_query = query
-        if nested_query == query:
-            # Flat M:N join-aggregate (neither side enters through its
-            # PK, so the star matcher above bailed): rewrite to the
-            # nested spelling the cascade maintains — inner two-sided
-            # join MV keyed by both PKs, outer aggregate over its
-            # delta. Only the nested PROBE sees the rewrite; the
-            # recompute fallback keeps the original text.
-            from tiflink_spark.planner import rewrite_mn_join_agg
+                shutil.rmtree(d, ignore_errors=True)
+        return None
 
-            mn = rewrite_mn_join_agg(
-                query, set(dfs), source_columns,
-                {n: d[0].pk for n, d in dfs.items()},
-            )
-            if mn is not None:
-                nested_query = mn
-        if nested_query == query:
-            # Flat three-table tree with ONE theta edge: rewrite to the
-            # nested spelling (inner equi-join MV -> outer theta MV via
-            # the cascade's base-table pass-through, round 7).
-            from tiflink_spark.planner import rewrite_theta_tree
-
-            tt = rewrite_theta_tree(
-                query, set(dfs), source_columns,
-                {n: d[0].pk for n, d in dfs.items()},
-            )
-            if tt is not None:
-                nested_query = tt
-
-        ns = split_nested_query(nested_query)
-        if ns is not None:
-            inner_sql, alias, outer_sql = ns
-            inner_dir = os.path.join(target, "inner")
-            inner_app = MVApp(
-                spark, sources, inner_sql, inner_dir, None,
-                num_buckets, shuffle_partitions,
-            )
-            outer_app = None
-            # The outer's stores address rows by the inner's key, so it
-            # must be a TRUE unique key. Two ways to have one:
-            # - the inner's advertised PK is genuinely unique
-            #   (pk_is_unique), or
-            # - the inner is a BAG view that exposes its hidden
-            #   uniqueness carrier (union-all's branch tag) via
-            #   cascade_relation(): the outer consumes the relation
-            #   WITH the hidden column, keyed by the target store's
-            #   full compound PK, so cross-branch duplicates never
-            #   collapse — bag semantics flow through the cascade.
-            if inner_app.maintenance_mode == "incremental":
-                rel_fn = getattr(inner_app._mv, "cascade_relation", None)
-                if inner_app.pk_is_unique:
-                    placeholder = spark.sql(inner_sql)
-                    inner_key = inner_app.mv_pk
-                elif rel_fn is not None:
-                    placeholder = rel_fn()
-                    ctgt = getattr(inner_app._mv, "cascade_target", None)
-                    inner_key = list(
-                        ctgt.pk if ctgt is not None else inner_app._mv.target.pk
-                    )
-                else:
-                    placeholder = None
-                if placeholder is not None:
-                    outer_sources = {alias: (placeholder, inner_key)}
-                    # The outer level may reference BASE tables besides
-                    # the derived one (round 7: one theta edge over an
-                    # otherwise-equi tree — inner equi-join MV, outer
-                    # theta join against the third table). Pass those
-                    # through; CascadeMV splits each batch's changes
-                    # between the levels. Attachment is decided from
-                    # the PARSED relation positions (sqlast token
-                    # stream), not a regex over raw SQL — a source
-                    # name appearing as a column or inside a string
-                    # literal must not attach an unused store that
-                    # would then be bootstrapped and merged every
-                    # batch and silently absorb misdirected
-                    # changelogs. Tokenizer bail (None) falls back to
-                    # the conservative word-boundary scan.
-                    from tiflink_spark.sqlast import relation_names
-
-                    rels = relation_names(outer_sql)
-                    if rels is None:
-                        import re as _re
-
-                        rels = {
-                            n2.lower()
-                            for n2 in dfs
-                            if _re.search(
-                                rf"(?is)\b{_re.escape(n2)}\b", outer_sql
-                            )
-                        }
-                    for n2, (spec2, df2) in dfs.items():
-                        if n2 != alias and n2.lower() in rels:
-                            outer_sources[n2] = (df2, list(spec2.pk))
-                    outer_app = MVApp(
-                        spark,
-                        outer_sources,
-                        outer_sql,
-                        os.path.join(target, "outer"),
-                        pk,
-                        num_buckets,
-                        shuffle_partitions,
-                    )
-            if (
-                outer_app is not None
-                and outer_app.maintenance_mode == "incremental"
-                and not isinstance(outer_app._mv, CascadeMV)
-            ):
-                self.maintenance_mode = "incremental"
-                self._fact_name = self._dim_name = None
-                self._join_names = self._change_filter = None
-                self._dict_refresh = True
-                # The TRUE set the two levels maintain — not
-                # set(sources): a nested cascade (multi-theta tree,
-                # round 10) reports its own union here, and the parent
-                # CascadeMV splits batches by exactly this set. An
-                # over-claim would misroute an outer-only base table's
-                # changelog into the inner cascade, which raises.
-                self._ja_tables = inner_app.maintained_tables() | (
-                    outer_app.maintained_tables() - {alias}
-                )
-                self.mv_pk = list(outer_app.mv_pk)
-                self.ddl = create_table_ddl(
-                    os.path.basename(target), self.mv_schema, self.mv_pk
-                )
-                # Share the inner TARGET as the outer's alias mirror:
-                # the mirror held an exact copy the inner refresh had
-                # already committed (see _SharedMirrorStore). Guarded
-                # three ways: the outer route must declare it merges
-                # source changelogs verbatim (_mirrors_sources_verbatim
-                # — grouping sets enrich with a hidden __g, semijoins
-                # pre-filter with WHERE, projections rename: those keep
-                # the physical mirror), the shared side must be a plain
-                # single store (not a composite grouping-sets façade),
-                # and the keys must match.
-                from tiflink_spark.store import KeyedParquetStore
-
-                shared_tgt = getattr(inner_app._mv, "cascade_target", None)
-                if shared_tgt is None:
-                    shared_tgt = getattr(inner_app._mv, "target", None)
-                old_mirror = outer_app._stores.get(alias)
-                if (
-                    getattr(outer_app._mv, "_mirrors_sources_verbatim", False)
-                    and isinstance(shared_tgt, KeyedParquetStore)
-                    and old_mirror is not None
-                    and [c.lower() for c in old_mirror.pk]
-                    == [c.lower() for c in shared_tgt.pk]
-                ):
-                    shared = _SharedMirrorStore(shared_tgt, placeholder.columns)
-                    for k2, v2 in list(vars(outer_app._mv).items()):
-                        if v2 is old_mirror:
-                            setattr(outer_app._mv, k2, shared)
-                        elif isinstance(v2, dict):
-                            for dk2, dv2 in list(v2.items()):
-                                if dv2 is old_mirror:
-                                    v2[dk2] = shared
-                    outer_app._stores[alias] = shared
-                self._mv = CascadeMV(inner_app, outer_app, alias)
-                self._stores = dict(inner_app._stores)
-                for n2, st2 in outer_app._stores.items():
-                    if n2 != alias:
-                        self._stores.setdefault(n2, st2)
-                return
-            # A level fell back: remove the probe's directory skeletons,
-            # but ONLY if they hold no data — a rebuild of a previously
-            # committed cascade target whose planning now falls back
-            # must never destroy committed MV state.
-            for d in (inner_dir, os.path.join(target, "outer")):
-                if os.path.isdir(d) and not any(
-                    files for _, _, files in os.walk(d)
-                ):
-                    import shutil
-
-                    shutil.rmtree(d, ignore_errors=True)
-
-        self._setup_recompute(spark, dfs, query, target, num_buckets, shuffle_partitions)
-
-    def _plan_temporal(
-        self, spark, dfs, query, target, pk, num_buckets, shuffle_partitions
-    ):
+    def _plan_temporal(self, spark, dfs, cols, query, pk, kw) -> _Routed:
         """Route a ``FOR SYSTEM_TIME AS OF`` query (event-time temporal
         dim join) to IncrementalTemporalJoinMV, or raise: Spark SQL has
         no temporal-join syntax, so — uniquely among the routes — there
         is no recompute fallback to degrade to."""
-        from tiflink_spark.mv import IncrementalTemporalJoinMV
         from tiflink_spark.planner import match_temporal_join_shape
 
-        source_columns = {
-            n: [f.name for f in d[1].schema.fields] for n, d in dfs.items()
-        }
         source_pks = {n: list(d[0].pk or []) for n, d in dfs.items()}
-        shape = match_temporal_join_shape(
-            query, set(dfs), source_columns, source_pks
-        )
+        shape = match_temporal_join_shape(query, set(dfs), cols, source_pks)
         if shape is None:
             raise ValueError(
                 "FOR SYSTEM_TIME AS OF query doesn't fit the temporal-join "
@@ -1860,18 +1470,7 @@ class MVApp:
             query,
         )
         self.mv_schema = spark.sql(plain).schema
-        self.mv_pk = list(fact_pk)
-        self.pk_is_unique = True
-        self.ddl = create_table_ddl(
-            os.path.basename(target), self.mv_schema, self.mv_pk
-        )
-        self.maintenance_mode = "incremental"
-        self._join_names = None
-        self._dict_refresh = True
-        self._ja_tables = {shape.fact, shape.dim}
-        self._fact_name, self._dim_name = shape.fact, None
-        self._change_filter = None
-        self._mv = IncrementalTemporalJoinMV(
+        mv = IncrementalTemporalJoinMV(
             spark,
             fact_name=shape.fact,
             fact=dfs[shape.fact][1],
@@ -1886,31 +1485,25 @@ class MVApp:
             out_src=list(shape.out_src),
             fact_cols=list(shape.fact_cols),
             dim_cols=list(shape.dim_cols),
-            work_dir=target,
-            num_buckets=num_buckets,
-            shuffle_partitions=shuffle_partitions,
-            late_dim=getattr(self, "_late_dim", "raise"),
+            late_dim=self._late_dim,
+            **kw,
         )
+        return _Routed(mv, fact_pk, frozenset({shape.fact, shape.dim}), {}, _dict_feed)
 
-    def _setup_recompute(
-        self, spark, dfs, query, target, num_buckets, shuffle_partitions
-    ) -> None:
+    def _plan_recompute(self, c: _Ctx) -> _Routed:
         """The fallback tail: full recompute per batch with a
-        change-bounded sink — reached when no incremental matcher
-        routed, or directly via the builder's force_recompute() knob."""
-        self.maintenance_mode = "recompute"
-        self._fact_name = self._dim_name = self._change_filter = self._join_names = None
-        # Source-store bootstraps are deferred to bootstrap(): building
-        # an MVApp plans, it does not write (the cascade probe above
-        # constructs and discards fallback apps).
-        self._recompute_inits: list[tuple[KeyedParquetStore, DataFrame]] = []
-        for name, (spec_, df) in dfs.items():
-            store = KeyedParquetStore(
-                spark, os.path.join(target, f"_src_{name}"), spec_.pk, num_buckets
+        change-bounded sink — reached when no incremental route
+        accepted, or directly via the builder's force_recompute() knob.
+        Source-store bootstraps are deferred to bootstrap(): building
+        an MVApp plans, it does not write (the cascade probe constructs
+        and discards fallback apps)."""
+        stores = {
+            name: KeyedParquetStore(
+                c.spark, os.path.join(c.kw["work_dir"], f"_src_{name}"),
+                spec_.pk, c.kw["num_buckets"],
             )
-            self._recompute_inits.append((store, df))
-            self._stores[name] = store
-
+            for name, (spec_, _df) in c.dfs.items()
+        }
         # A grouping-body query (ROLLUP/CUBE/GROUPING SETS) that fell
         # through the incremental matcher — multi-table rollup, CUBE(7)+,
         # a non-maintainable HAVING — emits subtotal rows with NULL
@@ -1919,23 +1512,20 @@ class MVApp:
         # views diff as BAGS: multiplicity transitions keyed by a hidden
         # null-safe row encoding + copy index (same shape as the setop
         # cascade façade's (tuple, __copy) contract).
-        import re as _re
-
-        bag = getattr(self, "_declared_pk", None) is None and bool(
-            _re.search(r"(?is)\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", query)
+        bag = c.pk is None and bool(
+            re.search(r"(?is)\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", c.query)
         )
-        if bag:
-            self.pk_is_unique = False
-        self._mv = RecomputeMV(
-            spark,
-            self._stores,
-            spark_executable_query(query),
-            os.path.join(target, "mv"),
-            pk=self.mv_pk,
-            num_buckets=num_buckets,
-            shuffle_partitions=shuffle_partitions,
+        mv = RecomputeMV(
+            c.spark,
+            stores,
+            spark_executable_query(c.query),
+            os.path.join(c.kw["work_dir"], "mv"),
+            pk=c.default_pk,
+            num_buckets=c.kw["num_buckets"],
+            shuffle_partitions=c.kw["shuffle_partitions"],
             bag=bag,
         )
+        return _Routed(mv, c.default_pk, frozenset(stores), stores, _dict_feed, not bag)
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -1961,6 +1551,10 @@ class MVApp:
             "query": self.query,
             "maintenance_mode": self.maintenance_mode,
             "maintenance_strategy": strategy,
+            # the route-table entries tried, in order, each with its
+            # verdict: no_shape / gate (shape matched, gate rejected) /
+            # routed — entries after the winner are never evaluated
+            "routing": list(self._routing),
             # cost_advisor record (None unless the builder enabled it
             # and the planner hit an advised shape)
             "advisor": self.advisor,
@@ -2097,9 +1691,10 @@ class MVApp:
         # lifecycle step 3 (TiJDBCHelper.java:111-140).
         if self._ddl_hook is not None:
             self._ddl_hook(self.ddl)
-        for store, df in getattr(self, "_recompute_inits", []):
-            if not store.committed_batches():
-                store.bootstrap(df, batch_id="src-init")
+        if self.maintenance_mode == "recompute":
+            for name, store in self._stores.items():
+                if not store.committed_batches():
+                    store.bootstrap(self._source_frames[name][1], batch_id="src-init")
         self._mv.bootstrap(batch_id)
         return self
 
@@ -2107,66 +1702,17 @@ class MVApp:
         """Source tables whose changelogs this app's route consumes —
         what :meth:`refresh` accepts without raising. CascadeMV uses
         this to split a batch's changes between its two levels."""
-        if self.maintenance_mode == "incremental":
-            if self._join_names is not None:
-                return set(self._join_names)
-            if self._dict_refresh:
-                return set(self._ja_tables)
-            known = {self._fact_name}
-            if self._dim_name:
-                known.add(self._dim_name)
-            return known
-        return set(self._stores)
+        return set(self._route.tables)
 
     def refresh(self, changes: dict[str, DataFrame], batch_id) -> bool:
         """Apply one changelog micro-batch (table name → __op/__seq rows)."""
-        if self.maintenance_mode == "incremental" and self._join_names is not None:
-            l, r = self._join_names
-            unknown = set(changes) - {l, r}
-            if unknown:
-                raise ValueError(
-                    f"incremental join MV maintains only {[l, r]}; "
-                    f"got changes for {sorted(unknown)}"
-                )
-            ld, rd = changes.get(l), changes.get(r)
-            if ld is None and rd is None:
-                return False
-            return self._mv.refresh(ld, rd, batch_id)
-        if self.maintenance_mode == "incremental" and self._dict_refresh:
-            unknown = set(changes) - self._ja_tables
-            if unknown:
-                raise ValueError(
-                    f"incremental MV maintains only {sorted(self._ja_tables)}; "
-                    f"got changes for {sorted(unknown)}"
-                )
-            return self._mv.refresh(changes, batch_id)
-        if self.maintenance_mode == "incremental":
-            known = {self._fact_name} | ({self._dim_name} if self._dim_name else set())
-            unknown = set(changes) - known
-            if unknown:
-                raise ValueError(
-                    f"incremental MV maintains only {sorted(known)}; "
-                    f"got changes for {sorted(unknown)}"
-                )
-            fact_delta = changes.get(self._fact_name)
-            dim_delta = changes.get(self._dim_name) if self._dim_name else None
-            if fact_delta is None and dim_delta is None:
-                return False
-            if fact_delta is not None and self._derive:
-                from pyspark.sql import functions as F
-
-                for alias, expr in self._derive:
-                    fact_delta = fact_delta.withColumn(alias, F.expr(expr))
-            if fact_delta is not None and self._change_filter is not None:
-                from tiflink_spark.changelog import apply_filter
-
-                fact_delta = apply_filter(fact_delta, self._change_filter)
-            if dim_delta is None:
-                # fact-only MVs (agg without dim, distinct, top-k) share
-                # the (changes, batch_id) refresh signature
-                return self._mv.refresh(fact_delta, batch_id)
-            return self._mv.refresh(fact_delta, batch_id, dim_changes=dim_delta)
-        return self._mv.refresh(changes, batch_id)
+        unknown = set(changes) - self._route.tables
+        if unknown:
+            raise ValueError(
+                f"{self.maintenance_strategy} maintains only "
+                f"{sorted(self._route.tables)}; got changes for {sorted(unknown)}"
+            )
+        return self._route.feed(self._mv, changes, batch_id)
 
     def start_streaming(
         self,

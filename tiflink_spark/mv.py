@@ -33,6 +33,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from tiflink_spark.catalog import Catalog, default_pk
 from tiflink_spark.changelog import (
@@ -1848,8 +1849,18 @@ class IncrementalCorrScalarAggMV:
         needs the rewrite."""
         if len(self.corr) != 1:
             return None
-        _, op, oe = self.corr[0]
+        ie, op, oe = self.corr[0]
         if op not in ("<", "<=", ">", ">="):
+            return None
+        # The prefix path orders the UNION of ie and oe values, whose
+        # coercion can differ from the pair join's comparison (numeric
+        # vs string unions to string: lexicographic order). Fail closed
+        # unless the operand types are identical or both numeric.
+        it = self.fact0.select(F.expr(ie)).schema[0].dataType
+        ot = self.dim0.select(F.expr(oe)).schema[0].dataType
+        if it != ot and not (
+            isinstance(it, NumericType) and isinstance(ot, NumericType)
+        ):
             return None
         if self.acol is not None and self.akind in ("sum", "avg"):
             # min/max reassociate exactly for any orderable type;
