@@ -507,18 +507,6 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Tracked trend (VERDICT r5 #9): dedup_minhash_lsh is the one
-    # headline query with a consistent upward drift across rounds
-    # (r3 1.72s → idle-r4 1.46s → r5 2.08s at sf0.1). Record the
-    # per-round history inline so the delta is visible in every BENCH
-    # artifact without cross-referencing old files; the sf1 probe
-    # (BENCH_sf1 notes) watches the same query for super-linearity.
-    trend = {
-        "dedup_minhash_lsh": {
-            "history_sf0.1": {"r3": 1.72, "r4_idle": 1.46, "r5": 2.08},
-            "now": timings.get("dedup_minhash_lsh"),
-        }
-    }
     # The engine's core path: incremental refresh vs recompute on the
     # same queries (skippable for quick headline-only probes).
     mv_refresh = (
@@ -529,7 +517,7 @@ def main() -> None:
     # The driver captures only the last ~2kB of output and parses the
     # final JSON line (BENCH_r07 had "parsed": null because the single
     # combined line outgrew that window). So: the full detail record —
-    # runs, mv_refresh, contention, trends — goes on its OWN earlier
+    # runs, mv_refresh, contention — goes on its OWN earlier
     # line, and the compact headline (well under 2kB) is the LAST line.
     idle_ref = _latest_idle_reference()
     detail = {
@@ -537,7 +525,6 @@ def main() -> None:
         "runs": all_runs,
         "timing": "min_of_3",
         "contention_probe": probe,
-        "tracked_trends": trend,
         "mv_refresh": mv_refresh,
         "idle_reference": idle_ref,
         # drift >10% vs the idle record triggers an on-the-spot A/B of

@@ -1,5 +1,7 @@
 """MVApp end-to-end: builder -> bootstrap -> streaming changelog -> read."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2747,32 +2749,33 @@ def test_cost_advisor_probe_aborts_at_threshold_and_covers_agg(spark, tmp_path):
 
 
 def test_refresh_confs_isolated_from_user_session(spark, tmp_path, monkeypatch):
-    """VERDICT r9 #4: maintenance jobs run on a conf-isolated session
-    clone — a concurrent user query on the ORIGINAL session never sees
-    the refresh scope's AQE/codegen/shuffle tuning. The spy samples
-    both sessions' confs mid-refresh (inside a store merge, where the
-    scope is active)."""
+    """VERDICT r9 #4: maintenance jobs run on conf-isolated session
+    clones — a concurrent user query on the ORIGINAL session never sees
+    a refresh's AQE/codegen/shuffle settings. The spy records, inside a
+    store merge, the session the write runs on and the user session's
+    confs at that moment."""
     import tiflink_spark.store as store_mod
     from tiflink_spark.session import maintenance_session
 
-    user_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    user_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    user_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+            "spark.sql.shuffle.partitions")
+    user0 = tuple(spark.conf.get(k) for k in keys)
 
-    seen = {}
+    seen = []
     orig = store_mod.KeyedParquetStore.merge
 
     def spy(self, changes, batch_id):
-        ms = maintenance_session(spark)
-        seen["user"] = (
-            spark.conf.get("spark.sql.adaptive.enabled"),
-            spark.conf.get("spark.sql.codegen.wholeStage", "true"),
-            spark.conf.get("spark.sql.shuffle.partitions"),
+        ws = self.spark
+        seen.append(
+            {
+                "write_session": ws,
+                "write_confs": tuple(ws.conf.get(k) for k in keys),
+                "user_confs": tuple(spark.conf.get(k) for k in keys),
+                # a user query EXECUTED mid-refresh on the user session
+                # works and runs under the user's own conf
+                "user_query_rows": spark.range(5).count(),
+            }
         )
-        seen["maint_aqe"] = ms.conf.get("spark.sql.adaptive.enabled")
-        # a user query EXECUTED mid-refresh on the user session works
-        # and runs under the user's own conf
-        seen["user_query_rows"] = spark.range(5).count()
         return orig(self, changes, batch_id)
 
     monkeypatch.setattr(store_mod.KeyedParquetStore, "merge", spy)
@@ -2801,15 +2804,186 @@ def test_refresh_confs_isolated_from_user_session(spark, tmp_path, monkeypatch):
     )
     app.refresh({"ord_iso": ch}, batch_id=1)
 
-    # mid-refresh: user session untouched, maintenance session tuned
-    assert seen["user"] == (user_aqe, user_wsc, user_shuffle)
-    assert seen["maint_aqe"] == "false"
-    assert seen["user_query_rows"] == 5
-    # after: both sessions back to their baselines
-    assert spark.conf.get("spark.sql.adaptive.enabled") == user_aqe
+    # mid-refresh: every write ran on a maintenance session with AQE
+    # off, and the user session was untouched
+    assert seen
+    for w in seen:
+        assert w["write_session"] is not spark
+        assert w["write_confs"][0] == "false"
+        assert w["user_confs"] == user0
+        assert w["user_query_rows"] == 5
+    # after: the user session and the idle maintenance session keep
+    # the user's settings
+    assert tuple(spark.conf.get(k) for k in keys) == user0
     ms = maintenance_session(spark)
-    assert ms.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert ms is not spark
+    assert tuple(ms.conf.get(k) for k in keys) == user0
     # the MV is correct and its read() is homed on the user session
     out = app.read()
     assert out.sparkSession is spark
     assert out.count() == 5
+
+
+def test_concurrent_refreshes_keep_their_own_settings(spark, tmp_path, monkeypatch):
+    """Two views refresh on two threads, interleaved by events in a
+    store-merge spy: the small view's refresh enters first, the
+    table-scale view's (codegen on) enters while the small one waits,
+    and the small one finishes first. Each view's writes must run
+    under its own settings, and afterwards the user session and every
+    maintenance session must hold exactly their creation-time confs. A
+    single shared maintenance session with conf flips ran the small
+    view's writes with codegen on, and its out-of-order restore left
+    the shuffle sizing of the view that exited first behind."""
+    import threading
+
+    import tiflink_spark.mv as mv_mod
+    import tiflink_spark.store as store_mod
+    from tiflink_spark import session as session_mod
+
+    user = spark.newSession()  # a fresh family of maintenance sessions
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+            "spark.sql.codegen.factoryMode", "spark.sql.shuffle.partitions")
+
+    def confs(s):
+        return tuple(s.conf.get(k) for k in keys)
+
+    user0 = confs(user)
+    monkeypatch.setattr(mv_mod, "CODEGEN_TABLE_ROWS", 60)
+
+    def build(tag, n, parts):
+        orders = user.createDataFrame(
+            [(i, i % 5, float(i)) for i in range(n)],
+            "o_orderkey long, o_custkey long, o_totalprice double",
+        )
+        app = (
+            MVApp.builder(user)
+            .source(f"ord_{tag}", orders, pk=["o_orderkey"])
+            .query(f"SELECT o_custkey, count(*) AS n FROM ord_{tag} GROUP BY o_custkey")
+            .target(str(tmp_path / tag))
+            .num_buckets(2)
+            .shuffle_partitions(parts)
+            .build()
+        )
+        app.bootstrap()
+        ch = (
+            orders.limit(3)
+            .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
+            .withColumn(OP_COL, F.lit(OP_UPDATE))
+            .withColumn(SEQ_COL, F.monotonically_increasing_id())
+        )
+        return app, ch
+
+    small, small_ch = build("small", 20, 2)
+    big, big_ch = build("big", 100, 3)
+
+    writes = {"small": {}, "big": {}}
+    small_in, big_in, small_done = threading.Event(), threading.Event(), threading.Event()
+    orig = store_mod.KeyedParquetStore.merge
+
+    def spy(self, changes, batch_id):
+        tag = "small" if self.path.startswith(str(tmp_path / "small")) else "big"
+        writes[tag][os.path.basename(self.path)] = confs(self.spark)
+        if tag == "small" and not small_in.is_set():
+            small_in.set()
+            big_in.wait(60)
+        elif tag == "big" and not big_in.is_set():
+            big_in.set()
+            small_done.wait(60)
+        return orig(self, changes, batch_id)
+
+    monkeypatch.setattr(store_mod.KeyedParquetStore, "merge", spy)
+    errors = []
+
+    def run_small():
+        try:
+            small.refresh({"ord_small": small_ch}, batch_id=1)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+        finally:
+            small_done.set()
+
+    def run_big():
+        small_in.wait(60)
+        try:
+            big.refresh({"ord_big": big_ch}, batch_id=1)
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=run_small), threading.Thread(target=run_big)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert small_in.is_set() and big_in.is_set()
+
+    # fact merge at the configured sizing, state/target re-tuned to the
+    # 3-row delta; AQE off; codegen off only for the small view
+    off = ("false", "false", "NO_CODEGEN")
+    on = ("false",) + user0[1:3]
+    assert writes["small"] == {"fact": off + ("2",), "state": off + ("1",), "mv": off + ("1",)}
+    assert writes["big"] == {"fact": on + ("3",), "state": on + ("1",), "mv": on + ("1",)}
+
+    # afterwards: every session holds its creation-time confs
+    assert confs(user) == user0
+    family = session_mod._MAINT_SESSIONS[user]
+    for s, ms in family.items():
+        expect = (
+            "false" if s.refresh else user0[0],
+            *(user0[1:3] if s.codegen else ("false", "NO_CODEGEN")),
+            user0[3] if s.partitions is None else str(s.partitions),
+        )
+        assert confs(ms) == expect, s
+    assert {s.partitions for s in family if s.refresh} == {1, 2, 3}
+    assert small.read().sparkSession is user
+    assert small.read().count() == 5 and big.read().count() == 5
+
+
+def test_maintenance_session_one_clone_per_settings_under_contention(spark):
+    """Many threads asking at once for the maintenance sessions of a few
+    settings values each get the one clone of that value, created with
+    its confs; no clone is ever built twice or changed afterwards."""
+    import sys
+    import threading
+
+    from tiflink_spark import session as session_mod
+    from tiflink_spark.session import JOB, JobSettings, maintenance_session
+
+    user = spark.newSession()
+    wanted = [JobSettings(r, c, p) for r in (False, True) for c in (False, True) for p in (1, 2)]
+    got = {s: set() for s in wanted}
+    lock = threading.Lock()
+    start = threading.Barrier(12)
+
+    def ask(i):
+        start.wait(60)
+        for k in range(40):
+            s = wanted[(i + k) % len(wanted)]
+            token = JOB.set(s)
+            try:
+                ms = maintenance_session(user)
+            finally:
+                JOB.reset(token)
+            with lock:
+                got[s].add(id(ms))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=ask, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    family = session_mod._MAINT_SESSIONS[user]
+    for s in wanted:
+        assert got[s] == {id(family[s])}
+        assert family[s].conf.get("spark.sql.adaptive.enabled") == (
+            "false" if s.refresh else "true"
+        )
+        assert family[s].conf.get("spark.sql.codegen.wholeStage") == str(s.codegen).lower()
+        assert family[s].conf.get("spark.sql.shuffle.partitions") == str(s.partitions)
+    assert maintenance_session(user) is family[session_mod.IDLE]

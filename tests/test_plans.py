@@ -2,7 +2,10 @@
 queries survive a 100x scale-up, pinned so a refactor can't silently
 lose them."""
 
+import os
 import re
+
+import pytest
 
 from tiflink_spark.queries import get_registry
 
@@ -202,39 +205,63 @@ def test_decile_binning_avoids_global_sort_of_docs(spark):
             assert spec.startswith("n_words#"), spec
 
 
+def _spy_write_confs(monkeypatch) -> list:
+    """Record, for every KeyedParquetStore.merge, the store path and the
+    AQE / whole-stage codegen / shuffle confs of the session the write
+    runs on (merge rehomes its changes onto ``store.spark``)."""
+    import tiflink_spark.store as store_mod
+
+    seen = []
+    orig = store_mod.KeyedParquetStore.merge
+
+    def spy(self, changes, batch_id):
+        c = self.spark.conf
+        seen.append(
+            (
+                self.path,
+                c.get("spark.sql.adaptive.enabled"),
+                c.get("spark.sql.codegen.wholeStage"),
+                c.get("spark.sql.shuffle.partitions"),
+            )
+        )
+        return orig(self, changes, batch_id)
+
+    monkeypatch.setattr(store_mod.KeyedParquetStore, "merge", spy)
+    return seen
+
+
 def test_refresh_codegen_scales_with_store_size(spark, tmp_path, monkeypatch):
-    """Refresh runs interpreted (codegen off) only while the route's
-    source stores are below table scale — a pruning-hostile batch can
-    scan the store whole, and an interpreted table-scale scan costs
-    far more than the per-batch Janino compile it saves (round 9: an
-    sf10 uniform flagship batch went 5s -> 26s). Nested scopes (a
-    cascade's inner route) must not flip the outer's choice."""
+    """Refresh writes run interpreted (codegen off) only while the
+    route's source stores are below table scale — a pruning-hostile
+    batch can scan the store whole, and an interpreted table-scale scan
+    costs far more than the per-batch Janino compile it saves (round 9:
+    an sf10 uniform flagship batch went 5s -> 26s). A nested route (the
+    join route's inner aggregate) must not flip the outer's choice, and
+    the user session's confs are never touched."""
     from pyspark.sql import functions as F
 
     from tiflink_spark import mv as mv_mod
     from tiflink_spark.app import MVApp
     from tiflink_spark.changelog import OP_COL, OP_UPDATE, SEQ_COL
 
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+            "spark.sql.shuffle.partitions")
+    user0 = [spark.conf.get(k) for k in keys]
     orders = spark.createDataFrame(
         [(i, i % 5, float(i)) for i in range(100)],
         "o_orderkey long, o_custkey long, o_totalprice double",
     )
-    seen = {}
-    orig_scope = mv_mod._shuffle_scope
+    cust = spark.createDataFrame(
+        [(i, f"n{i % 2}") for i in range(5)], "c_custkey long, c_nation string"
+    )
+    seen = _spy_write_confs(monkeypatch)
 
-    def spy(spark_, n, adaptive_off=False, big_scan=False):
-        if adaptive_off:
-            seen["big_scan"] = seen.get("big_scan", False) or big_scan
-            seen["codegen_during"] = spark_.conf.get("spark.sql.codegen.wholeStage")
-        return orig_scope(spark_, n, adaptive_off=adaptive_off, big_scan=big_scan)
-
-    monkeypatch.setattr(mv_mod, "_shuffle_scope", spy)
-
-    def build(tag):
+    def build(tag, query="SELECT o_custkey, count(*) AS n FROM ord_cg GROUP BY o_custkey"):
         return (
             MVApp.builder(spark)
             .source("ord_cg", orders, pk=["o_orderkey"])
-            .query("SELECT o_custkey, count(*) AS n FROM ord_cg GROUP BY o_custkey")
+            .source("cust_cg", cust, pk=["c_custkey"])
+            .query(query)
             .target(str(tmp_path / tag))
             .num_buckets(2)
             .shuffle_partitions(2)
@@ -247,48 +274,95 @@ def test_refresh_codegen_scales_with_store_size(spark, tmp_path, monkeypatch):
         .withColumn(OP_COL, F.lit(OP_UPDATE))
         .withColumn(SEQ_COL, F.monotonically_increasing_id())
     )
-    # small store: interpreted refresh
+    # small store: every refresh write runs with AQE and codegen off
     app = build("small")
     app.bootstrap()
     app.refresh({"ord_cg": ch}, batch_id=1)
-    assert seen.pop("big_scan") is False
+    assert seen and {w[1:3] for w in seen} == {("false", "false")}
     # table-scale store (simulated by shrinking the bound): codegen on
     monkeypatch.setattr(mv_mod, "CODEGEN_TABLE_ROWS", 10)
     app2 = build("big")
     app2.bootstrap()
     seen.clear()
     app2.refresh({"ord_cg": ch}, batch_id=1)
-    assert seen["big_scan"] is True
-    # and the session conf is restored either way
-    assert spark.conf.get("spark.sql.codegen.wholeStage") in ("true", None)
+    assert seen and {w[1:3] for w in seen} == {("false", "true")}
     # bootstrap_rows recorded the store's scale signal
     assert app2._mv.fact_store.bootstrap_rows() == 100
+    # the join route's inner aggregate has no source-scale store of its
+    # own: it runs under the outer route's big-scan choice
+    app3 = build(
+        "join",
+        "SELECT c.c_nation, count(*) AS n FROM ord_cg o "
+        "JOIN cust_cg c ON o.o_custkey = c.c_custkey GROUP BY c.c_nation",
+    )
+    assert app3.maintenance_strategy == "IncrementalJoinAggMV"
+    app3.bootstrap()
+    seen.clear()
+    app3.refresh({"ord_cg": ch}, batch_id=1)
+    inner = [w for w in seen if f"{os.sep}agg{os.sep}" in w[0]]
+    assert inner and {w[1:3] for w in seen} == {("false", "true")}
+    # and the user session's confs are untouched throughout
+    assert [spark.conf.get(k) for k in keys] == user0
 
 
-def test_shuffle_scope_strictest_requirement(spark):
-    """ADVICE r9 (low): AQE/codegen follow the STRICTEST requirement
-    across live scopes — a big-scan refresh entering under a live
-    small-route scope keeps codegen ON (first-entrant-wins forced it
-    to run interpreted table-scale scans), and codegen comes back on
-    while a bootstrap-like scope overlaps a refresh scope."""
-    import tiflink_spark.mv as mv_mod
+def test_job_settings_nesting():
+    """The outermost bootstrap/refresh chooses the job's settings;
+    nested routes inherit them under their own token (an inner re-tune
+    ends with the inner call), and an inner big-scan refresh still
+    turns codegen on for its own duration. No Spark job runs."""
+    from tiflink_spark import mv as mv_mod
+    from tiflink_spark.session import JOB, JobSettings
 
-    wsc0 = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    with mv_mod._shuffle_scope(spark, 2, adaptive_off=True):
-        assert spark.conf.get("spark.sql.codegen.wholeStage") == "false"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        with mv_mod._shuffle_scope(spark, 2, adaptive_off=True, big_scan=True):
-            assert spark.conf.get("spark.sql.codegen.wholeStage") == wsc0
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        # big scope gone -> small-refresh requirement reapplies
-        assert spark.conf.get("spark.sql.codegen.wholeStage") == "false"
-        with mv_mod._shuffle_scope(spark, None):  # bootstrap-like
-            assert spark.conf.get("spark.sql.codegen.wholeStage") == wsc0
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.codegen.wholeStage") == "false"
-    assert spark.conf.get("spark.sql.codegen.wholeStage") == wsc0
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+    class Store:
+        def __init__(self, rows):
+            self.rows = rows
+
+        def bootstrap_rows(self):
+            return self.rows
+
+    seen = []
+
+    class Route:
+        shuffle_partitions = 3
+
+        def __init__(self, rows, inner=None, delta_rows=None):
+            self.fact_store = Store(rows)
+            self.inner = inner
+            self.delta_rows = delta_rows
+
+        @mv_mod._maintenance
+        def bootstrap(self):
+            seen.append(JOB.get())
+
+        @mv_mod._maintenance
+        def refresh(self):
+            if self.delta_rows is not None:
+                mv_mod._tune_delta_shuffle(self.shuffle_partitions, self.delta_rows)
+            seen.append(JOB.get())
+            if self.inner is not None:
+                self.inner.refresh()
+                seen.append(JOB.get())
+
+    big = mv_mod.CODEGEN_TABLE_ROWS + 1
+    Route(10).bootstrap()
+    assert seen == [JobSettings(False, True, 3)]
+    # small outer, big inner with its own delta re-tune
+    seen.clear()
+    Route(10, inner=Route(big, delta_rows=5)).refresh()
+    assert seen == [
+        JobSettings(True, False, 3),
+        JobSettings(True, True, 1),
+        JobSettings(True, False, 3),
+    ]
+    # big outer, small inner: the inner keeps codegen on
+    seen.clear()
+    Route(big, inner=Route(10)).refresh()
+    assert [s.codegen for s in seen] == [True, True, True]
+    # a backfill-scale delta turns codegen on; sizing stays capped
+    seen.clear()
+    Route(10, delta_rows=mv_mod.CODEGEN_DELTA_ROWS + 1).refresh()
+    assert seen == [JobSettings(True, True, 3)]
+    assert JOB.get() is None
 
 
 def test_dim_churn_affected_rows_stay_broadcast_pruned(spark, tmp_path):
@@ -463,6 +537,35 @@ def test_q15_single_lineitem_scan_no_global_window(spark):
     final = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, plan[:4000]
     assert final.count("Scan parquet") == 2, plan[:4000]  # lineitem + supplier
+
+
+def test_q15_lineitem_suppkey_never_null():
+    """q15 filters ``l_suppkey IS NOT NULL`` so both revenue subtrees
+    carry the same pushed filter and ReuseExchange dedupes them; the
+    filter is result-neutral only while the generated lineitem holds no
+    NULL supplier key. Pinned from the parquet footer statistics of
+    every scale factor present — no Spark job."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from tiflink_spark.session import DEFAULT_SF_DIR
+
+    paths = sorted(
+        glob.glob(os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf*", "lineitem.parquet"))
+    )
+    if not paths:
+        pytest.skip("no generated testdata")
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        idx = [md.schema.column(j).name for j in range(md.num_columns)].index("l_suppkey")
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(idx).statistics
+            if st is not None and st.has_null_count:
+                nulls = st.null_count
+            else:  # footer without statistics: count from the column itself
+                nulls = pq.read_table(path, columns=["l_suppkey"]).column(0).null_count
+            assert nulls == 0, (path, i)
 
 
 def test_cast_funcs_regex_guard_matches_plain_try_cast(spark):

@@ -55,6 +55,7 @@ from tiflink_spark.mv import (
     IncrementalUnionMV,
     IncrementalWindowMV,
     RecomputeMV,
+    _job_settings,
 )
 from tiflink_spark.incremental import Measure
 from tiflink_spark.planner import (
@@ -85,6 +86,7 @@ from tiflink_spark.planner import (
     split_group_order_limit,
     split_nested_query,
 )
+from tiflink_spark.session import JOB
 from tiflink_spark.store import KeyedParquetStore
 from tiflink_spark.types import create_table_ddl
 
@@ -511,12 +513,18 @@ class CascadeMV:
                     [f.name for f in self.inner.mv_schema.fields] + list(tgt.pk)
                 )
             )
-            cb = getattr(tgt, "changes_between", None)
-            delta = (
-                cb(v_from, v_to)
-                if cb is not None
-                else changes_between(tgt, v_from, v_to)
-            ).select(*cols, OP_COL, SEQ_COL)
+            # Build the delta on the session of the outer refresh job, so
+            # the outer route's actions on it run under that job's settings.
+            token = JOB.set(_job_settings(self.outer._mv, refresh=True))
+            try:
+                cb = getattr(tgt, "changes_between", None)
+                delta = (
+                    cb(v_from, v_to)
+                    if cb is not None
+                    else changes_between(tgt, v_from, v_to)
+                ).select(*cols, OP_COL, SEQ_COL)
+            finally:
+                JOB.reset(token)
             outer_changes = {self.alias: delta, **outer_changes}
         if not outer_changes:
             return False

@@ -26,10 +26,9 @@ reference's consistency machinery exists to guarantee (README.md:18-22).
 
 from __future__ import annotations
 
+import contextvars
 import functools
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,145 +53,8 @@ from tiflink_spark.incremental import (
     merge_delta_state,
     present_measures,
 )
+from tiflink_spark.session import JOB, JobSettings, maintenance_session
 from tiflink_spark.store import KeyedParquetStore
-
-
-# Session confs are PROCESS-GLOBAL, but refreshes run concurrently
-# (grouping-sets sub-MVs fan out on threads; the agg route overlaps
-# state∥target merges), so the AQE/codegen save/restore is guarded by
-# a refcount: only the first entrant saves-and-applies and only the
-# last restores. A per-thread depth would let two concurrent
-# "outermost" scopes race the restore and LEAK codegen=false into the
-# session (observed: one suite-order-dependent test failure).
-_SCOPE_LOCK = threading.Lock()
-
-
-def _scope_state(spark: SparkSession) -> dict:
-    """Per-SESSION scope state (attached to the session object):
-    n_off counts live scopes wanting AQE off (refresh scopes);
-    n_keep_codegen counts live scopes REQUIRING codegen on (big-scan
-    refreshes and bootstraps). The strictest requirement across live
-    scopes wins — first-entrant-wins let a small-route scope force a
-    concurrent big-scan refresh to run interpreted table-scale scans
-    (measured 5s→26s). Keyed per session because maintenance runs on
-    a conf-isolated session clone (session.maintenance_session)."""
-    st = getattr(spark, "_tiflink_scope_state", None)
-    if st is None:
-        st = {"count": 0, "saved": None, "n_off": 0, "n_keep_codegen": 0}
-        spark._tiflink_scope_state = st
-    return st
-
-
-def _apply_scope_confs(spark: SparkSession, st: dict) -> None:
-    """Apply the strictest requirement across live scopes (holding
-    _SCOPE_LOCK): AQE off if ANY refresh scope is live; codegen off
-    only when some refresh scope wants it off and NO live scope (big
-    scan or bootstrap) needs it on."""
-    saved_aqe, saved_wsc, saved_fac = st["saved"]
-    if st["n_off"] > 0:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        if st["n_keep_codegen"] == 0:
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-            spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        else:
-            spark.conf.set("spark.sql.codegen.wholeStage", saved_wsc)
-            spark.conf.set("spark.sql.codegen.factoryMode", saved_fac)
-    else:
-        spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        spark.conf.set("spark.sql.codegen.wholeStage", saved_wsc)
-        spark.conf.set("spark.sql.codegen.factoryMode", saved_fac)
-
-
-@contextmanager
-def _shuffle_scope(
-    spark: SparkSession,
-    n: int | None,
-    adaptive_off: bool = False,
-    big_scan: bool = False,
-):
-    """Pin ``spark.sql.shuffle.partitions`` while maintenance jobs run.
-
-    MV maintenance work is proportional to the *changed* keys, which is
-    typically orders of magnitude smaller than the session-wide shuffle
-    sizing chosen for full-table scans — per-batch task overhead then
-    dominates (measured 10x on the gate workload). This is the engine's
-    analog of the reference's explicit job parallelism knob
-    (TiFlinkApp.java:243-246, parallelism 3 in the example): size it to
-    expected delta volume, not source volume.
-
-    ``adaptive_off`` additionally disables AQE for the scope: AQE
-    materializes every query stage as its own job to replan at runtime
-    — the right trade for a 100 TB scan, pure scheduling overhead for a
-    delta-sized refresh (measured: 19-27 jobs per flagship refresh
-    batch with AQE on vs the plan's natural handful off — AQE round-
-    trips, not data, were the refresh-latency floor). Refresh runs with
-    it off (parallelism comes from the tuned shuffle sizing, the
-    reference's fixed-parallelism analog, TiFlinkApp.java:243-246);
-    bootstrap — real full-table work — keeps it on.
-
-    ``adaptive_off`` scopes also disable WHOLE-STAGE CODEGEN (and the
-    codegen expression factory) — UNLESS ``big_scan`` is set: every
-    refresh batch embeds that batch's key literals (retraction
-    filters, bucket paths) in the plan, so the generated source is
-    NEVER reused across batches — each batch pays Janino compilation
-    for every stage to then execute a few hundred rows
-    interpreted-speed anyway. Measured (flagship, sf0.1, warm route):
-    3.0s/batch with codegen on vs 2.1s off — ~30% of refresh latency
-    was compiler time. But a route whose backing store is TABLE-SCALE
-    can degrade to an O(table) scan inside a refresh (uniform churn
-    defeats the retraction lookup's range pruning), and an interpreted
-    15M-row scan costs far more than the compile it saved (measured:
-    a 5s sf10 batch became 26s) — so the _maintenance wrapper passes
-    ``big_scan`` when any of the route's source-scale stores exceeds
-    CODEGEN_TABLE_ROWS, keeping codegen on. Bootstrap keeps codegen
-    on always: a full-table scan amortizes compilation as intended.
-    AQE/codegen follow the STRICTEST requirement across all live
-    scopes (process-wide counters under a lock): AQE is off while any
-    refresh scope is live, but codegen stays ON while any live scope
-    needs it (a big-scan refresh, or a bootstrap) — first-entrant-wins
-    let a small-route scope force a concurrently-entering big-scan
-    refresh to run interpreted table-scale scans. Only the first
-    entrant snapshots the session values and only the last restores
-    them — a per-thread depth leaked codegen=false into the session
-    when two "outermost" scopes overlapped.
-
-    The scope snapshots/restores even when ``n`` is None so refresh
-    bodies can re-tune the sizing mid-batch (``_tune_delta_shuffle``)
-    without leaking it into the session.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    keep_codegen = big_scan or not adaptive_off
-    with _SCOPE_LOCK:
-        st = _scope_state(spark)
-        st["count"] += 1
-        if st["count"] == 1:
-            st["saved"] = (
-                spark.conf.get("spark.sql.adaptive.enabled"),
-                spark.conf.get("spark.sql.codegen.wholeStage", "true"),
-                spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK"),
-            )
-        st["n_off"] += 1 if adaptive_off else 0
-        st["n_keep_codegen"] += 1 if keep_codegen else 0
-        _apply_scope_confs(spark, st)
-    if n is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with _SCOPE_LOCK:
-            st = _scope_state(spark)
-            st["count"] -= 1
-            st["n_off"] -= 1 if adaptive_off else 0
-            st["n_keep_codegen"] -= 1 if keep_codegen else 0
-            if st["count"] == 0:
-                aqe, wsc, fac = st["saved"]
-                st["saved"] = None
-                spark.conf.set("spark.sql.adaptive.enabled", aqe)
-                spark.conf.set("spark.sql.codegen.wholeStage", wsc)
-                spark.conf.set("spark.sql.codegen.factoryMode", fac)
-            else:
-                _apply_scope_confs(spark, st)
 
 
 # Target rows per maintenance task. Once a batch's true change-row count
@@ -210,33 +72,28 @@ DELTA_ROWS_PER_TASK = 32_768
 CODEGEN_DELTA_ROWS = 1_000_000
 
 
-def _tune_delta_shuffle(spark: SparkSession, configured: int | None, rows: int | None):
-    """Re-pin shuffle sizing to the batch's measured delta volume for
-    the remainder of the refresh (the enclosing _shuffle_scope restores
-    the session value afterwards). A backfill-scale delta also turns
-    whole-stage codegen back ON for the rest of the batch — the
-    refresh scope disables it because micro-batches never amortize
-    Janino compilation, but a million-row batch does. Tunes the
-    MAINTENANCE session whichever session the route handle carries —
-    user-session conf is never touched mid-batch."""
+def _tune_delta_shuffle(configured: int | None, rows: int | None):
+    """Size the rest of the running job to the batch's measured delta
+    volume: ceil(rows / DELTA_ROWS_PER_TASK) shuffle partitions, capped
+    at the route's configured sizing. A backfill-scale delta also turns
+    whole-stage codegen back ON — refresh runs interpreted because
+    micro-batches never amortize Janino compilation, but a million-row
+    batch does. The new settings replace the job's for the rest of the
+    batch (the enclosing _maintenance call restores its own on exit);
+    store reads and writes from here on run on their session."""
     if rows is None:
         return
-    from tiflink_spark.session import maintenance_session
-
-    spark = maintenance_session(spark)
     need = max(1, -(-rows // DELTA_ROWS_PER_TASK))
     if configured is not None:
         need = min(need, configured)
-    spark.conf.set("spark.sql.shuffle.partitions", str(need))
-    if rows > CODEGEN_DELTA_ROWS:
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    job = JOB.get()
+    JOB.set(job._replace(partitions=need, codegen=job.codegen or rows > CODEGEN_DELTA_ROWS))
 
 
 # Stores whose bootstrap row count exceeds this keep whole-stage
 # codegen ON during refresh: a pruning-hostile batch can scan them
 # whole, and an interpreted table-scale scan costs more than the
-# per-batch compile it saves (see _shuffle_scope).
+# per-batch compile it saves (see _maintenance).
 CODEGEN_TABLE_ROWS = 2_000_000
 
 # source-scale store attributes a route may carry (the target/state
@@ -264,29 +121,61 @@ def _route_is_big(self) -> bool:
     return False
 
 
-def _maintenance(fn):
-    """Run a bootstrap/refresh method under the MV's shuffle sizing;
-    refresh methods additionally run with AQE off (see _shuffle_scope —
-    per-stage replan jobs are the latency floor at delta scale) and,
-    for routes whose source stores are below table scale, with
-    whole-stage codegen off."""
+def _job_settings(route, refresh: bool) -> JobSettings:
+    """The settings of a bootstrap or refresh of ``route`` that runs as
+    the outermost job (see _maintenance)."""
+    return JobSettings(
+        refresh,
+        not refresh or _route_is_big(route),
+        getattr(route, "shuffle_partitions", None),
+    )
 
-    adaptive_off = fn.__name__ == "refresh"
+
+def _maintenance(fn):
+    """Run a bootstrap/refresh method as one maintenance job: its store
+    reads and writes run on the maintenance session of the job's
+    :class:`~tiflink_spark.session.JobSettings`, chosen here by the
+    outermost call:
+
+    - shuffle sizing is the route's ``shuffle_partitions`` — the analog
+      of the reference's explicit job parallelism knob
+      (TiFlinkApp.java:243-246): maintenance work is proportional to
+      the changed keys, and per-task overhead dominates when the
+      session-wide sizing for full-table scans is used (measured 10x on
+      the gate workload);
+    - refresh runs with AQE off: AQE materializes every query stage as
+      its own job to replan at runtime — pure scheduling overhead for a
+      delta-sized batch (measured 19-27 jobs per flagship batch with
+      AQE on vs the plan's natural handful off). Bootstrap, real
+      full-table work, keeps it on;
+    - refresh also runs with whole-stage codegen off: every batch
+      embeds its key literals in the plan, so generated code is never
+      reused and each batch paid Janino compilation to run a few
+      hundred rows (flagship sf0.1: 3.0s/batch on vs 2.1s off). A route
+      whose source stores exceed CODEGEN_TABLE_ROWS keeps codegen on —
+      a pruning-hostile batch can scan such a store whole, and an
+      interpreted table-scale scan costs far more than the compile
+      (a 5s sf10 batch became 26s).
+
+    A nested call (a route refreshing an inner route) inherits the
+    running job's settings under its own token, so an inner re-tune
+    ends with the inner call; an inner big-scan refresh still turns
+    codegen on for its own duration."""
+
+    refresh = fn.__name__ == "refresh"
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
-        from tiflink_spark.session import maintenance_session
-
-        # The scope flips confs on the MAINTENANCE session (the one
-        # the stores home every read and write to) — a concurrent user
-        # query on the original session keeps its own conf.
-        with _shuffle_scope(
-            maintenance_session(self.spark),
-            getattr(self, "shuffle_partitions", None),
-            adaptive_off=adaptive_off,
-            big_scan=adaptive_off and _route_is_big(self),
-        ):
+        job = JOB.get()
+        if job is None:
+            job = _job_settings(self, refresh)
+        elif refresh and not job.codegen and _route_is_big(self):
+            job = job._replace(codegen=True)
+        token = JOB.set(job)
+        try:
             return fn(self, *args, **kwargs)
+        finally:
+            JOB.reset(token)
 
     return wrapper
 
@@ -336,10 +225,8 @@ class RecomputeMV:
         self.target_path = target_path
 
     def _run_query(self) -> DataFrame:
-        from tiflink_spark.session import maintenance_session
-
-        # Store reads are homed on the maintenance session, so the
-        # temp views land there — resolve the query on the same
+        # Store reads are homed on the job's maintenance session, so
+        # the temp views land there — resolve the query on the same
         # session (the user session's views still hold the BOOTSTRAP
         # inputs, not current store state).
         ms = maintenance_session(self.spark)
@@ -2254,9 +2141,7 @@ class IncrementalTopKMV:
         if mat is not None:
             changes = mat  # the changelog lineage ran once, in the merge
         _tune_delta_shuffle(
-            self.spark,
-            self.shuffle_partitions,
-            self.fact_store.batch_change_rows(batch_id),
+            self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
         )
         dirty = self._dirty_groups(changes, batch_id).cache()
         sub = self.fact_store.read().join(dirty, self.group_key, "left_semi")
@@ -2557,9 +2442,7 @@ class IncrementalWindowMV:
         if mat is not None:
             changes = mat  # the changelog lineage ran once, in the merge
         _tune_delta_shuffle(
-            self.spark,
-            self.shuffle_partitions,
-            self.fact_store.batch_change_rows(batch_id),
+            self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
         )
         # cache (not an eager checkpoint): both consumers execute inside
         # the target-merge job; the pre-batch reads are manifest-pinned
@@ -3472,7 +3355,11 @@ class IncrementalJoinAggMV:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=len(merges)) as pool:
-                for f in [pool.submit(s.merge, ch, batch_id) for _, s, ch in merges]:
+                futures = [
+                    pool.submit(contextvars.copy_context().run, s.merge, ch, batch_id)
+                    for _, s, ch in merges
+                ]
+                for f in futures:
                     f.result()
         # Re-bind every changed table to its merge's materialized delta:
         # the changelog lineages executed once, inside the merge writes;
@@ -3491,9 +3378,7 @@ class IncrementalJoinAggMV:
             # aggregate re-tunes its target legs on the measured state
             # delta after its state merge (external_fact branch).
             _tune_delta_shuffle(
-                self.spark,
-                self.shuffle_partitions,
-                self.fact_store.batch_change_rows(batch_id),
+                self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
             )
         dim_changed_names = [n for n, _, _ in merges if n != self.fact_name]
         # Fact-only batch: each dim hanging directly off the fact is
@@ -4154,9 +4039,7 @@ class IncrementalTemporalJoinMV:
             if mat is not None:
                 fact_changes = mat
             _tune_delta_shuffle(
-                self.spark,
-                self.shuffle_partitions,
-                self.fact_store.batch_change_rows(batch_id),
+                self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
             )
             hist = self.hist_store.read()
             final = last_change_per_key(fact_changes, self.fact_pk)
@@ -4360,10 +4243,8 @@ class IncrementalGroupingSetsMV:
             sub.fact_store = shared_fact  # one fact copy for all sets
             self.subs.append(sub)
         self.fact_store = shared_fact
-        # one outer shuffle pin around the concurrent sub passes (the
-        # subs' own pins then set/restore the identical value — no
-        # cross-thread conf drift)
-        self._sub_shuffle = shuffle_partitions
+        # the job's sizing, which the subs inherit (see _maintenance)
+        self.shuffle_partitions = shuffle_partitions
         # Composite CDC source over the per-set target stores — what a
         # CascadeMV consumes instead of a (non-existent) single target.
         self.cascade_target = _GroupingSetsCascadeTarget(self)
@@ -4384,38 +4265,38 @@ class IncrementalGroupingSetsMV:
             return [fn(self.subs[0])]
         from concurrent.futures import ThreadPoolExecutor
 
+        # one context copy per sub: each inherits this job's settings and
+        # its own re-tune stays its own
         with ThreadPoolExecutor(
             max_workers=min(self._SUB_WORKERS, len(self.subs))
         ) as pool:
-            return list(pool.map(fn, self.subs))
+            futures = [
+                pool.submit(contextvars.copy_context().run, fn, sub) for sub in self.subs
+            ]
+            return [f.result() for f in futures]
 
+    @_maintenance
     def bootstrap(self, batch_id=0) -> None:
-        from tiflink_spark.session import maintenance_session
+        self.fact_store.bootstrap(self._fact0, batch_id)
+        self._run_subs(lambda sub: sub.bootstrap(batch_id))
 
-        with _shuffle_scope(maintenance_session(self.spark), self._sub_shuffle):
-            self.fact_store.bootstrap(self._fact0, batch_id)
-            self._run_subs(lambda sub: sub.bootstrap(batch_id))
-
+    @_maintenance
     def refresh(self, changes: DataFrame, batch_id) -> bool:
         if changes is None:
             return False
         if self._has_global:
             changes = changes.withColumn("__g", F.lit(0))
-        from tiflink_spark.session import maintenance_session
-
-        with _shuffle_scope(maintenance_session(self.spark), self._sub_shuffle):
-            # The shared fact merge is the changelog's single execution
-            # point; every sub then re-binds to its materialized delta
-            # parquet (each sub's own merge no-ops on the batch-id
-            # guard and re-binds the same way). The old eager
-            # localCheckpoint here was a whole extra analysis + job per
-            # batch materializing the same rows the merge writes.
-            self.fact_store.merge(changes, batch_id)
-            mat = self.fact_store.batch_delta(batch_id)
-            if mat is not None:
-                changes = mat
-            results = self._run_subs(lambda sub: sub.refresh(changes, batch_id))
-        return any(results)
+        # The shared fact merge is the changelog's single execution
+        # point; every sub then re-binds to its materialized delta
+        # parquet (each sub's own merge no-ops on the batch-id guard and
+        # re-binds the same way). The old eager localCheckpoint here was
+        # a whole extra analysis + job per batch materializing the same
+        # rows the merge writes.
+        self.fact_store.merge(changes, batch_id)
+        mat = self.fact_store.batch_delta(batch_id)
+        if mat is not None:
+            changes = mat
+        return any(self._run_subs(lambda sub: sub.refresh(changes, batch_id)))
 
     def _extend(
         self,
@@ -4778,7 +4659,8 @@ class IncrementalAggMV:
             if self.fact_store is not None:
                 with ThreadPoolExecutor(max_workers=1) as fact_pool:
                     fact_merge_future = fact_pool.submit(
-                        self.fact_store.merge, fact_changes, batch_id
+                        contextvars.copy_context().run,
+                        self.fact_store.merge, fact_changes, batch_id,
                     )
                     if batch_id in self.state_store.committed_batches():
                         # crash between state commit and target commit:
@@ -4803,9 +4685,7 @@ class IncrementalAggMV:
                 # delta (dirty-group recompute volume is ∝ δ × group
                 # width; DELTA_ROWS_PER_TASK keeps those tasks small).
                 _tune_delta_shuffle(
-                    self.spark,
-                    self.shuffle_partitions,
-                    self.fact_store.batch_change_rows(batch_id),
+                    self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
                 )
                 prev_v = self.fact_store.version_before_batch(batch_id)
                 bks = self.fact_store.batch_buckets(batch_id)
@@ -4935,7 +4815,6 @@ class IncrementalAggMV:
             concurrent = (
                 dim_changes is None
                 and self.fact_store is not None
-                and os.environ.get("TIFLINK_SERIAL_STATE_TARGET") != "1"
                 # float SUM/AVG/STDDEV measures may differ by ulps
                 # between the two executions — those shapes keep the
                 # serial form, whose state delta write is the single
@@ -4950,7 +4829,8 @@ class IncrementalAggMV:
                 # instead of delaying it.
                 state_pool = ThreadPoolExecutor(max_workers=1)
                 state_future = state_pool.submit(
-                    self.state_store.merge, state_changes, batch_id
+                    contextvars.copy_context().run,
+                    self.state_store.merge, state_changes, batch_id,
                 )
             else:
                 self.state_store.merge(state_changes, batch_id)
@@ -4964,9 +4844,7 @@ class IncrementalAggMV:
                     # the target legs to the MEASURED state delta
                     # instead, now that the state merge recorded it.
                     _tune_delta_shuffle(
-                        self.spark,
-                        self.shuffle_partitions,
-                        self.state_store.batch_change_rows(batch_id),
+                        self.shuffle_partitions, self.state_store.batch_change_rows(batch_id)
                     )
 
             # Target rows for dirty groups.

@@ -405,7 +405,8 @@ def mv_flagship_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(chlog_dir, "batch_*"))
         )
         # Per-micro-batch MERGE parallelism comes from the MV's own
-        # shuffle_partitions knob (see mv._shuffle_scope).
+        # shuffle_partitions knob: each refresh runs on a maintenance
+        # session created with that sizing (see session.JobSettings).
         q = (
             stream.writeStream.foreachBatch(
                 lambda df, epoch_id: mv.refresh(df, batch_id=f"stream-{epoch_id}")

@@ -12,60 +12,109 @@ for cluster scale first:
 - Arrow enabled for every pandas_udf / mapInPandas operator (the LLM
   pack), batch size sized so a batch of 64-float embeddings stays in
   L2-ish territory.
+
+MV maintenance never changes these settings on a live session. Each
+maintenance job (a route's bootstrap or refresh) runs on a clone of the
+user session whose AQE, codegen and shuffle settings are fixed when the
+clone is created — :func:`maintenance_session`, the analog of TiFlink
+setting its job's parallelism and checkpointing once when it builds the
+Flink environment (TiFlinkApp.java:241-246). The running job's
+:class:`JobSettings` travel in the :data:`JOB` context variable.
 """
 
 from __future__ import annotations
 
+import contextvars
 import os
 import threading
 import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# user session -> its cached maintenance session (see
-# maintenance_session). Weak keys: a stopped/discarded user session
-# must not be pinned alive by its clone entry.
+
+class JobSettings(NamedTuple):
+    """The execution settings of one maintenance job (a route's
+    bootstrap or refresh). Each distinct value owns one maintenance
+    session whose confs are set when it is created and never again."""
+
+    refresh: bool  # AQE off: per-stage replan jobs dominate a delta-sized batch
+    codegen: bool  # whole-stage codegen on (off = interpreted execution)
+    partitions: int | None  # spark.sql.shuffle.partitions; None keeps the user's
+
+
+# Outside any job (folds scheduled outside one, compact, vacuum, reads
+# handed back to the user): the user's own settings as cloned.
+IDLE = JobSettings(refresh=False, codegen=True, partitions=None)
+
+# The settings of the job running in this context. The outermost
+# maintenance bootstrap/refresh sets it, nested routes inherit it, and
+# a delta-sized re-tune replaces it for the rest of the batch. Worker
+# threads see it only through contextvars.copy_context().run. None: no
+# job is running.
+JOB: contextvars.ContextVar[JobSettings | None] = contextvars.ContextVar(
+    "tiflink_job", default=None
+)
+
+# user session -> {JobSettings: maintenance session}. Weak keys: a
+# stopped/discarded user session must not be pinned alive by its clones
+# (the clones reference the dict, never the user session).
 _MAINT_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _MAINT_LOCK = threading.Lock()
 
 
 def maintenance_session(spark: SparkSession) -> SparkSession:
-    """The engine's MAINTENANCE session for a user session: same
-    SparkContext, isolated SQLConf/temp views (cloned at first use, so
-    the user's tuning is inherited once). MV maintenance jobs flip
-    AQE/codegen/shuffle sizing per batch (_shuffle_scope); running them
-    on a clone means a concurrent USER query on the original session
-    never silently executes interpreted or with AQE off — at 100×
-    scale an embedded engine shares its session with ad-hoc queries.
+    """The MAINTENANCE session that the job running in this context
+    executes on: same SparkContext, isolated SQLConf and temp views.
 
-    One clone per user session (cached): every store and refresh scope
-    of every MV on that session shares it, so the concurrent-scope
-    refcounting keeps working unchanged. Idempotent on a maintenance
-    session (returns it as-is)."""
-    if getattr(spark, "_tiflink_maint", False):
-        return spark
+    There is one clone per (user session, :class:`JobSettings`). The
+    first, for :data:`IDLE`, is cloned from the user session at first
+    use, so the user's tuning is inherited once; every other clone is
+    cloned from that one. A clone's AQE, codegen and shuffle confs are
+    set when it is created and never change afterwards, so concurrent
+    jobs with different settings cannot disturb each other, and a user
+    query on the original session never runs interpreted or with AQE
+    off. Accepts the user session or any of its maintenance sessions."""
+    family = getattr(spark, "_tiflink_family", None)
+    if family is None:
+        family = _MAINT_SESSIONS.get(spark)
+    settings = JOB.get() or IDLE
+    m = family.get(settings) if family is not None else None
+    if m is not None:
+        return m
     with _MAINT_LOCK:
-        m = _MAINT_SESSIONS.get(spark)
-        if m is None:
+        if family is None:
+            family = _MAINT_SESSIONS.setdefault(spark, {})
+        for s in (IDLE, settings):
+            if s in family:
+                continue
+            base = family.get(IDLE, spark)
             try:
                 # private[sql] in Scala is public in bytecode; clone
                 # inherits runtime conf AND temp views at this instant
-                jm = spark._jsparkSession.cloneSession()
-                m = SparkSession(spark.sparkContext, jm)
+                m = SparkSession(base.sparkContext, base._jsparkSession.cloneSession())
             except Exception:
-                m = spark.newSession()  # fresh conf from context defaults
-            m._tiflink_maint = True
-            _MAINT_SESSIONS[spark] = m
-        return m
+                m = base.newSession()  # fresh conf from context defaults
+            if s.refresh:
+                m.conf.set("spark.sql.adaptive.enabled", "false")
+            if not s.codegen:
+                m.conf.set("spark.sql.codegen.wholeStage", "false")
+                m.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+            if s.partitions is not None:
+                m.conf.set("spark.sql.shuffle.partitions", str(s.partitions))
+            m._tiflink_family = family
+            family[s] = m
+        return family[settings]
 
 
 def rehome(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Re-bind a DataFrame's logical plan onto another session sharing
     the same SparkContext. Actions execute under the session the frame
-    is homed to — this is how changelog inputs built on the user
-    session run their store writes under the maintenance session's
-    conf, and how MV reads handed back to the user run under theirs.
+    is homed to — this is how a store write runs under the current
+    job's maintenance session whichever session built its lineage (the
+    user's changelog, or an earlier setting of the same batch), and how
+    MV reads handed back to the user run under theirs.
     Falls back to the original frame if the classic Dataset bridge is
     unavailable (plan semantics are identical either way; only the
     governing conf differs)."""

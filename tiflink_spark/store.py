@@ -26,6 +26,7 @@ Single-writer by design — the reference also serializes commits
 
 from __future__ import annotations
 
+import contextvars
 import json
 import os
 import threading
@@ -40,6 +41,7 @@ from tiflink_spark.changelog import (
     SEQ_COL,
     assert_valid_ops,
 )
+from tiflink_spark.session import maintenance_session, rehome
 
 COMMITS_FILE = "_mv_commits"
 BUCKET_COL = "__bucket"
@@ -242,22 +244,21 @@ class KeyedParquetStore:
     def __init__(
         self, spark: SparkSession, path: str, pk: list[str], num_buckets: int | None = None
     ):
-        from tiflink_spark.session import maintenance_session
-
-        # Stores live on the MAINTENANCE session (a conf-isolated clone
-        # sharing the SparkContext): every chain read is constructed
-        # there and every merge write is rehomed there, so per-batch
-        # AQE/codegen/shuffle tuning never leaks into concurrent user
-        # queries on the original session.
-        self.spark = maintenance_session(spark)
+        # The session the store was opened with; ``spark`` resolves the
+        # running job's maintenance session from it on every use.
+        self._spark = spark
         self.path = path
         self.pk = list(pk)
         self._mcache: tuple | None = None
-        # (version, chain) -> built DataFrame. Plans are immutable and
-        # a refresh re-reads the same committed version several times
-        # (old-state read, dim read, target diff); rebuilding the
-        # multi-path scan + MOR-chain reconciliation costs ~0.1-0.25s
-        # of driver latency each time. Bounded: new versions evict.
+        # (session, version, chain) -> built DataFrame. Plans are
+        # immutable and a refresh re-reads the same committed version
+        # several times (old-state read, dim read, target diff);
+        # rebuilding the multi-path scan + MOR-chain reconciliation
+        # costs ~0.1-0.25s of driver latency each time. Keyed by the
+        # session the frame was built on, so a read always runs under
+        # the current job's settings and a mid-batch re-tune costs a
+        # rehome of each write, not of each read. Bounded: new
+        # versions evict.
         self._read_cache: dict[tuple, DataFrame] = {}
         # In-flight asynchronous fold (see merge): at most one; the
         # next merge of this store awaits it before touching the chain.
@@ -269,6 +270,15 @@ class KeyedParquetStore:
             self.num_buckets = committed[-1].get("num_buckets", 16)
         else:
             self.num_buckets = num_buckets  # None -> resolved at bootstrap
+
+    @property
+    def spark(self) -> SparkSession:
+        """The maintenance session of the job running in this context
+        (session.maintenance_session): every chain read is constructed
+        on it and every merge or bootstrap write is rehomed onto it, so
+        each job runs under its own fixed AQE/codegen/shuffle settings
+        and none of them reaches a user query on the original session."""
+        return maintenance_session(self._spark)
 
     # -- manifest -----------------------------------------------------------
 
@@ -437,7 +447,7 @@ class KeyedParquetStore:
                 raise KeyError(f"version {version} not in manifest")
             commit = matches[-1]
         deltas = commit.get("deltas") or []
-        ck = (commit["version"], tuple(deltas))
+        ck = (self.spark, commit["version"], tuple(deltas))
         cached = self._read_cache.get(ck)
         if cached is not None:
             return cached
@@ -876,9 +886,7 @@ class KeyedParquetStore:
         """Publish the initial full state (MV bootstrap, TiFlinkApp.java:105-116)."""
         if batch_id in self.committed_batches():
             return False
-        from tiflink_spark.session import rehome
-
-        df = rehome(df, self.spark)  # write runs under the store's session
+        df = rehome(df, self.spark)  # write runs under the job's session
         if self.num_buckets is None:
             self.num_buckets = auto_num_buckets(df.count())
         version = (self.current_version() or 0) + 1 if self._commits() else 0
@@ -971,10 +979,8 @@ class KeyedParquetStore:
         missing = {OP_COL, SEQ_COL, *self.pk} - set(changes.columns)
         if missing:
             raise ValueError(f"changelog batch missing columns {sorted(missing)}")
-        from tiflink_spark.session import rehome
-
-        # Run the delta write under the store's (maintenance) session
-        # conf, wherever the changelog lineage was built.
+        # Run the delta write under the job's maintenance session,
+        # wherever the changelog lineage was built.
         changes = rehome(changes, self.spark)
         # Contract guards ride the lineage (fail the job on an op
         # outside +I/+U/-D, or a NULL PK — an unaddressable row —
@@ -1086,12 +1092,16 @@ class KeyedParquetStore:
     # -- chain folding --------------------------------------------------------
 
     def _schedule_fold(self) -> None:
-        """Run :meth:`_fold_chain` on the shared background pool.
+        """Run :meth:`_fold_chain` on the shared background pool, under
+        the settings of the merge that scheduled it (the context copy
+        carries the job's session.JOB value into the fold thread).
         At most one in flight per store; the next merge awaits it
         (single-writer stays single-writer — the manifest tail cannot
         move under a running fold because only merge/fold append to it
         and merge is the awaiter)."""
-        self._fold_future = _shared_fold_pool().submit(self._fold_chain)
+        self._fold_future = _shared_fold_pool().submit(
+            contextvars.copy_context().run, self._fold_chain
+        )
 
     def _await_fold(self) -> None:
         fut, self._fold_future = self._fold_future, None
