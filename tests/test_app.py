@@ -1921,6 +1921,43 @@ def test_group_order_limit_cascade_replays_through_shared_mirror(spark, tmp_path
     assert {(r.cust, r.n) for r in app.read().collect()} == {(4, 6), (0, 5), (1, 3)}
 
 
+def test_cascade_outer_where_keeps_its_own_mirror(spark, tmp_path):
+    """An outer ranking level that filters the derived table by its
+    WHERE merges filtered changelogs into its mirror, so it must not be
+    offered the inner target as that mirror: the shared store would
+    feed it the unfiltered rows (cust 4 reaching n=6 stayed in the view
+    as (4, 6, 1))."""
+    fact = spark.createDataFrame([(i, i % 5) for i in range(20)], "k int, cust int")
+    q = (
+        "SELECT cust, n, row_number() OVER (PARTITION BY n ORDER BY cust) AS r "
+        "FROM (SELECT cust, count(*) AS n FROM f_cw GROUP BY cust) a WHERE n < 5"
+    )
+    app = (
+        MVApp.builder(spark)
+        .source("f_cw", fact, pk=["k"])
+        .query(q)
+        .target(str(tmp_path / "cw"))
+        .num_buckets(2)
+        .build()
+    )
+    assert (
+        app.describe()["maintenance_strategy"]
+        == "CascadeMV[IncrementalAggMV -> IncrementalWindowMV]"
+    )
+    app.bootstrap()
+    b1 = spark.createDataFrame(
+        [(100, 4, "+I", 0), (101, 4, "+I", 1), (0, 0, "-D", 2), (5, 0, "-D", 3)],
+        "k int, cust int, __op string, __seq long",
+    )
+    app.refresh({"f_cw": b1}, batch_id=1)
+    spark.createDataFrame(
+        [(i, i % 5) for i in range(20) if i not in (0, 5)] + [(100, 4), (101, 4)],
+        "k int, cust int",
+    ).createOrReplaceTempView("f_cw")
+    want = {(r.cust, r.n, r.r) for r in spark.sql(q).collect()}
+    assert {(r.cust, r.n, r.r) for r in app.read().collect()} == want
+
+
 def test_shared_mirror_projection_fails_fast_on_missing_column(spark, tmp_path):
     from tiflink_spark.app import _SharedMirrorStore
     from tiflink_spark.store import KeyedParquetStore

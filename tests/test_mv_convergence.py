@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
 from tiflink_spark.incremental import Measure
 from tiflink_spark.mv import IncrementalAggMV
+from tiflink_spark.store import StoreSet
 
 N_KEYS = 60
 N_GROUPS = 7
@@ -88,8 +89,7 @@ def test_incremental_equals_batch_on_random_changelogs(spark, tmp_path, seed):
             Measure("max", "v", "mx"),
             Measure("count_distinct", "v", "nd"),
         ],
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
 
@@ -130,8 +130,7 @@ def test_replaying_a_batch_is_idempotent(spark, tmp_path):
         fact_pk=["k"],
         group_key="g",
         measures=[Measure("count", None, "n")],
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
     dfs = [
@@ -158,8 +157,7 @@ def test_crash_between_state_and_mv_commit_recovers(spark, tmp_path):
         fact_pk=["k"],
         group_key="g",
         measures=[Measure("count", None, "n"), Measure("sum", "v", "sv")],
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
     changes = spark.createDataFrame(
@@ -193,8 +191,7 @@ def test_sum_of_all_null_group_stays_null(spark, tmp_path):
         fact_pk=["k"],
         group_key="g",
         measures=[Measure("sum", "v", "sv")],
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
     changes = spark.createDataFrame(
@@ -218,11 +215,10 @@ def test_dim_churn_updates_mv(spark, tmp_path):
         fact_pk=["k"],
         group_key="g",
         measures=[Measure("count", None, "n")],
-        work_dir=str(tmp_path / "mv"),
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
         dim=dim0,
         dim_key="g",
         dim_cols=["name"],
-        num_buckets=4,
     )
     mv.bootstrap()
     assert {(r.g, r.name, r.n) for r in mv.read().collect()} == {
@@ -273,8 +269,7 @@ def test_crash_between_fact_and_mv_commit_recovers(spark, tmp_path):
         fact_pk=["k"],
         group_key="g",
         measures=[Measure("count", None, "n"), Measure("sum", "v", "sv")],
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
     changes = spark.createDataFrame(
@@ -316,8 +311,7 @@ def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
         order_col="v",
         out_cols=["k", "v"],
         k=K,
-        work_dir=str(tmp_path / "mv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv"), 4),
     )
     mv.bootstrap()
 
@@ -385,8 +379,7 @@ def test_global_agg_converges_on_random_changelogs(spark, tmp_path, seed):
             # FILTER rewrite produces
             Measure("count", "CASE WHEN v > 50 THEN 1 END", "n_big"),
         ],
-        work_dir=str(tmp_path / "mv_g"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "mv_g"), 4),
         global_group=True,
     )
     mv.bootstrap()
@@ -456,12 +449,12 @@ def test_concurrent_overlap_gate_cached_on_mv(spark, tmp_path):
     fact = spark.createDataFrame([(1, 1, 1.0)], "pk long, g long, v double")
     float_mv = IncrementalAggMV(
         spark, fact=fact, fact_pk=["pk"], group_key="g",
-        measures=[Measure("sum", "v", "s")], work_dir=str(tmp_path / "f"),
+        measures=[Measure("sum", "v", "s")], stores=StoreSet(spark, str(tmp_path / "f")),
     )
     assert float_mv._concurrent_ok is False
     count_mv = IncrementalAggMV(
         spark, fact=fact, fact_pk=["pk"], group_key="g",
         measures=[Measure("count", None, "n"), Measure("max", "v", "mx")],
-        work_dir=str(tmp_path / "c"),
+        stores=StoreSet(spark, str(tmp_path / "c")),
     )
     assert count_mv._concurrent_ok is True

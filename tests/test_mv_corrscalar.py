@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_UPDATE, SEQ_COL
 from tiflink_spark.planner import match_corr_scalar_shape
 from tiflink_spark.sqlast import scalar_subquery_clauses
+from tiflink_spark.store import StoreSet
 
 COLS = {
     "c": ["id", "dkey", "bal"],
@@ -321,8 +322,8 @@ class TestScalarSingleInequalityDecomposition:
             akind=akind, acol=acol, alias="a",
             corr=[("price", op, "bal")],
             out_cols=["id", "dkey", "bal"],
-            work_dir=str(tmp_path / tag),
-            num_buckets=2, shuffle_partitions=2,
+            stores=StoreSet(spark, str(tmp_path / tag), 2),
+            shuffle_partitions=2,
         )
         return mv, dim, fact
 
@@ -404,8 +405,8 @@ class TestScalarSingleInequalityDecomposition:
             spark, dim, ["id"], fact, ["oid"],
             akind="sum", acol="qty", alias="a",
             corr=[("okey", "=", "dkey"), ("price", ">", "bal")],
-            out_cols=["id"], work_dir=str(tmp_path / "mixed"),
-            num_buckets=2, shuffle_partitions=2,
+            out_cols=["id"], stores=StoreSet(spark, str(tmp_path / "mixed"), 2),
+            shuffle_partitions=2,
         )
         assert mixed._ineq_1d() is None
         dec = _mk(
@@ -417,8 +418,8 @@ class TestScalarSingleInequalityDecomposition:
             spark, dim, ["id"], dec, ["oid"],
             akind="sum", acol="amt", alias="a",
             corr=[("price", "<", "bal")],
-            out_cols=["id"], work_dir=str(tmp_path / "dec"),
-            num_buckets=2, shuffle_partitions=2,
+            out_cols=["id"], stores=StoreSet(spark, str(tmp_path / "dec"), 2),
+            shuffle_partitions=2,
         )
         assert dmv._ineq_1d() is None  # decimal sum stays on the pair join
         # min/max reassociate exactly for ANY orderable type
@@ -426,8 +427,8 @@ class TestScalarSingleInequalityDecomposition:
             spark, dim, ["id"], dec, ["oid"],
             akind="max", acol="amt", alias="a",
             corr=[("price", "<", "bal")],
-            out_cols=["id"], work_dir=str(tmp_path / "decmx"),
-            num_buckets=2, shuffle_partitions=2,
+            out_cols=["id"], stores=StoreSet(spark, str(tmp_path / "decmx"), 2),
+            shuffle_partitions=2,
         )
         assert dmx._ineq_1d() is not None
 
@@ -449,7 +450,7 @@ class TestScalarSingleInequalityDecomposition:
                 spark, dim, ["id"], fact_df, ["oid"],
                 akind="count", acol=None, alias="a",
                 corr=[("price", "<", "bal")], out_cols=["id"],
-                work_dir=str(tmp_path / tag), num_buckets=2, shuffle_partitions=2,
+                stores=StoreSet(spark, str(tmp_path / tag), 2), shuffle_partitions=2,
             )
 
         strv = mv("str", fact)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
 from tiflink_spark.planner import match_corr_semijoin_shape
 from tiflink_spark.sqlast import in_subquery_clauses
+from tiflink_spark.store import StoreSet
 
 COLS = {
     "cust": ["c_id", "c_key", "c_bal"],
@@ -517,8 +518,8 @@ class TestSingleInequalityDecomposition:
             spark, fact, ["id"], other, ["oid"],
             corr=[("price", op, "bal")],
             out_cols=["id", "fkey", "bal"],
-            work_dir=str(tmp_path / tag),
-            anti=anti, num_buckets=2, shuffle_partitions=2, **kw,
+            stores=StoreSet(spark, str(tmp_path / tag), 2),
+            anti=anti, shuffle_partitions=2, **kw,
         )
         return mv, fact, other
 
@@ -588,7 +589,7 @@ class TestSingleInequalityDecomposition:
             spark, fact, ["id"], other, ["oid"],
             fact_key="fkey", other_key="okey",
             corr=[("okey", "=", "fkey"), ("price", ">", "bal")],
-            out_cols=["id"], work_dir=str(tmp_path / "mixed"),
-            anti=False, num_buckets=2, shuffle_partitions=2,
+            out_cols=["id"], stores=StoreSet(spark, str(tmp_path / "mixed"), 2),
+            anti=False, shuffle_partitions=2,
         )
         assert mv._ineq_1d() is None

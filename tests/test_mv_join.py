@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
 from tiflink_spark.mv import IncrementalJoinMV
+from tiflink_spark.store import StoreSet
 
 import pytest
 
@@ -57,8 +58,7 @@ def test_join_mv_converges_on_two_sided_changelogs(spark, tmp_path):
         right_pk=["k"],
         join_key="k",
         out_cols=["lid", "k", "v", "name"],
-        work_dir=str(tmp_path / "jmv"),
-        num_buckets=4,
+        stores=StoreSet(spark, str(tmp_path / "jmv"), 4),
     )
     mv.bootstrap()
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
 from tiflink_spark.planner import match_join_agg_shape
+from tiflink_spark.store import StoreSet
 
 COLS = {
     "orders": ["o_orderkey", "o_custkey", "o_totalprice"],
@@ -690,8 +691,7 @@ class TestJoinAggRandomizedConvergence:
                 Measure("min", "v", "vmin"),
             ],
             fact_cols=["v"],
-            work_dir=str(tmp_path / "ja_rand"),
-            num_buckets=4,
+            stores=StoreSet(spark, str(tmp_path / "ja_rand"), 4),
             shuffle_partitions=4,
         )
         mv.bootstrap()

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
+from tiflink_spark.store import StoreSet
 
 
 class TestSemiJoinRandomizedConvergence:
@@ -48,9 +49,8 @@ class TestSemiJoinRandomizedConvergence:
             fact_key="fk",
             other_key="kv",
             out_cols=["k", "fk"],
-            work_dir=str(tmp_path / "sj_rand"),
+            stores=StoreSet(spark, str(tmp_path / "sj_rand"), 4),
             anti=anti,
-            num_buckets=4,
             shuffle_partitions=4,
         )
         mv.bootstrap()
@@ -143,8 +143,7 @@ class TestWindowRandomizedConvergence:
             fact_pk=["k"],
             group_key="g",
             select_items=items,
-            work_dir=str(tmp_path / "w_rand"),
-            num_buckets=4,
+            stores=StoreSet(spark, str(tmp_path / "w_rand"), 4),
             shuffle_partitions=4,
         )
         mv.bootstrap()
@@ -364,8 +363,7 @@ class TestWindowSkewGuard:
             fact_pk=["k"],
             group_key="g",
             select_items=items,
-            work_dir=str(tmp_path / "w_skew"),
-            num_buckets=2,
+            stores=StoreSet(spark, str(tmp_path / "w_skew"), 2),
             shuffle_partitions=2,
             skew_warn_rows=30,  # 50-row hot partition crosses it
         )
@@ -399,8 +397,7 @@ class TestWindowSkewGuard:
             fact_pk=["k"],
             group_key="g",
             select_items=["k", "g", "rank() OVER (PARTITION BY g ORDER BY v) AS r"],
-            work_dir=str(tmp_path / "w_cold"),
-            num_buckets=2,
+            stores=StoreSet(spark, str(tmp_path / "w_cold"), 2),
             shuffle_partitions=2,
             skew_warn_rows=30,
         )
@@ -456,8 +453,7 @@ class TestWindowDomainStrategy:
             fact_pk=["k"],
             group_key="g",
             select_items=self.ITEMS,
-            work_dir=str(tmp_path / "wdom"),
-            num_buckets=2,
+            stores=StoreSet(spark, str(tmp_path / "wdom"), 2),
             shuffle_partitions=4,
             strategy="domain",
         )
@@ -500,7 +496,7 @@ class TestWindowDomainStrategy:
                     "k",
                     "row_number() OVER (PARTITION BY g ORDER BY v, k) AS rn",
                 ],
-                work_dir=str(tmp_path / "wrej"),
+                stores=StoreSet(spark, str(tmp_path / "wrej")),
                 strategy="domain",
             )
 

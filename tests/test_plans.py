@@ -306,10 +306,12 @@ def test_refresh_codegen_scales_with_store_size(spark, tmp_path, monkeypatch):
 
 
 def test_job_settings_nesting():
-    """The outermost bootstrap/refresh chooses the job's settings;
-    nested routes inherit them under their own token (an inner re-tune
-    ends with the inner call), and an inner big-scan refresh still
-    turns codegen on for its own duration. No Spark job runs."""
+    """The outermost bootstrap/refresh chooses the job's settings from
+    its StoreSet's source-scale stores; nested routes inherit them under
+    their own token (an inner re-tune ends with the inner call). No
+    Spark job runs."""
+    from types import SimpleNamespace
+
     from tiflink_spark import mv as mv_mod
     from tiflink_spark.session import JOB, JobSettings
 
@@ -326,7 +328,7 @@ def test_job_settings_nesting():
         shuffle_partitions = 3
 
         def __init__(self, rows, inner=None, delta_rows=None):
-            self.fact_store = Store(rows)
+            self.stores = SimpleNamespace(scale=[Store(rows)])
             self.inner = inner
             self.delta_rows = delta_rows
 
@@ -346,12 +348,12 @@ def test_job_settings_nesting():
     big = mv_mod.CODEGEN_TABLE_ROWS + 1
     Route(10).bootstrap()
     assert seen == [JobSettings(False, True, 3)]
-    # small outer, big inner with its own delta re-tune
+    # an inner delta re-tune ends with the inner call
     seen.clear()
-    Route(10, inner=Route(big, delta_rows=5)).refresh()
+    Route(10, inner=Route(10, delta_rows=5)).refresh()
     assert seen == [
         JobSettings(True, False, 3),
-        JobSettings(True, True, 1),
+        JobSettings(True, False, 1),
         JobSettings(True, False, 3),
     ]
     # big outer, small inner: the inner keeps codegen on
@@ -363,6 +365,48 @@ def test_job_settings_nesting():
     Route(10, delta_rows=mv_mod.CODEGEN_DELTA_ROWS + 1).refresh()
     assert seen == [JobSettings(True, True, 3)]
     assert JOB.get() is None
+
+
+def test_setop_refresh_codegen_covers_both_sides(spark, tmp_path, monkeypatch):
+    """A set-op view's sides open their stores in the view's StoreSet,
+    so one job setting covers the whole refresh: with one side above
+    CODEGEN_TABLE_ROWS, both sides' writes run with codegen on (a
+    nested side no longer turns it on for its own duration only)."""
+    from pyspark.sql import functions as F
+
+    from tiflink_spark import mv as mv_mod
+    from tiflink_spark.app import MVApp
+    from tiflink_spark.changelog import OP_COL, OP_UPDATE, SEQ_COL
+
+    big = spark.createDataFrame([(i, i % 7) for i in range(100)], "id long, g long")
+    small = spark.createDataFrame([(i, i % 3) for i in range(5)], "id long, g long")
+    app = (
+        MVApp.builder(spark)
+        .source("so_big", big, pk=["id"])
+        .source("so_small", small, pk=["id"])
+        .query("SELECT g FROM so_big INTERSECT SELECT g FROM so_small")
+        .target(str(tmp_path / "so"))
+        .num_buckets(2)
+        .shuffle_partitions(2)
+        .build()
+    )
+    assert app.maintenance_strategy == "IncrementalSetOpMV"
+    app.bootstrap()
+    monkeypatch.setattr(mv_mod, "CODEGEN_TABLE_ROWS", 10)
+    seen = _spy_write_confs(monkeypatch)
+
+    def bump(df):
+        return (
+            df.limit(2)
+            .withColumn("g", F.col("g") + 10)
+            .withColumn(OP_COL, F.lit(OP_UPDATE))
+            .withColumn(SEQ_COL, F.monotonically_increasing_id())
+        )
+
+    app.refresh({"so_big": bump(big), "so_small": bump(small)}, batch_id=1)
+    sides = {os.path.basename(os.path.dirname(w[0])) for w in seen}
+    assert {"a", "b"} <= sides
+    assert {w[1:3] for w in seen} == {("false", "true")}
 
 
 def test_dim_churn_affected_rows_stay_broadcast_pruned(spark, tmp_path):

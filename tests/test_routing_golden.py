@@ -1,5 +1,6 @@
 """Routing golden: which maintenance route ``MVApp`` picks for every
-query of the matcher golden corpus (tests/fixtures/matcher_golden.json).
+query of the matcher golden corpus (tests/fixtures/matcher_golden.json),
+and the store layout that route opens.
 
 The matcher golden pins each ``planner.match_*`` front-end in
 isolation; this fixture pins the PLANNER'S decision once route order
@@ -71,7 +72,25 @@ def routing_record(spark, family: str, query: str, work_dir: str) -> dict:
         "mv_pk": list(app.mv_pk),
         "pk_is_unique": app.pk_is_unique,
         "tables": sorted(app.maintained_tables()),
+        # the store layout: every store the view's StoreSets opened,
+        # relative to the target, and whether a cascade's outer level
+        # reads the inner target as its mirror of the derived table
+        "stores": sorted(
+            os.path.relpath(st.path, work_dir)
+            for stores in app._store_sets()
+            for st in stores.all
+        ),
+        "shared": shared_alias(app),
     }
+
+
+def shared_alias(app) -> bool:
+    from tiflink_spark.app import CascadeMV, _SharedMirrorStore
+
+    mv = app._mv
+    return isinstance(mv, CascadeMV) and isinstance(
+        mv.outer._stores.get(mv.alias), _SharedMirrorStore
+    )
 
 
 def corpus() -> list[tuple[str, str]]:

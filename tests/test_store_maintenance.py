@@ -50,8 +50,10 @@ def test_grouping_sets_stores_reachable_by_maintenance(spark, tmp_path):
         .build()
     )
     app.bootstrap()
-    stores = app._all_stores()
+    stores = [st for ss in app._store_sets() for st in ss.all]
     assert len(stores) == 7  # shared fact + 3 sets x (state, target)
+    # the sets are offered the shared fact instead of opening their own
+    assert not any(os.path.isdir(tmp_path / "gs_sa" / f"set{i}" / "fact") for i in range(3))
     app.compact()
     assert len(app.vacuum()) == 7
     # still readable after maintenance

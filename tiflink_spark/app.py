@@ -87,7 +87,7 @@ from tiflink_spark.planner import (
     split_nested_query,
 )
 from tiflink_spark.session import JOB
-from tiflink_spark.store import KeyedParquetStore
+from tiflink_spark.store import KeyedParquetStore, StoreSet
 from tiflink_spark.types import create_table_ddl
 
 # cost_advisor default: a join-agg view whose FULL query executes within
@@ -364,23 +364,28 @@ class MVAppBuilder:
 
 
 class _SharedMirrorStore:
-    """The outer cascade level's mirror of the derived table, aliased
-    to the INNER level's target store instead of a second physical
-    copy. The inner refresh commits every batch into its target before
-    the outer level runs, so the outer's own bootstrap and per-batch
-    merge of the alias were pure write amplification: one bootstrap
-    write that additionally RE-RAN the whole inner query (the
-    placeholder frame), plus one delta write per batch per cascade
-    level (measured 0.2–1.3s each at sf0.1 — guide §1.2, remove whole
-    jobs). Reads delegate to the shared store with a projection to the
-    columns the outer was planned against (the inner target may hold
-    engine-internal hidden columns the outer must not see); writes are
-    explicit no-ops — the inner level is the single writer. Every
-    route already treats ``batch_id in committed_batches()`` as the
-    crash-replay signal and reads its pre-batch state via
-    ``version_before_batch`` — exactly the semantics a shared,
-    already-committed store needs, so the routes run their (tested)
-    replay discipline on every batch."""
+    """The INNER cascade level's target store, offered to the outer
+    level as its mirror of the derived table instead of a second
+    physical copy. The inner refresh commits every batch into its
+    target before the outer level runs, so an outer mirror would only
+    repeat its writes: one bootstrap write that re-ran the whole inner
+    query, plus one delta write per batch (measured 0.2–1.3s each at
+    sf0.1).
+
+    MVApp._plan_cascade makes the offer before the outer level is
+    built, when the inner target is one plain store keyed like the
+    relation the outer consumes; the outer's StoreSet hands it out in
+    place of opening the mirror, but only to a route step that merges
+    that source's changelog verbatim — no WHERE and no derived key
+    applied first (a filtered mirror is not the inner target). The
+    inner level owns the store: it is not in the outer set's ``all``.
+
+    Reads delegate to the shared store, projected to the columns the
+    outer was planned against (the inner target may hold hidden engine
+    columns); writes are no-ops. The inner level has always committed
+    the batch already, so every read of the pre-batch state goes
+    through ``read_before``/``read_changed_before`` — the same replay
+    path a crashed batch takes."""
 
     def __init__(self, store, cols: list):
         self._store = store
@@ -412,6 +417,12 @@ class _SharedMirrorStore:
 
     def read(self, version=None):
         return self._project(self._store.read(version))
+
+    def read_before(self, batch_id):
+        return self._project(self._store.read_before(batch_id))
+
+    def read_changed_before(self, batch_id):
+        return self._project(self._store.read_changed_before(batch_id))
 
     def read_keys(self, col, vals, version=None):
         return self._project(self._store.read_keys(col, vals, version))
@@ -452,10 +463,9 @@ class CascadeMV:
 
     def __init__(self, inner: "MVApp", outer: "MVApp", alias: str):
         self.inner, self.outer, self.alias = inner, outer, alias
-        # A grouping-sets outer has no single target store (one keyed
-        # store per grouping set) — describe()/introspection tolerate
-        # None; reads and versioning go through outer.read().
-        self.target = getattr(outer._mv, "target", None)
+        # None for a grouping-sets outer (one keyed store per grouping
+        # set) — describe() tolerates it; reads go through outer.read().
+        self.target = outer._mv.target
 
     def bootstrap(self, batch_id=0) -> None:
         self.inner.bootstrap(batch_id)
@@ -477,12 +487,7 @@ class CascadeMV:
         outer_tabs = self.outer.maintained_tables() - {self.alias}
         inner_changes = {k: v for k, v in changes.items() if k in inner_tabs}
         outer_changes = {k: v for k, v in changes.items() if k in outer_tabs}
-        # A single-target inner cascades through its target store; a
-        # multi-store inner (grouping sets) exposes a store-shaped
-        # composite façade as `cascade_target`.
-        tgt = getattr(self.inner._mv, "cascade_target", None)
-        if tgt is None:
-            tgt = self.inner._mv.target
+        tgt = self.inner._cdc_source
         pre = getattr(tgt, "pre_batch_version", None)
         if pre is not None:
             # Composite target: the batch may have committed in SOME
@@ -548,6 +553,9 @@ class _Routed(NamedTuple):
     stores: dict
     feed: Callable
     pk_is_unique: bool = True
+    # the store-shaped CDC façade a cascade's outer level consumes in
+    # place of the target (grouping sets, bag set ops); None: the target
+    cdc: object = None
 
 
 def _dict_feed(mv, changes, batch_id):
@@ -598,8 +606,13 @@ class _Ctx(NamedTuple):
     pk: list | None  # declared target PK
     default_pk: list  # the first-output-column fallback
     cols: dict  # source name -> column names
-    kw: dict  # work_dir / num_buckets / shuffle_partitions
+    kw: dict  # stores (the view's StoreSet) / shuffle_partitions
     window_strategy: str
+    mirrors: dict  # source name -> the cascade's shared mirror of it
+
+    @property
+    def stores(self) -> StoreSet:
+        return self.kw["stores"]
 
     @property
     def names(self) -> set:
@@ -635,6 +648,17 @@ def _covers_pk(c: _Ctx, fact, order_cols) -> bool:
     itself counts) — without it, rank slots on ties are ambiguous."""
     pk = c.pk_of(fact)
     return bool(pk) and {p.lower() for p in pk} <= {o.lower() for o in order_cols}
+
+
+def _offer(c: _Ctx, table, name, where=None) -> None:
+    """Offer the cascade's shared mirror of ``table`` (if any) to the
+    view's StoreSet as store ``name``. Only route steps that merge the
+    source's changelog verbatim call this (none derives a key onto it),
+    and only when they apply no WHERE to it first: the shared store
+    holds the inner target's rows as they are."""
+    mirror = c.mirrors.get(table)
+    if mirror is not None and where is None:
+        c.stores.offers[name] = mirror
 
 
 def _fact_frame(c: _Ctx, fact, where=None, derive=()):
@@ -715,7 +739,9 @@ def _grouping_sets(c, s):
         hidden_measures=list(s.hidden), having_gcalls=list(s.having_gcalls),
         **c.kw,
     )
-    return _fact_routed(mv, s.fact, c.default_pk, s.where, s.key_exprs, unique=False)
+    return _fact_routed(mv, s.fact, c.default_pk, s.where, s.key_exprs, unique=False)._replace(
+        cdc=mv.cascade_target
+    )
 
 
 # Global (no GROUP BY) aggregate — the dashboard total, keyed by a
@@ -799,6 +825,8 @@ def _correlated_count(c, s):
     lambda c, s: c.pk_of(s.fact) and c.pk_ok([s.dim_pk]),
 )
 def _corr_scalar(c, s):
+    _offer(c, s.dim, "dim")
+    _offer(c, s.fact, "fact")
     mv = IncrementalCorrScalarAggMV(
         c.spark, dim=c.df(s.dim), dim_pk=c.pk_of(s.dim), fact=c.df(s.fact),
         fact_pk=c.pk_of(s.fact), akind=s.akind, acol=s.acol, alias=s.alias,
@@ -889,6 +917,8 @@ def _join_pk(c, s) -> list:
     and _selects(s.out_cols, _join_pk(c, s)) and c.pk_ok(_join_pk(c, s)),
 )
 def _join(c, s):
+    _offer(c, s.left, "left")
+    _offer(c, s.right, "right")
     mv = IncrementalJoinMV(
         c.spark, left=c.df(s.left), left_pk=c.pk_of(s.left), right=c.df(s.right),
         right_pk=c.pk_of(s.right),
@@ -906,6 +936,8 @@ def _join(c, s):
     lambda c, s: c.pk_ok(_join_pk(c, s)),
 )
 def _theta_join(c, s):
+    _offer(c, s.left, "left")
+    _offer(c, s.right, "right")
     mv = IncrementalThetaJoinMV(
         c.spark, left=c.df(s.left), left_pk=c.pk_of(s.left), right=c.df(s.right),
         right_pk=c.pk_of(s.right), predicate=s.predicate,
@@ -995,7 +1027,7 @@ def _setop(c, s):
     stores = {s.left: mv._sides["a"].fact_store, s.right: mv._sides["b"].fact_store}
     return _Routed(
         mv, c.default_pk if bag else list(s.out_cols), frozenset(stores), stores,
-        _dict_feed, not bag,
+        _dict_feed, not bag, mv.cascade_target if bag else None,
     )
 
 
@@ -1009,6 +1041,7 @@ def _setop(c, s):
     and c.pk_ok([s.group_key, s.rank_alias]),
 )
 def _topn(c, s):
+    _offer(c, s.fact, "fact", s.where)
     mv = IncrementalTopKMV(
         c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
         group_key=s.group_key,
@@ -1027,6 +1060,7 @@ def _topn(c, s):
     lambda c, s: c.pk_ok(c.pk_of(s.fact)),
 )
 def _window(c, s):
+    _offer(c, s.fact, "fact", s.where)
     mv = IncrementalWindowMV(
         c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
         group_key=list(s.group_keys),
@@ -1045,6 +1079,7 @@ def _window(c, s):
     and _selects(s.out_cols, c.pk_of(s.fact)) and c.pk_ok(c.pk_of(s.fact)),
 )
 def _order_limit(c, s):
+    _offer(c, s.fact, "fact", s.where)
     mv = IncrementalGlobalTopKMV(
         c.spark, fact=_fact_frame(c, s.fact, s.where), fact_pk=c.pk_of(s.fact),
         order_spec=list(s.order_spec), out_cols=list(s.out_cols), k=s.k, **c.kw,
@@ -1105,7 +1140,7 @@ class MVApp:
         column_names=None, window_strategy="sort",
         drop_old_table=False, force_new_table=False,
         force_recompute=False, cost_advisor=False, advisor_threshold=None,
-        late_dim="raise",
+        late_dim="raise", mirrors=None,
     ):
         # temporal-join late-dim policy (see IncrementalTemporalJoinMV:
         # "raise" fails loudly on out-of-order dim versions, "reorder"
@@ -1122,6 +1157,9 @@ class MVApp:
         self.drop_old_table = drop_old_table
         self.force_new_table = force_new_table
         self.advisor = None
+        # a cascade outer level: the inner level's target, offered as
+        # the mirror of the derived table (see _SharedMirrorStore)
+        self._mirrors = dict(mirrors or {})
         self._plan(
             spark, sources, query, target, pk, num_buckets,
             shuffle_partitions, ddl_hook, validate_pks,
@@ -1220,10 +1258,9 @@ class MVApp:
         # recompute route's source-store bootstrap
         self._source_frames = {n: (d[0].pk, d[1]) for n, d in dfs.items()}
         cols = {n: [f.name for f in d[1].schema.fields] for n, d in dfs.items()}
-        kw = dict(
-            work_dir=target, num_buckets=num_buckets,
-            shuffle_partitions=shuffle_partitions,
-        )
+        # the one StoreSet every route of this view opens its stores in
+        self.stores = StoreSet(spark, target, num_buckets)
+        kw = dict(stores=self.stores, shuffle_partitions=shuffle_partitions)
 
         # FOR SYSTEM_TIME AS OF (temporal/versioned dim join) routes
         # through its own planner branch BEFORE normalization and the
@@ -1264,7 +1301,7 @@ class MVApp:
         self.mv_schema = spark.sql(spark_executable_query(query)).schema
         c = _Ctx(
             spark, dfs, query, pk, default_pk(self.mv_schema, pk), cols, kw,
-            self._window_strategy,
+            self._window_strategy, self._mirrors,
         )
 
         # Explicit escape hatch (builder.force_recompute()) skips every
@@ -1310,11 +1347,11 @@ class MVApp:
         feeding an outer MV through the store's version-diff changelog
         (CascadeMV). None unless BOTH levels route incrementally."""
         inner_sql, alias, outer_sql = ns
-        target = c.kw["work_dir"]
+        target, num_buckets = c.stores.root, c.stores.num_buckets
         inner_dir = os.path.join(target, "inner")
         inner_app = MVApp(
             c.spark, sources, inner_sql, inner_dir, None,
-            c.kw["num_buckets"], c.kw["shuffle_partitions"],
+            num_buckets, c.kw["shuffle_partitions"],
         )
         outer_app = None
         # The outer's stores address rows by the inner's key, so it
@@ -1334,10 +1371,7 @@ class MVApp:
                 inner_key = inner_app.mv_pk
             elif rel_fn is not None:
                 placeholder = rel_fn()
-                ctgt = getattr(inner_app._mv, "cascade_target", None)
-                inner_key = list(
-                    ctgt.pk if ctgt is not None else inner_app._mv.target.pk
-                )
+                inner_key = list(inner_app._cdc_source.pk)
             else:
                 placeholder = None
             if placeholder is not None:
@@ -1368,46 +1402,29 @@ class MVApp:
                 for n2, (spec2, df2) in c.dfs.items():
                     if n2 != alias and n2.lower() in rels:
                         outer_sources[n2] = (df2, list(spec2.pk))
+                # The inner TARGET can stand in for the outer's mirror
+                # of the derived table (see _SharedMirrorStore) when it
+                # is one plain store keyed like the relation the outer
+                # consumes — not a composite façade (grouping sets, bag
+                # set ops). The outer route takes the offer only where
+                # it merges the alias's changelog verbatim.
+                tgt = inner_app._cdc_source
+                mirrors = (
+                    {alias: _SharedMirrorStore(tgt, placeholder.columns)}
+                    if isinstance(tgt, KeyedParquetStore)
+                    and [k.lower() for k in inner_key] == [k.lower() for k in tgt.pk]
+                    else {}
+                )
                 outer_app = MVApp(
                     c.spark, outer_sources, outer_sql,
                     os.path.join(target, "outer"), c.pk,
-                    c.kw["num_buckets"], c.kw["shuffle_partitions"],
+                    num_buckets, c.kw["shuffle_partitions"], mirrors=mirrors,
                 )
         if (
             outer_app is not None
             and outer_app.maintenance_mode == "incremental"
             and not isinstance(outer_app._mv, CascadeMV)
         ):
-            # Share the inner TARGET as the outer's alias mirror:
-            # the mirror held an exact copy the inner refresh had
-            # already committed (see _SharedMirrorStore). Guarded
-            # three ways: the outer route must declare it merges
-            # source changelogs verbatim (_mirrors_sources_verbatim
-            # — grouping sets enrich with a hidden __g, semijoins
-            # pre-filter with WHERE, projections rename: those keep
-            # the physical mirror), the shared side must be a plain
-            # single store (not a composite grouping-sets façade),
-            # and the keys must match.
-            shared_tgt = getattr(inner_app._mv, "cascade_target", None)
-            if shared_tgt is None:
-                shared_tgt = getattr(inner_app._mv, "target", None)
-            old_mirror = outer_app._stores.get(alias)
-            if (
-                getattr(outer_app._mv, "_mirrors_sources_verbatim", False)
-                and isinstance(shared_tgt, KeyedParquetStore)
-                and old_mirror is not None
-                and [c2.lower() for c2 in old_mirror.pk]
-                == [c2.lower() for c2 in shared_tgt.pk]
-            ):
-                shared = _SharedMirrorStore(shared_tgt, placeholder.columns)
-                for k2, v2 in list(vars(outer_app._mv).items()):
-                    if v2 is old_mirror:
-                        setattr(outer_app._mv, k2, shared)
-                    elif isinstance(v2, dict):
-                        for dk2, dv2 in list(v2.items()):
-                            if dv2 is old_mirror:
-                                v2[dk2] = shared
-                outer_app._stores[alias] = shared
             stores = dict(inner_app._stores)
             for n2, st2 in outer_app._stores.items():
                 if n2 != alias:
@@ -1506,10 +1523,7 @@ class MVApp:
         an MVApp plans, it does not write (the cascade probe constructs
         and discards fallback apps)."""
         stores = {
-            name: KeyedParquetStore(
-                c.spark, os.path.join(c.kw["work_dir"], f"_src_{name}"),
-                spec_.pk, c.kw["num_buckets"],
-            )
+            name: c.stores.open(f"_src_{name}", spec_.pk)
             for name, (spec_, _df) in c.dfs.items()
         }
         # A grouping-body query (ROLLUP/CUBE/GROUPING SETS) that fell
@@ -1527,11 +1541,9 @@ class MVApp:
             c.spark,
             stores,
             spark_executable_query(c.query),
-            os.path.join(c.kw["work_dir"], "mv"),
             pk=c.default_pk,
-            num_buckets=c.kw["num_buckets"],
-            shuffle_partitions=c.kw["shuffle_partitions"],
             bag=bag,
+            **c.kw,
         )
         return _Routed(mv, c.default_pk, frozenset(stores), stores, _dict_feed, not bag)
 
@@ -1546,15 +1558,13 @@ class MVApp:
         """Introspection snapshot: how the view is maintained and where
         it stands — the engine-side answer to the reference's
         coordinator visibility (txn table, GrpcService.java:40-160)."""
-        target = getattr(self._mv, "target", None)
+        target = self._mv.target
         strategy = self.maintenance_strategy
         if isinstance(self._mv, CascadeMV):
             strategy = (
                 f"CascadeMV[{self._mv.inner.maintenance_strategy}"
                 f" -> {self._mv.outer.maintenance_strategy}]"
             )
-        if target is None and isinstance(self._mv, CascadeMV):
-            target = getattr(self._mv.outer._mv, "target", None)
         return {
             "query": self.query,
             "maintenance_mode": self.maintenance_mode,
@@ -1583,55 +1593,37 @@ class MVApp:
             ),
         }
 
-    def _all_stores(self) -> list[KeyedParquetStore]:
-        """Every KeyedParquetStore the maintenance object owns (source,
-        state, joined-relation, and target stores), deduped by id."""
-        seen: dict[int, KeyedParquetStore] = {}
+    @property
+    def _cdc_source(self):
+        """What a cascade's outer level consumes as this view's
+        changelog source: the route's store-shaped façade when it has
+        one (grouping sets, bag set ops), else its target store."""
+        return self._route.cdc if self._route.cdc is not None else self._mv.target
 
+    def _store_sets(self) -> list[StoreSet]:
+        """The StoreSets holding this view's stores: its own, or for a
+        cascade the inner level's and then the outer level's — each
+        level is its own MVApp with its own set."""
         if isinstance(self._mv, CascadeMV):
-            stores = self._mv.inner._all_stores() + self._mv.outer._all_stores()
-            for s in stores:
-                seen.setdefault(id(s), s)
-            return list(seen.values())
-
-        def add(obj):
-            if isinstance(obj, KeyedParquetStore):
-                seen.setdefault(id(obj), obj)
-
-        nested = [self._mv, getattr(self._mv, "_agg", None)]
-        nested += list(getattr(self._mv, "_sides", {}).values())
-        # grouping-sets decomposition: one sub-MV per set (shared fact
-        # store dedupes by id; each sub's state/target is its own)
-        nested += list(getattr(self._mv, "subs", []))
-        for mv in nested:
-            if mv is None:
-                continue
-            for attr in ("fact_store", "state_store", "dim_store",
-                         "hist_store", "left_store", "right_store", "target"):
-                try:
-                    add(getattr(mv, attr, None))
-                except AssertionError:
-                    pass  # multi-dim dim_store accessor asserts single-dim
-            for s in getattr(mv, "dim_stores", {}).values():
-                add(s)
-        for s in self._stores.values():
-            add(s)
-        return list(seen.values())
+            return self._mv.inner._store_sets() + self._mv.outer._store_sets()
+        return [self.stores]
 
     def compact(self) -> "MVApp":
         """Rewrite every store's current state into a single fresh
         version (bounds manifest/bucket fragmentation on long-lived
         views); reads see the same data before and after."""
-        for store in self._all_stores():
-            store.compact()
+        for stores in self._store_sets():
+            for store in stores.all:
+                store.compact()
         return self
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop unreferenced version directories older than the last
         ``keep_last`` (the time-travel window shrinks accordingly)."""
         removed: list[str] = []
-        for store in self._all_stores():
-            removed += store.vacuum(keep_last)
+        for stores in self._store_sets():
+            for store in stores.all:
+                removed += store.vacuum(keep_last)
         return removed
 
     def _target_committed(self) -> bool:

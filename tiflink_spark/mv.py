@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import contextvars
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +53,7 @@ from tiflink_spark.incremental import (
     present_measures,
 )
 from tiflink_spark.session import JOB, JobSettings, maintenance_session
-from tiflink_spark.store import KeyedParquetStore
+from tiflink_spark.store import KeyedParquetStore, StoreSet
 
 
 # Target rows per maintenance task. Once a batch's true change-row count
@@ -90,35 +89,13 @@ def _tune_delta_shuffle(configured: int | None, rows: int | None):
     JOB.set(job._replace(partitions=need, codegen=job.codegen or rows > CODEGEN_DELTA_ROWS))
 
 
-# Stores whose bootstrap row count exceeds this keep whole-stage
-# codegen ON during refresh: a pruning-hostile batch can scan them
-# whole, and an interpreted table-scale scan costs more than the
-# per-batch compile it saves (see _maintenance).
+# Source-scale stores (StoreSet.scale) whose bootstrap row count
+# exceeds this keep whole-stage codegen ON during refresh: a
+# pruning-hostile batch can scan them whole, and an interpreted
+# table-scale scan costs more than the per-batch compile it saves (see
+# _maintenance). Target and state stores are churn-sized and never the
+# big-scan risk.
 CODEGEN_TABLE_ROWS = 2_000_000
-
-# source-scale store attributes a route may carry (the target/state
-# stores are churn-sized and never the big-scan risk)
-_SCALE_STORE_ATTRS = ("fact_store", "left_store", "right_store", "other_store",
-                      "hist_store", "dim_store")
-
-
-def _route_is_big(self) -> bool:
-    stores = []
-    for attr in _SCALE_STORE_ATTRS:
-        try:
-            st = getattr(self, attr, None)
-        except Exception:
-            # e.g. IncrementalJoinAggMV.dim_store is a property that
-            # asserts single-dim; multi-dim routes carry dim_stores
-            continue
-        if st is not None:
-            stores.append(st)
-    stores.extend((getattr(self, "dim_stores", None) or {}).values())
-    for st in stores:
-        rows = st.bootstrap_rows()
-        if rows is not None and rows > CODEGEN_TABLE_ROWS:
-            return True
-    return False
 
 
 def _job_settings(route, refresh: bool) -> JobSettings:
@@ -126,8 +103,9 @@ def _job_settings(route, refresh: bool) -> JobSettings:
     the outermost job (see _maintenance)."""
     return JobSettings(
         refresh,
-        not refresh or _route_is_big(route),
-        getattr(route, "shuffle_partitions", None),
+        not refresh
+        or any((st.bootstrap_rows() or 0) > CODEGEN_TABLE_ROWS for st in route.stores.scale),
+        route.shuffle_partitions,
     )
 
 
@@ -151,7 +129,7 @@ def _maintenance(fn):
     - refresh also runs with whole-stage codegen off: every batch
       embeds its key literals in the plan, so generated code is never
       reused and each batch paid Janino compilation to run a few
-      hundred rows (flagship sf0.1: 3.0s/batch on vs 2.1s off). A route
+      hundred rows (flagship sf0.1: 3.0s/batch on vs 2.1s off). A view
       whose source stores exceed CODEGEN_TABLE_ROWS keeps codegen on —
       a pruning-hostile batch can scan such a store whole, and an
       interpreted table-scale scan costs far more than the compile
@@ -159,19 +137,16 @@ def _maintenance(fn):
 
     A nested call (a route refreshing an inner route) inherits the
     running job's settings under its own token, so an inner re-tune
-    ends with the inner call; an inner big-scan refresh still turns
-    codegen on for its own duration."""
+    ends with the inner call. Nested routes open their stores in their
+    view's StoreSet, so the outer job's choice already counts their
+    source-scale stores."""
 
     refresh = fn.__name__ == "refresh"
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
         job = JOB.get()
-        if job is None:
-            job = _job_settings(self, refresh)
-        elif refresh and not job.codegen and _route_is_big(self):
-            job = job._replace(codegen=True)
-        token = JOB.set(job)
+        token = JOB.set(job if job is not None else _job_settings(self, refresh))
         try:
             return fn(self, *args, **kwargs)
         finally:
@@ -207,22 +182,21 @@ class RecomputeMV:
         spark: SparkSession,
         sources: dict[str, KeyedParquetStore],
         query: str,
-        target_path: str,
+        stores: StoreSet,
         pk: list[str] | None = None,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         bag: bool = False,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.sources = sources
         self.query = query
         self._declared_pk = pk
-        self._num_buckets = num_buckets
         self._bag = bag
         self._out_cols: list[str] | None = None
+        # keyed by the query's result schema: opened at bootstrap
         self.target: KeyedParquetStore | None = None
-        self.target_path = target_path
 
     def _run_query(self) -> DataFrame:
         # Store reads are homed on the job's maintenance session, so
@@ -268,16 +242,11 @@ class RecomputeMV:
         result = self._run_query()
         if self._bag:
             self._out_cols = list(result.columns)
-            self.target = KeyedParquetStore(
-                self.spark,
-                self.target_path,
-                [self.BAG_ID, self.BAG_COPY],
-                self._num_buckets,
-            )
+            self.target = self.stores.open("mv", [self.BAG_ID, self.BAG_COPY])
             self.target.bootstrap(self._bag_rows(result), batch_id)
             return
         pk = default_pk(result.schema, self._declared_pk)
-        self.target = KeyedParquetStore(self.spark, self.target_path, pk, self._num_buckets)
+        self.target = self.stores.open("mv", pk)
         self.target.bootstrap(result, batch_id)
 
     def _bag_diff(self, old: DataFrame, new: DataFrame) -> DataFrame:
@@ -369,16 +338,6 @@ class IncrementalJoinMV:
     join); AQE skew-split applies to the pruned join too.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
@@ -388,12 +347,12 @@ class IncrementalJoinMV:
         right_pk: list[str],
         join_key,
         out_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         where: str | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         # Row-local deterministic predicate over the joined relation.
         # Dirty-key maintenance is recompute+diff, so applying it after
@@ -421,15 +380,9 @@ class IncrementalJoinMV:
         if self._mv_key not in out_cols:
             raise ValueError("ON-form join MV must select a join-key column")
         self.left0, self.right0 = left, right
-        self.left_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "left"), left_pk, num_buckets
-        )
-        self.right_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "right"), right_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), [*left_pk, *right_pk], num_buckets
-        )
+        self.left_store = stores.open("left", left_pk, scale=True)
+        self.right_store = stores.open("right", right_pk, scale=True)
+        self.target = stores.open("mv", [*left_pk, *right_pk])
 
     def _join(self, a: DataFrame, b: DataFrame) -> DataFrame:
         cols = list(dict.fromkeys([*self.target.pk, *self.out_cols]))
@@ -462,10 +415,7 @@ class IncrementalJoinMV:
         values normalize to the shared ``__jk`` name."""
         if changes is None:
             return None
-        if batch_id in store.committed_batches():
-            old = store.read(store.version_before_batch(batch_id))
-        else:
-            old = store.read()
+        old = store.read_before(batch_id)
         changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
         old_keys = old.join(F.broadcast(changed_pks), store.pk, "left_semi").select(
             F.col(side_key).alias("__jk")
@@ -555,16 +505,6 @@ class IncrementalThetaJoinMV:
     route exists for the steady trickle-churn regime.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
@@ -574,11 +514,11 @@ class IncrementalThetaJoinMV:
         right_pk: list[str],
         predicate: str,
         out_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.predicate = predicate
         self.out_cols = list(out_cols)
@@ -590,15 +530,9 @@ class IncrementalThetaJoinMV:
             raise ValueError(
                 f"theta-join MV requires disjoint column names; shared: {sorted(overlap)}"
             )
-        self.left_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "left"), left_pk, num_buckets
-        )
-        self.right_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "right"), right_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), [*left_pk, *right_pk], num_buckets
-        )
+        self.left_store = stores.open("left", left_pk, scale=True)
+        self.right_store = stores.open("right", right_pk, scale=True)
+        self.target = stores.open("mv", [*left_pk, *right_pk])
 
     def _join(self, a: DataFrame, b: DataFrame, hint: str | None = None) -> DataFrame:
         """θ-join via a conditioned join (not crossJoin+filter: that
@@ -754,12 +688,12 @@ class IncrementalFullOuterJoinMV:
         dim_keys: str | list[str],
         fact_fks: str | list[str],
         out_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         where: str | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.where = where
         self.fact0, self.dim0 = fact, dim
@@ -781,15 +715,9 @@ class IncrementalFullOuterJoinMV:
             raise ValueError(
                 f"full-outer-join MV select list must carry {sorted(missing)}"
             )
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), self.fact_pk, num_buckets
-        )
-        self.dim_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "dim"), self.dim_keys, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), [self.ROWID], num_buckets
-        )
+        self.fact_store = stores.open("fact", self.fact_pk, scale=True)
+        self.dim_store = stores.open("dim", self.dim_keys, scale=True)
+        self.target = stores.open("mv", [self.ROWID])
 
     def _rowid(self):
         return F.when(
@@ -867,12 +795,7 @@ class IncrementalFullOuterJoinMV:
         if dirty_f is not None:
             # OLD fks of the dirty fact rows: an update that moves a row
             # off key k may leave k fact-less — its d:k row must appear.
-            if batch_id in self.fact_store.committed_batches():
-                pre = self.fact_store.read(
-                    self.fact_store.version_before_batch(batch_id)
-                )
-            else:
-                pre = self.fact_store.read()
+            pre = self.fact_store.read_before(batch_id)
             key_parts.append(fk_as_keys(pre.join(F.broadcast(dirty_f), fpk, "left_semi")))
 
         if fact_changes is not None:
@@ -969,15 +892,15 @@ class IncrementalSemiJoinMV:
         fact_key: str,
         other_key: str,
         out_cols: list[str],
-        work_dir: str,
+        stores: StoreSet,
         anti: bool = False,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         where: str | None = None,
         null_aware: bool = False,
         other_where: str | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.anti = anti
         # NOT IN semantics, fully null-aware (no NOT NULL contract on
@@ -1018,15 +941,9 @@ class IncrementalSemiJoinMV:
         self.other0 = (
             other.filter(F.expr(other_where)) if other_where is not None else other
         )
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-        )
-        self.other_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "other"), other_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), list(fact_pk), num_buckets
-        )
+        self.fact_store = stores.open("fact", fact_pk, scale=True)
+        self.other_store = stores.open("other", other_pk, scale=True)
+        self.target = stores.open("mv", list(fact_pk))
 
     def _other_keys(self, other_now: DataFrame) -> DataFrame:
         """The current presence-key set (distinct, all-columns-non-null
@@ -1105,10 +1022,7 @@ class IncrementalSemiJoinMV:
         """Key values touched by an ``other`` batch: the new rows'
         values plus the displaced old versions' values."""
         store = self.other_store
-        if batch_id in store.committed_batches():
-            old = store.read(store.version_before_batch(batch_id))
-        else:
-            old = store.read()
+        old = store.read_before(batch_id)
         changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
         dk = [
             (k, f"__dk{i}") for i, k in enumerate(self.other_keys)
@@ -1194,10 +1108,7 @@ class IncrementalSemiJoinMV:
             parts.append(upserts(affected))
             if self.anti and self.null_aware:
                 store = self.other_store
-                if batch_id in store.committed_batches():
-                    pre = store.read(store.version_before_batch(batch_id))
-                else:
-                    pre = store.read()
+                pre = store.read_before(batch_id)
                 if self._other_has_null(pre) != post_has_null:
                     # the inner NULL bit flipped: EVERY fact row's
                     # membership flips with it (the view empties or
@@ -1280,9 +1191,8 @@ class IncrementalCorrSemiJoinMV:
         other_key: str | None,
         corr: list[tuple[str, str, str]],
         out_cols: list[str],
-        work_dir: str,
+        stores: StoreSet,
         anti: bool = False,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         where: str | None = None,
         inner_where: str | None = None,
@@ -1301,6 +1211,7 @@ class IncrementalCorrSemiJoinMV:
         # non-emptiness of S(c) — no match/null bits, no key columns.
         self.exists_mode = exists_mode
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.anti = anti
         self.fact_key = fact_key
@@ -1311,15 +1222,9 @@ class IncrementalCorrSemiJoinMV:
         self.inner_where = inner_where
         self.fact0 = fact.filter(F.expr(where)) if where is not None else fact
         self.other0 = other
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-        )
-        self.other_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "other"), other_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), list(fact_pk), num_buckets
-        )
+        self.fact_store = stores.open("fact", fact_pk, scale=True)
+        self.other_store = stores.open("other", other_pk, scale=True)
+        self.target = stores.open("mv", list(fact_pk))
 
     def _inner_eval(self, other_now: DataFrame) -> DataFrame:
         """The inner relation reduced to evaluation form: local filter
@@ -1525,10 +1430,7 @@ class IncrementalCorrSemiJoinMV:
         versions (each passed through the local filter — a version
         outside it was never in any S(c)), distinct and prefixed."""
         store = self.other_store
-        if batch_id in store.committed_batches():
-            old = store.read(store.version_before_batch(batch_id))
-        else:
-            old = store.read()
+        old = store.read_before(batch_id)
         changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
         old_rows = old.join(F.broadcast(changed_pks), store.pk, "left_semi")
         new_rows = changes.filter(F.col(OP_COL) != OP_DELETE).select(*old.columns)
@@ -1646,16 +1548,6 @@ class IncrementalCorrScalarAggMV:
     term is present.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
@@ -1668,8 +1560,7 @@ class IncrementalCorrScalarAggMV:
         alias: str,
         corr: list[tuple[str, str, str]],
         out_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         inner_where: str | None = None,
     ):
@@ -1680,6 +1571,7 @@ class IncrementalCorrScalarAggMV:
         if acol is None and akind != "count":
             raise ValueError("bare * is COUNT-only")
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.akind = akind
         self.acol = acol
@@ -1688,15 +1580,9 @@ class IncrementalCorrScalarAggMV:
         self.out_cols = list(out_cols)
         self.inner_where = inner_where
         self.dim0, self.fact0 = dim, fact
-        self.dim_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "dim"), dim_pk, num_buckets
-        )
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), list(dim_pk), num_buckets
-        )
+        self.dim_store = stores.open("dim", dim_pk, scale=True)
+        self.fact_store = stores.open("fact", fact_pk, scale=True)
+        self.target = stores.open("mv", list(dim_pk))
 
     def _fact_eval(self, fact_now: DataFrame) -> DataFrame:
         o = fact_now
@@ -1917,10 +1803,7 @@ class IncrementalCorrScalarAggMV:
 
     def _dirty_theta_vals(self, changes: DataFrame, batch_id) -> DataFrame:
         store = self.fact_store
-        if batch_id in store.committed_batches():
-            old = store.read(store.version_before_batch(batch_id))
-        else:
-            old = store.read()
+        old = store.read_before(batch_id)
         changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
         old_rows = old.join(F.broadcast(changed_pks), store.pk, "left_semi")
         new_rows = changes.filter(F.col(OP_COL) != OP_DELETE).select(*old.columns)
@@ -2040,33 +1923,23 @@ class IncrementalTopKMV:
     leaves orphaned high-rank slots, which the diff emits as -D.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
         fact: DataFrame,
         fact_pk: list[str],
         group_key: str,
+        stores: StoreSet,
         order_col: str | None = None,
         out_cols: list[str] | None = None,
         k: int = 1,
-        work_dir: str = "",
         descending: bool = True,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         rank_col: str = "rank",
         order_spec: list[tuple[str, bool]] | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.fact0 = fact
         self.fact_pk = fact_pk
@@ -2083,12 +1956,8 @@ class IncrementalTopKMV:
         self.out_cols = out_cols
         self.k = k
         self.rank_col = rank_col
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), [group_key, rank_col], num_buckets
-        )
+        self.fact_store = stores.open("fact", fact_pk, scale=True)
+        self.target = stores.open("mv", [group_key, rank_col])
 
     def _topk(self, rows: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -2117,16 +1986,7 @@ class IncrementalTopKMV:
         the displaced-row lookup reads the pre-batch version BUCKET-
         PRUNED to the batch's keys (batch_buckets) — O(touched
         buckets), not a table scan."""
-        prev_v = self.fact_store.version_before_batch(batch_id)
-        bks = self.fact_store.batch_buckets(batch_id)
-        old = (
-            self.fact_store.read_buckets(
-                bks, prev_v,
-                key_filter=self.fact_store.batch_key_values(batch_id),
-            )
-            if bks is not None
-            else self.fact_store.read(prev_v)
-        )
+        old = self.fact_store.read_changed_before(batch_id)
         changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
         old_groups = old.join(changed_pks, self.fact_pk, "left_semi").select(self.group_key)
         new_groups = changes.select(self.group_key).where(F.col(self.group_key).isNotNull())
@@ -2199,16 +2059,6 @@ class IncrementalWindowMV:
     pruned dirty partitions.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
@@ -2216,13 +2066,13 @@ class IncrementalWindowMV:
         fact_pk: list[str],
         group_key: str | list[str],
         select_items: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         skew_warn_rows: int | None = 5_000_000,
         strategy: str = "sort",
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.fact0 = fact
         self.fact_pk = list(fact_pk)
@@ -2241,12 +2091,8 @@ class IncrementalWindowMV:
         self.strategy = strategy
         if strategy == "domain":
             self._init_domain_plan()
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), self.fact_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), self.fact_pk, num_buckets
-        )
+        self.fact_store = stores.open("fact", self.fact_pk, scale=True)
+        self.target = stores.open("mv", self.fact_pk)
 
     def _init_domain_plan(self) -> None:
         """Validate and compile select_items for the two-pass DOMAIN
@@ -2378,16 +2224,7 @@ class IncrementalWindowMV:
         windows treat NULL as a regular partition). Called AFTER the
         batch's fact merge: the displaced-row lookup reads the
         pre-batch version bucket-pruned to the batch's keys."""
-        prev_v = self.fact_store.version_before_batch(batch_id)
-        bks = self.fact_store.batch_buckets(batch_id)
-        old = (
-            self.fact_store.read_buckets(
-                bks, prev_v,
-                key_filter=self.fact_store.batch_key_values(batch_id),
-            )
-            if bks is not None
-            else self.fact_store.read(prev_v)
-        )
+        old = self.fact_store.read_changed_before(batch_id)
         changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
         old_groups = old.join(changed_pks, self.fact_pk, "left_semi").select(
             *self.group_keys
@@ -2480,31 +2317,21 @@ class IncrementalGlobalTopKMV:
     member-touched probe is a driver scalar bounded by k rows.
     """
 
-    # The alias-mirror sharing contract (app._SharedMirrorStore): this
-    # route merges every source changelog into its mirror store
-    # VERBATIM — no filter/enrichment/rename before the merge — so a
-    # cascade outer of this class may alias a source mirror to the
-    # inner level's target store. Routes that transform changes before
-    # merging (grouping sets' hidden __g key, semijoin's WHERE
-    # pre-filter, projection renames) must NOT set this.
-    _mirrors_sources_verbatim = True
-
-
     def __init__(
         self,
         spark: SparkSession,
         fact: DataFrame,
         fact_pk: list[str],
+        stores: StoreSet,
         order_col: str | None = None,
         out_cols: list[str] | None = None,
         k: int = 1,
-        work_dir: str = "",
         descending: bool = False,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         order_spec: list[tuple[str, bool]] | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.fact0 = fact
         self.fact_pk = list(fact_pk)
@@ -2519,12 +2346,8 @@ class IncrementalGlobalTopKMV:
             self.order_spec = [(order_col, descending)]
         self.out_cols = list(out_cols)  # must include the fact PK
         self.k = k
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), self.fact_pk, num_buckets
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), self.fact_pk, num_buckets
-        )
+        self.fact_store = stores.open("fact", self.fact_pk, scale=True)
+        self.target = stores.open("mv", self.fact_pk)
 
     def _sort_cols(self):
         # trailing fact PK: a no-op when the user order already covers
@@ -2596,12 +2419,12 @@ class IncrementalUnionMV:
         branches: dict[str, tuple[DataFrame, str, list[str]]],
         out_cols: list[str],
         key_pos: int,
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         wheres: dict[str, str] | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.branches = branches
         # per-branch row-local WHERE (source-schema predicate): filters
@@ -2610,12 +2433,7 @@ class IncrementalUnionMV:
         self.wheres = {t: w for t, w in (wheres or {}).items() if w is not None}
         self.out_cols = list(out_cols)
         self.key_col = self.out_cols[key_pos]
-        self.target = KeyedParquetStore(
-            spark,
-            os.path.join(work_dir, "mv"),
-            [self.SRC_COL, self.key_col],
-            num_buckets,
-        )
+        self.target = stores.open("mv", [self.SRC_COL, self.key_col])
 
     def _project(self, table: str, df: DataFrame) -> DataFrame:
         """Branch rows → target schema (output names + branch tag)."""
@@ -2701,17 +2519,15 @@ class IncrementalProjectionMV:
         fact: DataFrame,
         items: list[tuple[str, str]],
         pk_out: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.fact0 = fact
         self.items = list(items)
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), list(pk_out), num_buckets
-        )
+        self.target = stores.open("mv", list(pk_out))
 
     def _project(self, df: DataFrame) -> DataFrame:
         sel = [F.expr(e).alias(o) for o, e in self.items]
@@ -2770,8 +2586,7 @@ class IncrementalSetOpMV:
         left_cols: list[str],
         right_cols: list[str],
         out_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         side_names: tuple[str, str] = ("a", "b"),
         wheres: tuple[str | None, str | None] = (None, None),
@@ -2779,6 +2594,7 @@ class IncrementalSetOpMV:
         if op not in ("intersect", "except", "union", "intersect_all", "except_all"):
             raise ValueError(f"unsupported set op: {op}")
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.op = op
         self._name_to_tag = {side_names[0]: "a", side_names[1]: "b"}
@@ -2804,13 +2620,10 @@ class IncrementalSetOpMV:
                 fact_pk=[f"__pk_{i}" for i in range(len(self._side_pks[tag]))],
                 group_key=list(out_cols),
                 measures=[Measure("count", None, "__cnt")],
-                work_dir=os.path.join(work_dir, tag),
-                num_buckets=num_buckets,
+                stores=stores.under(tag),
                 shuffle_partitions=shuffle_partitions,
             )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), list(out_cols), num_buckets
-        )
+        self.target = stores.open("mv", list(out_cols))
         if self.op in ("intersect_all", "except_all"):
             # bag ops can feed a cascade: the store-shaped façade turns
             # per-tuple multiplicity transitions into per-copy +I/-D
@@ -2890,10 +2703,7 @@ class IncrementalSetOpMV:
         inner MV has already merged when this runs)."""
         side = self._sides[tag]
         store = side.fact_store
-        if batch_id in store.committed_batches():
-            old = store.read(store.version_before_batch(batch_id))
-        else:
-            old = store.read()
+        old = store.read_before(batch_id)
         changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
         old_tuples = old.join(changed_pks, store.pk, "left_semi").select(*self.out_cols)
         new_tuples = changes.select(*self.out_cols)
@@ -3109,14 +2919,14 @@ class IncrementalJoinAggMV:
         group_keys: list[str],
         measures: list[Measure],
         fact_cols: list[str],
-        work_dir: str,
+        stores: StoreSet,
         where: str | None = None,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         target_filter: str | None = None,
         key_exprs: list | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         self.fact_name = fact_name
         self.fact0, self.dim0 = fact, dim_dfs
@@ -3146,27 +2956,14 @@ class IncrementalJoinAggMV:
         for d in self.dims:
             self._j_cols += [c for c in self._dim_carry[d.dim] if c not in self._j_cols]
         self._j_cols += [a for a, _ in self._key_exprs if a not in self._j_cols]
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), self.fact_pk, num_buckets
-        )
+        self.fact_store = stores.open("fact", self.fact_pk, scale=True)
         self.dim_stores = {
-            d.dim: KeyedParquetStore(
-                spark,
-                os.path.join(work_dir, f"dim_{d.dim}"),
-                list(d.pk_cols),
-                num_buckets,
-            )
+            d.dim: stores.open(f"dim_{d.dim}", list(d.pk_cols), scale=True)
             for d in self.dims
         }
-        self._make_sink(
-            work_dir, group_keys, measures, target_filter,
-            num_buckets, shuffle_partitions,
-        )
+        self._make_sink(group_keys, measures, target_filter, shuffle_partitions)
 
-    def _make_sink(
-        self, work_dir, group_keys, measures, target_filter,
-        num_buckets, shuffle_partitions,
-    ) -> None:
+    def _make_sink(self, group_keys, measures, target_filter, shuffle_partitions) -> None:
         # Inner aggregate MV over the joined relation. The J relation
         # is VIRTUAL (external_fact): J = fact ⋈ dims is fully
         # derivable from this route's versioned source stores, so
@@ -3183,8 +2980,7 @@ class IncrementalJoinAggMV:
             fact_pk=self.fact_pk,
             group_key=list(group_keys),
             measures=list(measures),
-            work_dir=os.path.join(work_dir, "agg"),
-            num_buckets=num_buckets,
+            stores=self.stores.under("agg"),
             shuffle_partitions=shuffle_partitions,
             target_filter=target_filter,
             external_fact=True,
@@ -3472,24 +3268,10 @@ class IncrementalJoinAggMV:
         # dim-churn-affected keys — dim churn doesn't move fact rows)
         # ⋈ PRE-batch dim state, inner-matched and WHERE-filtered —
         # exactly the rows that were in J before this batch.
-        def pre_read(store):
-            if batch_id in store.committed_batches():
-                return store.read(store.version_before_batch(batch_id))
-            return store.read()
-
-        dim_pre = {d.dim: pre_read(self.dim_stores[d.dim]) for d in self.dims}
+        dim_pre = {d.dim: self.dim_stores[d.dim].read_before(batch_id) for d in self.dims}
         old_fact_parts = []
         if fact_changes is not None:
-            prev_v = self.fact_store.version_before_batch(batch_id)
-            bks = self.fact_store.batch_buckets(batch_id)
-            old_fact = (
-                self.fact_store.read_buckets(
-                    bks, prev_v,
-                    key_filter=self.fact_store.batch_key_values(batch_id),
-                )
-                if bks is not None
-                else self.fact_store.read(prev_v)
-            )
+            old_fact = self.fact_store.read_changed_before(batch_id)
             fck = last_change_per_key(fact_changes, self.fact_pk).select(*self.fact_pk)
             old_fact_parts.append(
                 old_fact.join(F.broadcast(fck), self.fact_pk, "left_semi")
@@ -3571,13 +3353,8 @@ class IncrementalJoinProjectionMV(IncrementalJoinAggMV):
         self._out_cols = list(out_cols)
         super().__init__(*args, **kwargs)
 
-    def _make_sink(
-        self, work_dir, group_keys, measures, target_filter,
-        num_buckets, shuffle_partitions,
-    ) -> None:
-        self.target = KeyedParquetStore(
-            self.spark, os.path.join(work_dir, "mv"), self.fact_pk, num_buckets
-        )
+    def _make_sink(self, group_keys, measures, target_filter, shuffle_partitions) -> None:
+        self.target = self.stores.open("mv", self.fact_pk)
 
     def _project_out(self, df: DataFrame) -> DataFrame:
         extra = [F.col(c) for c in (OP_COL, SEQ_COL) if c in df.columns]
@@ -3661,12 +3438,12 @@ class IncrementalTemporalJoinMV:
         out_src: list[str],
         fact_cols: list[str],
         dim_cols: list[str],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         late_dim: str = "raise",
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         if late_dim not in ("raise", "reorder"):
             raise ValueError(f"late_dim must be 'raise' or 'reorder', got {late_dim!r}")
@@ -3702,18 +3479,9 @@ class IncrementalTemporalJoinMV:
         ]
         self.fact0 = fact.select(*self._fact_side)
         self.dim0 = dim
-        self.fact_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), self.fact_pk, num_buckets
-        )
-        self.hist_store = KeyedParquetStore(
-            spark,
-            os.path.join(work_dir, "dim_history"),
-            [*self.dim_pk, self.VSEQ],
-            num_buckets,
-        )
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), self.fact_pk, num_buckets
-        )
+        self.fact_store = stores.open("fact", self.fact_pk, scale=True)
+        self.hist_store = stores.open("dim_history", [*self.dim_pk, self.VSEQ], scale=True)
+        self.target = stores.open("mv", self.fact_pk)
 
     def _asof(self, fact_rows: DataFrame, hist: DataFrame) -> DataFrame:
         """fact rows ⟕ the dim version valid AS OF each row's event
@@ -3801,10 +3569,7 @@ class IncrementalTemporalJoinMV:
         from the PRE-batch history (version_before_batch on replay)."""
         from pyspark.sql import Window
 
-        if batch_id in self.hist_store.committed_batches():
-            pre = self.hist_store.read(self.hist_store.version_before_batch(batch_id))
-        else:
-            pre = self.hist_store.read()
+        pre = self.hist_store.read_before(batch_id)
         t = F.col(self.dim_time_col)
         ch = dim_changes.withColumn(
             self.dim_time_col,
@@ -3891,10 +3656,7 @@ class IncrementalTemporalJoinMV:
         (version_before_batch) so crash replay is exact."""
         from pyspark.sql import Window
 
-        if batch_id in self.hist_store.committed_batches():
-            pre = self.hist_store.read(self.hist_store.version_before_batch(batch_id))
-        else:
-            pre = self.hist_store.read()
+        pre = self.hist_store.read_before(batch_id)
         t = F.col(self.dim_time_col)
         ch = dim_changes.withColumn(
             self.dim_time_col,
@@ -4149,8 +3911,7 @@ class IncrementalGroupingSetsMV:
         all_keys: list[str],
         sets: list[tuple[str, ...]],
         measures: list[Measure],
-        work_dir: str,
-        num_buckets: int | None = None,
+        stores: StoreSet,
         shuffle_partitions: int | None = None,
         grouping_items: list[tuple[str, str]] | None = None,
         tail_order: list[tuple[str, str]] | None = None,
@@ -4160,6 +3921,7 @@ class IncrementalGroupingSetsMV:
         having_gcalls: list[tuple[str, tuple[str, ...]]] | None = None,
     ):
         self.spark = spark
+        self.stores = stores
         self.all_keys = list(all_keys)
         self.sets = [tuple(s) for s in sets]
         # visible output measures; hidden ones (HAVING support) are
@@ -4193,9 +3955,7 @@ class IncrementalGroupingSetsMV:
             f.name: f.dataType for f in fact0.schema.fields if f.name in self.all_keys
         }
         self.subs: list[IncrementalAggMV] = []
-        shared_fact = KeyedParquetStore(
-            spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-        )
+        shared_fact = stores.open("fact", fact_pk, scale=True)
         for i, s in enumerate(self.sets):
             # SQL rule: a grouping key absent from the current set reads
             # as NULL inside HAVING (it IS null on the subtotal row), so
@@ -4234,19 +3994,19 @@ class IncrementalGroupingSetsMV:
                 fact_pk,
                 list(s) if s else ["__g"],
                 list(self._all_measures),
-                work_dir=os.path.join(work_dir, f"set{i}"),
-                num_buckets=num_buckets,
+                # one fact copy for all sets
+                stores=stores.under(f"set{i}", offers={"fact": shared_fact}),
                 shuffle_partitions=shuffle_partitions,
                 global_group=not s,
                 target_filter=tf,
             )
-            sub.fact_store = shared_fact  # one fact copy for all sets
             self.subs.append(sub)
         self.fact_store = shared_fact
         # the job's sizing, which the subs inherit (see _maintenance)
         self.shuffle_partitions = shuffle_partitions
         # Composite CDC source over the per-set target stores — what a
         # CascadeMV consumes instead of a (non-existent) single target.
+        self.target = None
         self.cascade_target = _GroupingSetsCascadeTarget(self)
 
     # Per-set sub-MVs maintain DISJOINT state/target stores off one
@@ -4482,17 +4242,17 @@ class IncrementalAggMV:
         fact_pk: list[str],
         group_key: str | list[str],
         measures: list[Measure],
-        work_dir: str,
+        stores: StoreSet,
         dim: DataFrame | None = None,
         dim_key: str | None = None,
         dim_cols: list[str] | None = None,
-        num_buckets: int | None = None,
         shuffle_partitions: int | None = None,
         target_filter: str | None = None,
         global_group: bool = False,
         external_fact: bool = False,
     ):
         self.spark = spark
+        self.stores = stores
         self.shuffle_partitions = shuffle_partitions
         # Row-local predicate over the MV's OUTPUT columns (HAVING
         # analog): bootstrap rows failing it are excluded, and refresh
@@ -4529,25 +4289,15 @@ class IncrementalAggMV:
         # store write per batch AND the materialized-join storage
         # (at scale: the duplicated fact×dim width on disk).
         self.external_fact = external_fact
-        self.fact_store = (
-            None
-            if external_fact
-            else KeyedParquetStore(
-                spark, os.path.join(work_dir, "fact"), fact_pk, num_buckets
-            )
-        )
-        self.state_store = KeyedParquetStore(
-            spark, os.path.join(work_dir, "state"), self.group_keys, num_buckets
-        )
+        self.fact_store = None if external_fact else stores.open("fact", fact_pk, scale=True)
+        self.state_store = stores.open("state", self.group_keys)
         self.dim_store = (
-            KeyedParquetStore(spark, os.path.join(work_dir, "dim"), [dim_key], num_buckets)
+            stores.open("dim", [dim_key], scale=True)
             if dim is not None
             else None
         )
         mv_pk = [dim_key] if dim is not None else self.group_keys
-        self.target = KeyedParquetStore(
-            spark, os.path.join(work_dir, "mv"), mv_pk, num_buckets
-        )
+        self.target = stores.open("mv", mv_pk)
         # Cached once against the fact schema: whether every measure is
         # order-insensitive (bit-identical across two executions of the
         # same lineage) — the gate for the concurrent state∥target
@@ -4662,15 +4412,10 @@ class IncrementalAggMV:
                         contextvars.copy_context().run,
                         self.fact_store.merge, fact_changes, batch_id,
                     )
-                    if batch_id in self.state_store.committed_batches():
-                        # crash between state commit and target commit:
-                        # diff against the PRE-batch state or the delta
-                        # would be applied twice.
-                        old_state = self.state_store.read(
-                            self.state_store.version_before_batch(batch_id)
-                        )
-                    else:
-                        old_state = self.state_store.read()
+                    # crash between state commit and target commit:
+                    # diff against the PRE-batch state or the delta
+                    # would be applied twice.
+                    old_state = self.state_store.read_before(batch_id)
                     fact_merge_future.result()
                 # Re-bind to the merge's materialized delta: the raw
                 # changelog lineage (often a multi-join derivation)
@@ -4687,16 +4432,7 @@ class IncrementalAggMV:
                 _tune_delta_shuffle(
                     self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
                 )
-                prev_v = self.fact_store.version_before_batch(batch_id)
-                bks = self.fact_store.batch_buckets(batch_id)
-                old_fact = (
-                    self.fact_store.read_buckets(
-                        bks, prev_v,
-                        key_filter=self.fact_store.batch_key_values(batch_id),
-                    )
-                    if bks is not None
-                    else self.fact_store.read(prev_v)
-                )
+                old_fact = self.fact_store.read_changed_before(batch_id)
                 final = last_change_per_key(fact_changes, self.fact_pk)
                 # δ-bounded key set: broadcast, or the bucket scan
                 # shuffles
@@ -4733,12 +4469,7 @@ class IncrementalAggMV:
                     raise ValueError(
                         "external_fact refresh needs old_rows and new_base"
                     )
-                if batch_id in self.state_store.committed_batches():
-                    old_state = self.state_store.read(
-                        self.state_store.version_before_batch(batch_id)
-                    )
-                else:
-                    old_state = self.state_store.read()
+                old_state = self.state_store.read_before(batch_id)
                 final = last_change_per_key(fact_changes, self.fact_pk)
 
             delta = compute_delta(

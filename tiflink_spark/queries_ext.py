@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiflink_spark.queries import _t, register
+from tiflink_spark.store import StoreSet
 
 # ---------------------------------------------------------------------------
 # SimHash (64-bit, 4 bands x 16 bits)
@@ -959,11 +960,10 @@ def mv_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             fact_pk=["o_orderkey"],
             group_key="o_custkey",
             measures=[Measure("count", None, "order_cnt")],
-            work_dir=work,
+            stores=StoreSet(spark, work, 4),
             dim=t["customer"],
             dim_key="c_custkey",
             dim_cols=["c_name"],
-            num_buckets=4,
             shuffle_partitions=8,
         )
         mv.bootstrap()

@@ -23,7 +23,7 @@ from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ
 from tiflink_spark.incremental import Measure
 from tiflink_spark.mv import IncrementalAggMV, RecomputeMV
 from tiflink_spark.queries import _t, register
-from tiflink_spark.store import KeyedParquetStore
+from tiflink_spark.store import StoreSet
 
 BIG = 20_000_000  # inserted keys live above this; delete/update scripts stay below
 
@@ -98,11 +98,11 @@ def mv_flagship_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             fact_pk=["o_orderkey"],
             group_key="o_custkey",
             measures=[Measure("count", None, "order_cnt")],
-            work_dir=work,
+            # 4 buckets: a deployment knob, small at gate SF, ~1024 at 100 TB
+            stores=StoreSet(spark, work, 4),
             dim=t["customer"],
             dim_key="c_custkey",
             dim_cols=["c_name"],
-            num_buckets=4,  # deployment knob: small at gate SF, ~1024 at 100 TB
             shuffle_partitions=8,  # sized to delta volume, not source volume
         )
         mv.bootstrap()
@@ -150,8 +150,7 @@ def mv_groupagg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Measure("min", "o_totalprice", "min_price"),
                 Measure("max", "o_totalprice", "max_price"),
             ],
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -223,8 +222,7 @@ def mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             right_pk=["custkey"],
             join_key="custkey",
             out_cols=["o_orderkey", "custkey", "o_totalprice", "c_name"],
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -382,8 +380,7 @@ def mv_window_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Measure("count", None, "n_events"),
                 Measure("sum", "value", "total_value_raw"),
             ],
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -443,9 +440,10 @@ def mv_flagship_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="mv_rec_")
     try:
-        src = KeyedParquetStore(spark, f"{work}/orders", ["o_orderkey"], num_buckets=4)
+        stores = StoreSet(spark, work, 4)
+        src = stores.open("orders", ["o_orderkey"])
         src.bootstrap(t["orders"])
-        cust = KeyedParquetStore(spark, f"{work}/customer", ["c_custkey"], num_buckets=4)
+        cust = stores.open("customer", ["c_custkey"])
         cust.bootstrap(t["customer"])
         rmv = RecomputeMV(
             spark,
@@ -454,8 +452,7 @@ def mv_flagship_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
                       (SELECT count(*) FROM orders_live o
                        WHERE o.o_custkey = c.c_custkey) AS order_cnt
                FROM customer_live c""",
-            f"{work}/mv",
-            num_buckets=4,
+            stores,
             shuffle_partitions=8,
         )
         rmv.bootstrap()
@@ -493,11 +490,10 @@ def mv_distinct_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             fact_pk=["o_orderkey"],
             group_key="o_custkey",
             measures=[Measure("count_distinct", "o_totalprice", "n_prices")],
-            work_dir=work,
+            stores=StoreSet(spark, work, 4),
             dim=t["customer"],
             dim_key="c_custkey",
             dim_cols=["c_name"],
-            num_buckets=4,
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -604,8 +600,7 @@ def mv_multikey_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Measure("count", None, "n_orders"),
                 Measure("sum", "o_totalprice", "total_price_raw"),
             ],
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -672,8 +667,7 @@ def mv_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             right_pk=["custkey"],
             join_key="custkey",
             out_cols=["custkey", "o_orderkey", "o_totalprice"],
-            work_dir=os.path.join(work, "join"),
-            num_buckets=4,
+            stores=StoreSet(spark, os.path.join(work, "join"), 4),
             shuffle_partitions=8,
         )
         join_mv.bootstrap(batch_id="b0")
@@ -688,8 +682,7 @@ def mv_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Measure("count", None, "n_orders"),
                 Measure("sum", "o_totalprice", "total_price_raw"),
             ],
-            work_dir=os.path.join(work, "agg"),
-            num_buckets=4,
+            stores=StoreSet(spark, os.path.join(work, "agg"), 4),
             shuffle_partitions=8,
         )
         agg_mv.bootstrap(batch_id="b0")
@@ -764,8 +757,7 @@ def mv_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_col="o_totalprice",
             out_cols=["o_orderkey", "o_totalprice"],
             k=3,
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
         )
         mv.bootstrap()
@@ -4838,8 +4830,7 @@ def mv_window_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
             fact_pk=["o_orderkey"],
             group_key="seg",
             select_items=items,
-            work_dir=work,
-            num_buckets=4,
+            stores=StoreSet(spark, work, 4),
             shuffle_partitions=8,
             strategy="domain",
         )

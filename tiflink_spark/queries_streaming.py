@@ -25,6 +25,7 @@ from tiflink_spark.changelog import SEQ_COL
 from tiflink_spark.incremental import Measure
 from tiflink_spark.mv import IncrementalAggMV
 from tiflink_spark.queries import _t, register
+from tiflink_spark.store import StoreSet
 # one oracle + one pattern spec for BOTH funnel gates (batch gate in
 # queries_ext) — the two entry points cannot drift apart
 from tiflink_spark.queries_ext import (
@@ -389,11 +390,10 @@ def mv_flagship_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             fact_pk=["o_orderkey"],
             group_key="o_custkey",
             measures=[Measure("count", None, "order_cnt")],
-            work_dir=os.path.join(work, "mv"),
+            stores=StoreSet(spark, os.path.join(work, "mv"), 4),
             dim=t["customer"],
             dim_key="c_custkey",
             dim_cols=["c_name"],
-            num_buckets=4,
             shuffle_partitions=8,
         )
         mv.bootstrap()

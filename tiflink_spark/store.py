@@ -239,13 +239,19 @@ class KeyedParquetStore:
     in the commit manifest, so every later open of the same store —
     whatever the constructor argument — reuses the committed layout
     (changing the bucket count mid-life would silently break pruning).
+
+    A view's maintenance routes never construct stores themselves: they
+    open them through the view's :class:`StoreSet`, which lists what it
+    opened for compaction, vacuum and the refresh settings.
     """
 
     def __init__(
         self, spark: SparkSession, path: str, pk: list[str], num_buckets: int | None = None
     ):
-        # The session the store was opened with; ``spark`` resolves the
-        # running job's maintenance session from it on every use.
+        # The session the store was opened with (the view's, via its
+        # StoreSet); ``spark`` resolves the running job's maintenance
+        # session from it on every use. Opening creates the directory
+        # and reads an existing manifest — no Spark job runs.
         self._spark = spark
         self.path = path
         self.pk = list(pk)
@@ -458,6 +464,15 @@ class KeyedParquetStore:
         self._read_cache[ck] = out
         return out
 
+    def read_before(self, batch_id) -> DataFrame:
+        """The state ``batch_id``'s changes apply to: the version
+        committed just before it when the batch already committed here
+        (a crash replay, or a store another level merged first), the
+        current state otherwise."""
+        if batch_id in self.committed_batches():
+            return self.read(self.version_before_batch(batch_id))
+        return self.read()
+
     def batch_buckets(self, batch_id) -> list[int] | None:
         """The buckets ``batch_id``'s change rows hash into, recorded at
         merge time — None when unknown (legacy line, bootstrap, or a
@@ -644,6 +659,20 @@ class KeyedParquetStore:
         return self._apply_deltas(
             base, deltas, bucket_filter=want, key_filter=key_filter
         )
+
+    def read_changed_before(self, batch_id) -> DataFrame:
+        """The pre-batch rows that can hold ``batch_id``'s changed keys,
+        read after the batch merged here: the buckets its change rows
+        hash into (batch_buckets), IN-filtered to their first-PK values
+        (batch_key_values) — O(touched buckets), not a table scan. The
+        whole pre-batch version when the buckets are unknown. A
+        superset of the changed keys' old rows: callers still join
+        exactly."""
+        prev_v = self.version_before_batch(batch_id)
+        bks = self.batch_buckets(batch_id)
+        if bks is None:
+            return self.read(prev_v)
+        return self.read_buckets(bks, prev_v, key_filter=self.batch_key_values(batch_id))
 
     def _read_base(self, commit: dict) -> DataFrame:
         paths = sorted(
@@ -1173,6 +1202,61 @@ class KeyedParquetStore:
                 "merge_secs": round(time.monotonic() - t0, 3),
             },
         )
+
+
+class StoreSet:
+    """The keyed stores of one view, opened through the view that owns
+    them (TiFlinkApp likewise builds and owns its source and sink
+    connectors; Flink operators register state with a backend instead
+    of holding it unlisted).
+
+    :meth:`open` opens ``root/name`` with the view's bucket count and
+    remembers it: :attr:`all` is what compaction and vacuum walk,
+    :attr:`scale` the source-scale stores whose bootstrap size decides
+    whether a refresh keeps whole-stage codegen on (mv._job_settings).
+    A nested route — a set-op side, a grouping set, a join aggregate's
+    inner aggregate — opens under :meth:`under`, a subdirectory that
+    shares the view's lists, so the view's job settings cover it.
+
+    ``offers`` maps a store name to a store another owner maintains;
+    :meth:`open` returns it instead of opening ``root/name``, and
+    :attr:`all` leaves it out (its owner compacts it), while
+    ``scale=True`` still lists it. A grouping set is offered the shared
+    fact store; a cascade's outer route is offered the inner level's
+    target as its mirror of the derived table."""
+
+    def __init__(self, spark: SparkSession, root: str, num_buckets: int | None = None, offers=None):
+        self._spark = spark
+        self.root = root
+        self.num_buckets = num_buckets
+        self.offers = dict(offers or {})
+        # path -> store; shared with every set made by under()
+        self._all: dict[str, KeyedParquetStore] = {}
+        self._scale: dict[str, object] = {}
+
+    def open(self, name: str, pk: list[str], scale: bool = False):
+        store = self.offers.get(name)
+        if store is None:
+            store = KeyedParquetStore(
+                self._spark, os.path.join(self.root, name), pk, self.num_buckets
+            )
+            self._all[store.path] = store
+        if scale:
+            self._scale[store.path] = store
+        return store
+
+    def under(self, name: str, offers=None) -> "StoreSet":
+        sub = StoreSet(self._spark, os.path.join(self.root, name), self.num_buckets, offers)
+        sub._all, sub._scale = self._all, self._scale
+        return sub
+
+    @property
+    def all(self) -> list[KeyedParquetStore]:
+        return list(self._all.values())
+
+    @property
+    def scale(self) -> list:
+        return list(self._scale.values())
 
 
 def changes_between(

@@ -1,8 +1,11 @@
 """Regenerate tests/fixtures/routing_golden.json — the route MVApp picks
-for every query of the matcher golden corpus.
+for every query of the matcher golden corpus, with the store layout that
+route opens (``stores``: paths relative to the target; ``shared``: whether
+a cascade's outer level reads the inner target as its alias mirror).
 
-Run ONLY when a routing change is intended; review the fixture diff like
-code (every changed entry is a query that now takes another route).
+Run ONLY when a routing or store-layout change is intended; review the
+fixture diff like code (every changed entry is a query that now takes
+another route or keeps its state in other stores).
 
 Usage: python tools/regen_routing_golden.py
 """
