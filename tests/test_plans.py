@@ -305,15 +305,16 @@ def test_refresh_codegen_scales_with_store_size(spark, tmp_path, monkeypatch):
     assert [spark.conf.get(k) for k in keys] == user0
 
 
-def test_job_settings_nesting():
+def test_job_settings_nesting(tmp_path):
     """The outermost bootstrap/refresh chooses the job's settings from
     its StoreSet's source-scale stores; nested routes inherit them under
     their own token (an inner re-tune ends with the inner call). No
     Spark job runs."""
-    from types import SimpleNamespace
+    import itertools
 
     from tiflink_spark import mv as mv_mod
     from tiflink_spark.session import JOB, JobSettings
+    from tiflink_spark.store import StoreSet
 
     class Store:
         def __init__(self, rows):
@@ -323,26 +324,30 @@ def test_job_settings_nesting():
             return self.rows
 
     seen = []
+    roots = itertools.count()
 
     class Route:
         shuffle_partitions = 3
 
         def __init__(self, rows, inner=None, delta_rows=None):
-            self.stores = SimpleNamespace(scale=[Store(rows)])
+            root = tmp_path / str(next(roots))
+            root.mkdir()
+            self.stores = StoreSet(None, str(root))
+            self.stores._scale["fact"] = Store(rows)
             self.inner = inner
             self.delta_rows = delta_rows
 
         @mv_mod._maintenance
-        def bootstrap(self):
+        def bootstrap(self, batch_id=0):
             seen.append(JOB.get())
 
         @mv_mod._maintenance
-        def refresh(self):
+        def refresh(self, batch_id):
             if self.delta_rows is not None:
                 mv_mod._tune_delta_shuffle(self.shuffle_partitions, self.delta_rows)
             seen.append(JOB.get())
             if self.inner is not None:
-                self.inner.refresh()
+                self.inner.refresh(batch_id)
                 seen.append(JOB.get())
 
     big = mv_mod.CODEGEN_TABLE_ROWS + 1
@@ -350,7 +355,7 @@ def test_job_settings_nesting():
     assert seen == [JobSettings(False, True, 3)]
     # an inner delta re-tune ends with the inner call
     seen.clear()
-    Route(10, inner=Route(10, delta_rows=5)).refresh()
+    Route(10, inner=Route(10, delta_rows=5)).refresh(1)
     assert seen == [
         JobSettings(True, False, 3),
         JobSettings(True, False, 1),
@@ -358,11 +363,11 @@ def test_job_settings_nesting():
     ]
     # big outer, small inner: the inner keeps codegen on
     seen.clear()
-    Route(big, inner=Route(10)).refresh()
+    Route(big, inner=Route(10)).refresh(1)
     assert [s.codegen for s in seen] == [True, True, True]
     # a backfill-scale delta turns codegen on; sizing stays capped
     seen.clear()
-    Route(10, delta_rows=mv_mod.CODEGEN_DELTA_ROWS + 1).refresh()
+    Route(10, delta_rows=mv_mod.CODEGEN_DELTA_ROWS + 1).refresh(1)
     assert seen == [JobSettings(True, True, 3)]
     assert JOB.get() is None
 

@@ -190,7 +190,7 @@ def test_apply_deltas_broadcast_gated_on_chain_size(spark, tmp_path, monkeypatch
     assert "ResolvedHint" not in unhinted
     # unknown counts (legacy manifest lines) are treated as unbounded
     monkeypatch.setattr(store_mod, "BROADCAST_KEYS_MAX", 10**9)
-    monkeypatch.setattr(KeyedParquetStore, "_delta_rows_of", lambda self, rel: None)
+    monkeypatch.setattr(KeyedParquetStore, "_delta_stats_of", lambda self, rel: {})
     legacy = _plan(store._apply_deltas(base, chain))
     assert "ResolvedHint" not in legacy
     # and values stay correct either way

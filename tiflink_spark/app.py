@@ -87,7 +87,7 @@ from tiflink_spark.planner import (
     split_nested_query,
 )
 from tiflink_spark.session import JOB
-from tiflink_spark.store import KeyedParquetStore, StoreSet
+from tiflink_spark.store import KeyedParquetStore, StoreSet, run_batch
 from tiflink_spark.types import create_table_ddl
 
 # cost_advisor default: a join-agg view whose FULL query executes within
@@ -384,15 +384,18 @@ class _SharedMirrorStore:
     outer was planned against (the inner target may hold hidden engine
     columns); writes are no-ops. The inner level has always committed
     the batch already, so every read of the pre-batch state goes
-    through ``read_before``/``read_changed_before`` — the same replay
-    path a crashed batch takes."""
+    through ``read_before``/``read_changed_before``."""
 
     def __init__(self, store, cols: list):
         self._store = store
         self._cols = list(cols)
+        self.pk, self.path = store.pk, store.path
 
-    def __getattr__(self, name):
-        return getattr(self._store, name)
+    def bootstrap_rows(self):
+        return self._store.bootstrap_rows()
+
+    def batch_change_rows(self, batch_id):
+        return self._store.batch_change_rows(batch_id)
 
     def _project(self, df):
         from tiflink_spark.changelog import OP_COL, SEQ_COL
@@ -488,25 +491,9 @@ class CascadeMV:
         inner_changes = {k: v for k, v in changes.items() if k in inner_tabs}
         outer_changes = {k: v for k, v in changes.items() if k in outer_tabs}
         tgt = self.inner._cdc_source
-        pre = getattr(tgt, "pre_batch_version", None)
-        if pre is not None:
-            # Composite target: the batch may have committed in SOME
-            # per-set stores before a crash. pre_batch_version returns
-            # the crash-aware baseline (pre-batch version for committed
-            # subs, current for the rest); the inner refresh must still
-            # run unless EVERY sub committed, or the uncommitted subs
-            # would never see the batch.
-            v_from, fully_committed = pre(batch_id)
-            if not fully_committed and inner_changes:
-                self.inner.refresh(inner_changes, batch_id)
-        elif batch_id in tgt.committed_batches():
-            # crash replay: the inner committed but (possibly) the outer
-            # did not — recover this batch's delta from the version log
-            v_from = tgt.version_before_batch(batch_id)
-        else:
-            v_from = tgt.current_version()
-            if inner_changes:
-                self.inner.refresh(inner_changes, batch_id)
+        v_from = tgt.current_version()
+        if inner_changes:
+            self.inner.refresh(inner_changes, batch_id)
         v_to = tgt.current_version()
         if v_to != v_from:
             # Project through the inner query's schema PLUS the target's
@@ -1580,9 +1567,8 @@ class MVApp:
             "mv_columns": [f.name for f in self.mv_schema.fields],
             "ddl": self.ddl,
             "target_version": target.current_version() if target is not None else None,
-            "committed_batches": sorted(
-                map(str, target.committed_batches())
-            ) if target is not None else [],
+            # the view's batch log (store.run_batch)
+            "committed_batches": sorted(map(str, self.stores.log.committed())),
             "sources": sorted(self._stores),
             "drop_old_table": self.drop_old_table,
             "force_new_table": self.force_new_table,
@@ -1608,22 +1594,25 @@ class MVApp:
             return self._mv.inner._store_sets() + self._mv.outer._store_sets()
         return [self.stores]
 
+    def _all_stores(self) -> list[KeyedParquetStore]:
+        return [store for stores in self._store_sets() for store in stores.all]
+
     def compact(self) -> "MVApp":
         """Rewrite every store's current state into a single fresh
         version (bounds manifest/bucket fragmentation on long-lived
         views); reads see the same data before and after."""
-        for stores in self._store_sets():
-            for store in stores.all:
-                store.compact()
+        for store in self._all_stores():
+            store.compact()
         return self
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop unreferenced version directories older than the last
-        ``keep_last`` (the time-travel window shrinks accordingly)."""
+        ``keep_last`` (the time-travel window shrinks accordingly), and
+        compact the view's batch log the same way."""
         removed: list[str] = []
-        for stores in self._store_sets():
-            for store in stores.all:
-                removed += store.vacuum(keep_last)
+        for store in self._all_stores():
+            removed += store.vacuum(keep_last)
+        self.stores.log.compact(keep_last)
         return removed
 
     def _target_committed(self) -> bool:
@@ -1691,11 +1680,14 @@ class MVApp:
         # lifecycle step 3 (TiJDBCHelper.java:111-140).
         if self._ddl_hook is not None:
             self._ddl_hook(self.ddl)
-        if self.maintenance_mode == "recompute":
-            for name, store in self._stores.items():
-                if not store.committed_batches():
+
+        def step():
+            if self.maintenance_mode == "recompute":
+                for name, store in self._stores.items():
                     store.bootstrap(self._source_frames[name][1], batch_id="src-init")
-        self._mv.bootstrap(batch_id)
+            self._mv.bootstrap(batch_id)
+
+        run_batch(self.stores.log, self._all_stores(), batch_id, step, refresh=False)
         return self
 
     def maintained_tables(self) -> set[str]:
@@ -1712,7 +1704,10 @@ class MVApp:
                 f"{self.maintenance_strategy} maintains only "
                 f"{sorted(self._route.tables)}; got changes for {sorted(unknown)}"
             )
-        return self._route.feed(self._mv, changes, batch_id)
+        return run_batch(
+            self.stores.log, self._all_stores(), batch_id,
+            lambda: self._route.feed(self._mv, changes, batch_id), refresh=True,
+        )
 
     def start_streaming(
         self,

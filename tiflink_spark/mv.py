@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import contextvars
 import functools
+import inspect
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +54,7 @@ from tiflink_spark.incremental import (
     present_measures,
 )
 from tiflink_spark.session import JOB, JobSettings, maintenance_session
-from tiflink_spark.store import KeyedParquetStore, StoreSet
+from tiflink_spark.store import KeyedParquetStore, StoreSet, run_batch
 
 
 # Target rows per maintenance task. Once a batch's true change-row count
@@ -139,18 +140,30 @@ def _maintenance(fn):
     running job's settings under its own token, so an inner re-tune
     ends with the inner call. Nested routes open their stores in their
     view's StoreSet, so the outer job's choice already counts their
-    source-scale stores."""
+    source-scale stores.
+
+    The call runs as one batch of the route's view (store.run_batch,
+    with the wrapped method's ``batch_id``): called directly, a route
+    keeps exactly-once through its StoreSet's batch log; under
+    MVApp, or nested in another route, it only runs its step."""
 
     refresh = fn.__name__ == "refresh"
+    sig = inspect.signature(fn)
 
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
-        job = JOB.get()
-        token = JOB.set(job if job is not None else _job_settings(self, refresh))
-        try:
-            return fn(self, *args, **kwargs)
-        finally:
-            JOB.reset(token)
+        def step():
+            job = JOB.get()
+            token = JOB.set(job if job is not None else _job_settings(self, refresh))
+            try:
+                return fn(self, *args, **kwargs)
+            finally:
+                JOB.reset(token)
+
+        batch_id = sig.bind(self, *args, **kwargs).arguments.get(
+            "batch_id", sig.parameters["batch_id"].default
+        )
+        return run_batch(self.stores.log, self.stores.all, batch_id, step, refresh)
 
     return wrapper
 
@@ -203,9 +216,14 @@ class RecomputeMV:
         # the temp views land there — resolve the query on the same
         # session (the user session's views still hold the BOOTSTRAP
         # inputs, not current store state).
+        # The coalesce cannot raise the partition count, so it changes
+        # nothing but the plan: it is an optimizer barrier. While a
+        # store holds a delta chain its read is a union, and Spark 4.1's
+        # PushProjectionThroughUnion fails on a union under a
+        # select-list correlated subquery ("key not found").
         ms = maintenance_session(self.spark)
         for name, store in self.sources.items():
-            store.read().createOrReplaceTempView(name)
+            store.read().coalesce(1 << 30).createOrReplaceTempView(name)
         return ms.sql(self.query)
 
     def _bag_counts(self, result: DataFrame) -> DataFrame:
@@ -298,12 +316,9 @@ class RecomputeMV:
         """Apply one changelog micro-batch (table → upsert changelog).
 
         Ordering: source stores merge first, then the MV diff runs on
-        the *committed* source state; every store is idempotent by
-        batch_id, so a crash anywhere replays to the same result.
+        the *committed* source state.
         """
         assert self.target is not None, "bootstrap() first"
-        if batch_id in self.target.committed_batches():
-            return False
         for name, delta in changes.items():
             self.sources[name].merge(delta, batch_id)
         old = self.target.read()
@@ -432,8 +447,6 @@ class IncrementalJoinMV:
         right_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         dirty = [
             d
             for d in (
@@ -569,8 +582,6 @@ class IncrementalThetaJoinMV:
         right_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         if left_changes is None and right_changes is None:
             return False
         lpk, rpk = self.left_store.pk, self.right_store.pk
@@ -767,8 +778,6 @@ class IncrementalFullOuterJoinMV:
         dim_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         if fact_changes is None and dim_changes is None:
             return False
         fpk, ks, fks = self.fact_pk, self.dim_keys, self.fact_fks
@@ -1043,8 +1052,6 @@ class IncrementalSemiJoinMV:
         other_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         if fact_changes is None and other_changes is None:
             return False
         if fact_changes is not None and self.where is not None:
@@ -1451,8 +1458,6 @@ class IncrementalCorrSemiJoinMV:
         other_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         if fact_changes is None and other_changes is None:
             return False
         if fact_changes is not None and self.where is not None:
@@ -1824,8 +1829,6 @@ class IncrementalCorrScalarAggMV:
         dim_changes: DataFrame | None,
         batch_id,
     ) -> bool:
-        if batch_id in self.target.committed_batches():
-            return False
         if fact_changes is None and dim_changes is None:
             return False
         dirty_vals = (
@@ -1994,7 +1997,7 @@ class IncrementalTopKMV:
 
     @_maintenance
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
-        if changes is None or batch_id in self.target.committed_batches():
+        if changes is None:
             return False
         self.fact_store.merge(changes, batch_id)
         mat = self.fact_store.batch_delta(batch_id)
@@ -2272,7 +2275,7 @@ class IncrementalWindowMV:
 
     @_maintenance
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
-        if changes is None or batch_id in self.target.committed_batches():
+        if changes is None:
             return False
         self.fact_store.merge(changes, batch_id)
         mat = self.fact_store.batch_delta(batch_id)
@@ -2370,7 +2373,7 @@ class IncrementalGlobalTopKMV:
 
     @_maintenance
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
-        if changes is None or batch_id in self.target.committed_batches():
+        if changes is None:
             return False
         changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
         old_top = self.target.read()
@@ -2469,8 +2472,6 @@ class IncrementalUnionMV:
     @_maintenance
     def refresh(self, changes: dict[str, DataFrame], batch_id) -> bool:
         changes = {k: v for k, v in changes.items() if v is not None}
-        if batch_id in self.target.committed_batches():
-            return False
         unknown = set(changes) - set(self.branches)
         if unknown:
             raise ValueError(f"unknown tables in changes: {sorted(unknown)}")
@@ -2541,8 +2542,6 @@ class IncrementalProjectionMV:
     @_maintenance
     def refresh(self, changes: DataFrame, batch_id) -> bool:
         if changes is None:
-            return False
-        if batch_id in self.target.committed_batches():
             return False
         self.target.merge(self._project(changes), batch_id)
         return True
@@ -2715,8 +2714,6 @@ class IncrementalSetOpMV:
         changelog in the side's SOURCE schema (projected to the shared
         tuple schema internally)."""
         changes = {k: v for k, v in changes.items() if v is not None}
-        if batch_id in self.target.committed_batches():
-            return False
         if not changes:
             return False
         unknown = set(changes) - set(self._name_to_tag)
@@ -2793,10 +2790,10 @@ class IncrementalSetOpMV:
 class _SetOpBagCascadeTarget:
     """IncrementalSetOpMV's multiplicity-keyed target presented as a
     per-copy CDC source — the store-shaped façade CascadeMV drives
-    (committed_batches / version_before_batch / current_version /
-    changes_between / pk). The real store keys (tuple → __mult); the
-    façade advertises (tuple, __copy) and converts each tuple's
-    multiplicity transition m0→m1 into tail-index copy changelogs:
+    (current_version / changes_between / pk). The real store keys
+    (tuple → __mult); the façade advertises (tuple, __copy) and
+    converts each tuple's multiplicity transition m0→m1 into
+    tail-index copy changelogs:
     +I for copies m0+1..m1, -D for copies m1+1..m0 — matching the
     deterministic 1..mult numbering cascade_relation bootstrapped."""
 
@@ -2809,12 +2806,6 @@ class _SetOpBagCascadeTarget:
 
     def current_version(self):
         return self._mv.target.current_version()
-
-    def committed_batches(self):
-        return self._mv.target.committed_batches()
-
-    def version_before_batch(self, batch_id):
-        return self._mv.target.version_before_batch(batch_id)
 
     def changes_between(self, v_from, v_to) -> DataFrame:
         from tiflink_spark.store import changes_between as _cb
@@ -3119,13 +3110,10 @@ class IncrementalJoinAggMV:
     def refresh(self, changes: dict[str, DataFrame], batch_id) -> bool:
         """One micro-batch of changelogs on any subset of tables →
         J-changelog → inner aggregate refresh. Source merges commit
-        first (idempotent by batch_id); the J-changelog is derived from
-        the post-batch states, and old-row retraction happens inside
-        the inner MV against its own versioned J store — so a crash
-        anywhere replays to the same result."""
+        first; the J-changelog is derived from the post-batch states,
+        and old-row retraction happens inside the inner MV against its
+        own versioned J store."""
         changes = {k: v for k, v in changes.items() if v is not None}
-        if batch_id in self.target.committed_batches():
-            return False
         unknown = set(changes) - {self.fact_name, *self._by_name}
         if unknown:
             raise ValueError(f"unknown tables in changes: {sorted(unknown)}")
@@ -3566,7 +3554,7 @@ class IncrementalTemporalJoinMV:
 
     def _hist_changes(self, dim_changes: DataFrame, batch_id) -> DataFrame:
         """History maintenance rows for one dim changelog batch, derived
-        from the PRE-batch history (version_before_batch on replay)."""
+        from the PRE-batch history."""
         from pyspark.sql import Window
 
         pre = self.hist_store.read_before(batch_id)
@@ -3652,8 +3640,7 @@ class IncrementalTemporalJoinMV:
         Batch events at a time an existing version already occupies
         REPLACE it (the in-order path's zero-width-interval close has
         the same lookup semantics); a delete event closes the previous
-        interval and opens nothing. Derived from the PRE-batch history
-        (version_before_batch) so crash replay is exact."""
+        interval and opens nothing. Derived from the PRE-batch history."""
         from pyspark.sql import Window
 
         pre = self.hist_store.read_before(batch_id)
@@ -3749,8 +3736,6 @@ class IncrementalTemporalJoinMV:
     @_maintenance
     def refresh(self, changes: dict[str, DataFrame], batch_id) -> bool:
         changes = {k: v for k, v in changes.items() if v is not None}
-        if batch_id in self.target.committed_batches():
-            return False
         unknown = set(changes) - {self.fact_name, self.dim_name}
         if unknown:
             raise ValueError(f"unknown tables in changes: {sorted(unknown)}")
@@ -3878,10 +3863,9 @@ class IncrementalGroupingSetsMV:
     (the reference gets these by delegation, TiFlinkApp.java:270). One
     :class:`IncrementalAggMV` per grouping set (the empty set runs as
     the keep-alive global aggregate), all sharing ONE fact store:
-    KeyedParquetStore's batch-id idempotence makes the first sub-MV's
-    fact merge the real one and every later sub's a no-op that reads
-    the pre-batch snapshot for retraction — the crash-replay guard
-    doubling as the share guard.
+    the route merges the batch into it once, and each sub-MV's own fact
+    merge is then a no-op (KeyedParquetStore's batch-id idempotence)
+    that reads the pre-batch snapshot for retraction.
 
     Per-batch work = |sets| × (batch-size state merge) — the identical
     multiplier Spark's own Expand applies to a batch GROUPING SETS
@@ -4154,13 +4138,9 @@ class IncrementalGroupingSetsMV:
 class _GroupingSetsCascadeTarget:
     """The grouping-sets MV's per-set target stores presented as ONE
     versioned CDC source keyed by the synthetic row identity — the
-    store-shaped façade CascadeMV drives (committed_batches /
-    version_before_batch / current_version / changes_between). A
-    composite "version" is the tuple of per-set store versions; the
-    per-sub replay logic mirrors the store's own crash semantics: a
-    batch that committed in SOME subs before a crash diffs those subs
-    from their pre-batch version and the rest from current, so the
-    recovered delta is exactly the batch's effect everywhere."""
+    store-shaped façade CascadeMV drives (current_version /
+    changes_between / pk). A composite "version" is the tuple of
+    per-set store versions."""
 
     def __init__(self, mv: IncrementalGroupingSetsMV):
         self._mv = mv
@@ -4171,24 +4151,6 @@ class _GroupingSetsCascadeTarget:
 
     def current_version(self):
         return tuple(sub.target.current_version() for sub in self._mv.subs)
-
-    def pre_batch_version(self, batch_id):
-        """Crash-aware diff baseline for one batch: (composite version,
-        fully_committed). Per sub: the pre-batch version if this batch
-        already committed there (crash replay), else the current
-        version (the inner refresh will apply the batch next). Diffing
-        each sub from this baseline to post-refresh current yields
-        exactly the batch's effect — never double-applied, never
-        dropped — whichever sub the crash interrupted."""
-        fully = True
-        vs = []
-        for sub in self._mv.subs:
-            if batch_id in sub.target.committed_batches():
-                vs.append(sub.target.version_before_batch(batch_id))
-            else:
-                fully = False
-                vs.append(sub.target.current_version())
-        return tuple(vs), fully
 
     def changes_between(self, v_from, v_to) -> DataFrame:
         from tiflink_spark.store import changes_between as _cb
@@ -4377,16 +4339,6 @@ class IncrementalAggMV:
         relation, for non-invertible dirty-group recompute); no fact
         store is written or read here, and ``fact_changes`` executes
         exactly once, inside the state merge's delta write."""
-        # A batch is done when EVERY store it writes has committed it
-        # (state commits before target below, so a crash can leave the
-        # state committed and the target not; each leg is idempotent
-        # and the version_before_batch guards + the state-delta re-bind
-        # make the replay exact).
-        if batch_id in self.target.committed_batches() and (
-            fact_changes is None
-            or batch_id in self.state_store.committed_batches()
-        ):
-            return False
         parts: list[DataFrame] = []
         from concurrent.futures import ThreadPoolExecutor
 
@@ -4396,25 +4348,22 @@ class IncrementalAggMV:
         state_pool = state_future = None
         if fact_changes is not None:
             # Merge first, then read the retraction snapshot FROM BEFORE
-            # this batch's commit (versioned time travel — correct on
-            # crash replay too). Merging first lets the lookup use the
-            # commit's recorded batch_buckets: the old rows of the
-            # changed keys live only in the buckets those keys hash
-            # into, so the lookup scans O(touched buckets), not the
-            # table — at scale the difference between a bounded probe
-            # and a full-store scan per refresh. The merge runs in a
-            # worker thread; the state-store replay check + old-state
-            # read construction — independent of the fact store —
-            # overlap it instead of queueing behind it.
+            # this batch's commit (versioned time travel — correct also
+            # when a shared fact store merged it already). Merging first
+            # lets the lookup use the commit's recorded batch_buckets:
+            # the old rows of the changed keys live only in the buckets
+            # those keys hash into, so the lookup scans O(touched
+            # buckets), not the table — at scale the difference between
+            # a bounded probe and a full-store scan per refresh. The
+            # merge runs in a worker thread; the old-state read
+            # construction — independent of the fact store — overlaps
+            # it instead of queueing behind it.
             if self.fact_store is not None:
                 with ThreadPoolExecutor(max_workers=1) as fact_pool:
                     fact_merge_future = fact_pool.submit(
                         contextvars.copy_context().run,
                         self.fact_store.merge, fact_changes, batch_id,
                     )
-                    # crash between state commit and target commit:
-                    # diff against the PRE-batch state or the delta
-                    # would be applied twice.
                     old_state = self.state_store.read_before(batch_id)
                     fact_merge_future.result()
                 # Re-bind to the merge's materialized delta: the raw
@@ -4539,10 +4488,7 @@ class IncrementalAggMV:
             # point and everything downstream re-binds to the merged
             # micro-batch parquet. (An eager localCheckpoint variant
             # of the overlap was measured and rejected in r8: the
-            # checkpoint itself cost ~40% of refresh latency.) Crash
-            # replay is exact in BOTH orders — each leg is idempotent
-            # by batch_id and the top-of-method check requires every
-            # involved store to have committed.
+            # checkpoint itself cost ~40% of refresh latency.)
             concurrent = (
                 dim_changes is None
                 and self.fact_store is not None

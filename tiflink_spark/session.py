@@ -115,6 +115,11 @@ def rehome(df: DataFrame, spark: SparkSession) -> DataFrame:
     job's maintenance session whichever session built its lineage (the
     user's changelog, or an earlier setting of the same batch), and how
     MV reads handed back to the user run under theirs.
+    The ANALYZED plan is re-bound: re-analyzing the parsed plan would
+    resolve a SQL text's table names against the other session's temp
+    views (a maintenance clone holds the user's views as they were when
+    it was cloned, plus the recompute route's store views), so a
+    ``spark.sql`` frame could read another view's data.
     Falls back to the original frame if the classic Dataset bridge is
     unavailable (plan semantics are identical either way; only the
     governing conf differs)."""
@@ -122,7 +127,7 @@ def rehome(df: DataFrame, spark: SparkSession) -> DataFrame:
         return df
     try:
         jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, df._jdf.queryExecution().logical()
+            spark._jsparkSession, df._jdf.queryExecution().analyzed()
         )
         return DataFrame(jdf, spark)
     except Exception:

@@ -5,15 +5,16 @@ The reference commits each checkpoint's upserts to TiKV with Percolator
 order (FlinkTikvProducer.java:96-198, GrpcService.java:110-121). On
 Spark those guarantees are reproduced with storage-level mechanisms:
 
-- **version manifest** (``_mv_commits``, JSON lines): each committed
-  batch appends one line carrying the complete bucket→file mapping.
-  The append IS the commit point (analog of committing the primary key
-  in 2PC); data files written before a crash are invisible until their
-  manifest line lands, and a retried batch simply overwrites them.
-- **idempotent publish**: a batch_id found in the manifest is a no-op,
-  so Structured Streaming's redelivery-after-restart converges
-  (reference analog: roll-forward of PREWRITE transactions,
-  FlinkTikvProducer.java:211-230).
+- **version manifest** (``_mv_commits``, JSON lines): each batch a
+  store merges appends one line carrying the complete bucket→file
+  mapping; data files are invisible until their line lands. The append
+  is NOT the view's commit point: that is the view's batch log
+  (``_mv_batches``, :func:`run_batch`), one transaction per checkpoint
+  committed in order like the reference's (GrpcService.java:87-135).
+- **idempotent publish**: a batch_id found in a store's manifest is a
+  no-op, so a store fed straight from a stream (the ``keyed``
+  connector) converges under redelivery (reference analog: roll-forward
+  of PREWRITE transactions, FlinkTikvProducer.java:211-230).
 - **hash-bucketed layout**: rows live in ``num_buckets`` PK-hash
   buckets. A MERGE only rewrites buckets containing changed keys, so
   per-batch write work scales with the touched key range, not the
@@ -44,6 +45,7 @@ from tiflink_spark.changelog import (
 from tiflink_spark.session import maintenance_session, rehome
 
 COMMITS_FILE = "_mv_commits"
+BATCHES_FILE = "_mv_batches"
 BUCKET_COL = "__bucket"
 # Chain-position column written INTO each delta parquet at merge time
 # (the commit version as a literal). Chain reconciliation orders by it;
@@ -71,15 +73,19 @@ HWM_TYPE = "hwm"
 MAX_PENDING_DELTAS = 4
 
 
+def _int_id(batch_id) -> bool:
+    return isinstance(batch_id, int) and not isinstance(batch_id, bool)
+
+
 class _CommittedBatches(set):
-    """The store's idempotence set. Explicit batch ids from manifest
-    lines, plus a compacted integer high-water mark: after a manifest
+    """A batch log's idempotence set. Explicit batch ids from its
+    lines, plus a compacted integer high-water mark: after a log
     truncation, every integer batch_id <= ``int_hwm`` is committed by
-    definition (the engine commits one manifest line per processed
-    batch, and Structured Streaming batch ids are monotone, so the
-    truncated prefix is exactly {0..hwm} minus nothing). Non-integer
-    batch ids (compaction markers, ad-hoc writes) are carried
-    explicitly — they are O(maintenance events), not O(batches)."""
+    definition (one line is written per processed batch, and Structured
+    Streaming batch ids are monotone, so the truncated prefix is
+    exactly {0..hwm} minus nothing). Non-integer batch ids (compaction
+    markers, ad-hoc writes) are carried explicitly — they are
+    O(maintenance events), not O(batches)."""
 
     def __init__(self, explicit: set, int_hwm: int | None):
         super().__init__(explicit)
@@ -88,12 +94,103 @@ class _CommittedBatches(set):
     def __contains__(self, item) -> bool:  # type: ignore[override]
         if set.__contains__(self, item):
             return True
-        return (
-            self.int_hwm is not None
-            and isinstance(item, int)
-            and not isinstance(item, bool)
-            and item <= self.int_hwm
-        )
+        return self.int_hwm is not None and _int_id(item) and item <= self.int_hwm
+
+
+class _BatchLines:
+    """A JSON-lines log with one line per batch: a store's commit
+    manifest (``_mv_commits``) or a view's batch log (``_mv_batches``).
+    Lines are appended; :meth:`compact` folds all but the tail into one
+    high-water-mark line, and every rewrite is atomic (temp file +
+    ``os.replace``)."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self._cache: tuple | None = None
+
+    def parse(self) -> tuple[list[dict], int | None, set]:
+        """(batch lines, integer-batch high-water mark, non-integer
+        batch ids truncated by past compactions).
+
+        Cached on the file's (mtime_ns, size): a refresh batch consults
+        a manifest many times (idempotence check, version lookup, batch
+        buckets, delta read-back) and re-parsing a long manifest per
+        call is measurable driver overhead at the reference's 1s
+        refresh cadence. Appends and rewrites both change the stat key,
+        so the cache can never serve a stale parse."""
+        lines: list[dict] = []
+        hwm: int | None = None
+        others: set = set()
+        try:
+            st = os.stat(self.path)
+        except OSError:
+            return lines, hwm, others
+        key = (st.st_mtime_ns, st.st_size)
+        if self._cache is not None and self._cache[0] == key:
+            return self._cache[1]
+        with open(self.path) as f:
+            raw = f.readlines()
+        for i, line in enumerate(raw):
+            if not line.strip():
+                continue
+            try:
+                rec = json.loads(line)
+            except json.JSONDecodeError:
+                # A TORN tail is expected: the background fold appends
+                # its (multi-KB) commit line from another thread while
+                # readers re-stat/re-parse — a reader can catch the
+                # write mid-flight. The pre-append file is a consistent
+                # snapshot, so ignore an unparseable LAST line (and
+                # don't cache: the completed write changes
+                # (mtime,size), forcing a clean re-parse). A torn line
+                # anywhere else is real corruption — raise.
+                if i == len(raw) - 1:
+                    return lines, hwm, others
+                raise
+            if rec.get("type") == HWM_TYPE:
+                h = rec.get("int_batch_hwm")
+                if h is not None:
+                    hwm = h if hwm is None else max(hwm, h)
+                others.update(rec.get("other_batches", []))
+            else:
+                lines.append(rec)
+        self._cache = (key, (lines, hwm, others))
+        return lines, hwm, others
+
+    def committed(self) -> _CommittedBatches:
+        lines, hwm, others = self.parse()
+        return _CommittedBatches({c["batch_id"] for c in lines} | others, hwm)
+
+    def append(self, rec: dict) -> None:
+        # Single append = atomic-enough commit point for one writer.
+        with open(self.path, "a") as f:
+            f.write(json.dumps(rec) + "\n")
+
+    def rewrite(self, lines: list[dict], hwm: int | None, others: set) -> None:
+        if hwm is not None or others:
+            hwm_line = {"type": HWM_TYPE, "int_batch_hwm": hwm, "ts": time.time()}
+            lines = [dict(hwm_line, other_batches=sorted(others, key=str)), *lines]
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            f.writelines(json.dumps(c) + "\n" for c in lines)
+        os.replace(tmp, self.path)
+        self._cache = None
+
+    def compact(self, keep_last: int) -> list[dict] | None:
+        """Truncate the log to its last ``keep_last`` lines, summarizing
+        the dropped prefix in one high-water-mark line (``int_batch_hwm``
+        = max integer batch id dropped; non-integer ids carried
+        explicitly), so every dropped id still reads as committed. The
+        kept lines, or None when there was nothing to drop."""
+        lines, hwm, others = self.parse()
+        if len(lines) <= keep_last:
+            return None
+        keep, dropped = lines[-keep_last:], lines[:-keep_last]
+        ids = [c["batch_id"] for c in dropped]
+        hwm = max([b for b in ids if _int_id(b)] + ([hwm] if hwm is not None else []), default=None)
+        self.rewrite(keep, hwm, others | {b for b in ids if not _int_id(b)})
+        return keep
+
 
 # Auto-sizing target: one bucket holds ~this many rows, so a touched-
 # bucket rewrite stays a bounded quantum of work as the table grows
@@ -117,6 +214,19 @@ def _bucket_expr(pk: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in pk]), F.lit(num_buckets))
 
 
+def _parquet_files(out_dir: str) -> list[str]:
+    """The parquet data files of a written Spark output directory,
+    partition subdirectories included. Listed explicitly: pyarrow's
+    dataset discovery skips underscore-prefixed paths, which would
+    silently drop every ``__bucket=N`` partition dir."""
+    return [
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(out_dir)
+        for f in names
+        if f.endswith(".parquet") or (f.startswith("part-") and not f.endswith(".crc"))
+    ]
+
+
 def _delta_stats(out_dir: str) -> tuple[int, list[int], int]:
     """(row count, distinct bucket ids, file count) of a just-written
     delta file, read DRIVER-SIDE from the parquet footers/pages
@@ -125,11 +235,7 @@ def _delta_stats(out_dir: str) -> tuple[int, list[int], int]:
     milliseconds."""
     import pyarrow.dataset as pads
 
-    files = [
-        os.path.join(out_dir, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet") or (f.startswith("part-") and not f.endswith(".crc"))
-    ]
+    files = _parquet_files(out_dir)
     if not files:
         return 0, [], 0
     dataset = pads.dataset(files, format="parquet")
@@ -255,7 +361,7 @@ class KeyedParquetStore:
         self._spark = spark
         self.path = path
         self.pk = list(pk)
-        self._mcache: tuple | None = None
+        self._log = _BatchLines(os.path.join(path, COMMITS_FILE))
         # (session, version, chain) -> built DataFrame. Plans are
         # immutable and a refresh re-reads the same committed version
         # several times (old-state read, dim read, target diff);
@@ -290,81 +396,53 @@ class KeyedParquetStore:
 
     @property
     def _commits_path(self) -> str:
-        return os.path.join(self.path, COMMITS_FILE)
-
-    def _manifest_lines(self) -> tuple[list[dict], int | None, set]:
-        """Parse the manifest into (commit lines, integer-batch high-water
-        mark, non-integer batch ids truncated by past compactions).
-
-        Cached on the file's (mtime_ns, size): a refresh batch consults
-        the manifest many times (idempotence check, version lookup,
-        batch buckets, delta read-back) and re-parsing a long manifest
-        per call is measurable driver overhead at the reference's 1s
-        refresh cadence. Appends and the vacuum rewrite both change the
-        stat key, so the cache can never serve a stale parse."""
-        commits: list[dict] = []
-        hwm: int | None = None
-        others: set = set()
-        try:
-            st = os.stat(self._commits_path)
-        except OSError:
-            return commits, hwm, others
-        key = (st.st_mtime_ns, st.st_size)
-        if self._mcache is not None and self._mcache[0] == key:
-            return self._mcache[1]
-        with open(self._commits_path) as f:
-            lines = f.readlines()
-        for i, line in enumerate(lines):
-            if not line.strip():
-                continue
-            try:
-                rec = json.loads(line)
-            except json.JSONDecodeError:
-                # A TORN tail is expected: the background fold appends
-                # its (multi-KB) commit line from another thread while
-                # readers re-stat/re-parse — a reader can catch the
-                # write mid-flight. The pre-append manifest is a
-                # consistent snapshot, so ignore an unparseable LAST
-                # line (and don't cache: the completed write changes
-                # (mtime,size), forcing a clean re-parse). A torn line
-                # anywhere else is real corruption — raise.
-                if i == len(lines) - 1:
-                    return commits, hwm, others
-                raise
-            if rec.get("type") == HWM_TYPE:
-                h = rec.get("int_batch_hwm")
-                if h is not None:
-                    hwm = h if hwm is None else max(hwm, h)
-                others.update(rec.get("other_batches", []))
-            else:
-                commits.append(rec)
-        self._mcache = (key, (commits, hwm, others))
-        return commits, hwm, others
+        return self._log.path
 
     def _commits(self) -> list[dict]:
-        return self._manifest_lines()[0]
+        return self._log.parse()[0]
 
-    def _delta_schema_of(self, rel: str) -> str | None:
-        """Schema json recorded by the merge that wrote delta ``rel``
-        (None for legacy lines). Scans the cached manifest parse."""
+    def _commit_at(self, version: int | None) -> dict:
+        """The manifest line of committed ``version`` (None: the latest)."""
+        commits = self._commits()
+        if not commits:
+            raise FileNotFoundError(f"store at {self.path} has no committed version")
+        if version is None:
+            return commits[-1]
+        matches = [c for c in commits if c["version"] == version]
+        if not matches:
+            raise KeyError(f"version {version} not in manifest")
+        return matches[-1]
+
+    def _batch_stats(self, batch_id) -> dict:
+        """The merge stats recorded by ``batch_id``'s line ({} for a
+        line without them, or when the batch has no line here)."""
+        for c in reversed(self._commits()):
+            if c["batch_id"] == batch_id:
+                return c.get("stats") or {}
+        return {}
+
+    def _delta_stats_of(self, rel: str) -> dict:
+        """The merge stats of the line that wrote delta ``rel`` ({} for
+        legacy lines): its pinned schema and change-row count."""
         for c in reversed(self._commits()):
             st = c.get("stats") or {}
             if st.get("delta_rel") == rel:
-                return st.get("delta_schema")
-        return None
+                return st
+        return {}
 
-    def _delta_rows_of(self, rel: str) -> int | None:
-        """Change-row count recorded for delta ``rel`` (None when the
-        commit line predates the stats format)."""
-        for c in reversed(self._commits()):
-            st = c.get("stats") or {}
-            if st.get("delta_rel") == rel:
-                return st.get("change_rows")
-        return None
+    def _batch_delta_dir(self, batch_id, max_rows: int | None = None) -> tuple[str, dict] | None:
+        """(directory, stats) of ``batch_id``'s delta parquet; None when
+        the batch wrote none, it was vacuumed, or it recorded more than
+        ``max_rows`` change rows."""
+        st = self._batch_stats(batch_id)
+        rel = st.get("delta_rel")
+        if not rel or (max_rows is not None and st.get("change_rows", 0) > max_rows):
+            return None
+        out = os.path.join(self.path, rel)
+        return (out, st) if os.path.isdir(out) else None
 
     def committed_batches(self) -> set:
-        commits, hwm, others = self._manifest_lines()
-        return _CommittedBatches({c["batch_id"] for c in commits} | others, hwm)
+        return self._log.committed()
 
     def current_version(self) -> int | None:
         commits = self._commits()
@@ -410,7 +488,7 @@ class KeyedParquetStore:
         # (recorded so the eventual fold rewrites exactly those). Every
         # commit line is a COMPLETE snapshot description — time travel
         # and crash replay read any line standalone.
-        line = json.dumps(
+        self._log.append(
             {
                 "batch_id": batch_id,
                 "version": version,
@@ -429,9 +507,6 @@ class KeyedParquetStore:
                 ),
             }
         )
-        # Single append = atomic-enough commit point for one writer.
-        with open(self._commits_path, "a") as f:
-            f.write(line + "\n")
 
     # -- read ---------------------------------------------------------------
 
@@ -442,16 +517,7 @@ class KeyedParquetStore:
         merge-on-read delta chain, the read reconciles base ∪ deltas
         (latest row per PK wins, deletes drop); a delta-free version is
         a plain bucket scan."""
-        commits = self._commits()
-        if not commits:
-            raise FileNotFoundError(f"store at {self.path} has no committed version")
-        if version is None:
-            commit = commits[-1]
-        else:
-            matches = [c for c in commits if c["version"] == version]
-            if not matches:
-                raise KeyError(f"version {version} not in manifest")
-            commit = matches[-1]
+        commit = self._commit_at(version)
         deltas = commit.get("deltas") or []
         ck = (self.spark, commit["version"], tuple(deltas))
         cached = self._read_cache.get(ck)
@@ -467,30 +533,22 @@ class KeyedParquetStore:
     def read_before(self, batch_id) -> DataFrame:
         """The state ``batch_id``'s changes apply to: the version
         committed just before it when the batch already committed here
-        (a crash replay, or a store another level merged first), the
-        current state otherwise."""
-        if batch_id in self.committed_batches():
-            return self.read(self.version_before_batch(batch_id))
-        return self.read()
+        (a store another level of the view merged first), the current
+        state otherwise."""
+        return self.read(self.version_before_batch(batch_id))
 
     def batch_buckets(self, batch_id) -> list[int] | None:
         """The buckets ``batch_id``'s change rows hash into, recorded at
         merge time — None when unknown (legacy line, bootstrap, or a
         batch outside the manifest window). The pruning handle for
         :meth:`read_buckets` retraction lookups."""
-        for c in reversed(self._commits()):
-            if c["batch_id"] == batch_id:
-                return (c.get("stats") or {}).get("batch_buckets")
-        return None
+        return self._batch_stats(batch_id).get("batch_buckets")
 
     def batch_change_rows(self, batch_id) -> int | None:
         """Change-row count of ``batch_id``'s merge (from the commit
         stats) — the driver-side handle maintenance uses to size the
         rest of the batch's shuffles to the actual delta volume."""
-        for c in reversed(self._commits()):
-            if c["batch_id"] == batch_id:
-                return (c.get("stats") or {}).get("change_rows")
-        return None
+        return self._batch_stats(batch_id).get("change_rows")
 
     def batch_delta(self, batch_id) -> DataFrame | None:
         """The materialized change rows of ``batch_id``'s merge — the
@@ -503,26 +561,21 @@ class KeyedParquetStore:
         a micro-batch-sized parquet. None when unavailable (bootstrap,
         empty batch, legacy manifest line, or the file was vacuumed) —
         callers fall back to the original changes lineage."""
-        for c in reversed(self._commits()):
-            if c["batch_id"] == batch_id:
-                rel = (c.get("stats") or {}).get("delta_rel")
-                if not rel:
-                    return None
-                out = os.path.join(self.path, rel)
-                if not os.path.isdir(out):
-                    return None
-                # Schema pinned from the merge-time record (the change
-                # lineage's own schema, captured for free): skipping
-                # footer inference saves a driver-side job per read-back
-                # — a refresh re-binds to the delta two or three times.
-                sj = (c.get("stats") or {}).get("delta_schema")
-                reader = self.spark.read
-                if sj:
-                    from pyspark.sql.types import StructType
+        found = self._batch_delta_dir(batch_id)
+        if found is None:
+            return None
+        out, st = found
+        # Schema pinned from the merge-time record (the change lineage's
+        # own schema, captured for free): skipping footer inference
+        # saves a driver-side job per read-back — a refresh re-binds to
+        # the delta two or three times.
+        sj = st.get("delta_schema")
+        reader = self.spark.read
+        if sj:
+            from pyspark.sql.types import StructType
 
-                    reader = reader.schema(StructType.fromJson(json.loads(sj)))
-                return reader.parquet(out).drop(BUCKET_COL, CHAIN_COL)
-        return None
+            reader = reader.schema(StructType.fromJson(json.loads(sj)))
+        return reader.parquet(out).drop(BUCKET_COL, CHAIN_COL)
 
     def batch_key_values(self, batch_id, max_values: int = 200_000):
         """The distinct first-PK-column values of ``batch_id``'s change
@@ -544,41 +597,23 @@ class KeyedParquetStore:
         ``max_values``."""
         import pyarrow.dataset as pads
 
-        for c in reversed(self._commits()):
-            if c["batch_id"] == batch_id:
-                rel = (c.get("stats") or {}).get("delta_rel")
-                if not rel:
-                    return None
-                if (c.get("stats") or {}).get("change_rows", 0) > max_values:
-                    return None
-                out = os.path.join(self.path, rel)
-                if not os.path.isdir(out):
-                    return None
-                files = [
-                    os.path.join(out, f)
-                    for f in os.listdir(out)
-                    if f.endswith(".parquet")
-                    or (f.startswith("part-") and not f.endswith(".crc"))
-                ]
-                if not files:
-                    return None
-                vals = set()
-                try:
-                    for batch in pads.dataset(files, format="parquet").to_batches(
-                        columns=[col]
-                    ):
-                        vals.update(batch.column(0).to_pylist())
-                except Exception:
-                    # absent column (pyarrow raises its own error
-                    # types), unreadable file — the contract is "None
-                    # when unavailable"; callers fall back to the
-                    # unpruned read
-                    return None
-                vals.discard(None)
-                if len(vals) > max_values:
-                    return None
-                return sorted(vals)
-        return None
+        found = self._batch_delta_dir(batch_id, max_rows=max_values)
+        files = _parquet_files(found[0]) if found is not None else []
+        if not files:
+            return None
+        vals = set()
+        try:
+            for batch in pads.dataset(files, format="parquet").to_batches(columns=[col]):
+                vals.update(batch.column(0).to_pylist())
+        except Exception:
+            # absent column (pyarrow raises its own error types),
+            # unreadable file — the contract is "None when
+            # unavailable"; callers fall back to the unpruned read
+            return None
+        vals.discard(None)
+        if len(vals) > max_values:
+            return None
+        return sorted(vals)
 
     def read_keys(self, col: str, vals: list, version: int | None = None) -> DataFrame:
         """Current state restricted to ``col IN (vals)`` — the filter
@@ -590,16 +625,7 @@ class KeyedParquetStore:
         not O(δ). Correct as a plain filter only for ``col`` = the
         single PK column (rows outside vals cannot match the caller's
         join anyway — callers join exactly afterwards)."""
-        commits = self._commits()
-        if not commits:
-            raise FileNotFoundError(f"store at {self.path} has no committed version")
-        if version is None:
-            commit = commits[-1]
-        else:
-            matches = [c for c in commits if c["version"] == version]
-            if not matches:
-                raise KeyError(f"version {version} not in manifest")
-            commit = matches[-1]
+        commit = self._commit_at(version)
         base = self._read_base(commit).filter(_in_filter(col, vals))
         deltas = commit.get("deltas") or []
         if not deltas:
@@ -626,16 +652,7 @@ class KeyedParquetStore:
         into every bucket (hash-spread churn wider than the bucket
         count otherwise reads the whole table). Callers must still
         join exactly (the filter is a superset by first PK column)."""
-        commits = self._commits()
-        if not commits:
-            raise FileNotFoundError(f"store at {self.path} has no committed version")
-        if version is None:
-            commit = commits[-1]
-        else:
-            matches = [c for c in commits if c["version"] == version]
-            if not matches:
-                raise KeyError(f"version {version} not in manifest")
-            commit = matches[-1]
+        commit = self._commit_at(version)
         ids = {str(int(b)) for b in bucket_ids}
         paths = sorted(
             os.path.join(self.path, rel)
@@ -716,7 +733,8 @@ class KeyedParquetStore:
         # every chain member recorded the SAME one — no footer job;
         # heterogeneous or legacy chains fall back to inference.
         reader = self.spark.read
-        sjs = {self._delta_schema_of(rel) for rel in deltas}
+        stats = [self._delta_stats_of(rel) for rel in deltas]
+        sjs = {st.get("delta_schema") for st in stats}
         uniform = len(sjs) == 1 and None not in sjs
         if uniform:
             from pyspark.sql.types import StructType
@@ -775,7 +793,7 @@ class KeyedParquetStore:
         # the same pathology MAX_IN_LIST guards against. The broadcast
         # job is cheaper than literal-laden plans.)
         keys = last.select(*self.pk).distinct()
-        counts = [self._delta_rows_of(rel) for rel in deltas]
+        counts = [st.get("change_rows") for st in stats]
         bounded = all(c is not None for c in counts) and sum(counts) <= BROADCAST_KEYS_MAX
         if bounded:
             keys = F.broadcast(keys)
@@ -806,30 +824,25 @@ class KeyedParquetStore:
         return version
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
-        """Delete version data directories referenced only by manifest
-        entries older than the last ``keep_last`` versions, and compact
-        the manifest itself to the same tail window.
+        """Compact the manifest to its last ``keep_last`` versions, then
+        delete the version data directories only dropped lines
+        referenced.
 
         Without compaction the manifest grows one JSON line per batch
         and is re-read driver-side on every store open — at the
         reference's 1s refresh cadence (TiFlinkExample.java:22-23)
         that is ~86k lines/day/store. Truncation preserves batch-id
-        idempotence exactly: the truncated prefix is summarized by a
-        high-water-mark line (``int_batch_hwm`` = max integer batch id
-        dropped; non-integer ids carried explicitly), and
-        :meth:`committed_batches` treats any integer id <= hwm as
-        committed — sound because the engine commits one manifest line
-        per processed batch (empty deltas included) and streaming batch
-        ids are monotone, so the dropped prefix contains every id below
-        the mark. The rewrite is atomic (temp file + ``os.replace``)."""
+        idempotence exactly (:meth:`_BatchLines.compact`):
+        :meth:`committed_batches` treats any integer id <= the dropped
+        prefix's high-water mark as committed — sound because the
+        engine commits one manifest line per processed batch (empty
+        deltas included) and streaming batch ids are monotone."""
         import shutil
 
         self._await_fold()
-        commits, prior_hwm, prior_others = self._manifest_lines()
-        if len(commits) <= keep_last:
+        keep = self._log.compact(keep_last)
+        if keep is None:
             return []
-        keep = commits[-keep_last:]
-        dropped = commits[:-keep_last]
         live_dirs = {rel.split(f"/{BUCKET_COL}=")[0] for c in keep for rel in c["buckets"].values()}
         # kept versions' merge-on-read delta files are live data too
         live_dirs |= {rel for c in keep for rel in (c.get("deltas") or [])}
@@ -841,44 +854,17 @@ class KeyedParquetStore:
                 if rel not in live_dirs:
                     shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
                     removed.append(rel)
-
-        int_ids = [
-            c["batch_id"]
-            for c in dropped
-            if isinstance(c["batch_id"], int) and not isinstance(c["batch_id"], bool)
-        ]
-        hwm = max(int_ids + ([prior_hwm] if prior_hwm is not None else []), default=None)
-        others = prior_others | {
-            c["batch_id"]
-            for c in dropped
-            if not isinstance(c["batch_id"], int) or isinstance(c["batch_id"], bool)
-        }
-        tmp = self._commits_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "type": HWM_TYPE,
-                        "int_batch_hwm": hwm,
-                        "other_batches": sorted(others, key=str),
-                        "ts": time.time(),
-                    }
-                )
-                + "\n"
-            )
-            for c in keep:
-                f.write(json.dumps(c) + "\n")
-        os.replace(tmp, self._commits_path)
         return removed
 
     def version_before_batch(self, batch_id) -> int | None:
         """Version committed immediately before ``batch_id``'s commit —
-        the snapshot a replay of that batch must diff against. A batch
+        the snapshot a later reader of that batch diffs against — or the
+        current version when the batch has no line here. A batch
         swallowed by a past manifest compaction (committed per the
         high-water mark but its line truncated) raises loudly: its
-        pre-state was vacuumed with the manifest tail, so a replay-diff
+        pre-state was vacuumed with the manifest tail, so a diff
         against it would be silently wrong."""
-        commits, hwm, others = self._manifest_lines()
+        commits, hwm, others = self._log.parse()
         prev = None
         for c in commits:
             if c["batch_id"] == batch_id:
@@ -890,6 +876,27 @@ class KeyedParquetStore:
                 "its pre-state is no longer reconstructable"
             )
         return prev
+
+    def rollback(self, batch_id) -> None:
+        """Drop what an unfinished attempt at ``batch_id`` committed
+        here — its manifest line and every later one, which may only be
+        this store's own folds — so the batch reruns from the state
+        before it (see :func:`run_batch`). The rerun reuses the dropped
+        versions' ``data/v{n}`` paths, so the read cache is cleared."""
+        if all(c["batch_id"] != batch_id for c in self._commits()):
+            return
+        self._await_fold()  # the attempt's fold appends to the tail
+        commits, hwm, others = self._log.parse()
+        i = next(i for i, c in enumerate(commits) if c["batch_id"] == batch_id)
+        later = sorted({str(c["batch_id"]) for c in commits[i + 1:]})
+        if any(not b.startswith("__fold__") for b in later):
+            raise ValueError(
+                f"store {self.path}: batch {batch_id!r} is not in the view's batch log, "
+                f"but later batches {later} committed after it (a skipped unfinished "
+                "batch, or a view written before it had a batch log)"
+            )
+        self._log.rewrite(commits[:i], hwm, others)
+        self._read_cache.clear()
 
     # -- write --------------------------------------------------------------
 
@@ -934,21 +941,11 @@ class KeyedParquetStore:
 
     def _dir_rows(self, rel: str) -> int | None:
         """Total row count of a written version dir, read DRIVER-SIDE
-        from parquet footers (no Spark job — metadata only). Files are
-        collected explicitly: pyarrow's dataset discovery skips
-        underscore-prefixed paths, which would silently drop every
-        ``__bucket=N`` partition dir."""
+        from parquet footers (no Spark job — metadata only)."""
         try:
             import pyarrow.dataset as pads
 
-            files = []
-            for root, _dirs, names in os.walk(os.path.join(self.path, rel)):
-                files.extend(
-                    os.path.join(root, f)
-                    for f in names
-                    if f.endswith(".parquet")
-                    or (f.startswith("part-") and not f.endswith(".crc"))
-                )
+            files = _parquet_files(os.path.join(self.path, rel))
             if not files:
                 return 0
             return pads.dataset(files, format="parquet").count_rows()
@@ -1223,13 +1220,17 @@ class StoreSet:
     :attr:`all` leaves it out (its owner compacts it), while
     ``scale=True`` still lists it. A grouping set is offered the shared
     fact store; a cascade's outer route is offered the inner level's
-    target as its mirror of the derived table."""
+    target as its mirror of the derived table.
+
+    :attr:`log` is the view's batch log, ``root/_mv_batches``: a set
+    made by :meth:`under` shares its root's log (see :func:`run_batch`)."""
 
     def __init__(self, spark: SparkSession, root: str, num_buckets: int | None = None, offers=None):
         self._spark = spark
         self.root = root
         self.num_buckets = num_buckets
         self.offers = dict(offers or {})
+        self.log = _BatchLines(os.path.join(root, BATCHES_FILE))
         # path -> store; shared with every set made by under()
         self._all: dict[str, KeyedParquetStore] = {}
         self._scale: dict[str, object] = {}
@@ -1247,7 +1248,7 @@ class StoreSet:
 
     def under(self, name: str, offers=None) -> "StoreSet":
         sub = StoreSet(self._spark, os.path.join(self.root, name), self.num_buckets, offers)
-        sub._all, sub._scale = self._all, self._scale
+        sub._all, sub._scale, sub.log = self._all, self._scale, self.log
         return sub
 
     @property
@@ -1257,6 +1258,42 @@ class StoreSet:
     @property
     def scale(self) -> list:
         return list(self._scale.values())
+
+
+# True while a view's batch runs (run_batch): nested maintenance calls —
+# cascade levels, set-op sides, grouping-set subs, the join aggregate's
+# inner route, thread-pool work carrying the context — run only their step.
+_IN_BATCH: contextvars.ContextVar[bool] = contextvars.ContextVar(
+    "tiflink_in_batch", default=False
+)
+
+
+def run_batch(log: _BatchLines, stores: list[KeyedParquetStore], batch_id, step, refresh: bool):
+    """Run ``step`` as batch ``batch_id`` of one view, exactly once.
+
+    The view's batch log is its commit point: a batch is done exactly
+    when its id is in ``log`` (appended after ``step`` returns), and
+    such a refresh returns False. Any other refresh first rolls back
+    what a crashed attempt left in ``stores``, so ``step`` only ever
+    sees a first attempt. A bootstrap is never rolled back (its stores
+    no-op on their own manifests); an already-logged one, attaching to
+    an existing view, runs and logs nothing."""
+    if _IN_BATCH.get():
+        return step()
+    logged = batch_id in log.committed()
+    if refresh:
+        if logged:
+            return False
+        for store in stores:
+            store.rollback(batch_id)
+    token = _IN_BATCH.set(True)
+    try:
+        out = step()
+    finally:
+        _IN_BATCH.reset(token)
+    if not logged:
+        log.append({"batch_id": batch_id, "ts": time.time()})
+    return out
 
 
 def changes_between(
