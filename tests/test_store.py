@@ -34,8 +34,10 @@ def test_merge_and_time_travel(spark, store):
 def test_merge_idempotent_by_batch_id(spark, store):
     store.bootstrap(spark.createDataFrame([(1, "a")], "k int, v string"))
     c = _changes(spark, [(2, "b", OP_INSERT, 0)])
-    assert store.merge(c, batch_id=1) is True
-    assert store.merge(c, batch_id=1) is False  # replay: no-op
+    store.merge(c, batch_id=1)
+    v = store.current_version()
+    store.merge(c, batch_id=1)  # replay: no-op
+    assert store.current_version() == v == 1
     assert store.read().count() == 2
 
 
@@ -70,7 +72,7 @@ def test_changes_between_versions_roundtrip(spark, tmp_path):
     """store.changes_between(v1, v2) replayed onto the v1 state must
     reproduce v2 exactly — the MV-cascade edge contract."""
     from tiflink_spark.changelog import OP_COL, SEQ_COL, merge_changes
-    from tiflink_spark.store import KeyedParquetStore, changes_between
+    from tiflink_spark.store import KeyedParquetStore
 
     st = KeyedParquetStore(spark, str(tmp_path / "s"), ["k"], num_buckets=2)
     st.bootstrap(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string"))
@@ -84,13 +86,13 @@ def test_changes_between_versions_roundtrip(spark, tmp_path):
     )
     v2 = st.current_version()
 
-    diff = changes_between(st, v1, v2)
+    diff = st.changes_between(v1, v2)
     replayed = merge_changes(st.read(v1), diff, ["k"])
     assert {(r.k, r.v) for r in replayed.collect()} == {
         (r.k, r.v) for r in st.read(v2).collect()
     }
     # bootstrap-diff form: from_version=None yields an all-insert changelog
-    full = changes_between(st, None, v2)
+    full = st.changes_between(None, v2)
     assert {r[0] for r in full.select(OP_COL).distinct().collect()} == {"+I"}
 
 
@@ -144,8 +146,6 @@ def test_merge_on_read_delta_chain(spark, store):
     touched buckets and clearing the chain. Reads, time travel,
     changes_between, replay idempotence, and vacuum all reconcile the
     chain exactly."""
-    from tiflink_spark.store import changes_between
-
     store.bootstrap(
         spark.createDataFrame([(i, "x") for i in range(1, 101)], "k int, v string")
     )
@@ -168,7 +168,7 @@ def test_merge_on_read_delta_chain(spark, store):
     v2 = {r.k: r.v for r in store.read(2).collect()}
     assert v2[1] == "A" and v2[2] == "x" and v2[101] == "new" and len(v2) == 101
     # CDC diff across delta-carrying versions
-    ops = {r.k: r[OP_COL] for r in changes_between(store, 2, 4).collect()}
+    ops = {r.k: r[OP_COL] for r in store.changes_between(2, 4).collect()}
     assert ops.get(3) == OP_DELETE and ops.get(2) == OP_UPDATE
     # 5th merge trips the chain bound: the BATCH commits as a plain
     # delta (compaction never sits on a batch's latency) and schedules
@@ -184,7 +184,9 @@ def test_merge_on_read_delta_chain(spark, store):
     assert not last.get("deltas")
     assert {r.k: r.v for r in store.read().collect()}[4] == "D"
     # replay of the folded batch: no-op
-    assert store.merge(_changes(spark, [(4, "ZZ", OP_UPDATE, 0)]), batch_id=5) is False
+    v = store.current_version()
+    store.merge(_changes(spark, [(4, "ZZ", OP_UPDATE, 0)]), batch_id=5)
+    assert store.current_version() == v
     assert {r.k: r.v for r in store.read().collect()}[4] == "D"
     # vacuum keeps the live chain of retained versions
     store.merge(_changes(spark, [(5, "E", OP_UPDATE, 0)]), batch_id=6)
@@ -248,8 +250,6 @@ def test_batch_column_values_reads_fk_values(spark, store):
     )
     assert store.batch_column_values(1, "fk") == [3, 5]
     assert store.batch_column_values(1, "nope") is None
-    kv = store.batch_key_values(1)
-    assert kv == ("k", [1, 2])
 
 
 def _changes_fk(spark, rows):
@@ -259,3 +259,73 @@ def _changes_fk(spark, rows):
         [(k, fk, v, OP_UPDATE, i) for i, (k, fk, v) in enumerate(rows)],
         f"k int, fk int, v string, {OP_COL} string, {SEQ_COL} long",
     )
+
+
+def _rows(df):
+    return sorted((r.k, r.v) for r in df.collect())
+
+
+def test_merge_record_changes(spark, store):
+    """``merge`` hands back the batch: its recorded row count, and its
+    change rows read back from the delta the merge wrote — or the input
+    itself when the batch wrote none."""
+    store.bootstrap(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    c = _changes(spark, [(1, "A", OP_UPDATE, 0), (3, "c", OP_INSERT, 1)])
+    batch = store.merge(c, batch_id=1)
+    assert batch.rows == 2
+    assert sorted(batch.changes().columns) == sorted(c.columns)
+    assert sorted(tuple(r) for r in batch.changes().collect()) == sorted(
+        tuple(r) for r in c.collect()
+    )
+    empty = _changes(spark, [])
+    nothing = store.merge(empty, batch_id=2)
+    assert nothing.rows == 0
+    assert nothing.changes() is empty
+    assert nothing.displaced().count() == 0
+
+
+def test_merge_record_replay_on_a_shared_store(spark, store):
+    """A second merge of a committed batch — the next route sharing the
+    store — writes nothing and returns the first merge's rows."""
+    store.bootstrap(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    first = store.merge(_changes(spark, [(2, "B", OP_UPDATE, 0)]), batch_id=1)
+    v = store.current_version()
+    again = store.merge(_changes(spark, [(2, "other", OP_UPDATE, 0)]), batch_id=1)
+    assert store.current_version() == v
+    assert again.rows == first.rows == 1
+    assert _rows(again.changes()) == _rows(first.changes()) == [(2, "B")]
+    assert _rows(again.displaced()) == [(2, "b")]
+
+
+def test_merge_record_displaced(spark, store):
+    """``displaced`` is the pre-batch row of exactly each changed key:
+    read through a delta chain, after a fold, for a delete, and for an
+    update that moves a row's non-key value; a new key displaces
+    nothing."""
+    store.bootstrap(
+        spark.createDataFrame([(i, f"x{i}") for i in range(1, 21)], "k int, v string")
+    )
+    store.merge(_changes(spark, [(1, "A", OP_UPDATE, 0)]), batch_id=1)
+    store.merge(_changes(spark, [(2, "B", OP_UPDATE, 0), (21, "n", OP_INSERT, 1)]), batch_id=2)
+    # over the chain: batch 1's and 2's values, the base's for key 3
+    batch = store.merge(
+        _changes(
+            spark,
+            [(1, "A2", OP_UPDATE, 0), (21, None, OP_DELETE, 1), (3, "C", OP_UPDATE, 2),
+             (22, "new", OP_INSERT, 3)],
+        ),
+        batch_id=3,
+    )
+    assert _rows(batch.displaced()) == [(1, "A"), (3, "x3"), (21, "n")]
+    store.merge(_changes(spark, [(4, "D", OP_UPDATE, 0)]), batch_id=4)
+    store.merge(_changes(spark, [(5, "E", OP_UPDATE, 0)]), batch_id=5)
+    store._await_fold()
+    assert store.recent_commits(1)[0]["mode"] == "fold"
+    after = store.merge(
+        _changes(spark, [(1, "A3", OP_UPDATE, 0), (5, "E2", OP_UPDATE, 1)]), batch_id=6
+    )
+    assert _rows(after.displaced()) == [(1, "A2"), (5, "E")]
+    # a replay of the pre-fold batch still reads the state before it
+    assert _rows(store.merge(_changes(spark, []), batch_id=3).displaced()) == [
+        (1, "A"), (3, "x3"), (21, "n")
+    ]

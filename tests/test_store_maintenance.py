@@ -28,7 +28,8 @@ def test_compact_and_vacuum(spark, tmp_path):
     # state still fully readable after vacuum
     assert {(r.k, r.v) for r in store.read().collect()} == before
     # idempotence memory survives vacuum (manifest not pruned)
-    assert store.merge(_changes(spark, [(1, "zz", OP_UPDATE, 0)]), batch_id=3) is False
+    store.merge(_changes(spark, [(1, "zz", OP_UPDATE, 0)]), batch_id=3)
+    assert store.current_version() == v
 
 
 def test_grouping_sets_stores_reachable_by_maintenance(spark, tmp_path):
@@ -76,8 +77,10 @@ def test_vacuum_compacts_manifest_preserving_idempotence(spark, tmp_path):
         lines = [l for l in f if l.strip()]
     assert len(lines) == 3
     # every truncated batch id still refuses replay
+    v = store.current_version()
     for i in range(0, 6):
-        assert store.merge(_changes(spark, [(i, "zz", OP_UPDATE, 0)]), batch_id=i) is False
+        store.merge(_changes(spark, [(i, "zz", OP_UPDATE, 0)]), batch_id=i)
+        assert store.current_version() == v
     # state unchanged, num_buckets survives a fresh open
     assert {(r.k, r.v) for r in store.read().collect()} == before
     reopened = KeyedParquetStore(spark, str(tmp_path / "s"), ["k"])
@@ -115,8 +118,9 @@ def test_manifest_bounded_at_10k_batches(spark, tmp_path):
 
 
 def test_repeated_vacuum_merges_hwm_lines(spark, tmp_path):
-    """Successive vacuums fold prior hwm lines (and non-integer ids like
-    compaction markers) into one summary; idempotence survives all of it."""
+    """Successive vacuums fold prior hwm lines into one summary, and
+    drop compaction markers (nothing asks whether they committed);
+    idempotence survives all of it."""
     store = KeyedParquetStore(spark, str(tmp_path / "s"), ["k"], num_buckets=4)
     store.bootstrap(spark.createDataFrame([(i, "x") for i in range(10)], "k int, v string"))
     for i in range(1, 4):
@@ -129,7 +133,7 @@ def test_repeated_vacuum_merges_hwm_lines(spark, tmp_path):
     committed = store.committed_batches()
     for i in range(0, 7):
         assert i in committed
-    assert f"__compact__-{cv}" in committed  # non-int id carried explicitly
+    assert f"__compact__-{cv}" not in committed  # maintenance id dropped
     assert store.read().count() == 10
 
 
@@ -197,3 +201,80 @@ def test_apply_deltas_broadcast_gated_on_chain_size(spark, tmp_path, monkeypatch
     monkeypatch.undo()
     got = {(r.k, r.v) for r in store._apply_deltas(base, chain).collect()}
     assert got == {(i, "y" if i == 1 else "x") for i in range(10)}
+
+
+def test_compacted_logs_stay_constant_size(tmp_path):
+    """200 batches, a fold line after every 5th and a compaction every
+    10th: fold ids are dropped and streaming ids ``{table}-{epoch}``
+    summarize per table, so the summary line does not grow with the
+    batch count — and every dropped batch id still reads as
+    committed."""
+    import json as _json
+
+    from tiflink_spark.store import _BatchLines
+
+    store_log = _BatchLines(str(tmp_path / "_mv_commits"))
+    view_log = _BatchLines(str(tmp_path / "_mv_batches"))
+    sizes = []
+    for n in range(1, 201):
+        store_log.append({"batch_id": n, "version": n})
+        view_log.append({"batch_id": f"orders-{n}"})
+        if n % 5 == 0:
+            store_log.append({"batch_id": f"__fold__{n}", "version": n})
+        if n % 10 == 0:
+            store_log.compact(1, {"orders"})
+            view_log.compact(1, {"orders"})
+            firsts = []
+            for log in (store_log, view_log):
+                with open(log.path) as f:
+                    first = _json.loads(f.readline())
+                assert first["other_batches"] == []
+                firsts.append(len(_json.dumps({k: v for k, v in first.items() if k != "ts"})))
+            sizes.append(firsts)
+    assert len({tuple(s) for s in sizes[10:]}) == 1  # batches 110..200
+    assert all(n in store_log.committed() for n in range(1, 200))
+    assert all(f"orders-{n}" in view_log.committed() for n in range(1, 201))
+    assert "orders-201" not in view_log.committed()
+    # another table's ids, and string ids of no table, stay explicit
+    view_log.append({"batch_id": "other-1"})
+    view_log.append({"batch_id": "adhoc"})
+    view_log.append({"batch_id": "orders-201"})
+    view_log.compact(1, {"orders"})
+    with open(view_log.path) as f:
+        assert _json.loads(f.readline())["other_batches"] == ["adhoc", "other-1"]
+    assert all(b in view_log.committed() for b in ("other-1", "adhoc", "orders-200"))
+
+
+def test_app_vacuum_summarizes_streaming_ids(spark, tmp_path):
+    """MVApp.vacuum passes the view's source tables: streaming batch ids
+    compact into per-table high-water marks in the batch log and in
+    every store manifest, and a compacted id still replays as a no-op."""
+    import json as _json
+
+    from tiflink_spark.app import MVApp
+
+    fact = spark.createDataFrame([(i, i % 3) for i in range(10)], "k int, g int")
+    app = (
+        MVApp.builder(spark)
+        .source("f_vac", fact, pk=["k"])
+        .query("SELECT g, count(*) AS n FROM f_vac GROUP BY g")
+        .target(str(tmp_path / "mv"))
+        .num_buckets(2)
+        .build()
+        .bootstrap()
+    )
+    schema = f"k int, g int, {OP_COL} string, {SEQ_COL} long"
+    for n in range(3):
+        ch = spark.createDataFrame([(100 + n, n % 3, OP_INSERT, 0)], schema)
+        app.refresh({"f_vac": ch}, batch_id=f"f_vac-{n}")
+    app.vacuum(keep_last=1)
+    paths = [app.stores.log.path] + [st._commits_path for st in app._all_stores()]
+    for path in paths:
+        with open(path) as f:
+            first = _json.loads(f.readline())
+        assert first["table_hwms"] == {"f_vac": 1}, path
+        assert not any(str(b).startswith("f_vac-") for b in first["other_batches"]), path
+    before = sorted(app.read().collect())
+    ch = spark.createDataFrame([(999, 0, OP_INSERT, 0)], schema)
+    assert app.refresh({"f_vac": ch}, batch_id="f_vac-0") is False
+    assert sorted(app.read().collect()) == before

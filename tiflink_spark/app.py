@@ -55,6 +55,7 @@ from tiflink_spark.mv import (
     IncrementalUnionMV,
     IncrementalWindowMV,
     RecomputeMV,
+    Route,
     _job_settings,
 )
 from tiflink_spark.incremental import Measure
@@ -382,9 +383,10 @@ class _SharedMirrorStore:
 
     Reads delegate to the shared store, projected to the columns the
     outer was planned against (the inner target may hold hidden engine
-    columns); writes are no-ops. The inner level has always committed
-    the batch already, so every read of the pre-batch state goes
-    through ``read_before``/``read_changed_before``."""
+    columns); bootstrap is a no-op. The inner level has always
+    committed the batch already, so a merge is a replay: it writes
+    nothing and returns the inner level's record, projected the same
+    way."""
 
     def __init__(self, store, cols: list):
         self._store = store
@@ -393,9 +395,6 @@ class _SharedMirrorStore:
 
     def bootstrap_rows(self):
         return self._store.bootstrap_rows()
-
-    def batch_change_rows(self, batch_id):
-        return self._store.batch_change_rows(batch_id)
 
     def _project(self, df):
         from tiflink_spark.changelog import OP_COL, SEQ_COL
@@ -421,39 +420,19 @@ class _SharedMirrorStore:
     def read(self, version=None):
         return self._project(self._store.read(version))
 
-    def read_before(self, batch_id):
-        return self._project(self._store.read_before(batch_id))
-
-    def read_changed_before(self, batch_id):
-        return self._project(self._store.read_changed_before(batch_id))
-
-    def read_keys(self, col, vals, version=None):
-        return self._project(self._store.read_keys(col, vals, version))
-
-    def read_buckets(self, bucket_ids, version=None, key_filter=None):
-        return self._project(
-            self._store.read_buckets(
-                bucket_ids, version=version, key_filter=key_filter
-            )
-        )
-
-    def batch_delta(self, batch_id):
-        d = self._store.batch_delta(batch_id)
-        return None if d is None else self._project(d)
-
     def bootstrap(self, df, batch_id=0) -> bool:
         return False  # the inner level bootstrapped the shared target
 
-    def merge(self, changes, batch_id) -> bool:
-        return False  # the inner level's refresh committed this batch
+    def merge(self, changes, batch_id):
+        return self._store.merge(changes, batch_id).projected(self._project)
 
 
-class CascadeMV:
+class CascadeMV(Route):
     """Two-level maintenance for ``SELECT … FROM ( <inner> ) …``: the
     inner query is maintained as its own MV, and the outer query
     consumes the inner target's version diff as a changelog
-    (store.changes_between — the store as a CDC source). This is the
-    single-SQL form of MV cascading (the reference chains MVs the same
+    (KeyedParquetStore.changes_between — the store as a CDC source).
+    This is the single-SQL form of MV cascading (the reference chains MVs the same
     way: every MV table is itself a TiKV table another TiFlinkApp can
     consume, README.md:8-16; Flink's update-mode planner nests
     update-producing operators directly).
@@ -465,6 +444,7 @@ class CascadeMV:
     """
 
     def __init__(self, inner: "MVApp", outer: "MVApp", alias: str):
+        super().__init__(outer.spark, outer.stores, outer._mv.shuffle_partitions)
         self.inner, self.outer, self.alias = inner, outer, alias
         # None for a grouping-sets outer (one keyed store per grouping
         # set) — describe() tolerates it; reads go through outer.read().
@@ -476,7 +456,6 @@ class CascadeMV:
 
     def refresh(self, changes, batch_id) -> bool:
         from tiflink_spark.changelog import OP_COL, SEQ_COL
-        from tiflink_spark.store import changes_between
 
         # Split the batch between the levels: tables the inner route
         # maintains flow into it (their effect reaches the outer as the
@@ -509,12 +488,7 @@ class CascadeMV:
             # the outer route's actions on it run under that job's settings.
             token = JOB.set(_job_settings(self.outer._mv, refresh=True))
             try:
-                cb = getattr(tgt, "changes_between", None)
-                delta = (
-                    cb(v_from, v_to)
-                    if cb is not None
-                    else changes_between(tgt, v_from, v_to)
-                ).select(*cols, OP_COL, SEQ_COL)
+                delta = tgt.changes_between(v_from, v_to).select(*cols, OP_COL, SEQ_COL)
             finally:
                 JOB.reset(token)
             outer_changes = {self.alias: delta, **outer_changes}
@@ -1147,6 +1121,7 @@ class MVApp:
         # a cascade outer level: the inner level's target, offered as
         # the mirror of the derived table (see _SharedMirrorStore)
         self._mirrors = dict(mirrors or {})
+        self._streams = []  # live streams of start_streaming
         self._plan(
             spark, sources, query, target, pk, num_buckets,
             shuffle_partitions, ddl_hook, validate_pks,
@@ -1352,16 +1327,12 @@ class MVApp:
         #   full compound PK, so cross-branch duplicates never
         #   collapse — bag semantics flow through the cascade.
         if inner_app.maintenance_mode == "incremental":
-            rel_fn = getattr(inner_app._mv, "cascade_relation", None)
-            if inner_app.pk_is_unique:
-                placeholder = c.spark.sql(inner_sql)
-                inner_key = inner_app.mv_pk
-            elif rel_fn is not None:
-                placeholder = rel_fn()
-                inner_key = list(inner_app._cdc_source.pk)
-            else:
-                placeholder = None
+            unique = inner_app.pk_is_unique
+            placeholder = (
+                c.spark.sql(inner_sql) if unique else inner_app._mv.cascade_relation()
+            )
             if placeholder is not None:
+                inner_key = inner_app.mv_pk if unique else list(inner_app._cdc_source.pk)
                 outer_sources = {alias: (placeholder, inner_key)}
                 # The outer level may reference BASE tables besides
                 # the derived one (round 7: one theta edge over an
@@ -1610,9 +1581,10 @@ class MVApp:
         ``keep_last`` (the time-travel window shrinks accordingly), and
         compact the view's batch log the same way."""
         removed: list[str] = []
+        tables = self.maintained_tables()
         for store in self._all_stores():
-            removed += store.vacuum(keep_last)
-        self.stores.log.compact(keep_last)
+            removed += store.vacuum(keep_last, tables)
+        self.stores.log.compact(keep_last, tables)
         return removed
 
     def _target_committed(self) -> bool:
@@ -1769,7 +1741,7 @@ class MVApp:
     def stop_streaming(self) -> "MVApp":
         """Stop any live (processingTime-triggered) streams started by
         :meth:`start_streaming`."""
-        for q in getattr(self, "_streams", []):
+        for q in self._streams:
             q.stop()
         self._streams = []
         return self

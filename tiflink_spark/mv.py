@@ -168,7 +168,42 @@ def _maintenance(fn):
     return wrapper
 
 
-class RecomputeMV:
+class Route:
+    """What every maintenance route is to the view that owns it.
+
+    A route keeps one query result current in its ``target`` store
+    (None where the result spans several stores: grouping sets). It
+    opens every keyed store through the view's ``stores``
+    (:class:`~tiflink_spark.store.StoreSet`); ``shuffle_partitions`` is
+    its job sizing (see :func:`_maintenance`). It provides:
+
+    - ``bootstrap(batch_id=0)`` and a ``refresh(..., batch_id)`` taking
+      the route's changelogs, both wrapped in :func:`_maintenance`.
+      A refresh merges each changelog into its source store first and
+      then asks the returned :class:`~tiflink_spark.store.MergedBatch`
+      for the batch's change rows (``changes()``), the rows they
+      displaced (``displaced()``) and their count (``rows``);
+    - ``read(version)``: the view's rows at a committed version;
+    - ``cascade_relation()``: for a view whose advertised key is not
+      unique, the relation WITH the hidden columns that complete its
+      true key, which an outer cascade level consumes; None otherwise.
+    """
+
+    target: KeyedParquetStore | None = None
+
+    def __init__(self, spark: SparkSession, stores: StoreSet, shuffle_partitions: int | None):
+        self.spark = spark
+        self.stores = stores
+        self.shuffle_partitions = shuffle_partitions
+
+    def read(self, version: int | None = None) -> DataFrame:
+        return self.target.read(version)
+
+    def cascade_relation(self) -> DataFrame | None:
+        return None
+
+
+class RecomputeMV(Route):
     """Generic-SQL MV: full recompute per batch, change-bounded sink.
 
     ``sources`` maps table name → KeyedParquetStore holding the current
@@ -200,9 +235,7 @@ class RecomputeMV:
         shuffle_partitions: int | None = None,
         bag: bool = False,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.sources = sources
         self.query = query
         self._declared_pk = pk
@@ -339,7 +372,7 @@ class RecomputeMV:
         return out
 
 
-class IncrementalJoinMV:
+class IncrementalJoinMV(Route):
     """Incremental MV for ``A ⋈ B ON A.k = B.k`` with changelogs on BOTH
     sides (the stream-stream join of SURVEY §2.2, maintained per
     micro-batch instead of with operator state).
@@ -366,9 +399,7 @@ class IncrementalJoinMV:
         shuffle_partitions: int | None = None,
         where: str | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         # Row-local deterministic predicate over the joined relation.
         # Dirty-key maintenance is recompute+diff, so applying it after
         # the join (bootstrap AND per-batch recompute) is exact — no
@@ -417,28 +448,17 @@ class IncrementalJoinMV:
             self._join(self.left_store.read(), self.right_store.read()), batch_id
         )
 
-    def _dirty_keys(
-        self,
-        store: KeyedParquetStore,
-        changes: DataFrame | None,
-        batch_id,
-        side_key: str,
-    ) -> DataFrame | None:
-        """Join-key values touched by a batch: keys of the NEW row
+    @staticmethod
+    def _dirty_keys(batch, side_key: str) -> DataFrame:
+        """Join-key values a merged batch touched: keys of the NEW row
         versions plus keys of the displaced OLD rows (a key-changing
         update dirties both). ``side_key`` is this side's join column;
         values normalize to the shared ``__jk`` name."""
-        if changes is None:
-            return None
-        old = store.read_before(batch_id)
-        changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
-        old_keys = old.join(F.broadcast(changed_pks), store.pk, "left_semi").select(
-            F.col(side_key).alias("__jk")
-        )
-        new_keys = changes.select(F.col(side_key).alias("__jk")).where(
+        old_keys = batch.displaced().select(F.col(side_key).alias("__jk"))
+        new_keys = batch.changes().select(F.col(side_key).alias("__jk")).where(
             F.col("__jk").isNotNull()
         )
-        return old_keys.unionByName(new_keys).distinct()
+        return old_keys.unionByName(new_keys)
 
     @_maintenance
     def refresh(
@@ -448,27 +468,18 @@ class IncrementalJoinMV:
         batch_id,
     ) -> bool:
         dirty = [
-            d
-            for d in (
-                self._dirty_keys(self.left_store, left_changes, batch_id, self.left_key),
-                self._dirty_keys(
-                    self.right_store, right_changes, batch_id, self.right_key
-                ),
+            self._dirty_keys(store.merge(changes, batch_id), key)
+            for store, changes, key in (
+                (self.left_store, left_changes, self.left_key),
+                (self.right_store, right_changes, self.right_key),
             )
-            if d is not None
+            if changes is not None
         ]
         if not dirty:
             return False
-        # dirty_k prunes four downstream joins; cache so the old-version
+        # dirty_k prunes four downstream joins; cache so the pre-batch
         # store reads behind it run once.
-        dirty_k = (
-            dirty[0] if len(dirty) == 1 else dirty[0].unionByName(dirty[1]).distinct()
-        ).cache()
-
-        if left_changes is not None:
-            self.left_store.merge(left_changes, batch_id)
-        if right_changes is not None:
-            self.right_store.merge(right_changes, batch_id)
+        dirty_k = functools.reduce(DataFrame.unionByName, dirty).distinct().cache()
 
         left_now, right_now = self.left_store.read(), self.right_store.read()
         sub_a = left_now.join(
@@ -487,11 +498,8 @@ class IncrementalJoinMV:
         dirty_k.unpersist()
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalThetaJoinMV:
+class IncrementalThetaJoinMV(Route):
     """Incremental MV for the two-sided NON-EQUI join
 
         SELECT cols FROM a JOIN b ON <row-local predicate>   -- theta
@@ -530,9 +538,7 @@ class IncrementalThetaJoinMV:
         stores: StoreSet,
         shuffle_partitions: int | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.predicate = predicate
         self.out_cols = list(out_cols)
         self.left0, self.right0 = left, right
@@ -585,20 +591,15 @@ class IncrementalThetaJoinMV:
         if left_changes is None and right_changes is None:
             return False
         lpk, rpk = self.left_store.pk, self.right_store.pk
-        dirty_l = (
-            last_change_per_key(left_changes, lpk).select(*lpk).localCheckpoint(eager=True)
-            if left_changes is not None
-            else None
-        )
-        dirty_r = (
-            last_change_per_key(right_changes, rpk).select(*rpk).localCheckpoint(eager=True)
-            if right_changes is not None
-            else None
-        )
-        if left_changes is not None:
-            self.left_store.merge(left_changes, batch_id)
-        if right_changes is not None:
-            self.right_store.merge(right_changes, batch_id)
+
+        def dirty_pks(store, changes):
+            # the batch's changed PKs, off the delta the merge wrote
+            if changes is None:
+                return None
+            return store.merge(changes, batch_id).changes().select(*store.pk).distinct()
+
+        dirty_l = dirty_pks(self.left_store, left_changes)
+        dirty_r = dirty_pks(self.right_store, right_changes)
         left_now, right_now = self.left_store.read(), self.right_store.read()
 
         parts = []
@@ -638,11 +639,8 @@ class IncrementalThetaJoinMV:
         self.target.merge(mv_changes, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalFullOuterJoinMV:
+class IncrementalFullOuterJoinMV(Route):
     """Incremental MV for the two-sided PRESERVED equi-join
 
         SELECT cols FROM fact FULL [OUTER] JOIN dim
@@ -703,9 +701,7 @@ class IncrementalFullOuterJoinMV:
         shuffle_partitions: int | None = None,
         where: str | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.where = where
         self.fact0, self.dim0 = fact, dim
         self.fact_pk = list(fact_pk)
@@ -791,26 +787,16 @@ class IncrementalFullOuterJoinMV:
                 cond = cond & F.col(k).isNotNull()
             return out.filter(cond)
 
-        dirty_f = (
-            last_change_per_key(fact_changes, fpk)
-            .select(*fpk)
-            .localCheckpoint(eager=True)
-            if fact_changes is not None
-            else None
-        )
         key_parts = []
-        if dim_changes is not None:
-            key_parts.append(last_change_per_key(dim_changes, ks).select(*ks))
-        if dirty_f is not None:
+        dirty_f = None
+        if fact_changes is not None:
+            fact = self.fact_store.merge(fact_changes, batch_id)
+            dirty_f = fact.changes().select(*fpk).distinct().localCheckpoint(eager=True)
             # OLD fks of the dirty fact rows: an update that moves a row
             # off key k may leave k fact-less — its d:k row must appear.
-            pre = self.fact_store.read_before(batch_id)
-            key_parts.append(fk_as_keys(pre.join(F.broadcast(dirty_f), fpk, "left_semi")))
-
-        if fact_changes is not None:
-            self.fact_store.merge(fact_changes, batch_id)
+            key_parts.append(fk_as_keys(fact.displaced()))
         if dim_changes is not None:
-            self.dim_store.merge(dim_changes, batch_id)
+            key_parts.append(self.dim_store.merge(dim_changes, batch_id).changes().select(*ks))
         fact_now, dim_now = self.fact_store.read(), self.dim_store.read()
 
         if dirty_f is not None:
@@ -866,7 +852,7 @@ class IncrementalFullOuterJoinMV:
         return self.target.read(version).drop(self.ROWID)
 
 
-class IncrementalSemiJoinMV:
+class IncrementalSemiJoinMV(Route):
     """Incremental MV for the correlated-existence filter
 
         SELECT fact-cols FROM fact
@@ -908,9 +894,7 @@ class IncrementalSemiJoinMV:
         null_aware: bool = False,
         other_where: str | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.anti = anti
         # NOT IN semantics, fully null-aware (no NOT NULL contract on
         # the inner column required):
@@ -1027,19 +1011,12 @@ class IncrementalSemiJoinMV:
             self._view(self.fact_store.read(), self.other_store.read()), batch_id
         )
 
-    def _dirty_other_keys(self, changes: DataFrame, batch_id) -> DataFrame:
-        """Key values touched by an ``other`` batch: the new rows'
-        values plus the displaced old versions' values."""
-        store = self.other_store
-        old = store.read_before(batch_id)
-        changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
-        dk = [
-            (k, f"__dk{i}") for i, k in enumerate(self.other_keys)
-        ]
-        old_keys = old.join(F.broadcast(changed_pks), store.pk, "left_semi").select(
-            *[F.col(k).alias(a) for k, a in dk]
-        )
-        new_keys = changes.select(*[F.col(k).alias(a) for k, a in dk])
+    def _dirty_other_keys(self, other) -> DataFrame:
+        """Key values an ``other`` batch touched: the new rows' values
+        plus the displaced old versions' values."""
+        dk = [(k, f"__dk{i}") for i, k in enumerate(self.other_keys)]
+        old_keys = other.displaced().select(*[F.col(k).alias(a) for k, a in dk])
+        new_keys = other.changes().select(*[F.col(k).alias(a) for k, a in dk])
         cond = F.lit(True)
         for _, a in dk:
             cond = cond & F.col(a).isNotNull()
@@ -1054,23 +1031,17 @@ class IncrementalSemiJoinMV:
     ) -> bool:
         if fact_changes is None and other_changes is None:
             return False
-        if fact_changes is not None and self.where is not None:
-            from tiflink_spark.changelog import apply_filter
+        from tiflink_spark.changelog import apply_filter
 
-            fact_changes = apply_filter(fact_changes, self.where)
-        if other_changes is not None and self.other_where is not None:
-            from tiflink_spark.changelog import apply_filter
-
-            other_changes = apply_filter(other_changes, self.other_where)
-        dirty_ok = (
-            self._dirty_other_keys(other_changes, batch_id)
-            if other_changes is not None
-            else None
-        )
         if fact_changes is not None:
-            self.fact_store.merge(fact_changes, batch_id)
+            if self.where is not None:
+                fact_changes = apply_filter(fact_changes, self.where)
+            fact_changes = self.fact_store.merge(fact_changes, batch_id).changes()
+        dirty_ok = None
         if other_changes is not None:
-            self.other_store.merge(other_changes, batch_id)
+            if self.other_where is not None:
+                other_changes = apply_filter(other_changes, self.other_where)
+            dirty_ok = self._dirty_other_keys(self.other_store.merge(other_changes, batch_id))
         # One distinct key-set build shared by every membership probe in
         # this batch (a two-sided batch probes twice).
         other_now_read = self.other_store.read()
@@ -1138,11 +1109,23 @@ class IncrementalSemiJoinMV:
         self.target.merge(mv_changes, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
+
+def _theta_vals(batch, local: str | None, corr) -> DataFrame:
+    """Theta-term values ``__d{k}`` of a merged inner batch's changed
+    rows, old AND new versions, each passed through the inner-local
+    filter (a version outside it was never in any correlated set),
+    distinct — the dirtying probe of the correlated routes."""
+    old_rows = batch.displaced()
+    new_rows = batch.changes().filter(F.col(OP_COL) != OP_DELETE).select(*old_rows.columns)
+    both = old_rows.unionByName(new_rows)
+    if local is not None:
+        both = both.filter(F.expr(local))
+    return both.select(
+        *[F.expr(ie).alias(f"__d{k}") for k, (ie, _, _) in enumerate(corr)]
+    ).distinct()
 
 
-class IncrementalCorrSemiJoinMV:
+class IncrementalCorrSemiJoinMV(Route):
     """Incremental MV for the CORRELATED-inner IN / NOT IN filter
 
         SELECT fact-cols FROM fact c
@@ -1217,9 +1200,7 @@ class IncrementalCorrSemiJoinMV:
         # EXISTS form (round 10): membership is bare per-row
         # non-emptiness of S(c) — no match/null bits, no key columns.
         self.exists_mode = exists_mode
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.anti = anti
         self.fact_key = fact_key
         self.other_key = other_key
@@ -1432,25 +1413,6 @@ class IncrementalCorrSemiJoinMV:
             self._view(self.fact_store.read(), self.other_store.read()), batch_id
         )
 
-    def _dirty_theta_vals(self, changes: DataFrame, batch_id) -> DataFrame:
-        """Theta-column tuples of the changed inner rows' old AND new
-        versions (each passed through the local filter — a version
-        outside it was never in any S(c)), distinct and prefixed."""
-        store = self.other_store
-        old = store.read_before(batch_id)
-        changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
-        old_rows = old.join(F.broadcast(changed_pks), store.pk, "left_semi")
-        new_rows = changes.filter(F.col(OP_COL) != OP_DELETE).select(*old.columns)
-        both = old_rows.unionByName(new_rows)
-        if self.inner_where is not None:
-            both = both.filter(F.expr(self.inner_where))
-        return both.select(
-            *[
-                F.expr(ie).alias(f"__d{k}")
-                for k, (ie, _, _) in enumerate(self.corr)
-            ]
-        ).distinct()
-
     @_maintenance
     def refresh(
         self,
@@ -1460,19 +1422,16 @@ class IncrementalCorrSemiJoinMV:
     ) -> bool:
         if fact_changes is None and other_changes is None:
             return False
-        if fact_changes is not None and self.where is not None:
-            from tiflink_spark.changelog import apply_filter
-
-            fact_changes = apply_filter(fact_changes, self.where)
-        dirty_vals = (
-            self._dirty_theta_vals(other_changes, batch_id)
-            if other_changes is not None
-            else None
-        )
         if fact_changes is not None:
-            self.fact_store.merge(fact_changes, batch_id)
+            if self.where is not None:
+                from tiflink_spark.changelog import apply_filter
+
+                fact_changes = apply_filter(fact_changes, self.where)
+            fact_changes = self.fact_store.merge(fact_changes, batch_id).changes()
+        dirty_vals = None
         if other_changes is not None:
-            self.other_store.merge(other_changes, batch_id)
+            other = self.other_store.merge(other_changes, batch_id)
+            dirty_vals = _theta_vals(other, self.inner_where, self.corr)
         other_eval = self._inner_eval(self.other_store.read())
 
         def upserts(rows: DataFrame) -> DataFrame:
@@ -1523,11 +1482,8 @@ class IncrementalCorrSemiJoinMV:
         self.target.merge(mv_changes, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalCorrScalarAggMV:
+class IncrementalCorrScalarAggMV(Route):
     """Incremental MV for the theta-correlated SCALAR aggregate
 
         SELECT d-cols, (SELECT agg(x|*) FROM fact f
@@ -1575,9 +1531,7 @@ class IncrementalCorrScalarAggMV:
             raise ValueError(f"unsupported aggregate {akind!r}")
         if acol is None and akind != "count":
             raise ValueError("bare * is COUNT-only")
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.akind = akind
         self.acol = acol
         self.alias = alias
@@ -1806,22 +1760,6 @@ class IncrementalCorrScalarAggMV:
             self._view(self.dim_store.read(), self.fact_store.read()), batch_id
         )
 
-    def _dirty_theta_vals(self, changes: DataFrame, batch_id) -> DataFrame:
-        store = self.fact_store
-        old = store.read_before(batch_id)
-        changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
-        old_rows = old.join(F.broadcast(changed_pks), store.pk, "left_semi")
-        new_rows = changes.filter(F.col(OP_COL) != OP_DELETE).select(*old.columns)
-        both = old_rows.unionByName(new_rows)
-        if self.inner_where is not None:
-            both = both.filter(F.expr(self.inner_where))
-        return both.select(
-            *[
-                F.expr(ie).alias(f"__d{k}")
-                for k, (ie, _, _) in enumerate(self.corr)
-            ]
-        ).distinct()
-
     @_maintenance
     def refresh(
         self,
@@ -1831,15 +1769,12 @@ class IncrementalCorrScalarAggMV:
     ) -> bool:
         if fact_changes is None and dim_changes is None:
             return False
-        dirty_vals = (
-            self._dirty_theta_vals(fact_changes, batch_id)
-            if fact_changes is not None
-            else None
-        )
         if dim_changes is not None:
-            self.dim_store.merge(dim_changes, batch_id)
+            dim_changes = self.dim_store.merge(dim_changes, batch_id).changes()
+        dirty_vals = None
         if fact_changes is not None:
-            self.fact_store.merge(fact_changes, batch_id)
+            fact = self.fact_store.merge(fact_changes, batch_id)
+            dirty_vals = _theta_vals(fact, self.inner_where, self.corr)
         fact_eval = self._fact_eval(self.fact_store.read())
 
         def upserts(rows: DataFrame) -> DataFrame:
@@ -1901,11 +1836,8 @@ class IncrementalCorrScalarAggMV:
         self.target.merge(mv_changes, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalTopKMV:
+class IncrementalTopKMV(Route):
     """Incremental MV for per-group top-k:
 
         SELECT g, rank, ... FROM (
@@ -1941,9 +1873,7 @@ class IncrementalTopKMV:
         rank_col: str = "rank",
         order_spec: list[tuple[str, bool]] | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.fact0 = fact
         self.fact_pk = fact_pk
         self.group_key = group_key
@@ -1982,31 +1912,21 @@ class IncrementalTopKMV:
         self.fact_store.bootstrap(self.fact0, batch_id)
         self.target.bootstrap(self._topk(self.fact_store.read()), batch_id)
 
-    def _dirty_groups(self, changes: DataFrame, batch_id) -> DataFrame:
-        """Groups touched by the batch: the new rows' groups plus the
+    def _dirty_groups(self, fact) -> DataFrame:
+        """Groups a merged batch touched: the new rows' groups plus the
         groups of the displaced old row versions (a group-changing
-        update dirties both). Called AFTER the batch's fact merge, so
-        the displaced-row lookup reads the pre-batch version BUCKET-
-        PRUNED to the batch's keys (batch_buckets) — O(touched
-        buckets), not a table scan."""
-        old = self.fact_store.read_changed_before(batch_id)
-        changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
-        old_groups = old.join(changed_pks, self.fact_pk, "left_semi").select(self.group_key)
-        new_groups = changes.select(self.group_key).where(F.col(self.group_key).isNotNull())
+        update dirties both)."""
+        old_groups = fact.displaced().select(self.group_key)
+        new_groups = fact.changes().select(self.group_key).where(F.col(self.group_key).isNotNull())
         return old_groups.unionByName(new_groups).distinct()
 
     @_maintenance
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
         if changes is None:
             return False
-        self.fact_store.merge(changes, batch_id)
-        mat = self.fact_store.batch_delta(batch_id)
-        if mat is not None:
-            changes = mat  # the changelog lineage ran once, in the merge
-        _tune_delta_shuffle(
-            self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
-        )
-        dirty = self._dirty_groups(changes, batch_id).cache()
+        fact = self.fact_store.merge(changes, batch_id)
+        _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
+        dirty = self._dirty_groups(fact).cache()
         sub = self.fact_store.read().join(dirty, self.group_key, "left_semi")
         recomputed = self._topk(sub)
         mv_dirty_old = self.target.read().join(dirty, self.group_key, "left_semi")
@@ -2015,11 +1935,8 @@ class IncrementalTopKMV:
         dirty.unpersist()
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalWindowMV:
+class IncrementalWindowMV(Route):
     """Incremental MV for the partitioned OVER-window view
 
         SELECT cols..., fn(args) OVER (PARTITION BY g ORDER BY o ...) AS a
@@ -2074,9 +1991,7 @@ class IncrementalWindowMV:
         skew_warn_rows: int | None = 5_000_000,
         strategy: str = "sort",
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.fact0 = fact
         self.fact_pk = list(fact_pk)
         # Composite PARTITION BY keys are first-class in the sort
@@ -2222,17 +2137,11 @@ class IncrementalWindowMV:
         self.fact_store.bootstrap(self.fact0, batch_id)
         self.target.bootstrap(self._windowed(self.fact_store.read()), batch_id)
 
-    def _dirty_groups(self, changes: DataFrame, batch_id) -> DataFrame:
-        """Partitions touched by the batch, NULL group included (SQL
-        windows treat NULL as a regular partition). Called AFTER the
-        batch's fact merge: the displaced-row lookup reads the
-        pre-batch version bucket-pruned to the batch's keys."""
-        old = self.fact_store.read_changed_before(batch_id)
-        changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
-        old_groups = old.join(changed_pks, self.fact_pk, "left_semi").select(
-            *self.group_keys
-        )
-        new_groups = changes.select(*self.group_keys)
+    def _dirty_groups(self, fact) -> DataFrame:
+        """Partitions a merged batch touched, NULL group included (SQL
+        windows treat NULL as a regular partition)."""
+        old_groups = fact.displaced().select(*self.group_keys)
+        new_groups = fact.changes().select(*self.group_keys)
         return old_groups.unionByName(new_groups).distinct()
 
     def _prune(self, rows: DataFrame, dirty: DataFrame) -> DataFrame:
@@ -2277,17 +2186,12 @@ class IncrementalWindowMV:
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
         if changes is None:
             return False
-        self.fact_store.merge(changes, batch_id)
-        mat = self.fact_store.batch_delta(batch_id)
-        if mat is not None:
-            changes = mat  # the changelog lineage ran once, in the merge
-        _tune_delta_shuffle(
-            self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
-        )
+        fact = self.fact_store.merge(changes, batch_id)
+        _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
         # cache (not an eager checkpoint): both consumers execute inside
         # the target-merge job; the pre-batch reads are manifest-pinned
         # at construction, so laziness is safe post-merge.
-        dirty = self._dirty_groups(changes, batch_id).cache()
+        dirty = self._dirty_groups(fact).cache()
         pruned = self._prune(self.fact_store.read(), dirty)
         self._check_skew(pruned)
         recomputed = self._windowed(pruned)
@@ -2297,11 +2201,8 @@ class IncrementalWindowMV:
         dirty.unpersist()
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalGlobalTopKMV:
+class IncrementalGlobalTopKMV(Route):
     """Incremental MV for the GLOBAL ``SELECT cols FROM fact [WHERE …]
     ORDER BY c1 [ASC|DESC][, c2 …] LIMIT k`` — the dashboard top-k
     without a PARTITION BY, keyed by the fact PK (the dispatcher
@@ -2333,9 +2234,7 @@ class IncrementalGlobalTopKMV:
         shuffle_partitions: int | None = None,
         order_spec: list[tuple[str, bool]] | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.fact0 = fact
         self.fact_pk = list(fact_pk)
         # Full multi-column ORDER BY as (column, descending) pairs; the
@@ -2375,13 +2274,14 @@ class IncrementalGlobalTopKMV:
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
         if changes is None:
             return False
-        changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
+        changed_pks = (
+            self.fact_store.merge(changes, batch_id).changes().select(*self.fact_pk).distinct()
+        )
         old_top = self.target.read()
         # bounded probe: ≤ k rows semi-joined against the batch's keys
         member_touched = (
             old_top.join(changed_pks, self.fact_pk, "left_semi").limit(1).count() > 0
         )
-        self.fact_store.merge(changes, batch_id)
         fact_now = self.fact_store.read()
         if member_touched:
             new_top = self._topk(fact_now)
@@ -2393,11 +2293,8 @@ class IncrementalGlobalTopKMV:
         self.target.merge(mv_changes, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalUnionMV:
+class IncrementalUnionMV(Route):
     """Incremental MV for bare multi-branch ``UNION ALL`` — the
     multi-source ingestion view, and the ONE set operation that is
     stateless under changelogs (SURVEY §2.2): a branch's change rows
@@ -2426,9 +2323,7 @@ class IncrementalUnionMV:
         shuffle_partitions: int | None = None,
         wheres: dict[str, str] | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.branches = branches
         # per-branch row-local WHERE (source-schema predicate): filters
         # the bootstrap rows, and demotes changelog upserts failing it
@@ -2490,11 +2385,8 @@ class IncrementalUnionMV:
         self.target.merge(merged, batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalProjectionMV:
+class IncrementalProjectionMV(Route):
     """Incremental MV for the stateless projection/filter view —
     ``SELECT row-local items FROM fact [WHERE row-local]`` — the
     simplest maintainable shape (Flink's stateless Calc node; the
@@ -2523,9 +2415,7 @@ class IncrementalProjectionMV:
         stores: StoreSet,
         shuffle_partitions: int | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.fact0 = fact
         self.items = list(items)
         self.target = stores.open("mv", list(pk_out))
@@ -2546,11 +2436,8 @@ class IncrementalProjectionMV:
         self.target.merge(self._project(changes), batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalSetOpMV:
+class IncrementalSetOpMV(Route):
     """Incremental MV for ``SELECT cols FROM a INTERSECT|EXCEPT [ALL]
     SELECT cols FROM b`` (and set-semantics UNION). Each side maintains
     a hidden count-per-tuple aggregate (an inner
@@ -2592,9 +2479,7 @@ class IncrementalSetOpMV:
     ):
         if op not in ("intersect", "except", "union", "intersect_all", "except_all"):
             raise ValueError(f"unsupported set op: {op}")
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.op = op
         self._name_to_tag = {side_names[0]: "a", side_names[1]: "b"}
         self.out_cols = list(out_cols)
@@ -2696,16 +2581,11 @@ class IncrementalSetOpMV:
             rows = a.join(b, self.out_cols, "left_anti")
         self.target.bootstrap(rows, batch_id)
 
-    def _dirty_tuples(self, tag: str, changes: DataFrame, batch_id) -> DataFrame:
-        """Output tuples touched by a side's batch: the new values plus
-        the displaced old values (pre-batch store version — the side's
-        inner MV has already merged when this runs)."""
-        side = self._sides[tag]
-        store = side.fact_store
-        old = store.read_before(batch_id)
-        changed_pks = last_change_per_key(changes, store.pk).select(*store.pk)
-        old_tuples = old.join(changed_pks, store.pk, "left_semi").select(*self.out_cols)
-        new_tuples = changes.select(*self.out_cols)
+    def _dirty_tuples(self, side) -> DataFrame:
+        """Output tuples a side's merged batch touched: the new values
+        plus the displaced old values."""
+        old_tuples = side.displaced().select(*self.out_cols)
+        new_tuples = side.changes().select(*self.out_cols)
         return old_tuples.unionByName(new_tuples).distinct()
 
     @_maintenance
@@ -2726,9 +2606,11 @@ class IncrementalSetOpMV:
                 from tiflink_spark.changelog import apply_filter
 
                 raw = apply_filter(raw, self._wheres[tag])
-            ch = self._project(tag, raw)
-            self._sides[tag].refresh(ch, batch_id)
-            dirty_parts.append(self._dirty_tuples(tag, ch, batch_id))
+            # merged here first, so the side's own fact merge replays
+            # this record (as the grouping-sets subs do)
+            side = self._sides[tag].fact_store.merge(self._project(tag, raw), batch_id)
+            self._sides[tag].refresh(side.changes(), batch_id)
+            dirty_parts.append(self._dirty_tuples(side))
         dirty = dirty_parts[0]
         for p in dirty_parts[1:]:
             dirty = dirty.unionByName(p)
@@ -2767,10 +2649,7 @@ class IncrementalSetOpMV:
         bootstrap publishes, exactly as IncrementalUnionMV's
         cascade_relation contract."""
         if self.op not in ("intersect_all", "except_all"):
-            raise RuntimeError(
-                "cascade_relation is only defined for bag set ops; "
-                "set-semantics views have a true tuple key already"
-            )
+            return None  # a set-semantics view's tuple is a true key already
         counts = {
             tag: src.groupBy(*self.out_cols).agg(
                 F.count(F.lit(1)).alias("__cnt")
@@ -2808,12 +2687,10 @@ class _SetOpBagCascadeTarget:
         return self._mv.target.current_version()
 
     def changes_between(self, v_from, v_to) -> DataFrame:
-        from tiflink_spark.store import changes_between as _cb
-
         mv = self._mv
         out = mv.out_cols
         # only the tuples the raw store diff touched — delta-bounded
-        touched = _cb(mv.target, v_from, v_to).select(*out).distinct()
+        touched = mv.target.changes_between(v_from, v_to).select(*out).distinct()
         old = (
             mv.target.read(v_from)
             .join(touched, out, "left_semi")
@@ -2860,7 +2737,7 @@ class _SetOpBagCascadeTarget:
         )
 
 
-class IncrementalJoinAggMV:
+class IncrementalJoinAggMV(Route):
     """Incremental MV for the canonical star/snowflake-join aggregate
 
         SELECT keys, aggs
@@ -2916,9 +2793,7 @@ class IncrementalJoinAggMV:
         target_filter: str | None = None,
         key_exprs: list | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         self.fact_name = fact_name
         self.fact0, self.dim0 = fact, dim_dfs
         self.fact_pk = list(fact_pk)
@@ -3119,7 +2994,6 @@ class IncrementalJoinAggMV:
             raise ValueError(f"unknown tables in changes: {sorted(unknown)}")
         if not changes:
             return False
-        fact_changes = changes.get(self.fact_name)
         # Source stores are disjoint single-writer directories — merge
         # them CONCURRENTLY (threaded job submission; Spark schedules
         # the write jobs in parallel). The old per-store Python loop
@@ -3134,7 +3008,7 @@ class IncrementalJoinAggMV:
             for name, ch in changes.items()
         ]
         if len(merges) == 1:
-            merges[0][1].merge(merges[0][2], batch_id)
+            merged = [merges[0][1].merge(merges[0][2], batch_id)]
         else:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -3143,28 +3017,23 @@ class IncrementalJoinAggMV:
                     pool.submit(contextvars.copy_context().run, s.merge, ch, batch_id)
                     for _, s, ch in merges
                 ]
-                for f in futures:
-                    f.result()
+                merged = [f.result() for f in futures]
+        batches = {name: batch for (name, _, _), batch in zip(merges, merged)}
         # Re-bind every changed table to its merge's materialized delta:
         # the changelog lineages executed once, inside the merge writes;
         # the dels/ups split and J re-derivation below scan those
         # micro-batch-sized parquets instead of re-running them.
-        for name, store, _ in merges:
-            mat = store.batch_delta(batch_id)
-            if mat is not None:
-                changes[name] = mat
+        changes = {name: batch.changes() for name, batch in batches.items()}
         fact_changes = changes.get(self.fact_name)
-        if not any(name != self.fact_name for name, _, _ in merges):
+        dim_changed = [n for n in changes if n != self.fact_name]
+        if not dim_changed:
             # Fact-only batch: every downstream shuffle is bounded by
             # the measured fact delta — size to it. Dim churn is NOT
             # tuned here (one dim key can fan out to many fact rows, so
             # the J derivation keeps the configured sizing); the inner
             # aggregate re-tunes its target legs on the measured state
             # delta after its state merge (external_fact branch).
-            _tune_delta_shuffle(
-                self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
-            )
-        dim_changed_names = [n for n, _, _ in merges if n != self.fact_name]
+            _tune_delta_shuffle(self.shuffle_partitions, batches[self.fact_name].rows)
         # Fact-only batch: each dim hanging directly off the fact is
         # read KEY-PRUNED — the batch's FK values (driver-read from the
         # fact delta's parquet) bound exactly which dim rows the join
@@ -3179,12 +3048,12 @@ class IncrementalJoinAggMV:
             store = self.dim_stores[d.dim]
             pruned = None
             if (
-                not dim_changed_names
+                not dim_changed
                 and d.parent == self.fact_name
                 and len(d.pk_cols) == 1
                 and len(d.ref_cols) == 1
             ):
-                kv = self.fact_store.batch_column_values(batch_id, d.ref_cols[0])
+                kv = batches[self.fact_name].column_values(d.ref_cols[0])
                 if kv is not None:
                     pruned = store.read_keys(d.pk_cols[0], kv)
             dim_now[d.dim] = pruned if pruned is not None else store.read()
@@ -3209,7 +3078,6 @@ class IncrementalJoinAggMV:
                 )
                 .drop("__matched")
             )
-        dim_changed = [n for n in changes if n != self.fact_name]
         if dim_changed:
             aff_parts = [
                 self._affected_fact_rows(
@@ -3259,11 +3127,7 @@ class IncrementalJoinAggMV:
         dim_pre = {d.dim: self.dim_stores[d.dim].read_before(batch_id) for d in self.dims}
         old_fact_parts = []
         if fact_changes is not None:
-            old_fact = self.fact_store.read_changed_before(batch_id)
-            fck = last_change_per_key(fact_changes, self.fact_pk).select(*self.fact_pk)
-            old_fact_parts.append(
-                old_fact.join(F.broadcast(fck), self.fact_pk, "left_semi")
-            )
+            old_fact_parts.append(batches[self.fact_name].displaced())
         if dim_changed:
             # dim churn doesn't move fact rows, so the affected keys'
             # old rows ARE their current rows — except keys the same
@@ -3271,6 +3135,7 @@ class IncrementalJoinAggMV:
             # leg above (their current row is already the NEW value)
             aff_old = affected
             if fact_changes is not None:
+                fck = fact_changes.select(*self.fact_pk).distinct()
                 aff_old = affected.join(
                     F.broadcast(fck), self.fact_pk, "left_anti"
                 )
@@ -3310,9 +3175,6 @@ class IncrementalJoinAggMV:
         return self._agg.refresh(
             j_changes, batch_id, old_rows=old_rows, new_base=new_base
         )
-
-    def read(self, version: int | None = None) -> DataFrame:
-        return self._agg.read(version)
 
 
 class IncrementalJoinProjectionMV(IncrementalJoinAggMV):
@@ -3367,11 +3229,8 @@ class IncrementalJoinProjectionMV(IncrementalJoinAggMV):
         self.target.merge(self._project_out(j_changes), batch_id)
         return True
 
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
-
-class IncrementalTemporalJoinMV:
+class IncrementalTemporalJoinMV(Route):
     """Event-time temporal (versioned dim) join MV — the
     ``FOR SYSTEM_TIME AS OF f.ts`` enrichment view:
 
@@ -3430,9 +3289,7 @@ class IncrementalTemporalJoinMV:
         shuffle_partitions: int | None = None,
         late_dim: str = "raise",
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         if late_dim not in ("raise", "reorder"):
             raise ValueError(f"late_dim must be 'raise' or 'reorder', got {late_dim!r}")
         # "raise": out-of-order dim versions fail loudly (the default —
@@ -3779,15 +3636,11 @@ class IncrementalTemporalJoinMV:
 
         fact_changes = changes.get(self.fact_name)
         if fact_changes is not None:
-            self.fact_store.merge(
+            fact = self.fact_store.merge(
                 fact_changes.select(*self._fact_side, OP_COL, SEQ_COL), batch_id
             )
-            mat = self.fact_store.batch_delta(batch_id)
-            if mat is not None:
-                fact_changes = mat
-            _tune_delta_shuffle(
-                self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
-            )
+            fact_changes = fact.changes()
+            _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
             hist = self.hist_store.read()
             final = last_change_per_key(fact_changes, self.fact_pk)
             bare = [c for c in final.columns if c not in (OP_COL, SEQ_COL)]
@@ -3814,9 +3667,6 @@ class IncrementalTemporalJoinMV:
             )
         self.target.merge(mv_changes, batch_id)
         return True
-
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)
 
 
 def _null_out_idents(expr: str, idents: set[str]) -> str:
@@ -3855,7 +3705,7 @@ def _subst_int_idents(expr: str, values: dict[str, int]) -> str:
     )
 
 
-class IncrementalGroupingSetsMV:
+class IncrementalGroupingSetsMV(Route):
     """GROUPING SETS / ROLLUP / CUBE maintained by decomposition.
 
     SURVEY §2.2 prescribes "expand to union of aggs" — the same shape
@@ -3864,8 +3714,9 @@ class IncrementalGroupingSetsMV:
     :class:`IncrementalAggMV` per grouping set (the empty set runs as
     the keep-alive global aggregate), all sharing ONE fact store:
     the route merges the batch into it once, and each sub-MV's own fact
-    merge is then a no-op (KeyedParquetStore's batch-id idempotence)
-    that reads the pre-batch snapshot for retraction.
+    merge is then a replay (KeyedParquetStore's batch-id idempotence)
+    that returns the shared merge's record: its change rows and the
+    pre-batch rows they displaced.
 
     Per-batch work = |sets| × (batch-size state merge) — the identical
     multiplier Spark's own Expand applies to a batch GROUPING SETS
@@ -3904,8 +3755,7 @@ class IncrementalGroupingSetsMV:
         gid_items: list[tuple[str, tuple[str, ...]]] | None = None,
         having_gcalls: list[tuple[str, tuple[str, ...]]] | None = None,
     ):
-        self.spark = spark
-        self.stores = stores
+        super().__init__(spark, stores, shuffle_partitions)
         self.all_keys = list(all_keys)
         self.sets = [tuple(s) for s in sets]
         # visible output measures; hidden ones (HAVING support) are
@@ -3986,8 +3836,6 @@ class IncrementalGroupingSetsMV:
             )
             self.subs.append(sub)
         self.fact_store = shared_fact
-        # the job's sizing, which the subs inherit (see _maintenance)
-        self.shuffle_partitions = shuffle_partitions
         # Composite CDC source over the per-set target stores — what a
         # CascadeMV consumes instead of a (non-existent) single target.
         self.target = None
@@ -3995,13 +3843,13 @@ class IncrementalGroupingSetsMV:
 
     # Per-set sub-MVs maintain DISJOINT state/target stores off one
     # shared fact store, so after the shared fact write commits
-    # (serially — the batch-id guard then no-ops every sub's own
-    # attempt) the |sets| maintenance passes are independent and run
-    # CONCURRENTLY. This is latency hiding, not extra work: each pass
-    # is delta-sized, and the fixed per-job scheduling overhead — which
-    # dominates at micro-batch deltas and multiplies by |sets| (32 for
-    # CUBE(5)) — overlaps instead of serializing. On a real cluster the
-    # same concurrency keeps executors busy across the per-set jobs.
+    # (serially — every sub's own attempt then replays it) the |sets|
+    # maintenance passes are independent and run CONCURRENTLY. This is
+    # latency hiding, not extra work: each pass is delta-sized, and the
+    # fixed per-job scheduling overhead — which dominates at
+    # micro-batch deltas and multiplies by |sets| (32 for CUBE(5)) —
+    # overlaps instead of serializing. On a real cluster the same
+    # concurrency keeps executors busy across the per-set jobs.
     _SUB_WORKERS = 8
 
     def _run_subs(self, fn):
@@ -4032,14 +3880,11 @@ class IncrementalGroupingSetsMV:
             changes = changes.withColumn("__g", F.lit(0))
         # The shared fact merge is the changelog's single execution
         # point; every sub then re-binds to its materialized delta
-        # parquet (each sub's own merge no-ops on the batch-id guard and
-        # re-binds the same way). The old eager localCheckpoint here was
-        # a whole extra analysis + job per batch materializing the same
-        # rows the merge writes.
-        self.fact_store.merge(changes, batch_id)
-        mat = self.fact_store.batch_delta(batch_id)
-        if mat is not None:
-            changes = mat
+        # parquet (each sub's own merge replays the batch: it writes
+        # nothing and hands back this record). The old eager
+        # localCheckpoint here was a whole extra analysis + job per
+        # batch materializing the same rows the merge writes.
+        changes = self.fact_store.merge(changes, batch_id).changes()
         return any(self._run_subs(lambda sub: sub.refresh(changes, batch_id)))
 
     def _extend(
@@ -4153,8 +3998,6 @@ class _GroupingSetsCascadeTarget:
         return tuple(sub.target.current_version() for sub in self._mv.subs)
 
     def changes_between(self, v_from, v_to) -> DataFrame:
-        from tiflink_spark.store import changes_between as _cb
-
         mv = self._mv
         parts = []
         for i, (s, sub, vf, vt) in enumerate(
@@ -4164,7 +4007,7 @@ class _GroupingSetsCascadeTarget:
                 continue
             parts.append(
                 mv._extend(
-                    i, s, _cb(sub.target, vf, vt),
+                    i, s, sub.target.changes_between(vf, vt),
                     rowid=True, passthrough=(OP_COL, SEQ_COL),
                 )
             )
@@ -4180,7 +4023,7 @@ class _GroupingSetsCascadeTarget:
         return out
 
 
-class IncrementalAggMV:
+class IncrementalAggMV(Route):
     """Incremental MV for `dim ⟕ (SELECT k, aggs FROM fact GROUP BY k)`.
 
     This is the decorrelated form of the reference's flagship query
@@ -4213,9 +4056,7 @@ class IncrementalAggMV:
         global_group: bool = False,
         external_fact: bool = False,
     ):
-        self.spark = spark
-        self.stores = stores
-        self.shuffle_partitions = shuffle_partitions
+        super().__init__(spark, stores, shuffle_partitions)
         # Row-local predicate over the MV's OUTPUT columns (HAVING
         # analog): bootstrap rows failing it are excluded, and refresh
         # upserts failing it demote to -D via the stateless-filter
@@ -4347,10 +4188,11 @@ class IncrementalAggMV:
         state_changes = None
         state_pool = state_future = None
         if fact_changes is not None:
-            # Merge first, then read the retraction snapshot FROM BEFORE
-            # this batch's commit (versioned time travel — correct also
-            # when a shared fact store merged it already). Merging first
-            # lets the lookup use the commit's recorded batch_buckets:
+            # Merge first, then ask the merged batch for the rows it
+            # displaced — read FROM BEFORE this batch's commit
+            # (versioned time travel — correct also when a shared fact
+            # store merged it already). Merging first lets the lookup
+            # use the commit's recorded batch buckets:
             # the old rows of the changed keys live only in the buckets
             # those keys hash into, so the lookup scans O(touched
             # buckets), not the table — at scale the difference between
@@ -4365,31 +4207,20 @@ class IncrementalAggMV:
                         self.fact_store.merge, fact_changes, batch_id,
                     )
                     old_state = self.state_store.read_before(batch_id)
-                    fact_merge_future.result()
+                    fact = fact_merge_future.result()
                 # Re-bind to the merge's materialized delta: the raw
                 # changelog lineage (often a multi-join derivation)
                 # executed exactly once, inside the merge write; the
                 # retraction lookup, delta aggregate, and state merge
                 # below then scan a micro-batch-sized parquet instead
                 # of re-running it.
-                mat = self.fact_store.batch_delta(batch_id)
-                if mat is not None:
-                    fact_changes = mat
+                fact_changes = fact.changes()
                 # Size the rest of the batch's shuffles to the measured
                 # delta (dirty-group recompute volume is ∝ δ × group
                 # width; DELTA_ROWS_PER_TASK keeps those tasks small).
-                _tune_delta_shuffle(
-                    self.shuffle_partitions, self.fact_store.batch_change_rows(batch_id)
-                )
-                old_fact = self.fact_store.read_changed_before(batch_id)
+                _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
                 final = last_change_per_key(fact_changes, self.fact_pk)
-                # δ-bounded key set: broadcast, or the bucket scan
-                # shuffles
-                old_rows = old_fact.join(
-                    F.broadcast(final.select(*self.fact_pk)),
-                    self.fact_pk,
-                    "left_semi",
-                )
+                old_rows = fact.displaced()
                 # Materialize the (δ-bounded) displaced-row set ONCE:
                 # every downstream consumer — the retraction delta in
                 # BOTH the state and target executions, and the dirty
@@ -4406,8 +4237,7 @@ class IncrementalAggMV:
                 # (new_state itself stays unmaterialized — an eager
                 # checkpoint THERE cost ~40% of refresh latency, r8
                 # measurement.)
-                n_delta = self.fact_store.batch_change_rows(batch_id)
-                if n_delta is not None and n_delta <= CODEGEN_DELTA_ROWS:
+                if fact.rows is not None and fact.rows <= CODEGEN_DELTA_ROWS:
                     old_rows = old_rows.localCheckpoint(eager=False)
                 new_base = self.fact_store.read
             else:
@@ -4510,19 +4340,17 @@ class IncrementalAggMV:
                     self.state_store.merge, state_changes, batch_id,
                 )
             else:
-                self.state_store.merge(state_changes, batch_id)
-                mat_state = self.state_store.batch_delta(batch_id)
-                if mat_state is not None:
-                    new_state = mat_state.drop(OP_COL, SEQ_COL)
-                    state_rebound = True
+                state = self.state_store.merge(state_changes, batch_id)
+                # a merge that wrote no delta has no cheaper re-read
+                state_rebound = bool(state.rows)
+                if state_rebound:
+                    new_state = state.changes().drop(OP_COL, SEQ_COL)
                 if self.fact_store is None:
                     # external_fact batches (the join route, incl. dim
                     # churn) never hit the fact-delta tune above — size
                     # the target legs to the MEASURED state delta
                     # instead, now that the state merge recorded it.
-                    _tune_delta_shuffle(
-                        self.shuffle_partitions, self.state_store.batch_change_rows(batch_id)
-                    )
+                    _tune_delta_shuffle(self.shuffle_partitions, state.rows)
 
             # Target rows for dirty groups.
             if self.dim is None:
@@ -4570,10 +4398,7 @@ class IncrementalAggMV:
         if dim_changes is not None:
             if self.dim_store is None:
                 raise ValueError("dim_changes on an MV without a dimension")
-            self.dim_store.merge(dim_changes, batch_id)
-            mat_dim = self.dim_store.batch_delta(batch_id)
-            if mat_dim is not None:
-                dim_changes = mat_dim
+            dim_changes = self.dim_store.merge(dim_changes, batch_id).changes()
             dim_now = self.dim_store.read()
             dirty_dk = last_change_per_key(dim_changes, [self.dim_key]).select(self.dim_key)
             # upserted/renamed dims: rebuild their rows from current
@@ -4627,6 +4452,3 @@ class IncrementalAggMV:
         else:
             self.target.merge(mv_changes, batch_id)
         return True
-
-    def read(self, version: int | None = None) -> DataFrame:
-        return self.target.read(version)

@@ -1484,21 +1484,13 @@ def _match_join_on_core(
 
 # SELECT d-col-list, (SELECT agg(x|*) FROM fact f WHERE f.fk = d.dk) AS a FROM dim d
 def _split_select_list(select: str) -> list[str]:
-    """Split a select list on top-level commas (commas inside parens —
-    e.g. a future multi-arg function — stay within their item)."""
-    items, depth, cur = [], 0, []
-    for ch in select:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    items.append("".join(cur).strip())
-    return items
+    """Split a select list on top-level commas (commas inside parens or
+    string literals stay within their item). Text the tokenizer
+    rejects comes back as one item, which no matcher accepts."""
+    from tiflink_spark.sqlast import split_commas
+
+    items = split_commas(select)
+    return [select.strip()] if items is None else items
 
 
 def match_correlated_count_shape(
@@ -2793,6 +2785,10 @@ def _resolve_groupby_ordinals(query: str) -> str:
     re-bind to the base column and change the grouping. SQL's
     positional GROUP BY, which every matcher otherwise misses.
     ROLLUP/CUBE/GROUPING SETS groupings are left untouched."""
+    from tiflink_spark.sqlast import tokenize
+
+    if tokenize(query) is None:
+        return query  # an ordinal is only resolved against a parsed select list
     gbs = [
         i
         for i in _scan_top_level(query, "GROUP")
@@ -2856,6 +2852,10 @@ def _resolve_orderby_ordinals(query: str) -> str:
     """Rewrite ``ORDER BY 2 DESC`` ordinals to the select items they
     denote (alias when present, else the item text), so the top-k
     routes — which key on named order columns — see the named form."""
+    from tiflink_spark.sqlast import tokenize
+
+    if tokenize(query) is None:
+        return query  # an ordinal is only resolved against a parsed select list
     obs = [
         i
         for i in _scan_top_level(query, "ORDER")

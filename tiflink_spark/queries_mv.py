@@ -637,7 +637,7 @@ def mv_multikey_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "MV CASCADE: an upstream join MV (orders x customer, dirty-key "
         "incremental) feeds a downstream aggregate MV through "
-        "store.changes_between — the upstream target's version diff IS the "
+        "KeyedParquetStore.changes_between — the upstream target's version diff IS the "
         "downstream changelog, exactly how the reference chains MVs "
         "(every MV table is consumable as a source, README.md:8-16). "
         "Scripted inserts + deletes flow through both stages incrementally."
@@ -648,7 +648,6 @@ def mv_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from tiflink_spark.mv import IncrementalJoinMV
-    from tiflink_spark.store import changes_between
 
     t = _t(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="mv_cascade_")
@@ -704,7 +703,7 @@ def mv_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             join_mv.refresh(batch, None, batch_id=bid)
             v_after = join_mv.target.current_version()
             # The cascade edge: upstream target diff -> downstream changelog.
-            downstream = changes_between(join_mv.target, v_before, v_after).select(
+            downstream = join_mv.target.changes_between(v_before, v_after).select(
                 "o_orderkey", "custkey", "o_totalprice", OP_COL, SEQ_COL
             )
             agg_mv.refresh(downstream, batch_id=bid)
@@ -3059,7 +3058,7 @@ def mvapp_auto_window_multi_partition(spark: SparkSession, sf_dir: str) -> DataF
         "per-customer order counts) auto-routed to CascadeMV: the inner "
         "GROUP BY maintains as its own IncrementalAggMV, and the outer "
         "GROUP BY consumes the inner target's version diff as a "
-        "changelog (store.changes_between — the store as a CDC source). "
+        "changelog (KeyedParquetStore.changes_between — the store as a CDC source). "
         "Per-batch work is the inner delta plus the outer's state merge "
         "over THAT delta; neither level ever recomputes. A customer "
         "whose count moves n -> n' retracts from bucket n and adds to "

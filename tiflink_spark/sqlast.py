@@ -98,6 +98,16 @@ def _split_top_commas(toks: list[Token]) -> list[list[Token]]:
     return parts
 
 
+def split_commas(sql: str) -> list[str] | None:
+    """``sql`` split on its top-level commas (commas inside parens or
+    string literals stay within their item), each item verbatim; None
+    when the tokenizer rejects the text."""
+    toks = tokenize(sql)
+    if toks is None:
+        return None
+    return [_slice(sql, part) if part else "" for part in _split_top_commas(toks)]
+
+
 def _find_clause(toks: list[Token], *words: str) -> int | None:
     """Index of the first depth-0 occurrence of the keyword sequence
     ``words`` (e.g. "group", "by"), or None."""

@@ -23,6 +23,21 @@ Spark those guarantees are reproduced with storage-level mechanisms:
 
 Single-writer by design — the reference also serializes commits
 (maxConcurrentCheckpoints=1, TiFlinkApp.java:245).
+
+**What a route may call.** Maintenance routes (mv.Route) open stores
+through their view's :class:`StoreSet` and then call only
+:meth:`~KeyedParquetStore.bootstrap`, :meth:`~KeyedParquetStore.merge`,
+:meth:`~KeyedParquetStore.read`, :meth:`~KeyedParquetStore.read_keys`,
+:meth:`~KeyedParquetStore.read_before`,
+:meth:`~KeyedParquetStore.bootstrap_rows` and, as a cascade's CDC
+source, :meth:`~KeyedParquetStore.current_version` and
+:meth:`~KeyedParquetStore.changes_between`. ``merge`` returns a
+:class:`MergedBatch`: the batch's recorded row count, its change rows
+(``changes()``), the pre-batch rows they displaced (``displaced()``)
+and the distinct values of a column among them (``column_values()``).
+Every per-batch lookup a route needs goes through that record, so a
+new read path (an Arrow one, say) slots in beneath these calls and not
+inside each route.
 """
 
 from __future__ import annotations
@@ -77,24 +92,59 @@ def _int_id(batch_id) -> bool:
     return isinstance(batch_id, int) and not isinstance(batch_id, bool)
 
 
+def _table_epoch(batch_id, tables) -> tuple[str, int] | None:
+    """(table, epoch) of a streaming batch id ``{table}-{epoch}``
+    (MVApp.start_streaming) for one of ``tables``, else None."""
+    if not isinstance(batch_id, str):
+        return None
+    table, _, epoch = batch_id.rpartition("-")
+    return (table, int(epoch)) if table in tables and epoch.isdigit() else None
+
+
+# Maintenance commits (store folds and compactions) name no batch of the
+# view: nothing asks whether they committed, so log compaction drops them.
+_MAINTENANCE_IDS = ("__fold__", "__compact__")
+
+
 class _CommittedBatches(set):
     """A batch log's idempotence set. Explicit batch ids from its
-    lines, plus a compacted integer high-water mark: after a log
-    truncation, every integer batch_id <= ``int_hwm`` is committed by
-    definition (one line is written per processed batch, and Structured
-    Streaming batch ids are monotone, so the truncated prefix is
-    exactly {0..hwm} minus nothing). Non-integer batch ids (compaction
-    markers, ad-hoc writes) are carried explicitly — they are
-    O(maintenance events), not O(batches)."""
+    lines, plus what past log truncations summarized: every integer
+    batch_id <= ``int_hwm`` is committed, and every streaming id
+    ``{table}-{epoch}`` with epoch <= ``table_hwms[table]``. Sound
+    because one line is written per processed batch and batch ids
+    (Structured Streaming epochs, per table) are monotone, so the
+    truncated prefix is exactly {0..hwm}. Other string ids (ad-hoc
+    writes) are carried explicitly — they are O(maintenance events),
+    not O(batches)."""
 
-    def __init__(self, explicit: set, int_hwm: int | None):
+    def __init__(self, explicit: set, int_hwm: int | None, table_hwms: dict | None = None):
         super().__init__(explicit)
         self.int_hwm = int_hwm
+        self.table_hwms = dict(table_hwms or {})
 
     def __contains__(self, item) -> bool:  # type: ignore[override]
         if set.__contains__(self, item):
             return True
-        return self.int_hwm is not None and _int_id(item) and item <= self.int_hwm
+        if _int_id(item):
+            return self.int_hwm is not None and item <= self.int_hwm
+        te = _table_epoch(item, self.table_hwms)
+        return te is not None and te[1] <= self.table_hwms[te[0]]
+
+    def absorb(self, ids, tables) -> "_CommittedBatches":
+        """This summary extended by the dropped ``ids``: integers and
+        ``tables``' streaming ids raise their high-water marks,
+        maintenance ids are forgotten, any other id stays explicit (ids
+        this summary carried explicitly are re-sorted the same way)."""
+        out = _CommittedBatches(set(), self.int_hwm, self.table_hwms)
+        for b in [*self, *ids]:
+            te = _table_epoch(b, tables)
+            if _int_id(b):
+                out.int_hwm = b if out.int_hwm is None else max(out.int_hwm, b)
+            elif te is not None:
+                out.table_hwms[te[0]] = max(out.table_hwms.get(te[0], te[1]), te[1])
+            elif not str(b).startswith(_MAINTENANCE_IDS):
+                set.add(out, b)
+        return out
 
 
 class _BatchLines:
@@ -108,9 +158,9 @@ class _BatchLines:
         self.path = path
         self._cache: tuple | None = None
 
-    def parse(self) -> tuple[list[dict], int | None, set]:
-        """(batch lines, integer-batch high-water mark, non-integer
-        batch ids truncated by past compactions).
+    def parse(self) -> tuple[list[dict], _CommittedBatches]:
+        """(batch lines, the summary past compactions left of the
+        truncated prefix).
 
         Cached on the file's (mtime_ns, size): a refresh batch consults
         a manifest many times (idempotence check, version lookup, batch
@@ -119,12 +169,11 @@ class _BatchLines:
         refresh cadence. Appends and rewrites both change the stat key,
         so the cache can never serve a stale parse."""
         lines: list[dict] = []
-        hwm: int | None = None
-        others: set = set()
+        done = _CommittedBatches(set(), None)
         try:
             st = os.stat(self.path)
         except OSError:
-            return lines, hwm, others
+            return lines, done
         key = (st.st_mtime_ns, st.st_size)
         if self._cache is not None and self._cache[0] == key:
             return self._cache[1]
@@ -145,50 +194,53 @@ class _BatchLines:
                 # (mtime,size), forcing a clean re-parse). A torn line
                 # anywhere else is real corruption — raise.
                 if i == len(raw) - 1:
-                    return lines, hwm, others
+                    return lines, done
                 raise
             if rec.get("type") == HWM_TYPE:
                 h = rec.get("int_batch_hwm")
-                if h is not None:
-                    hwm = h if hwm is None else max(hwm, h)
-                others.update(rec.get("other_batches", []))
+                ids = [*([h] if h is not None else []), *rec.get("other_batches", [])]
+                tables = rec.get("table_hwms", {})
+                done = done.absorb(ids + [f"{t}-{n}" for t, n in tables.items()], tables)
             else:
                 lines.append(rec)
-        self._cache = (key, (lines, hwm, others))
-        return lines, hwm, others
+        self._cache = (key, (lines, done))
+        return lines, done
 
     def committed(self) -> _CommittedBatches:
-        lines, hwm, others = self.parse()
-        return _CommittedBatches({c["batch_id"] for c in lines} | others, hwm)
+        lines, done = self.parse()
+        return _CommittedBatches(
+            {c["batch_id"] for c in lines} | done, done.int_hwm, done.table_hwms
+        )
 
     def append(self, rec: dict) -> None:
         # Single append = atomic-enough commit point for one writer.
         with open(self.path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 
-    def rewrite(self, lines: list[dict], hwm: int | None, others: set) -> None:
-        if hwm is not None or others:
-            hwm_line = {"type": HWM_TYPE, "int_batch_hwm": hwm, "ts": time.time()}
-            lines = [dict(hwm_line, other_batches=sorted(others, key=str)), *lines]
+    def rewrite(self, lines: list[dict], done: _CommittedBatches) -> None:
+        if done.int_hwm is not None or done.table_hwms or set(done):
+            hwm_line = {"type": HWM_TYPE, "int_batch_hwm": done.int_hwm, "ts": time.time()}
+            if done.table_hwms:
+                hwm_line["table_hwms"] = dict(sorted(done.table_hwms.items()))
+            lines = [dict(hwm_line, other_batches=sorted(done, key=str)), *lines]
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
             f.writelines(json.dumps(c) + "\n" for c in lines)
         os.replace(tmp, self.path)
         self._cache = None
 
-    def compact(self, keep_last: int) -> list[dict] | None:
+    def compact(self, keep_last: int, tables=()) -> list[dict] | None:
         """Truncate the log to its last ``keep_last`` lines, summarizing
-        the dropped prefix in one high-water-mark line (``int_batch_hwm``
-        = max integer batch id dropped; non-integer ids carried
-        explicitly), so every dropped id still reads as committed. The
-        kept lines, or None when there was nothing to drop."""
-        lines, hwm, others = self.parse()
+        the dropped prefix in one high-water-mark line (see
+        :meth:`_CommittedBatches.absorb`; ``tables`` are the view's
+        source tables, whose streaming ids summarize per table), so
+        every dropped batch id still reads as committed. The kept
+        lines, or None when there was nothing to drop."""
+        lines, done = self.parse()
         if len(lines) <= keep_last:
             return None
         keep, dropped = lines[-keep_last:], lines[:-keep_last]
-        ids = [c["batch_id"] for c in dropped]
-        hwm = max([b for b in ids if _int_id(b)] + ([hwm] if hwm is not None else []), default=None)
-        self.rewrite(keep, hwm, others | {b for b in ids if not _int_id(b)})
+        self.rewrite(keep, done.absorb([c["batch_id"] for c in dropped], set(tables)))
         return keep
 
 
@@ -335,6 +387,66 @@ def _assert_pk_not_null(df: DataFrame, pk: list[str]) -> DataFrame:
             ),
         )
     return guard
+
+
+class MergedBatch:
+    """One batch as a store merged it — what :meth:`KeyedParquetStore.merge`
+    returns. ``rows`` is the change-row count the merge recorded (None
+    when the batch's line carries no merge stats). Neither frame is
+    built until it is asked for, so a merge whose caller ignores the
+    record costs no extra driver time."""
+
+    def __init__(self, store: "KeyedParquetStore", batch_id, changes: DataFrame, project=None):
+        self._store, self._batch_id, self._input = store, batch_id, changes
+        self._stats = store._batch_stats(batch_id)
+        self.rows = self._stats.get("change_rows")
+        self._project = project or (lambda df: df)
+        self._changes: DataFrame | None = None
+
+    def projected(self, project) -> "MergedBatch":
+        """The same batch with both frames passed through ``project``."""
+        return MergedBatch(self._store, self._batch_id, self._input, project)
+
+    def changes(self) -> DataFrame:
+        """The batch's change rows: the delta parquet the merge wrote,
+        or the input when it wrote none (an empty batch). Consumers
+        after the merge should read these, not the input: the — often
+        expensive — changelog lineage then runs exactly once, inside
+        the merge, and everything after it scans a micro-batch-sized
+        parquet."""
+        if self._changes is None:
+            delta = self._store.batch_delta(self._batch_id)
+            self._changes = self._project(self._input if delta is None else delta)
+        return self._changes
+
+    def column_values(self, col: str):
+        """Distinct values of ``col`` in the batch's change rows, read
+        driver-side (see :meth:`KeyedParquetStore.batch_column_values`);
+        None when unavailable or too many."""
+        return self._store.batch_column_values(self._batch_id, col)
+
+    def displaced(self) -> DataFrame:
+        """The pre-batch rows of exactly the keys in :meth:`changes` —
+        the old versions a retraction or a dirty-key derivation needs.
+        Read from the version before the batch, pruned to the buckets
+        its change rows hash into and IN-filtered on their first PK
+        column (O(touched buckets), not a table scan; the whole
+        pre-batch version when the buckets are unknown), then
+        semi-joined to the changed PKs, broadcast while the batch stays
+        within BROADCAST_KEYS_MAX rows."""
+        store, pk = self._store, self._store.pk
+        before = store.version_before_batch(self._batch_id)
+        buckets = self._stats.get("batch_buckets")
+        if buckets is None:
+            old = store.read(before)
+        else:
+            kv = self.column_values(pk[0])
+            keys = None if kv is None else (pk[0], kv)
+            old = store.read_buckets(buckets, before, key_filter=keys)
+        keys = self.changes().select(*pk).distinct()
+        if self.rows is not None and self.rows <= BROADCAST_KEYS_MAX:
+            keys = F.broadcast(keys)
+        return self._project(old.join(keys, pk, "left_semi"))
 
 
 class KeyedParquetStore:
@@ -537,30 +649,12 @@ class KeyedParquetStore:
         state otherwise."""
         return self.read(self.version_before_batch(batch_id))
 
-    def batch_buckets(self, batch_id) -> list[int] | None:
-        """The buckets ``batch_id``'s change rows hash into, recorded at
-        merge time — None when unknown (legacy line, bootstrap, or a
-        batch outside the manifest window). The pruning handle for
-        :meth:`read_buckets` retraction lookups."""
-        return self._batch_stats(batch_id).get("batch_buckets")
-
-    def batch_change_rows(self, batch_id) -> int | None:
-        """Change-row count of ``batch_id``'s merge (from the commit
-        stats) — the driver-side handle maintenance uses to size the
-        rest of the batch's shuffles to the actual delta volume."""
-        return self._batch_stats(batch_id).get("change_rows")
-
     def batch_delta(self, batch_id) -> DataFrame | None:
         """The materialized change rows of ``batch_id``'s merge — the
         delta parquet that merge's single write action produced —
-        re-read as a DataFrame (bucket column dropped). Downstream
-        consumers of the same batch (retraction lookup, state merge,
-        target diff) should prefer this over re-executing the raw
-        changelog lineage: the — often expensive — lineage then runs
-        exactly once, inside the merge, and everything after it scans
-        a micro-batch-sized parquet. None when unavailable (bootstrap,
-        empty batch, legacy manifest line, or the file was vacuumed) —
-        callers fall back to the original changes lineage."""
+        re-read as a DataFrame (bucket column dropped); None when the
+        batch wrote none, or it was vacuumed. Routes reach it through
+        :meth:`MergedBatch.changes`."""
         found = self._batch_delta_dir(batch_id)
         if found is None:
             return None
@@ -576,16 +670,6 @@ class KeyedParquetStore:
 
             reader = reader.schema(StructType.fromJson(json.loads(sj)))
         return reader.parquet(out).drop(BUCKET_COL, CHAIN_COL)
-
-    def batch_key_values(self, batch_id, max_values: int = 200_000):
-        """The distinct first-PK-column values of ``batch_id``'s change
-        rows, read DRIVER-SIDE from the batch's delta parquet (pyarrow,
-        no Spark job) — the IN-list :meth:`read_buckets` pushes into
-        the parquet scan for the retraction lookup. None when the delta
-        is unavailable or the key set exceeds ``max_values`` (a huge IN
-        list costs more than it prunes)."""
-        kv = self.batch_column_values(batch_id, self.pk[0], max_values)
-        return None if kv is None else (self.pk[0], kv)
 
     def batch_column_values(self, batch_id, col: str, max_values: int = 200_000):
         """Distinct values of ``col`` in ``batch_id``'s change rows,
@@ -641,9 +725,9 @@ class KeyedParquetStore:
         """Bucket-pruned read: only the given PK-hash buckets (and the
         matching slice of any delta chain). The retraction fast path —
         an old-row lookup for a batch's keys needs only the buckets
-        those keys hash into (batch_buckets), not the table. At scale
-        this is the difference between a per-batch O(touched buckets)
-        lookup and a full-table scan per refresh.
+        those keys hash into (MergedBatch.displaced), not the table.
+        At scale this is the difference between a per-batch O(touched
+        buckets) lookup and a full-table scan per refresh.
 
         ``key_filter`` = (column, values) additionally pushes an IN
         predicate into the scan — with PK-sorted buckets the parquet
@@ -677,19 +761,21 @@ class KeyedParquetStore:
             base, deltas, bucket_filter=want, key_filter=key_filter
         )
 
-    def read_changed_before(self, batch_id) -> DataFrame:
-        """The pre-batch rows that can hold ``batch_id``'s changed keys,
-        read after the batch merged here: the buckets its change rows
-        hash into (batch_buckets), IN-filtered to their first-PK values
-        (batch_key_values) — O(touched buckets), not a table scan. The
-        whole pre-batch version when the buckets are unknown. A
-        superset of the changed keys' old rows: callers still join
-        exactly."""
-        prev_v = self.version_before_batch(batch_id)
-        bks = self.batch_buckets(batch_id)
-        if bks is None:
-            return self.read(prev_v)
-        return self.read_buckets(bks, prev_v, key_filter=self.batch_key_values(batch_id))
+    def changes_between(self, from_version: int | None, to_version: int) -> DataFrame:
+        """The upsert changelog (+I/+U/-D with __seq) that transforms one
+        committed version into a later one — the store as a CDC SOURCE.
+
+        This is what lets MVs cascade: a downstream MV consumes the diff
+        of an upstream MV's target store exactly like any other
+        changelog (the reference chains MVs the same way — every MV
+        table is itself a TiKV table another TiFlinkApp can consume,
+        README.md:8-16)."""
+        from tiflink_spark.changelog import diff_states, with_insert_ops
+
+        new = self.read(to_version)
+        if from_version is None:
+            return with_insert_ops(new)
+        return diff_states(self.read(from_version), new, self.pk)
 
     def _read_base(self, commit: dict) -> DataFrame:
         paths = sorted(
@@ -823,10 +909,11 @@ class KeyedParquetStore:
         )
         return version
 
-    def vacuum(self, keep_last: int = 1) -> list[str]:
+    def vacuum(self, keep_last: int = 1, tables=()) -> list[str]:
         """Compact the manifest to its last ``keep_last`` versions, then
         delete the version data directories only dropped lines
-        referenced.
+        referenced. ``tables``: the view's source tables, whose
+        streaming batch ids the compaction summarizes per table.
 
         Without compaction the manifest grows one JSON line per batch
         and is re-read driver-side on every store open — at the
@@ -840,7 +927,7 @@ class KeyedParquetStore:
         import shutil
 
         self._await_fold()
-        keep = self._log.compact(keep_last)
+        keep = self._log.compact(keep_last, tables)
         if keep is None:
             return []
         live_dirs = {rel.split(f"/{BUCKET_COL}=")[0] for c in keep for rel in c["buckets"].values()}
@@ -864,13 +951,13 @@ class KeyedParquetStore:
         high-water mark but its line truncated) raises loudly: its
         pre-state was vacuumed with the manifest tail, so a diff
         against it would be silently wrong."""
-        commits, hwm, others = self._log.parse()
+        commits, done = self._log.parse()
         prev = None
         for c in commits:
             if c["batch_id"] == batch_id:
                 return prev
             prev = c["version"]
-        if batch_id in _CommittedBatches(others, hwm):
+        if batch_id in done:
             raise KeyError(
                 f"batch {batch_id!r} predates the manifest compaction window; "
                 "its pre-state is no longer reconstructable"
@@ -886,7 +973,7 @@ class KeyedParquetStore:
         if all(c["batch_id"] != batch_id for c in self._commits()):
             return
         self._await_fold()  # the attempt's fold appends to the tail
-        commits, hwm, others = self._log.parse()
+        commits, done = self._log.parse()
         i = next(i for i, c in enumerate(commits) if c["batch_id"] == batch_id)
         later = sorted({str(c["batch_id"]) for c in commits[i + 1:]})
         if any(not b.startswith("__fold__") for b in later):
@@ -895,7 +982,7 @@ class KeyedParquetStore:
                 f"but later batches {later} committed after it (a skipped unfinished "
                 "batch, or a view written before it had a batch log)"
             )
-        self._log.rewrite(commits[:i], hwm, others)
+        self._log.rewrite(commits[:i], done)
         self._read_cache.clear()
 
     # -- write --------------------------------------------------------------
@@ -972,7 +1059,7 @@ class KeyedParquetStore:
             if d.startswith(f"{BUCKET_COL}=")
         )
 
-    def merge(self, changes: DataFrame, batch_id) -> bool:
+    def merge(self, changes: DataFrame, batch_id) -> "MergedBatch":
         """MERGE an upsert-changelog batch (``__op``/``__seq`` columns)
         into the store.
 
@@ -985,11 +1072,14 @@ class KeyedParquetStore:
         the chain touched and clears it — the Hudi-MOR / Paimon-LSM
         compaction contract.
 
-        Returns False (no-op) if batch_id already committed — the
-        idempotence that makes streaming redelivery exactly-once.
+        Returns the merged batch (:class:`MergedBatch`). A batch_id
+        already committed here writes nothing and returns that batch's
+        record — the idempotence that makes streaming redelivery
+        exactly-once, and how the second route to merge one batch into
+        a shared store gets the first one's change rows.
         """
         if batch_id in self.committed_batches():
-            return False
+            return MergedBatch(self, batch_id, changes)
         # A fold scheduled by an earlier merge may still be running in
         # its background thread; the chain (and the manifest tail) must
         # not move under it, so the next merge of this store is the
@@ -1007,11 +1097,10 @@ class KeyedParquetStore:
             raise ValueError(f"changelog batch missing columns {sorted(missing)}")
         # Run the delta write under the job's maintenance session,
         # wherever the changelog lineage was built.
-        changes = rehome(changes, self.spark)
         # Contract guards ride the lineage (fail the job on an op
         # outside +I/+U/-D, or a NULL PK — an unaddressable row —
         # instead of silently corrupting the view).
-        changes = assert_valid_ops(_assert_pk_not_null(changes, self.pk))
+        guarded = assert_valid_ops(_assert_pk_not_null(rehome(changes, self.spark), self.pk))
         last = commits[-1]
         prev = last["buckets"]
         prev_deltas = list(last.get("deltas") or [])
@@ -1034,7 +1123,7 @@ class KeyedParquetStore:
         # parallelism intact.
         rel = f"data/v{version}"
         out = os.path.join(self.path, rel)
-        bucketed = changes.withColumn(
+        bucketed = guarded.withColumn(
             BUCKET_COL, _bucket_expr(self.pk, self.num_buckets)
         ).withColumn(CHAIN_COL, F.lit(version))
         # the write's own analyzed schema — recorded so every read-back
@@ -1077,7 +1166,7 @@ class KeyedParquetStore:
                 deltas=prev_deltas or None,
                 delta_buckets=sorted(prev_dbuckets),
             )
-            return True
+            return MergedBatch(self, batch_id, changes)
 
         chain = [*prev_deltas, rel]
         chain_buckets = prev_dbuckets | set(changed)
@@ -1098,7 +1187,7 @@ class KeyedParquetStore:
             )
             if len(chain) > MAX_PENDING_DELTAS:
                 self._schedule_fold()
-            return True
+            return MergedBatch(self, batch_id, changes)
 
         # Oversized batch (a bucket's worth of rows or more): fold
         # synchronously — the batch itself is bucket-scale work, and
@@ -1112,7 +1201,7 @@ class KeyedParquetStore:
             delta_buckets=sorted(chain_buckets),
         )
         self._fold_chain()
-        return True
+        return MergedBatch(self, batch_id, changes)
 
 
     # -- chain folding --------------------------------------------------------
@@ -1294,25 +1383,3 @@ def run_batch(log: _BatchLines, stores: list[KeyedParquetStore], batch_id, step,
     if not logged:
         log.append({"batch_id": batch_id, "ts": time.time()})
     return out
-
-
-def changes_between(
-    store: KeyedParquetStore, from_version: int | None, to_version: int
-) -> DataFrame:
-    """The upsert changelog (+I/+U/-D with __seq) that transforms one
-    committed version into a later one — the store as a CDC SOURCE.
-
-    This is what lets MVs cascade: a downstream MV consumes the diff of
-    an upstream MV's target store exactly like any other changelog
-    (the reference chains MVs the same way — every MV table is itself a
-    TiKV table another TiFlinkApp can consume, README.md:8-16).
-    """
-    from tiflink_spark.changelog import diff_states
-
-    new = store.read(to_version)
-    if from_version is None:
-        from tiflink_spark.changelog import with_insert_ops
-
-        return with_insert_ops(new)
-    old = store.read(from_version)
-    return diff_states(old, new, store.pk)
