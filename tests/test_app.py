@@ -1970,6 +1970,31 @@ def test_shared_mirror_projection_fails_fast_on_missing_column(spark, tmp_path):
     assert store.path in str(e.value)
 
 
+def test_shared_mirror_merge_never_writes(spark, tmp_path):
+    """The mirror's merge builds the record of the inner level's batch,
+    projected; a batch the inner store holds no line of (an outer-only
+    batch) leaves it untouched too."""
+    from tiflink_spark.app import _SharedMirrorStore
+    from tiflink_spark.changelog import OP_COL, OP_UPDATE, SEQ_COL
+    from tiflink_spark.store import KeyedParquetStore
+
+    store = KeyedParquetStore(spark, str(tmp_path / "tgt"), ["k"], num_buckets=2)
+    store.bootstrap(spark.createDataFrame([(1, 2, "x")], "k int, n long, h string"))
+    changes = spark.createDataFrame(
+        [(1, 3, "y", OP_UPDATE, 0)], f"k int, n long, h string, {OP_COL} string, {SEQ_COL} long"
+    )
+    store.merge(changes, batch_id=1)
+    mirror = _SharedMirrorStore(store, ["k", "n"])
+    v, lines = store.current_version(), len(store.recent_commits(100))
+    inner = mirror.merge(changes.select("k", "n", OP_COL, SEQ_COL), batch_id=1)
+    assert [tuple(r) for r in inner.changes().select("k", "n").collect()] == [(1, 3)]
+    assert [tuple(r) for r in inner.displaced().collect()] == [(1, 2)]
+    outer_only = mirror.merge(changes.limit(0), batch_id=2)
+    assert outer_only.changes().count() == 0
+    assert store.current_version() == v
+    assert len(store.recent_commits(100)) == lines
+
+
 def test_median_measure_routes_and_converges(spark, tmp_path):
     from tiflink_spark.planner import match_agg_shape
 

@@ -88,7 +88,7 @@ from tiflink_spark.planner import (
     split_nested_query,
 )
 from tiflink_spark.session import JOB
-from tiflink_spark.store import KeyedParquetStore, StoreSet, run_batch
+from tiflink_spark.store import KeyedParquetStore, MergedBatch, StoreSet, run_batch
 from tiflink_spark.types import create_table_ddl
 
 # cost_advisor default: a join-agg view whose FULL query executes within
@@ -384,9 +384,10 @@ class _SharedMirrorStore:
     Reads delegate to the shared store, projected to the columns the
     outer was planned against (the inner target may hold hidden engine
     columns); bootstrap is a no-op. The inner level has always
-    committed the batch already, so a merge is a replay: it writes
-    nothing and returns the inner level's record, projected the same
-    way."""
+    committed the batch already, so a merge writes nothing: it returns
+    the record of the inner level's commit of the batch, projected the
+    same way (a record of the outer's own changes when the inner level
+    holds no line of the batch)."""
 
     def __init__(self, store, cols: list):
         self._store = store
@@ -423,8 +424,8 @@ class _SharedMirrorStore:
     def bootstrap(self, df, batch_id=0) -> bool:
         return False  # the inner level bootstrapped the shared target
 
-    def merge(self, changes, batch_id):
-        return self._store.merge(changes, batch_id).projected(self._project)
+    def merge(self, changes, batch_id) -> MergedBatch:
+        return MergedBatch(self._store, batch_id, changes, self._project)
 
 
 class CascadeMV(Route):

@@ -926,7 +926,10 @@ def _match_window_core(
     wins: list[tuple[str, str]] = []
     out: list[str] = []
     group_keys: tuple[str, ...] | None = None
-    for item in _split_select_list(select):
+    items = _split_select_list(select)
+    if items is None:
+        return None
+    for item in items:
         if re.fullmatch(_IDENT, item):
             if item.lower() not in cols:
                 return None
@@ -1201,7 +1204,10 @@ def _match_theta_join_core(
             return None
         pred = f"({pred.strip()}) AND ({w.strip()})"
     out: list[str] = []
-    for item in _split_select_list(select):
+    items = _split_select_list(select)
+    if items is None:
+        return None
+    for item in items:
         dq = dequalify(item)
         if dq is None or not re.fullmatch(_IDENT, dq.strip()):
             return None
@@ -1330,7 +1336,10 @@ def match_full_outer_shape(
             fact_fks.append(r[1])
             dim_keys.append(l[1])
     out: list[str] = []
-    for item in _split_select_list(select):
+    items = _split_select_list(select)
+    if items is None:
+        return None
+    for item in items:
         if not re.fullmatch(rf"(?:{_IDENT}\s*\.\s*)?{_IDENT}", item.strip()):
             return None  # bare/qualified column refs only
         ri = resolve(item)
@@ -1441,7 +1450,10 @@ def _match_join_on_core(
         l, r = r, l
     left_key, right_key = l[1], r[1]
     out: list[str] = []
-    for item in _split_select_list(select):
+    items = _split_select_list(select)
+    if items is None:
+        return None
+    for item in items:
         ri = resolve(item)
         # every output column must be unambiguous as a bare name —
         # the MV relation stores bare names
@@ -1483,14 +1495,14 @@ def _match_join_on_core(
 
 
 # SELECT d-col-list, (SELECT agg(x|*) FROM fact f WHERE f.fk = d.dk) AS a FROM dim d
-def _split_select_list(select: str) -> list[str]:
+def _split_select_list(select: str) -> list[str] | None:
     """Split a select list on top-level commas (commas inside parens or
-    string literals stay within their item). Text the tokenizer
-    rejects comes back as one item, which no matcher accepts."""
+    string literals stay within their item), or None when the tokenizer
+    rejects the text: a matcher then declines and a rewrite leaves the
+    query as written."""
     from tiflink_spark.sqlast import split_commas
 
-    items = split_commas(select)
-    return [select.strip()] if items is None else items
+    return split_commas(select)
 
 
 def match_correlated_count_shape(
@@ -2219,7 +2231,8 @@ def _match_global_agg_core(
         cols = {c.lower() for c in source_columns[table]}
     if where is not None and (cols is None or not _row_local_expr_ok(where, cols)):
         return None
-    measures = _parse_measures(_split_select_list(select), cols)
+    items = _split_select_list(select)
+    measures = None if items is None else _parse_measures(items, cols)
     if not measures:
         return None
     if len({mm.alias.lower() for mm in measures}) != len(measures):
@@ -2273,7 +2286,7 @@ def _match_agg_core(
         return None
     key_terms = _split_select_list(keys_text)
     items = _split_select_list(select)
-    if len(items) <= len(key_terms):
+    if key_terms is None or items is None or len(items) <= len(key_terms):
         return None
     cols = None
     if source_columns is not None and table in source_columns:
@@ -2444,7 +2457,7 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
         inner = _paren_wrapped(body[rm.end() - 1 :])
         if inner is None:
             return None
-        terms = [t.strip() for t in _split_select_list(inner) if t.strip()]
+        terms = [t.strip() for t in _split_select_list(inner) or () if t.strip()]
         if not terms:
             return None
         if rm.group(1).upper() == "ROLLUP":
@@ -2466,8 +2479,11 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
     gbody = _paren_wrapped(body[gm.end() - 1 :])
     if gbody is None:
         return None
+    items = _split_select_list(gbody)
+    if items is None:
+        return None
     sets: list[tuple[str, ...]] = []
-    for item in _split_select_list(gbody):
+    for item in items:
         item = item.strip()
         if re.match(r"(?is)^(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", item):
             return None  # nested de-sugaring forms stay on recompute
@@ -2476,9 +2492,10 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
         # single non-splittable expression — "(a, b)" is the set
         # {a, b}; "(a + b)" is one expression term.
         if inner is not None:
-            sets.append(
-                tuple(t.strip() for t in _split_select_list(inner) if t.strip())
-            )
+            terms = _split_select_list(inner)
+            if terms is None:
+                return None
+            sets.append(tuple(t.strip() for t in terms if t.strip()))
             continue
         if not item:
             return None
@@ -2543,7 +2560,7 @@ def _match_grouping_sets_core(
             if _norm_sql(t) not in {_norm_sql(x) for x in set_terms}:
                 set_terms.append(t)
     items = _split_select_list(select)
-    if len(items) <= len(set_terms):
+    if items is None or len(items) <= len(set_terms):
         return None
     # Leading select items are the grouping keys: bare columns, or
     # ``expr AS alias`` computed keys (derived onto fact rows by the
@@ -2785,10 +2802,6 @@ def _resolve_groupby_ordinals(query: str) -> str:
     re-bind to the base column and change the grouping. SQL's
     positional GROUP BY, which every matcher otherwise misses.
     ROLLUP/CUBE/GROUPING SETS groupings are left untouched."""
-    from tiflink_spark.sqlast import tokenize
-
-    if tokenize(query) is None:
-        return query  # an ordinal is only resolved against a parsed select list
     gbs = [
         i
         for i in _scan_top_level(query, "GROUP")
@@ -2804,6 +2817,8 @@ def _resolve_groupby_ordinals(query: str) -> str:
     if re.match(r"(?is)^DISTINCT\b", select_txt):
         return query
     items = _split_select_list(select_txt)
+    if items is None:
+        return query  # an ordinal is only resolved against a parsed select list
     g = gbs[0]
     m = re.match(r"(?is)^GROUP\s+BY\s+", query[g:])
     body_start = g + m.end()
@@ -2815,6 +2830,8 @@ def _resolve_groupby_ordinals(query: str) -> str:
     if re.search(r"(?is)\b(ROLLUP|CUBE|GROUPING)\b", body):
         return query
     terms = _split_select_list(body)
+    if terms is None:
+        return query
     out_terms = []
     for t in terms:
         if re.fullmatch(r"\d+", t):
@@ -2852,10 +2869,6 @@ def _resolve_orderby_ordinals(query: str) -> str:
     """Rewrite ``ORDER BY 2 DESC`` ordinals to the select items they
     denote (alias when present, else the item text), so the top-k
     routes — which key on named order columns — see the named form."""
-    from tiflink_spark.sqlast import tokenize
-
-    if tokenize(query) is None:
-        return query  # an ordinal is only resolved against a parsed select list
     obs = [
         i
         for i in _scan_top_level(query, "ORDER")
@@ -2871,14 +2884,18 @@ def _resolve_orderby_ordinals(query: str) -> str:
     if re.match(r"(?is)^DISTINCT\b", select_txt):
         return query
     items = _split_select_list(select_txt)
+    if items is None:
+        return query  # an ordinal is only resolved against a parsed select list
     m = re.match(r"(?is)^ORDER\s+BY\s+", query[obs[0] :])
     body_start = obs[0] + m.end()
     stop = len(query)
     for j in _scan_top_level(query[body_start:], "LIMIT"):
         stop = min(stop, body_start + j)
-    body = query[body_start:stop]
+    terms = _split_select_list(query[body_start:stop])
+    if terms is None:
+        return query
     out_terms = []
-    for t in _split_select_list(body):
+    for t in terms:
         tm = re.fullmatch(r"(?is)(\d+)(\s+(?:ASC|DESC))?", t.strip())
         if tm is not None:
             n = int(tm.group(1))
@@ -2910,12 +2927,10 @@ def _swap_right_join(query: str) -> str:
         return query
     # SELECT * / t.* expands in join order — swapping sides would
     # reorder the output schema (DDL, positional consumers), so leave
-    # star projections alone
+    # star projections (or a select list the tokenizer rejects) alone
     select_txt = re.sub(r"(?is)^\s*SELECT\s+", "", m.group("head")).strip()
-    if any(
-        it.strip() == "*" or it.strip().endswith(".*")
-        for it in _split_select_list(select_txt)
-    ):
+    items = _split_select_list(select_txt)
+    if items is None or any(it == "*" or it.endswith(".*") for it in items):
         return query
     return (
         f"{m.group('head')}FROM {m.group('t2')}{a2} LEFT JOIN "
@@ -3099,8 +3114,11 @@ def _match_projection_core(
         out = _QUAL_RE.sub(sub, s)
         return None if bad else out
 
+    select_items = _split_select_list(select)
+    if select_items is None:
+        return None
     items: list[tuple[str, str]] = []
-    for item in _split_select_list(select):
+    for item in select_items:
         if item == "*":
             items.extend((c, c) for c in source_columns[table])
             continue
@@ -3525,8 +3543,8 @@ def rewrite_theta_tree(
     inner_tables = names[:-1]
     last = joins[-1]
     inner_low = all_low - low[names[-1]]
-    sel_items = [i.strip() for i in _split_select_list(s.select)]
-    if any(not re.fullmatch(_IDENT, i) for i in sel_items):
+    sel_items = [i.strip() for i in _split_select_list(s.select) or ()]
+    if not sel_items or any(not re.fullmatch(_IDENT, i) for i in sel_items):
         return None
     if s.where is not None and not _row_local_expr_ok(s.where, all_low):
         return None
@@ -3967,7 +3985,10 @@ def _match_join_projection_core(
     for t in tables:
         for c in cols[t]:
             taken[c] = taken.get(c, 0) + 1
-    for item in _split_select_list(select):
+    items = _split_select_list(select)
+    if items is None:
+        return None
+    for item in items:
         am = _KEY_ALIAS_RE.match(item)
         if am is not None:
             expr, alias = am.group("expr").strip(), am.group("alias")
@@ -4305,7 +4326,7 @@ def _match_join_agg_core(
     left_dims = {d.dim for d in dims if d.how == "left"}
     key_terms = _split_select_list(keys_body)
     items = _split_select_list(select)
-    if len(items) <= len(key_terms):
+    if key_terms is None or items is None or len(items) <= len(key_terms):
         return None
     allowed = set().union(*(set(cols[t]) for t in tables)) - ambiguous
     keys: list[tuple[str | None, str]] = []  # (source table | None, out name)
@@ -4573,7 +4594,10 @@ def match_temporal_join_shape(
     fk = [by_low[p.lower()][1] for p in dim_pk]
 
     out_cols, out_src = [], []
-    for item in _split_select_list(s.select):
+    items = _split_select_list(s.select)
+    if items is None:
+        return None
+    for item in items:
         rr = resolve(item)
         if rr is None:
             return None

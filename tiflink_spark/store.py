@@ -198,9 +198,9 @@ class _BatchLines:
                 raise
             if rec.get("type") == HWM_TYPE:
                 h = rec.get("int_batch_hwm")
-                ids = [*([h] if h is not None else []), *rec.get("other_batches", [])]
-                tables = rec.get("table_hwms", {})
-                done = done.absorb(ids + [f"{t}-{n}" for t, n in tables.items()], tables)
+                done = done.absorb([*([h] if h is not None else []), *rec.get("other_batches", [])], ())
+                for t, n in rec.get("table_hwms", {}).items():
+                    done.table_hwms[t] = max(done.table_hwms.get(t, n), n)
             else:
                 lines.append(rec)
         self._cache = (key, (lines, done))
@@ -394,7 +394,8 @@ class MergedBatch:
     returns. ``rows`` is the change-row count the merge recorded (None
     when the batch's line carries no merge stats). Neither frame is
     built until it is asked for, so a merge whose caller ignores the
-    record costs no extra driver time."""
+    record costs no extra driver time. ``project``, when given, maps
+    both frames (a cascade mirror's column projection)."""
 
     def __init__(self, store: "KeyedParquetStore", batch_id, changes: DataFrame, project=None):
         self._store, self._batch_id, self._input = store, batch_id, changes
@@ -402,10 +403,6 @@ class MergedBatch:
         self.rows = self._stats.get("change_rows")
         self._project = project or (lambda df: df)
         self._changes: DataFrame | None = None
-
-    def projected(self, project) -> "MergedBatch":
-        """The same batch with both frames passed through ``project``."""
-        return MergedBatch(self._store, self._batch_id, self._input, project)
 
     def changes(self) -> DataFrame:
         """The batch's change rows: the delta parquet the merge wrote,
