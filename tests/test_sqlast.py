@@ -24,7 +24,11 @@ from tiflink_spark.planner import (
     match_grouping_sets_shape,
     match_order_limit_shape,
     match_projection_shape,
+    match_corr_exists_shape,
+    match_corr_scalar_shape,
+    match_corr_semijoin_shape,
     match_correlated_count_shape,
+    match_full_outer_shape,
     match_semijoin_shape,
     match_setop_shape,
     match_theta_join_shape,
@@ -335,6 +339,139 @@ class TestJoinFrontEndGolden:
         expected = _golden()["join"][query]
         got = [repr(s) for s in _golden_join_shapes(query)]
         names = ("theta", "join", "join_proj", "join_agg", "semi", "corr")
+        for name, e, g in zip(names, expected, got):
+            assert g == e, f"{name} drift on: {query}\n golden={e}\n now={g}"
+
+
+# -- subquery family (semi/anti join, correlated IN/EXISTS, scalar
+# subqueries) and the full outer join: the battery reaches every accept
+# and reject rule of the WHERE-term and select-list subquery parsers.
+_SUBQUERY_EDGES = [
+    # IN: alias without inner WHERE, DISTINCT, qualified columns
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d d2)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d AS d2)",
+    "SELECT id, g FROM f WHERE g IN (SELECT DISTINCT dk FROM d)",
+    "SELECT id, g FROM f WHERE g IN (SELECT DISTINCT dk FROM d WHERE u > 1)",
+    "SELECT id, g FROM f WHERE g IN (SELECT d.dk FROM d)",
+    "SELECT id, g FROM f WHERE f.g IN (SELECT dk FROM d)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE u > 1)",
+    "SELECT id, g FROM f x WHERE g NOT IN (SELECT dk FROM d y WHERE y.u > x.v)",
+    "SELECT id, g FROM f x WHERE v > 1 AND g IN "
+    "(SELECT dk FROM d AS y WHERE y.u < x.v AND y.attr <> 'a')",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE (u > 1 OR attr = 2))",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE u > 1 OR attr = 2)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE u > 1) AND v > 3",
+    "SELECT id, g FROM f WHERE v > 3 OR g IN (SELECT dk FROM d)",
+    "SELECT id, g FROM f WHERE v > 3 OR s = 'x' AND g IN "
+    "(SELECT dk FROM d WHERE u > 1)",
+    "SELECT id, g FROM f WHERE (v > 3 OR s = 'x') AND g IN "
+    "(SELECT dk FROM d WHERE u > 1)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE rand() > 0.5)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE zz > 1)",
+    "SELECT id, g, g FROM f WHERE g IN (SELECT dk FROM d WHERE u > 1)",
+    "SELECT id, v + 1 AS v1 FROM f WHERE g IN (SELECT dk FROM d)",
+    "SELECT id, g FROM f d WHERE g IN (SELECT dk FROM d WHERE u > 1)",
+    "SELECT id, g FROM f d WHERE g IN (SELECT dk FROM d)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d) ORDER BY id",
+    "SELECT id, g FROM f WHERE g IN (SELECT id FROM f WHERE v > 1)",
+    "SELECT id, g FROM f WHERE v IN (1, 2) AND g IN (SELECT dk FROM d WHERE u > 1)",
+    # EXISTS: theta, equality plus local filter, composite, aliases
+    "SELECT id, g FROM f x WHERE EXISTS (SELECT 1 FROM d y WHERE y.u > x.v)",
+    "SELECT id, g FROM f x WHERE NOT EXISTS "
+    "(SELECT * FROM d y WHERE y.dk = x.g AND y.u < x.v)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE dk = g AND u > 2)",
+    "SELECT id, g FROM f x WHERE EXISTS "
+    "(SELECT 1 FROM d y WHERE y.dk = x.g AND y.attr = x.h)",
+    "SELECT id, g FROM f x WHERE EXISTS (SELECT 1 FROM d AS y WHERE y.dk = x.g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT dk FROM d WHERE dk = g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE u > 2)",
+    "SELECT id, g FROM f WHERE v > 3 OR EXISTS (SELECT 1 FROM d WHERE dk = g)",
+    "SELECT id, g FROM f x WHERE EXISTS (SELECT 1 FROM d x WHERE x.dk = x.g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE dk = g) "
+    "AND EXISTS (SELECT 1 FROM d WHERE dk = h)",
+    "SELECT id, g FROM f WHERE g IN (SELECT dk FROM d WHERE u > 1) "
+    "AND EXISTS (SELECT 1 FROM d WHERE dk = g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE dk = g) "
+    "AND g IN (SELECT dk FROM d)",
+    "SELECT id, g FROM f WHERE s = 'EXISTS (' AND EXISTS "
+    "(SELECT 1 FROM d WHERE dk = g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE (dk = g))",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE dk = 1)",
+    "SELECT id, g FROM f WHERE AND EXISTS (SELECT 1 FROM d WHERE dk = g)",
+    "SELECT id, g FROM f WHERE EXISTS (SELECT 1 FROM d WHERE dk = g AND)",
+    # select-list scalar subquery: flagship and general forms
+    "SELECT dk, (SELECT count(*) FROM f WHERE f.g = d.dk) AS n FROM d",
+    "SELECT dk, (SELECT count(*) FROM f AS x WHERE x.g = y.dk) AS n FROM d AS y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE x.g = y.dk) AS n FROM d AS y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE g = dk) AS n FROM d y",
+    "SELECT dk, (SELECT sum(x.v) FROM f x WHERE x.g = y.dk AND x.v > 1) AS sv "
+    "FROM d y",
+    "SELECT dk, attr, (SELECT avg(v) FROM f x WHERE x.v > y.u) AS av FROM d y",
+    "SELECT dk, (SELECT min(v) FROM f x WHERE x.g = y.dk AND x.v < y.u) AS mv "
+    "FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE x.v > 1) AS n FROM d y",
+    "SELECT dk, (SELECT sum(*) FROM f x WHERE x.g = y.dk) AS n FROM d y",
+    "SELECT dk, (SELECT median(v) FROM f x WHERE x.g = y.dk) AS n FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE x.g = y.dk) AS dk FROM d y",
+    "SELECT dk, (SELECT sum(y.v) FROM f x WHERE x.g = y.dk) AS n FROM d y",
+    "SELECT dk, (SELECT sum(zz) FROM f x WHERE x.g = y.dk) AS n FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE x.g = y.dk) AS n FROM d y "
+    "WHERE u > 1",
+    "SELECT (SELECT count(*) FROM f x WHERE x.g = y.dk) AS n FROM d y",
+    "SELECT attr, (SELECT count(*) FROM f x WHERE x.v > y.u) AS n FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE x.g = y.dk) n FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f y WHERE y.g = y.dk) AS n FROM d y",
+    "SELECT dk, (SELECT count(*) FROM f x WHERE (x.g = y.dk)) AS n FROM d y",
+    # full outer join: composite, non-equality conjunct, parens, WHERE
+    "SELECT id, g, v, dk, attr FROM f FULL JOIN d ON g = dk",
+    "SELECT x.id, x.g, y.dk FROM f x FULL OUTER JOIN d y ON x.g = y.dk",
+    "SELECT id, g, dk FROM f FULL JOIN d ON g = dk WHERE coalesce(v, 0) > 1",
+    "SELECT id, g, v, dk FROM f FULL JOIN d ON g = dk WHERE coalesce(v, 0) > 1",
+    "SELECT id, g, dk FROM f FULL JOIN d ON (g = dk)",
+    "SELECT id, g, dk FROM f FULL JOIN d ON g = dk AND v > 1",
+    "SELECT id, g, h, dk, attr FROM f FULL JOIN d ON g = dk AND h = attr",
+    "SELECT id, g, dk FROM f FULL JOIN d ON g = dk ORDER BY id",
+    "SELECT id, g, v FROM f FULL JOIN d ON g = dk",
+    "SELECT dk, attr, id, g FROM d FULL JOIN f ON dk = g",
+]
+
+
+def _golden_subquery_shapes(query):
+    names, cols, pks = {"f", "d"}, FCOLS, FPKS
+    return (
+        match_semijoin_shape(query, names, cols),
+        match_corr_semijoin_shape(query, names, cols),
+        match_corr_exists_shape(query, names, cols),
+        match_correlated_count_shape(query, names, pks, cols),
+        match_corr_scalar_shape(query, names, pks, cols),
+        match_full_outer_shape(query, names, cols, pks),
+    )
+
+
+def _subquery_corpus():
+    import tests.test_planner_fuzz as fz
+
+    out = list(_JOIN_EDGES) + list(_SUBQUERY_EDGES)
+    for seed in (5, 23, 41):
+        rng = random.Random(seed)
+        out.extend(fz._gen_two_table_query(rng, "f", "d") for _ in range(40))
+    return out
+
+
+class TestSubqueryGolden:
+    @pytest.mark.parametrize("query", _SUBQUERY_EDGES)
+    def test_edges(self, query):
+        self._check(query)
+
+    def test_join_corpus(self):
+        for q in _subquery_corpus():
+            self._check(q)
+
+    def _check(self, query):
+        expected = _golden()["subquery"][query]
+        got = [repr(s) for s in _golden_subquery_shapes(query)]
+        names = ("semi", "corr_in", "corr_exists", "corr_count", "corr_scalar", "full_outer")
         for name, e, g in zip(names, expected, got):
             assert g == e, f"{name} drift on: {query}\n golden={e}\n now={g}"
 
