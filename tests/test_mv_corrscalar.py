@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_UPDATE, SEQ_COL
 from tiflink_spark.planner import match_corr_scalar_shape
-from tiflink_spark.sqlast import scalar_subquery_clauses
+from tiflink_spark.sqlast import parse_scalar_subquery
 from tiflink_spark.store import StoreSet
 
 COLS = {
@@ -33,20 +33,19 @@ PKS = {"c": ["id"], "o": ["oid"]}
 
 class TestScalarSubqueryAst:
     def test_parses_general_inner(self):
-        r = scalar_subquery_clauses(
+        r = parse_scalar_subquery(
             """SELECT id, bal, (SELECT sum(o.price) FROM o
                WHERE o.okey = c.dkey AND o.price > c.bal) AS s FROM c"""
         )
         assert r is not None
-        select, akind, acol, fact, fa, inner, alias, dim, da = r
-        assert (fact, dim, akind, alias) == ("o", "c", "sum", "s")
-        assert "o.price > c.bal" in inner
+        assert (r.fact, r.dim, r.agg, r.alias) == ("o", "c", "sum", "s")
+        assert "o.price > c.bal" in r.inner
 
     def test_aliases_optional(self):
-        r = scalar_subquery_clauses(
+        r = parse_scalar_subquery(
             "SELECT id, (SELECT count(*) FROM o WHERE o.price > c.bal) AS n FROM c"
         )
-        assert r is not None and r[4] is None and r[8] is None
+        assert r is not None and r.fact_alias is None and r.dim_alias is None
 
 
 class TestCorrScalarMatcher:

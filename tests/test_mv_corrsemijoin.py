@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
 from tiflink_spark.planner import match_corr_semijoin_shape
-from tiflink_spark.sqlast import in_subquery_clauses
+from tiflink_spark.sqlast import parse_single_select, parse_where_subquery
 from tiflink_spark.store import StoreSet
 
 COLS = {
@@ -34,34 +34,37 @@ COLS = {
 }
 
 
+def _in_subquery(query):
+    """(outer statement, WHERE subquery term) of ``query``."""
+    s = parse_single_select(query)
+    return s, parse_where_subquery(s.where)
+
+
 class TestInSubqueryAst:
     def test_parses_inner_where(self):
-        r = in_subquery_clauses(
+        s, t = _in_subquery(
             """SELECT c_id FROM cust WHERE c_key NOT IN
                (SELECT o_key FROM ord o WHERE o.o_price > 5)"""
         )
-        assert r is not None
-        select, fact, fa, pre, neg, fcol, other, oa, ocol, inner = r
-        assert (fact, other, fcol, ocol) == ("cust", "ord", "c_key", "o_key")
-        assert neg is True and oa == "o" and pre is None
-        assert inner.strip() == "o.o_price > 5"
+        assert t is not None
+        assert (s.table, t.other, t.fact_col, t.other_col) == ("cust", "ord", "c_key", "o_key")
+        assert t.neg is True and t.other_alias == "o" and t.pre is None
+        assert t.inner.strip() == "o.o_price > 5"
 
     def test_requires_inner_where(self):
-        # the plain spelling stays on semijoin_clauses
-        assert (
-            in_subquery_clauses(
-                "SELECT c_id FROM cust WHERE c_key IN (SELECT o_key FROM ord)"
-            )
-            is None
-        )
+        # the plain spelling parses without an inner WHERE and stays on
+        # match_semijoin_shape
+        q = "SELECT c_id FROM cust WHERE c_key IN (SELECT o_key FROM ord)"
+        assert _in_subquery(q)[1].inner is None
+        assert match_corr_semijoin_shape(q, {"cust", "ord"}, COLS) is None
 
     def test_pre_conjunct_and_alias(self):
-        r = in_subquery_clauses(
+        s, t = _in_subquery(
             """SELECT c_id FROM cust AS c WHERE c_bal > 0 AND c_key IN
                (SELECT o_key FROM ord WHERE o_price > c.c_bal)"""
         )
-        assert r is not None
-        assert r[3].strip() == "c_bal > 0" and r[2] == "c"
+        assert t is not None
+        assert t.pre.strip() == "c_bal > 0" and s.alias == "c"
 
 
 class TestCorrSemiJoinMatcher:

@@ -329,3 +329,24 @@ def test_merge_record_displaced(spark, store):
     assert _rows(store.merge(_changes(spark, []), batch_id=3).displaced()) == [
         (1, "A"), (3, "x3"), (21, "n")
     ]
+
+
+def test_mixed_schema_chain_orders_by_chain_column(spark, store):
+    """A delta chain whose members recorded different schemas (here
+    ``v`` non-nullable in one delta and nullable in the next) still
+    orders by the chain-position column every delta carries, never by
+    the file path: the path regexp over input_file_name() is undefined
+    once Catalyst fuses two chain reads into one stage."""
+    store.bootstrap(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    strict = f"k int, v string not null, {OP_COL} string, {SEQ_COL} long"
+    store.merge(
+        spark.createDataFrame([(1, "A", OP_UPDATE, 0), (2, "B", OP_UPDATE, 1)], strict),
+        batch_id=1,
+    )
+    store.merge(_changes(spark, [(1, "A2", OP_UPDATE, 0), (2, None, OP_UPDATE, 1)]), batch_id=2)
+    deltas = store._commits()[-1]["deltas"]
+    assert len(deltas) == 2
+    assert len({store._delta_stats_of(rel).get("delta_schema") for rel in deltas}) == 2
+    df = store.read()
+    assert "input_file_name" not in df._jdf.queryExecution().analyzed().toString().lower()
+    assert {r.k: r.v for r in df.collect()} == {1: "A2", 2: None}

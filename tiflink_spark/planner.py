@@ -78,6 +78,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from tiflink_spark import sqlast
 from tiflink_spark.incremental import Measure
 
 
@@ -496,25 +497,14 @@ def match_distinct_shape(
     identifiers only (an expression output has no stable retraction
     key); WHERE must be row-local and deterministic, maintained by the
     stateless-filter changelog rule."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.distinct_clauses(query)
-    if parsed is None:
+    s = sqlast.parse_single_select(query)
+    if s is None or not s.only("where"):
         return None
-    return _match_distinct_core(*parsed, source_names, source_columns)
-
-
-def _match_distinct_core(
-    select: str,
-    table: str,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> DistinctShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    if table not in source_names:
+    dm = re.match(r"(?is)^DISTINCT\s+(.*)$", s.select)
+    table, where = s.table, s.where
+    if dm is None or table not in source_names:
         return None
-    cols = [c.strip() for c in select.split(",")]
+    cols = [c.strip() for c in dm.group(1).split(",")]
     if any(not re.fullmatch(_IDENT, c) for c in cols):
         return None
     if len({c.lower() for c in cols}) != len(cols):
@@ -524,11 +514,8 @@ def _match_distinct_core(
         if any(c.lower() not in known for c in cols):
             return None
     if where is not None:
-        # The regex's non-greedy WHERE runs to end-of-query, so a
-        # trailing clause (LIMIT/ORDER BY/GROUP BY…) would be swallowed
-        # into it — previously a hard AnalysisException at build time
-        # instead of a clean recompute fallback. Reject explicitly,
-        # like the global-aggregate matcher does.
+        # a clause keyword inside a literal or parentheses rejects,
+        # like the global-aggregate matcher
         if re.search(
             r"(?i)\b(group\s+by|having|order\s+by|limit|offset|qualify|window)\b",
             where,
@@ -563,16 +550,39 @@ class UnionAllShape:
     wheres: tuple[str | None, ...] = ()
 
 
-def _branch_where(
-    table: str, where: str | None, source_columns: dict[str, list[str]]
-) -> tuple[str | None, bool]:
-    """(validated where, ok) for a union/set-op branch."""
-    if where is None:
-        return None, True
-    cols = {c.lower() for c in source_columns.get(table, [])}
-    if _NON_LOCAL_WHERE.search(where) or not _row_local_expr_ok(where, cols):
-        return None, False
-    return where.strip(), True
+def _setop_branches(query: str, source_names, source_columns):
+    """``(ops, branches, wheres)`` of a set-operation statement whose
+    every branch is ``SELECT cols FROM table [WHERE row-local]`` over a
+    registered source with bare known columns: ``ops`` the operator
+    before each later branch, ``branches`` the (table, canonical
+    columns) pairs, ``wheres`` the validated branch filters (None =
+    unfiltered). None for anything else — one non-conforming branch
+    rejects the whole statement."""
+    parts = sqlast.setop_parts(query)
+    if parts is None or len(parts) < 2:
+        return None
+    branches: list[tuple[str, tuple[str, ...]]] = []
+    wheres: list[str | None] = []
+    for _, text in parts:
+        s = sqlast.parse_single_select(text)
+        if s is None or not s.only("where") or s.table not in source_names:
+            return None
+        cols = tuple(c.strip() for c in s.select.split(","))
+        if any(not re.fullmatch(_IDENT, c) for c in cols):
+            return None
+        known = {c.lower(): c for c in source_columns.get(s.table, [])}
+        if any(c.lower() not in known for c in cols):
+            return None
+        where = s.where
+        if where is not None:
+            if _NON_LOCAL_WHERE.search(where) or not _row_local_expr_ok(
+                where, set(known)
+            ):
+                return None
+            where = where.strip()
+        branches.append((s.table, tuple(known[c.lower()] for c in cols)))
+        wheres.append(where)
+    return [op for op, _ in parts[1:]], branches, wheres
 
 
 def match_union_all_shape(
@@ -582,37 +592,10 @@ def match_union_all_shape(
     source_pks: dict[str, list[str]],
 ) -> UnionAllShape | None:
     """Match the bare multi-branch UNION ALL, or None for the fallback."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.union_all_branches(query)
-    if parsed is None:
+    parsed = _setop_branches(query, source_names, source_columns)
+    if parsed is None or any(op != "union all" for op in parsed[0]):
         return None
-    return _match_union_all_core(parsed, source_names, source_columns, source_pks)
-
-
-def _match_union_all_core(
-    branch_clauses: list[tuple[str, str, str | None]],
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> UnionAllShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    branches: list[tuple[str, tuple[str, ...]]] = []
-    wheres: list[str | None] = []
-    for select, table, bwhere in branch_clauses:
-        if table not in source_names:
-            return None
-        cols = tuple(c.strip() for c in select.split(","))
-        if any(not re.fullmatch(_IDENT, c) for c in cols):
-            return None
-        known = {c.lower(): c for c in source_columns.get(table, [])}
-        if any(c.lower() not in known for c in cols):
-            return None
-        where, ok = _branch_where(table, bwhere, source_columns)
-        if not ok:
-            return None
-        branches.append((table, tuple(known[c.lower()] for c in cols)))
-        wheres.append(where)
+    _, branches, wheres = parsed
     if len({t for t, _ in branches}) != len(branches):
         return None  # duplicate branch tables would collide on the key
     widths = {len(cols) for _, cols in branches}
@@ -673,49 +656,19 @@ def match_setop_shape(
     count state already. UNION's membership rule is presence on EITHER
     side, so its output tuples are genuinely unique — a sound cascade
     inner, unlike UNION ALL's per-branch key."""
-    from tiflink_spark import sqlast
-
-    ast = sqlast.setop_clauses(query)
-    parsed = None if ast is None else (ast[0].lower(), ast[1], ast[2])
-    if parsed is None:
+    parsed = _setop_branches(query, source_names, source_columns)
+    if parsed is None or len(parsed[0]) != 1 or parsed[0][0] == "union all":
         return None
-    return _match_setop_core(*parsed, source_names, source_columns, source_pks)
-
-
-def _match_setop_core(
-    op: str,
-    left_clause: tuple[str, str, str | None],
-    right_clause: tuple[str, str, str | None],
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> SetOpShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    branches = []
-    wheres: list[str | None] = []
-    for select, table, bwhere in (left_clause, right_clause):
-        if table not in source_names:
-            return None
-        known = {c.lower(): c for c in source_columns.get(table, [])}
-        cols = tuple(c.strip() for c in select.split(","))
-        if any(not re.fullmatch(_IDENT, c) for c in cols):
-            return None
-        if any(c.lower() not in known for c in cols):
-            return None
-        if not source_pks.get(table):
-            return None
-        where, ok = _branch_where(table, bwhere, source_columns)
-        if not ok:
-            return None
-        branches.append((table, tuple(known[c.lower()] for c in cols)))
-        wheres.append(where)
+    (op,), branches, wheres = parsed
+    if any(not source_pks.get(t) for t, _ in branches):
+        return None
     (lt, lc), (rt, rc) = branches
     if lt == rt or len(lc) != len(rc):
         return None
     if len({c.lower() for c in lc}) != len(lc):
         return None
     return SetOpShape(
-        op.lower(), lt, lc, rt, rc, lc, left_where=wheres[0], right_where=wheres[1]
+        op.replace(" ", "_"), lt, lc, rt, rc, lc, left_where=wheres[0], right_where=wheres[1]
     )
 
 
@@ -758,30 +711,10 @@ def match_topn_shape(
     source_columns: dict[str, list[str]] | None = None,
 ) -> TopNShape | None:
     """Match the per-group Top-N pattern, or None for the fallback."""
-    from tiflink_spark import sqlast
-
     parsed = sqlast.topn_clauses(query)
     if parsed is None:
         return None
-    return _match_topn_core(*parsed, source_names, source_columns)
-
-
-def _match_topn_core(
-    select: str,
-    g: str,
-    o: str,
-    direction: str | None,
-    tie: tuple[str, ...],
-    rn: str,
-    table: str,
-    where: str | None,
-    ta: str | None,
-    rncond: str,
-    k_text: str,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> TopNShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
+    select, g, o, direction, tie, rn, table, where, ta, rncond, k_text = parsed
     if table not in source_names:
         return None
     if rncond.lower() != rn.lower():
@@ -888,25 +821,10 @@ def match_window_shape(
     source_pks: dict[str, list[str]],
 ) -> WindowShape | None:
     """Match the partitioned OVER-window view, or None for the fallback."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.window_clauses(query)
-    if parsed is None:
+    s = sqlast.parse_single_select(query)
+    if s is None or not s.only("where") or s.table not in source_names:
         return None
-    return _match_window_core(*parsed, source_names, source_columns, source_pks)
-
-
-def _match_window_core(
-    select: str,
-    table: str,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> WindowShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    if table not in source_names:
-        return None
+    table, where = s.table, s.where
     cols = {c.lower(): c for c in source_columns.get(table, [])}
     pk = source_pks.get(table) or []
     if not cols or not pk:
@@ -926,7 +844,7 @@ def _match_window_core(
     wins: list[tuple[str, str]] = []
     out: list[str] = []
     group_keys: tuple[str, ...] | None = None
-    items = _split_select_list(select)
+    items = sqlast.split_commas(s.select)
     if items is None:
         return None
     for item in items:
@@ -1039,39 +957,23 @@ def match_order_limit_shape(
     source_columns: dict[str, list[str]] | None = None,
 ) -> OrderLimitShape | None:
     """Match the global ORDER BY + LIMIT view, or None."""
-    from tiflink_spark import sqlast
-
-    p = sqlast.order_limit_clauses(query)
-    parsed = None
-    if p is not None:
-        select, table, where, order_body, k_text = p
-        spec: list[tuple[str, bool]] | None = []
-        for term in order_body.split(","):
-            tm = re.fullmatch(rf"(?is)\s*({_IDENT})(?:\s+(ASC|DESC))?\s*", term)
-            if tm is None:
-                spec = None
-                break
-            spec.append((tm.group(1), (tm.group(2) or "asc").lower() == "desc"))
-        if spec:
-            parsed = (select, table, where, spec, k_text)
-    if parsed is None:
+    s = sqlast.parse_single_select(query)
+    if (
+        s is None
+        or not s.only("where", "order_by", "limit")
+        or s.order_by is None
+        or s.limit is None
+        or s.table not in source_names
+    ):
         return None
-    return _match_order_limit_core(*parsed, source_names, source_columns)
-
-
-def _match_order_limit_core(
-    select: str,
-    table: str,
-    where: str | None,
-    order_spec: list[tuple[str, bool]],
-    k_text: str,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> OrderLimitShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    if table not in source_names:
-        return None
-    sel = [c.strip() for c in select.split(",")]
+    table, where = s.table, s.where
+    order_spec: list[tuple[str, bool]] = []
+    for term in s.order_by.split(","):
+        tm = re.fullmatch(rf"(?is)\s*({_IDENT})(?:\s+(ASC|DESC))?\s*", term)
+        if tm is None:
+            return None
+        order_spec.append((tm.group(1), (tm.group(2) or "asc").lower() == "desc"))
+    sel = [c.strip() for c in s.select.split(",")]
     if any(not re.fullmatch(_IDENT, c) for c in sel):
         return None
     if len({c.lower() for c in sel}) != len(sel):
@@ -1085,7 +987,7 @@ def _match_order_limit_core(
             return None
     if len({c.lower() for c, _ in order_spec}) != len(order_spec):
         return None  # repeated order column — ambiguous spelling
-    k = int(k_text)
+    k = int(s.limit)
     if k < 1:
         return None
     if where is not None:
@@ -1144,6 +1046,20 @@ class ThetaJoinShape:
     out_cols: tuple[str, ...]
 
 
+def _one_join(query: str, how: str):
+    """The :class:`sqlast.JoinSelect` of ``SELECT … FROM a [la] <how>
+    JOIN b [lb] ON|USING … [WHERE …]`` — exactly one ordinary
+    (non-temporal) join of kind ``how`` and nothing after the WHERE —
+    or None."""
+    s = sqlast.parse_join_select(query)
+    if s is None or not s.only("alias", "where") or len(s.joins) != 1:
+        return None
+    j = s.joins[0]
+    if j.how != how or j.system_time is not None:
+        return None
+    return s
+
+
 def match_theta_join_shape(
     query: str,
     source_names: set[str],
@@ -1154,29 +1070,11 @@ def match_theta_join_shape(
     equi-join matchers, so anything reaching here with a plain equality
     already failed their stricter envelopes (routing it here would
     still be correct, just less pruned)."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.theta_join_clauses(query)
-    if parsed is None:
+    s = _one_join(query, "inner")
+    if s is None or s.joins[0].on is None:
         return None
-    return _match_theta_join_core(
-        *parsed, source_names, source_columns, source_pks
-    )
-
-
-def _match_theta_join_core(
-    select: str,
-    lt: str,
-    la: str | None,
-    rt: str,
-    ra: str | None,
-    pred: str,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> ThetaJoinShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
+    j = s.joins[0]
+    lt, la, rt, ra, pred, where = s.table, s.alias, j.table, j.alias, j.on, s.where
     if lt not in source_names or rt not in source_names or lt == rt:
         return None
     if (la or "").lower() in _CLAUSE_KEYWORDS or (ra or "").lower() in _CLAUSE_KEYWORDS:
@@ -1204,7 +1102,7 @@ def _match_theta_join_core(
             return None
         pred = f"({pred.strip()}) AND ({w.strip()})"
     out: list[str] = []
-    items = _split_select_list(select)
+    items = sqlast.split_commas(s.select)
     if items is None:
         return None
     for item in items:
@@ -1258,13 +1156,19 @@ def match_full_outer_shape(
     source_columns: dict[str, list[str]],
     source_pks: dict[str, list[str]],
 ) -> FullOuterJoinShape | None:
-    """Match the single FULL OUTER equi-join view, or None."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.full_outer_join_clauses(query)
-    if parsed is None:
+    """Match the single FULL OUTER equi-join view, or None: the ON is a
+    conjunction of [qual.]col = [qual.]col equalities (composite-key
+    dims join on several); the optional WHERE is validated row-local
+    over the view's OUTPUT — SQL evaluates it AFTER the join, so it is
+    the stateless target-side filter, not a preserved-row change."""
+    s = _one_join(query, "full")
+    if s is None or s.joins[0].on is None:
         return None
-    select, lt, la_text, rt, ra_text, pairs, where = parsed
+    pairs = sqlast.equality_pairs(s.joins[0].on)
+    if pairs is None:
+        return None
+    lt, la_text, rt, ra_text = s.table, s.alias, s.joins[0].table, s.joins[0].alias
+    where = s.where
     if (
         lt not in source_names
         or rt not in source_names
@@ -1285,18 +1189,7 @@ def match_full_outer_shape(
         return None  # disjoint names only — bare-name relation
     quals = {la: lt, ra: rt}
 
-    def resolve(ref: str) -> tuple[str, str] | None:
-        qm = _QUAL_RE.fullmatch(ref.strip())
-        if qm is not None:
-            t = quals.get(qm.group(1).lower())
-            if t is None or qm.group(2).lower() not in cols[t]:
-                return None
-            return t, cols[t][qm.group(2).lower()]
-        name = ref.strip().lower()
-        for t in (lt, rt):
-            if name in cols[t]:
-                return t, cols[t][name]
-        return None
+    resolve = _column_resolver(quals, cols)
 
     # every conjunct must be a cross-side equality; collect per-side refs
     refs: dict[str, list[str]] = {lt: [], rt: []}
@@ -1336,7 +1229,7 @@ def match_full_outer_shape(
             fact_fks.append(r[1])
             dim_keys.append(l[1])
     out: list[str] = []
-    items = _split_select_list(select)
+    items = sqlast.split_commas(s.select)
     if items is None:
         return None
     for item in items:
@@ -1381,34 +1274,27 @@ def match_join_shape(
     per side; every output column must be unambiguous across the two
     tables (the MV stores bare names), and a join-key column must be in
     the select list (MV rows are located by it)."""
-    from tiflink_spark import sqlast
-
-    pu = sqlast.join_using_clauses(query)
-    po = None if pu is not None else sqlast.join_on_clauses(query)
-    if pu is not None:
-        select, left, right, key = pu
-        if left not in source_names or right not in source_names or left == right:
-            return None
-        cols = tuple(c.strip() for c in select.split(","))
-        return JoinShape(left, right, key, cols)
-    if po is None or source_columns is None:
+    s = _one_join(query, "inner")
+    if s is None:
         return None
-    return _match_join_on_core(*po, source_names, source_columns)
-
-
-def _match_join_on_core(
-    select: str,
-    left: str,
-    la_text: str | None,
-    right: str,
-    ra_text: str | None,
-    lref: str,
-    rref: str,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-) -> JoinShape | None:
-    """ON-form shape validation shared by the regex and AST front-ends."""
+    j = s.joins[0]
+    left, right = s.table, j.table
+    if j.using is not None:
+        items = [c.strip() for c in s.select.split(",")]
+        if (
+            not s.only()
+            or j.alias is not None
+            or any(not re.fullmatch(_IDENT, c) for c in items)
+            or left not in source_names
+            or right not in source_names
+            or left == right
+        ):
+            return None
+        return JoinShape(left, right, j.using, tuple(items))
+    pairs = sqlast.equality_pairs(j.on)
+    if pairs is None or len(pairs) != 1 or source_columns is None:
+        return None
+    (lref, rref), la_text, ra_text, where = pairs[0], s.alias, j.alias, s.where
     if (
         left not in source_names
         or right not in source_names
@@ -1428,20 +1314,7 @@ def _match_join_on_core(
     ambiguous = set(cols[left]) & set(cols[right])
     quals = {la: left, ra: right}
 
-    def resolve(ref: str) -> tuple[str, str] | None:
-        qm = _QUAL_RE.fullmatch(ref.strip())
-        if qm is not None:
-            t = quals.get(qm.group(1).lower())
-            if t is None or qm.group(2).lower() not in cols[t]:
-                return None
-            return t, cols[t][qm.group(2).lower()]
-        name = ref.strip().lower()
-        if name in ambiguous:
-            return None
-        for t in (left, right):
-            if name in cols[t]:
-                return t, cols[t][name]
-        return None
+    resolve = _column_resolver(quals, cols, ambiguous)
 
     l, r = resolve(lref), resolve(rref)
     if l is None or r is None or l[0] == r[0]:
@@ -1450,7 +1323,7 @@ def _match_join_on_core(
         l, r = r, l
     left_key, right_key = l[1], r[1]
     out: list[str] = []
-    items = _split_select_list(select)
+    items = sqlast.split_commas(s.select)
     if items is None:
         return None
     for item in items:
@@ -1494,17 +1367,6 @@ def _match_join_on_core(
     )
 
 
-# SELECT d-col-list, (SELECT agg(x|*) FROM fact f WHERE f.fk = d.dk) AS a FROM dim d
-def _split_select_list(select: str) -> list[str] | None:
-    """Split a select list on top-level commas (commas inside parens or
-    string literals stay within their item), or None when the tokenizer
-    rejects the text: a matcher then declines and a rewrite leaves the
-    query as written."""
-    from tiflink_spark.sqlast import split_commas
-
-    return split_commas(select)
-
-
 def match_correlated_count_shape(
     query: str,
     source_names: set[str],
@@ -1521,68 +1383,58 @@ def match_correlated_count_shape(
     against ``source_columns`` when provided; a non-count aggregate
     without schema access falls back).
     """
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.corr_count_clauses(query)
-    if parsed is None:
+    q = sqlast.parse_scalar_subquery(query)
+    # the flagship spelling: both tables aliased (without AS) and the
+    # inner WHERE one equality of two alias-qualified columns
+    pairs = None if q is None else sqlast.equality_pairs(q.inner)
+    if pairs is None or len(pairs) != 1 or q.as_alias:
         return None
-    return _match_corr_count_core(*parsed, source_names, dim_pk, source_columns)
-
-
-def _match_corr_count_core(
-    select: str,
-    akind_text: str,
-    acol_text: str,
-    fact: str,
-    fa_text: str,
-    w1: str,
-    c1: str,
-    w2: str,
-    c2: str,
-    alias: str,
-    dim: str,
-    da_text: str,
-    source_names: set[str],
-    dim_pk: dict[str, list[str]],
-    source_columns: dict[str, list[str]] | None,
-) -> CorrelatedCountShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
+    refs = [_QUAL_RE.fullmatch(ref) for ref in pairs[0]]
+    if None in refs or q.fact_alias is None or q.dim_alias is None:
+        return None
+    fact, dim = q.fact, q.dim
     if fact not in source_names or dim not in source_names or fact == dim:
         return None
-    fa, da = fa_text.lower(), da_text.lower()
-    sides = {w1.lower(): c1, w2.lower(): c2}
+    fa, da = q.fact_alias.lower(), q.dim_alias.lower()
+    sides = {qm.group(1).lower(): qm.group(2) for qm in refs}
     if set(sides) != {fa, da}:
         return None
     fact_key, dim_corr = sides[fa], sides[da]
     pk = dim_pk.get(dim) or []
     if len(pk) != 1 or pk[0].lower() != dim_corr.lower():
         return None
-    akind, acol = akind_text.lower(), acol_text.strip()
-    if acol == "*":
-        if akind != "count":
-            return None
-        agg_col = None
-    else:
-        # qualified form must use the fact alias; bare form must name a
-        # fact column (checked against the schema when available)
-        qm = _QUAL_RE.fullmatch(acol)
-        if qm is not None:
-            if qm.group(1).lower() != fa:
-                return None
-            acol = qm.group(2)
-        if source_columns is None:
-            return None
-        known = {c.lower(): c for c in source_columns.get(fact, [])}
-        if acol.lower() not in known:
-            return None
-        agg_col = known[acol.lower()]
-    sel = [c.strip() for c in select.split(",")]
+    fcols = None
+    if source_columns is not None:
+        fcols = {c.lower(): c for c in source_columns.get(fact, [])}
+    agg = _scalar_agg(q, fcols)
+    if agg is None:
+        return None
+    sel = [c.strip() for c in q.select.split(",")]
     if pk[0].lower() not in [c.lower() for c in sel]:
         return None
     dim_cols = tuple(c for c in sel if c.lower() != pk[0].lower())
     return CorrelatedCountShape(
-        dim, pk[0], dim_cols, fact, fact_key, alias, akind, agg_col
+        dim, pk[0], dim_cols, fact, fact_key, q.alias, agg[0], agg[1]
     )
+
+
+def _scalar_agg(q, fcols: dict[str, str] | None) -> tuple[str, str | None] | None:
+    """(kind, fact column) of a scalar subquery's aggregate — the
+    column None for ``count(*)`` — or None. A qualified argument must
+    use the fact's alias (its name when unaliased); the column must be
+    one of ``fcols`` (None: schema unknown, so only count(*))."""
+    kind = q.agg.lower()
+    if q.arg == "*":
+        return (kind, None) if kind == "count" else None
+    arg = q.arg.strip()
+    qm = _QUAL_RE.fullmatch(arg)
+    if qm is not None:
+        if qm.group(1).lower() != (q.fact_alias or q.fact).lower():
+            return None
+        arg = qm.group(2)
+    if fcols is None or arg.lower() not in fcols:
+        return None
+    return kind, fcols[arg.lower()]
 
 
 @dataclass(frozen=True)
@@ -1627,39 +1479,104 @@ def match_semijoin_shape(
 ) -> SemiJoinShape | None:
     """Match the EXISTS/NOT EXISTS/IN existence-filter view, or None.
 
-    The select list is bare fact columns; the correlation equates one
-    fact column with one column of the inner table (qualified or
-    unambiguous-bare, mirroring SQL resolution); an optional leading
-    WHERE conjunct must be row-local and deterministic over the fact's
-    columns. NULL semantics line up exactly with Spark's
-    left_semi/left_anti: a NULL fact key never matches (excluded from
-    EXISTS/IN, kept by NOT EXISTS).
+    The select list is bare fact columns; the EXISTS correlation is a
+    conjunction of equalities, each equating one fact column with one
+    column of the inner table (qualified or unambiguous-bare, mirroring
+    SQL resolution); the IN form is the bare ``fcol [NOT] IN (SELECT
+    ocol FROM other)``; an optional leading WHERE conjunct must be
+    row-local and deterministic over the fact's columns. NULL semantics
+    line up exactly with Spark's left_semi/left_anti: a NULL fact key
+    never matches (excluded from EXISTS/IN, kept by NOT EXISTS).
     """
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.semijoin_clauses(query)
-    if parsed is None:
+    f = _subquery_filter(query, source_names, source_columns)
+    if f is None:
         return None
-    return _match_semijoin_core(*parsed, source_names, source_columns)
+    t = f.term
+    if t.fact_col is not None:
+        if t.other_alias is not None or t.inner is not None:
+            return None
+        fk, ok = t.fact_col.lower(), t.other_col.lower()
+        if fk not in f.fcols or ok not in f.ocols:
+            return None
+        # NOT IN is null-AWARE: a NULL inner value empties the view, a
+        # NULL outer key appears only while the inner set is empty. The
+        # maintenance class tracks the inner's null-presence bit
+        # explicitly, so ANY inner column routes (PK or not); it also
+        # handles the empty-set flip for NULL outer keys.
+        fact_keys, other_keys = (f.fcols[fk],), (f.ocols[ok],)
+    else:
+        pairs = None if t.inner is None else sqlast.equality_pairs(t.inner)
+        if pairs is None:
+            return None
+        quals = {f.fact_alias: f.fact, f.other_alias: f.other}
+        cols = {f.fact: f.fcols, f.other: f.ocols}
+        resolve = _column_resolver(quals, cols, set(f.fcols) & set(f.ocols))
+        fact_keys_l: list[str] = []
+        other_keys_l: list[str] = []
+        for lref, rref in pairs:
+            l, r = resolve(lref), resolve(rref)
+            if l is None or r is None or {l[0], r[0]} != {f.fact, f.other}:
+                return None
+            fact_keys_l.append(l[1] if l[0] == f.fact else r[1])
+            other_keys_l.append(l[1] if l[0] == f.other else r[1])
+        if len({c.lower() for c in fact_keys_l}) != len(fact_keys_l) or len(
+            {c.lower() for c in other_keys_l}
+        ) != len(other_keys_l):
+            return None  # repeated column on one side
+        fact_keys, other_keys = tuple(fact_keys_l), tuple(other_keys_l)
+    return SemiJoinShape(
+        f.fact,
+        fact_keys,
+        f.other,
+        other_keys,
+        f.out_cols,
+        t.neg,
+        f.pre,
+        null_aware=t.fact_col is not None and t.neg,
+    )
 
 
-def _match_semijoin_core(
-    in_form: bool,
-    select: str,
-    fact: str,
-    fa_text: str | None,
-    pre: str | None,
-    neg: bool,
-    other: str,
-    oa_text: str | None,
-    pairs: list[tuple[str, str]] | None,
-    _unused: None,
-    fcol: str | None,
-    ocol: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-) -> SemiJoinShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
+@dataclass(frozen=True)
+class _SubqueryFilter:
+    """``SELECT cols FROM fact [fa] WHERE [pre AND] <subquery term>``
+    validated up to the subquery (see :func:`_subquery_filter`).
+    ``fcols``/``ocols`` map lowercased column names of the fact and
+    the subquery's table; the aliases are lowercased, the table name
+    when unaliased."""
+
+    fact: str
+    other: str
+    fcols: dict[str, str]
+    ocols: dict[str, str]
+    out_cols: tuple[str, ...]
+    pre: str | None
+    fact_alias: str
+    other_alias: str
+    term: sqlast.SubqueryTerm
+
+
+def _subquery_filter(
+    query: str, source_names: set[str], source_columns: dict[str, list[str]]
+) -> _SubqueryFilter | None:
+    """The existence-filter statement the semi-join and correlated
+    IN/EXISTS matchers share, or None. Both tables are registered
+    sources with known columns and the select list is distinct bare
+    fact columns. ``pre`` sees only the outer (fact) scope: row-local,
+    deterministic, and without a top-level OR — 'a OR b AND EXISTS(…)'
+    parses as 'a OR (b AND EXISTS)', so treating ``pre`` as an
+    independent conjunct would silently change the view (a
+    parenthesized OR is fine). A subquery with an inner WHERE scopes
+    both tables, so their aliases must differ and not be keywords."""
+    s = sqlast.parse_single_select(query)
+    if s is None or not s.only("alias", "where") or s.where is None:
+        return None
+    sel = tuple(c.strip() for c in s.select.split(","))
+    if any(not re.fullmatch(_IDENT, c) for c in sel):
+        return None
+    term = sqlast.parse_where_subquery(s.where)
+    if term is None:
+        return None
+    fact, other = s.table, term.other
     if (
         fact not in source_names
         or other not in source_names
@@ -1670,84 +1587,32 @@ def _match_semijoin_core(
         return None
     fcols = {c.lower(): c for c in source_columns[fact]}
     ocols = {c.lower(): c for c in source_columns[other]}
-    if in_form:
-        fk, ok = fcol.lower(), ocol.lower()
-        if fk not in fcols or ok not in ocols:
-            return None
-        # NOT IN is null-AWARE: a NULL inner value empties the view, a
-        # NULL outer key appears only while the inner set is empty. The
-        # maintenance class tracks the inner's null-presence bit
-        # explicitly, so ANY inner column routes (PK or not); it also
-        # handles the empty-set flip for NULL outer keys.
-        fact_keys, other_keys, anti = (
-            (fcols[fk],),
-            (ocols[ok],),
-            neg,
-        )
-    else:
-        fa = (fa_text or fact).lower()
-        oa = (oa_text or other).lower()
-        if fa == oa or {fa, oa} & _CLAUSE_KEYWORDS:
-            return None
-        quals = {fa: fact, oa: other}
-        cols = {fact: fcols, other: ocols}
-        ambiguous = set(fcols) & set(ocols)
-
-        def resolve(ref: str) -> tuple[str, str] | None:
-            qm = _QUAL_RE.fullmatch(ref.strip())
-            if qm is not None:
-                t = quals.get(qm.group(1).lower())
-                if t is None or qm.group(2).lower() not in cols[t]:
-                    return None
-                return t, cols[t][qm.group(2).lower()]
-            name = ref.strip().lower()
-            if name in ambiguous:
-                return None
-            for t in (fact, other):
-                if name in cols[t]:
-                    return t, cols[t][name]
-            return None
-
-        fact_keys_l: list[str] = []
-        other_keys_l: list[str] = []
-        for lref, rref in pairs:
-            l, r = resolve(lref), resolve(rref)
-            if l is None or r is None or {l[0], r[0]} != {fact, other}:
-                return None
-            fact_keys_l.append(l[1] if l[0] == fact else r[1])
-            other_keys_l.append(l[1] if l[0] == other else r[1])
-        if len({c.lower() for c in fact_keys_l}) != len(fact_keys_l) or len(
-            {c.lower() for c in other_keys_l}
-        ) != len(other_keys_l):
-            return None  # repeated column on one side
-        fact_keys, other_keys, anti = tuple(fact_keys_l), tuple(other_keys_l), neg
-    sel = tuple(c.strip() for c in select.split(","))
-    if len({c.lower() for c in sel}) != len(sel):
+    if len({c.lower() for c in sel}) != len(sel) or any(
+        c.lower() not in fcols for c in sel
+    ):
         return None
-    if any(c.lower() not in fcols for c in sel):
-        return None
-    sel = tuple(fcols[c.lower()] for c in sel)
+    pre = term.pre
     if pre is not None:
-        # the conjunct sees only the outer (fact) scope here — EXISTS
-        # terms inside it would have been consumed by the main regex
-        if _NON_LOCAL_WHERE.search(pre) or not _row_local_expr_ok(pre, set(fcols)):
-            return None
-        # A top-level OR breaks the split: 'a OR b AND EXISTS(...)'
-        # parses as 'a OR (b AND EXISTS)', not '(a OR b) AND EXISTS' —
-        # treating pre as an independent conjunct would silently change
-        # the view. Parenthesized ORs are fine ('(a OR b) AND EXISTS').
-        if _has_top_level_or(pre):
+        if (
+            _NON_LOCAL_WHERE.search(pre)
+            or not _row_local_expr_ok(pre, set(fcols))
+            or _has_top_level_or(pre)
+        ):
             return None
         pre = pre.strip()
-    return SemiJoinShape(
+    fa, oa = (s.alias or fact).lower(), (term.other_alias or other).lower()
+    if term.inner is not None and (fa == oa or {fa, oa} & _CLAUSE_KEYWORDS):
+        return None
+    return _SubqueryFilter(
         fact,
-        fact_keys,
         other,
-        other_keys,
-        sel,
-        anti,
+        fcols,
+        ocols,
+        tuple(fcols[c.lower()] for c in sel),
         pre,
-        null_aware=in_form and anti,
+        fa,
+        oa,
+        term,
     )
 
 
@@ -1941,52 +1806,26 @@ def match_corr_semijoin_shape(
     source_columns: dict[str, list[str]],
 ) -> CorrSemiJoinShape | None:
     """Match the filtered / correlated IN-subquery view, or None."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.in_subquery_clauses(query)
-    if parsed is None:
+    f = _subquery_filter(query, source_names, source_columns)
+    if f is None or f.term.fact_col is None or f.term.inner is None:
         return None
-    select, fact, fa, pre, neg, fcol, other, oa, ocol, inner = parsed
-    if (
-        fact not in source_names
-        or other not in source_names
-        or fact == other
-        or fact not in source_columns
-        or other not in source_columns
-    ):
+    fk, ok = f.term.fact_col.lower(), f.term.other_col.lower()
+    if fk not in f.fcols or ok not in f.ocols:
         return None
-    fcols = {c.lower(): c for c in source_columns[fact]}
-    ocols = {c.lower(): c for c in source_columns[other]}
-    if fcol.lower() not in fcols or ocol.lower() not in ocols:
-        return None
-    sel = tuple(c.strip() for c in select.split(","))
-    if len({c.lower() for c in sel}) != len(sel):
-        return None
-    if any(c.lower() not in fcols for c in sel):
-        return None
-    sel = tuple(fcols[c.lower()] for c in sel)
-    if pre is not None:
-        if _NON_LOCAL_WHERE.search(pre) or not _row_local_expr_ok(pre, set(fcols)):
-            return None
-        if _has_top_level_or(pre):
-            return None
-        pre = pre.strip()
-    fa_l = (fa or fact).lower()
-    oa_l = (oa or other).lower()
-    if fa_l == oa_l or {fa_l, oa_l} & _CLAUSE_KEYWORDS:
-        return None
-    cls = _classify_inner_conjuncts(inner, fa_l, oa_l, fcols, ocols)
+    cls = _classify_inner_conjuncts(
+        f.term.inner, f.fact_alias, f.other_alias, f.fcols, f.ocols
+    )
     if cls is None:
         return None
     inner_where, corr = cls
     return CorrSemiJoinShape(
-        fact,
-        fcols[fcol.lower()],
-        other,
-        ocols[ocol.lower()],
-        sel,
-        neg,
-        pre,
+        f.fact,
+        f.fcols[fk],
+        f.other,
+        f.ocols[ok],
+        f.out_cols,
+        f.term.neg,
+        f.pre,
         inner_where,
         tuple(corr),
     )
@@ -2013,52 +1852,25 @@ def match_corr_exists_shape(
     across rows — degenerate, refused). Equality conjuncts ride along
     as '=' corr terms, letting Catalyst hash-join on them with the
     theta terms as the join residual."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.exists_subquery_clauses(query)
-    if parsed is None:
+    f = _subquery_filter(query, source_names, source_columns)
+    if f is None or f.term.fact_col is not None or f.term.inner is None:
         return None
-    select, fact, fa, pre, neg, other, oa, inner = parsed
-    if (
-        fact not in source_names
-        or other not in source_names
-        or fact == other
-        or fact not in source_columns
-        or other not in source_columns
-    ):
-        return None
-    fcols = {c.lower(): c for c in source_columns[fact]}
-    ocols = {c.lower(): c for c in source_columns[other]}
-    sel = tuple(c.strip() for c in select.split(","))
-    if len({c.lower() for c in sel}) != len(sel):
-        return None
-    if any(c.lower() not in fcols for c in sel):
-        return None
-    sel = tuple(fcols[c.lower()] for c in sel)
-    if pre is not None:
-        if _NON_LOCAL_WHERE.search(pre) or not _row_local_expr_ok(pre, set(fcols)):
-            return None
-        if _has_top_level_or(pre):
-            return None
-        pre = pre.strip()
-    fa_l = (fa or fact).lower()
-    oa_l = (oa or other).lower()
-    if fa_l == oa_l or {fa_l, oa_l} & _CLAUSE_KEYWORDS:
-        return None
-    cls = _classify_inner_conjuncts(inner, fa_l, oa_l, fcols, ocols)
+    cls = _classify_inner_conjuncts(
+        f.term.inner, f.fact_alias, f.other_alias, f.fcols, f.ocols
+    )
     if cls is None:
         return None
     inner_where, corr = cls
     if not corr:
         return None  # uncorrelated EXISTS: constant per row — refuse
     return CorrSemiJoinShape(
-        fact,
+        f.fact,
         None,
-        other,
+        f.other,
         None,
-        sel,
-        neg,
-        pre,
+        f.out_cols,
+        f.term.neg,
+        f.pre,
         inner_where,
         tuple(corr),
         exists_form=True,
@@ -2104,12 +1916,10 @@ def match_corr_scalar_shape(
     (routed first — decorrelation to a keyed GROUP BY is cheaper);
     this matcher requires at least one correlated term, of any
     comparison kind, plus optional row-local inner conjuncts."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.scalar_subquery_clauses(query)
-    if parsed is None:
+    q = sqlast.parse_scalar_subquery(query)
+    if q is None:
         return None
-    select, akind, acol, fact, fa, inner, alias, dim, da = parsed
+    fact, dim = q.fact, q.dim
     if fact not in source_names or dim not in source_names or fact == dim:
         return None
     if fact not in source_columns or dim not in source_columns:
@@ -2119,7 +1929,7 @@ def match_corr_scalar_shape(
     pk = dim_pk.get(dim) or []
     if len(pk) != 1:
         return None
-    sel = tuple(c.strip() for c in select.split(","))
+    sel = tuple(c.strip() for c in q.select.split(","))
     if len({c.lower() for c in sel}) != len(sel):
         return None
     if any(c.lower() not in dcols for c in sel):
@@ -2127,30 +1937,18 @@ def match_corr_scalar_shape(
     sel = tuple(dcols[c.lower()] for c in sel)
     if pk[0].lower() not in {c.lower() for c in sel}:
         return None
-    if alias.lower() in {c.lower() for c in sel}:
+    if q.alias.lower() in {c.lower() for c in sel}:
         return None
-    akind = akind.lower()
-    if acol == "*":
-        if akind != "count":
-            return None
-        acol_res = None
-    else:
-        a = acol.strip()
-        qm = _QUAL_RE.fullmatch(a)
-        if qm is not None:
-            if qm.group(1).lower() != (fa or fact).lower():
-                return None
-            a = qm.group(2)
-        if a.lower() not in fcols:
-            return None
-        acol_res = fcols[a.lower()]
-    fa_l = (fa or fact).lower()
-    da_l = (da or dim).lower()
+    agg = _scalar_agg(q, fcols)
+    if agg is None:
+        return None
+    fa_l = (q.fact_alias or fact).lower()
+    da_l = (q.dim_alias or dim).lower()
     if fa_l == da_l or {fa_l, da_l} & _CLAUSE_KEYWORDS:
         return None
     # classifier convention: "inner" = the subquery's table (fact),
     # "outer" = the per-row scope (dim)
-    cls = _classify_inner_conjuncts(inner, da_l, fa_l, dcols, fcols)
+    cls = _classify_inner_conjuncts(q.inner, da_l, fa_l, dcols, fcols)
     if cls is None:
         return None
     inner_where, corr = cls
@@ -2160,9 +1958,9 @@ def match_corr_scalar_shape(
         dim,
         dim_pk[dim][0],
         fact,
-        akind,
-        acol_res,
-        alias,
+        agg[0],
+        agg[1],
+        q.alias,
         sel,
         inner_where,
         tuple(corr),
@@ -2194,31 +1992,13 @@ def match_global_agg_shape(
 
     Every select item must parse as a maintainable measure (which also
     rejects plain projections), and the WHERE must be row-local and
-    deterministic. The regex's optional WHERE is greedy across clause
-    keywords, so any trailing GROUP BY / ORDER BY / LIMIT swallowed
-    into it is rejected explicitly."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.global_agg_clauses(query)
-    if parsed is None:
+    deterministic. A WHERE whose text holds a clause keyword (inside
+    a literal or parentheses — the parser ends WHERE at a real one) is
+    rejected, the envelope the golden fixture pins."""
+    s = sqlast.parse_single_select(query)
+    if s is None or not s.only("where") or s.table not in source_names:
         return None
-    return _match_global_agg_core(*parsed, source_names, source_columns)
-
-
-def _match_global_agg_core(
-    select: str,
-    table: str,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> GlobalAggShape | None:
-    """Shape validation shared by the regex and AST front-ends. The
-    clause-keyword scan on WHERE lives here so both paths reject the
-    same texts (the regex front-end's greedy WHERE swallows trailing
-    clauses; the AST front-end never produces them, but a string
-    literal containing a keyword must fail identically on both)."""
-    if table not in source_names:
-        return None
+    table, where = s.table, s.where
     if where is not None:
         if re.search(
             r"(?i)\b(group\s+by|having|order\s+by|limit|qualify|window)\b", where
@@ -2231,7 +2011,7 @@ def _match_global_agg_core(
         cols = {c.lower() for c in source_columns[table]}
     if where is not None and (cols is None or not _row_local_expr_ok(where, cols)):
         return None
-    items = _split_select_list(select)
+    items = sqlast.split_commas(s.select)
     measures = None if items is None else _parse_measures(items, cols)
     if not measures:
         return None
@@ -2242,6 +2022,24 @@ def _match_global_agg_core(
         tuple(measures),
         where.strip() if where is not None else None,
     )
+
+
+def _single_group_by(query: str, source_names: set[str]):
+    """The :class:`sqlast.SingleSelect` of ``SELECT … FROM table [WHERE
+    e] GROUP BY … [HAVING h]`` over a registered source — no table
+    alias, nothing trailing, WHERE without subqueries, aggregates or
+    clock calls — or None."""
+    s = sqlast.parse_single_select(query)
+    if (
+        s is None
+        or not s.only("where", "group_by", "having")
+        or s.group_by is None
+        or s.table not in source_names
+    ):
+        return None
+    if s.where is not None and _NON_LOCAL_WHERE.search(s.where):
+        return None
+    return s
 
 
 def match_agg_shape(
@@ -2260,32 +2058,12 @@ def match_agg_shape(
     row-local expressions (e.g. ``SUM(a * (1 - b))``) — validated
     against the fact's schema; without it only bare identifiers match.
     """
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.agg_clauses(query)
-    if parsed is None:
+    s = _single_group_by(query, source_names)
+    if s is None:
         return None
-    return _match_agg_core(*parsed, source_names, source_columns)
-
-
-def _match_agg_core(
-    select: str,
-    table: str,
-    where: str | None,
-    keys_text: str,
-    having: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> AggShape | None:
-    """Shape validation shared by the regex and AST front-ends — both
-    hand it the raw clause texts; everything from here on is identical,
-    so the two paths cannot diverge past clause extraction."""
-    if table not in source_names:
-        return None
-    if where is not None and _NON_LOCAL_WHERE.search(where):
-        return None
-    key_terms = _split_select_list(keys_text)
-    items = _split_select_list(select)
+    table, where, having = s.table, s.where, s.having
+    key_terms = sqlast.split_commas(s.group_by)
+    items = sqlast.split_commas(s.select)
     if key_terms is None or items is None or len(items) <= len(key_terms):
         return None
     cols = None
@@ -2457,7 +2235,7 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
         inner = _paren_wrapped(body[rm.end() - 1 :])
         if inner is None:
             return None
-        terms = [t.strip() for t in _split_select_list(inner) or () if t.strip()]
+        terms = [t.strip() for t in sqlast.split_commas(inner) or () if t.strip()]
         if not terms:
             return None
         if rm.group(1).upper() == "ROLLUP":
@@ -2479,7 +2257,7 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
     gbody = _paren_wrapped(body[gm.end() - 1 :])
     if gbody is None:
         return None
-    items = _split_select_list(gbody)
+    items = sqlast.split_commas(gbody)
     if items is None:
         return None
     sets: list[tuple[str, ...]] = []
@@ -2492,7 +2270,7 @@ def _expand_grouping_body(body: str) -> list[tuple[str, ...]] | None:
         # single non-splittable expression — "(a, b)" is the set
         # {a, b}; "(a + b)" is one expression term.
         if inner is not None:
-            terms = _split_select_list(inner)
+            terms = sqlast.split_commas(inner)
             if terms is None:
                 return None
             sets.append(tuple(t.strip() for t in terms if t.strip()))
@@ -2522,29 +2300,11 @@ def match_grouping_sets_shape(
     calls rewrite to possibly-hidden measure aliases; a referenced key
     reads as NULL on the sub-targets that aggregate it away, applied
     per sub-MV via NULL substitution)."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.agg_clauses(query)
-    if parsed is None:
+    s = _single_group_by(query, source_names)
+    if s is None:
         return None
-    return _match_grouping_sets_core(*parsed, source_names, source_columns)
-
-
-def _match_grouping_sets_core(
-    select: str,
-    table: str,
-    where: str | None,
-    keys_body: str,
-    having: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]] | None,
-) -> GroupingSetsShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    if table not in source_names:
-        return None
-    if where is not None and _NON_LOCAL_WHERE.search(where):
-        return None
-    sets = _expand_grouping_body(keys_body)
+    select, table, where, having = s.select, s.table, s.where, s.having
+    sets = _expand_grouping_body(s.group_by)
     if sets is None:
         return None
     cols = None
@@ -2559,7 +2319,7 @@ def _match_grouping_sets_core(
         for t in s:
             if _norm_sql(t) not in {_norm_sql(x) for x in set_terms}:
                 set_terms.append(t)
-    items = _split_select_list(select)
+    items = sqlast.split_commas(select)
     if items is None or len(items) <= len(set_terms):
         return None
     # Leading select items are the grouping keys: bare columns, or
@@ -2816,7 +2576,7 @@ def _resolve_groupby_ordinals(query: str) -> str:
     select_txt = query[sels[0] + 6 : froms[0]].strip()
     if re.match(r"(?is)^DISTINCT\b", select_txt):
         return query
-    items = _split_select_list(select_txt)
+    items = sqlast.split_commas(select_txt)
     if items is None:
         return query  # an ordinal is only resolved against a parsed select list
     g = gbs[0]
@@ -2829,7 +2589,7 @@ def _resolve_groupby_ordinals(query: str) -> str:
     body = query[body_start:stop]
     if re.search(r"(?is)\b(ROLLUP|CUBE|GROUPING)\b", body):
         return query
-    terms = _split_select_list(body)
+    terms = sqlast.split_commas(body)
     if terms is None:
         return query
     out_terms = []
@@ -2883,7 +2643,7 @@ def _resolve_orderby_ordinals(query: str) -> str:
     select_txt = query[sels[0] + 6 : froms[0]].strip()
     if re.match(r"(?is)^DISTINCT\b", select_txt):
         return query
-    items = _split_select_list(select_txt)
+    items = sqlast.split_commas(select_txt)
     if items is None:
         return query  # an ordinal is only resolved against a parsed select list
     m = re.match(r"(?is)^ORDER\s+BY\s+", query[obs[0] :])
@@ -2891,7 +2651,7 @@ def _resolve_orderby_ordinals(query: str) -> str:
     stop = len(query)
     for j in _scan_top_level(query[body_start:], "LIMIT"):
         stop = min(stop, body_start + j)
-    terms = _split_select_list(query[body_start:stop])
+    terms = sqlast.split_commas(query[body_start:stop])
     if terms is None:
         return query
     out_terms = []
@@ -2929,7 +2689,7 @@ def _swap_right_join(query: str) -> str:
     # reorder the output schema (DDL, positional consumers), so leave
     # star projections (or a select list the tokenizer rejects) alone
     select_txt = re.sub(r"(?is)^\s*SELECT\s+", "", m.group("head")).strip()
-    items = _split_select_list(select_txt)
+    items = sqlast.split_commas(select_txt)
     if items is None or any(it == "*" or it.endswith(".*") for it in items):
         return query
     return (
@@ -3069,26 +2829,10 @@ def match_projection_shape(
     Anything with DISTINCT, GROUP BY, set ops, window functions,
     aggregates, subqueries, or a non-row-local WHERE bails to the
     other matchers / the recompute fallback."""
-    from tiflink_spark import sqlast
-
-    parsed = sqlast.projection_clauses(query)
-    if parsed is None:
+    s = sqlast.parse_single_select(query)
+    if s is None or not s.only("alias", "where") or s.table not in source_names:
         return None
-    return _match_projection_core(*parsed, source_names, source_columns, source_pks)
-
-
-def _match_projection_core(
-    select: str,
-    table: str,
-    alias: str | None,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> ProjectionShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    if table not in source_names:
-        return None
+    select, table, alias, where = s.select, s.table, s.alias, s.where
     if alias is not None and alias.lower() in (
         _CLAUSE_KEYWORDS | _POST_ALIAS_KEYWORDS | {"union", "intersect", "except", "order", "limit"}
     ):
@@ -3114,7 +2858,7 @@ def _match_projection_core(
         out = _QUAL_RE.sub(sub, s)
         return None if bad else out
 
-    select_items = _split_select_list(select)
+    select_items = sqlast.split_commas(select)
     if select_items is None:
         return None
     items: list[tuple[str, str]] = []
@@ -3216,8 +2960,6 @@ def _rewrite_comma_joins(query: str, source_columns: dict[str, list[str]]) -> st
     cross join). Clause extraction is token-based
     (sqlast.comma_from_clauses): boundaries are found at paren depth
     0, so a GROUP BY inside a WHERE subquery never tears the split."""
-    from tiflink_spark import sqlast
-
     p = sqlast.comma_from_clauses(query)
     if p is None:
         return query
@@ -3495,8 +3237,6 @@ def rewrite_theta_tree(
     and the recompute fallback stands. The caller only uses the
     rewrite when both cascade levels route incrementally, so a rewrite
     that doesn't route costs nothing."""
-    from tiflink_spark import sqlast
-
     s = sqlast.parse_join_select(query)
     if (
         s is None
@@ -3543,7 +3283,7 @@ def rewrite_theta_tree(
     inner_tables = names[:-1]
     last = joins[-1]
     inner_low = all_low - low[names[-1]]
-    sel_items = [i.strip() for i in _split_select_list(s.select) or ()]
+    sel_items = [i.strip() for i in sqlast.split_commas(s.select) or ()]
     if not sel_items or any(not re.fullmatch(_IDENT, i) for i in sel_items):
         return None
     if s.where is not None and not _row_local_expr_ok(s.where, all_low):
@@ -3764,8 +3504,6 @@ def split_nested_query(query: str) -> tuple[str, str, str] | None:
     SELECT). Token-based (sqlast.nested_from_subquery): the FROM is
     located at paren depth 0, so a ``FROM (`` inside a string literal
     or a select-list subquery never misfires."""
-    from tiflink_spark import sqlast
-
     p = sqlast.nested_from_subquery(query)
     if p is None:
         return None
@@ -3892,17 +3630,6 @@ class JoinAggShape:
 
 _REF = rf"(?:{_IDENT}\s*\.\s*)?{_IDENT}"
 
-_ON_EQ = rf"{_REF}\s*=\s*{_REF}"
-
-_JOIN_CLAUSE_RE = re.compile(
-    rf"(?:(?P<how>INNER|LEFT(?:\s+OUTER)?)\s+)?"
-    rf"JOIN\s+(?P<t>{_IDENT})(?:\s+(?:AS\s+)?(?P<a>{_IDENT}))?\s+"
-    rf"ON\s+(?P<on>{_ON_EQ}(?:\s+AND\s+{_ON_EQ})*)",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_ON_EQ_RE = re.compile(rf"(?P<lref>{_REF})\s*=\s*(?P<rref>{_REF})", re.DOTALL)
-
 _CLAUSE_KEYWORDS = frozenset(
     "join inner left outer on where group having as".split()
 )
@@ -3948,32 +3675,15 @@ def match_join_projection_shape(
     window, no aggregates."""
     if _scan_top_level(query, "GROUP") or _scan_top_level(query, "HAVING"):
         return None
-    parsed = _join_ast_clauses(query, need_group_by=False)
-    if parsed is None:
+    s = _join_tree_select(query)
+    if s is None or not s.only("alias", "where"):
         return None
-    return _match_join_projection_core(
-        *parsed[:5], source_names, source_columns, source_pks
-    )
-
-
-def _match_join_projection_core(
-    select: str,
-    t0: str,
-    a0: str | None,
-    join_structs,
-    where: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> JoinProjectionShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
+    select, where = s.select, s.where
     if re.match(r"(?is)^DISTINCT\b", select) or re.search(
         r"(?is)\bOVER\s*\(", select
     ):
         return None
-    tree = _orient_join_tree(
-        t0, a0, join_structs, source_names, source_columns, source_pks
-    )
+    tree = _orient_join_tree(s, source_names, source_columns, source_pks)
     if tree is None:
         return None
     tables, quals, cols, ambiguous, resolve, fact, dims = tree
@@ -3985,7 +3695,7 @@ def _match_join_projection_core(
     for t in tables:
         for c in cols[t]:
             taken[c] = taken.get(c, 0) + 1
-    items = _split_select_list(select)
+    items = sqlast.split_commas(select)
     if items is None:
         return None
     for item in items:
@@ -4061,63 +3771,39 @@ def _match_join_projection_core(
     )
 
 
-_ON_EQ_CHAIN_RE = re.compile(
-    rf"(?is)^\s*{_ON_EQ}(?:\s+AND\s+{_ON_EQ})*\s*$"
-)
-
-
-def _join_ast_clauses(query: str, need_group_by: bool):
-    """AST front-end shared by the fact-⋈-dims projection and
-    aggregate matchers: (select, t0, a0, join_structs, where, keys,
-    having) or None. Envelope (inherited from the deleted regex front-end) —
-    INNER/LEFT joins only, each ON body an equality chain."""
-    from tiflink_spark import sqlast
-
+def _join_tree_select(query: str):
+    """The :class:`sqlast.JoinSelect` the fact-⋈-dims projection and
+    aggregate matchers share — INNER/LEFT joins only, each ON body an
+    equality chain, nothing trailing — or None."""
     s = sqlast.parse_join_select(query)
     if s is None or s.tail is not None:
         return None
-    if need_group_by:
-        if s.group_by is None:
-            return None
-    elif s.group_by is not None or s.having is not None:
-        return None
-    structs: list[tuple[str | None, str, str | None, str]] = []
     for j in s.joins:
         if j.how not in ("inner", "left") or j.on is None:
             return None
-        if not _ON_EQ_CHAIN_RE.match(j.on):
+        if sqlast.equality_pairs(j.on) is None:
             return None
         if j.system_time is not None:
             return None  # temporal joins route via TemporalJoinShape only
-        structs.append((j.how, j.table, j.alias, j.on))
-    return (s.select, s.table, s.alias, structs, s.where, s.group_by, s.having)
+    return s
 
 
-def _orient_join_tree(
-    t0, a0, join_structs, source_names, source_columns, source_pks
-):
+def _orient_join_tree(s, source_names, source_columns, source_pks):
     """Shared FROM/JOIN orientation for the join matchers: given the
-    base table and the (how, table, alias, on) join steps, resolve
-    every ON equality, and orient the join graph at the table from
-    which every other table is reachable through its own declared PK.
-    Returns (tables, quals, cols, ambiguous, resolve, fact, dims) or
-    None."""
-    tables = [t0]
-    quals = {(a0 or t0).lower(): t0}
+    join statement ``s`` (a :class:`sqlast.JoinSelect` whose every ON
+    is an equality chain), resolve every ON equality, and orient the
+    join graph at the table from which every other table is reachable
+    through its own declared PK. Returns (tables, quals, cols,
+    ambiguous, resolve, fact, dims) or None."""
+    tables = [s.table]
+    quals = {(s.alias or s.table).lower(): s.table}
     # raw ([(lref, rref), ...], how, joined-table) per ON clause — a
     # conjunction of equalities is one edge (the composite-PK form)
     edges: list[tuple[list[tuple[str, str]], str, str]] = []
-    for how_text, jt, ja, on in join_structs:
-        tables.append(jt)
-        quals[(ja or jt).lower()] = jt
-        how = "left" if (how_text or "").lower().startswith("left") else "inner"
-        pairs = [
-            (em.group("lref"), em.group("rref"))
-            for em in _ON_EQ_RE.finditer(on)
-        ]
-        if not pairs:
-            return None
-        edges.append((pairs, how, jt))
+    for j in s.joins:
+        tables.append(j.table)
+        quals[(j.alias or j.table).lower()] = j.table
+        edges.append((sqlast.equality_pairs(j.on), j.how, j.table))
     if (
         len(set(tables)) != len(tables)
         or any(t not in source_names for t in tables)
@@ -4132,22 +3818,7 @@ def _orient_join_tree(
             seen[c] = seen.get(c, 0) + 1
     ambiguous = {c for c, n in seen.items() if n > 1}
 
-    def resolve(ref: str) -> tuple[str, str] | None:
-        """'a.b' or bare 'b' → (table, column) or None."""
-        qm = _QUAL_RE.fullmatch(ref.strip())
-        if qm is not None:
-            qual, col = qm.group(1).lower(), qm.group(2)
-            table = quals.get(qual)
-            if table is None or col.lower() not in cols[table]:
-                return None
-            return table, cols[table][col.lower()]
-        name = ref.strip().lower()
-        if name in ambiguous:
-            return None
-        for t in tables:
-            if name in cols[t]:
-                return t, cols[t][name]
-        return None
+    resolve = _column_resolver(quals, cols, ambiguous)
 
     # Each edge resolves to exactly two tables; its equality pairs map
     # one table's columns onto the other's, positionally consistent.
@@ -4238,6 +3909,31 @@ def _orient_join_tree(
     return tables, quals, cols, ambiguous, resolve, fact, dims
 
 
+def _column_resolver(quals, cols, ambiguous=frozenset()):
+    """'q.c' or bare 'c' → (table, canonical column) or None. ``quals``
+    maps lowercased aliases/names to tables, ``cols`` each table's
+    lowercased → canonical columns (a bare name resolves to the first
+    table holding it); a bare name in ``ambiguous`` never resolves,
+    mirroring SQL resolution."""
+
+    def resolve(ref: str) -> tuple[str, str] | None:
+        qm = _QUAL_RE.fullmatch(ref.strip())
+        if qm is not None:
+            t = quals.get(qm.group(1).lower())
+            if t is None or qm.group(2).lower() not in cols[t]:
+                return None
+            return t, cols[t][qm.group(2).lower()]
+        name = ref.strip().lower()
+        if name in ambiguous:
+            return None
+        for t in cols:
+            if name in cols[t]:
+                return t, cols[t][name]
+        return None
+
+    return resolve
+
+
 def _make_dequalifier(quals, cols, ambiguous=frozenset()):
     """'alias.col' → bare-name rewriter over validated qualifiers.
 
@@ -4288,28 +3984,11 @@ def match_join_agg_shape(
     column references both match; bare names present in more than one
     table are rejected as ambiguous, mirroring SQL resolution.
     """
-    parsed = _join_ast_clauses(query, need_group_by=True)
-    if parsed is None:
+    s = _join_tree_select(query)
+    if s is None or s.group_by is None:
         return None
-    return _match_join_agg_core(*parsed, source_names, source_columns, source_pks)
-
-
-def _match_join_agg_core(
-    select: str,
-    t0: str,
-    a0: str | None,
-    join_structs,
-    where: str | None,
-    keys_body: str,
-    having: str | None,
-    source_names: set[str],
-    source_columns: dict[str, list[str]],
-    source_pks: dict[str, list[str]],
-) -> JoinAggShape | None:
-    """Shape validation on the AST front-end's extracted clauses."""
-    tree = _orient_join_tree(
-        t0, a0, join_structs, source_names, source_columns, source_pks
-    )
+    where, having = s.where, s.having
+    tree = _orient_join_tree(s, source_names, source_columns, source_pks)
     if tree is None:
         return None
     tables, quals, cols, ambiguous, resolve, fact, dims = tree
@@ -4324,8 +4003,8 @@ def _match_join_agg_core(
     # side — or an ``expr AS alias`` derived key (time-grain rollups),
     # whose GROUP BY term spells either the expression or the alias.
     left_dims = {d.dim for d in dims if d.how == "left"}
-    key_terms = _split_select_list(keys_body)
-    items = _split_select_list(select)
+    key_terms = sqlast.split_commas(s.group_by)
+    items = sqlast.split_commas(s.select)
     if key_terms is None or items is None or len(items) <= len(key_terms):
         return None
     allowed = set().union(*(set(cols[t]) for t in tables)) - ambiguous
@@ -4505,8 +4184,6 @@ def match_temporal_join_shape(
     column, select list of plain (optionally qualified) unambiguous
     columns including the whole fact PK; no WHERE/GROUP BY/HAVING/
     tail."""
-    from tiflink_spark import sqlast
-
     s = sqlast.parse_join_select(query)
     if (
         s is None
@@ -4594,7 +4271,7 @@ def match_temporal_join_shape(
     fk = [by_low[p.lower()][1] for p in dim_pk]
 
     out_cols, out_src = [], []
-    items = _split_select_list(s.select)
+    items = sqlast.split_commas(s.select)
     if items is None:
         return None
     for item in items:

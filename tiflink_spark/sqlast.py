@@ -1,23 +1,27 @@
-"""Minimal SQL tokenizer + single-SELECT clause parser.
+"""SQL tokenizer and statement parsers for the planner's shape matchers.
 
-The maintenance planner's matchers (planner.py) historically extract
-clauses with hand-rolled regexes — the repo's largest wrong-answer
-surface as the shape catalog grows. This module is the replacement
-front-end: a proper tokenizer (string-literal and paren aware, with
-source offsets so clause texts are returned VERBATIM) and a clause
-parser for the single-SELECT statement form the matchers consume.
+The tokenizer is string-literal and paren aware and keeps source
+offsets, so every clause text a parser returns is VERBATIM (matchers
+compare and re-emit clause texts). The parsers turn one statement into
+one record:
 
-Migration status: DONE AND SEALED — all 17 matchers (single-table
-aggregate, projection, global aggregate, DISTINCT, OVER-window, global
-ORDER BY+LIMIT, multi-branch UNION ALL, two-branch INTERSECT/EXCEPT/
-UNION, per-group Top-N, grouping sets, theta join, join,
-join-projection, join-aggregate, semi/anti join, correlated count,
-full outer join) route through this parser; the legacy regex scanners
-and their ``TIFLINK_AST_MATCHERS`` rollback lever are DELETED. While
-both paths existed, tests/test_sqlast.py proved them equivalent
-query-by-query over the planner fuzz corpus; the same corpus now pins
-this parser against a committed golden fixture
-(tests/fixtures/matcher_golden.json).
+- :func:`parse_single_select` → :class:`SingleSelect`, one SELECT over
+  one named table (WHERE, GROUP BY, HAVING, ORDER BY, LIMIT);
+- :func:`parse_join_select` → :class:`JoinSelect`, a SELECT over an
+  explicit JOIN chain;
+- :func:`parse_where_subquery` → :class:`SubqueryTerm`, the EXISTS / IN
+  subquery term that ends a WHERE clause;
+- :func:`parse_scalar_subquery` → :class:`ScalarSubquery`, the
+  select-list scalar-aggregate subquery;
+- :func:`topn_clauses`, :func:`setop_parts` and the structural splits
+  the planner's text rewrites use.
+
+A matcher parses once, states its envelope with the record's
+``only(...)`` (the optional clauses it accepts; every other one must be
+absent), and validates the clause texts itself. :func:`split_commas`
+and :func:`equality_pairs` split a select list and an ``a = b [AND …]``
+predicate. tests/fixtures/matcher_golden.json pins every matcher's
+output over a fixed corpus.
 
 No external parser dependency: sqlglot-class libraries are not in the
 runtime image, and the subset of SQL the matchers accept is small
@@ -128,9 +132,23 @@ def _find_clause(toks: list[Token], *words: str) -> int | None:
     return None
 
 
+class _Statement:
+    # the clauses a statement may leave out, in declaration order
+    _optional: tuple[str, ...] = ()
+
+    def only(self, *clauses: str) -> bool:
+        """True when every optional clause outside ``clauses`` is
+        absent — a matcher's envelope, e.g. ``s.only("where")``."""
+        return all(
+            getattr(self, c) is None for c in self._optional if c not in clauses
+        )
+
+
 @dataclass(frozen=True)
-class SingleSelect:
+class SingleSelect(_Statement):
     """One SELECT over one named table — the clause texts verbatim."""
+
+    _optional = ("alias", "where", "group_by", "having", "tail", "order_by", "limit")
 
     select: str
     table: str
@@ -255,102 +273,6 @@ def parse_single_select(sql: str) -> SingleSelect | None:
     )
 
 
-# -- planner front-ends -----------------------------------------------------
-
-
-def agg_clauses(query: str):
-    """AST front-end for the single-table aggregate matcher: the
-    (select, table, where, group_by, having) clause texts, or None.
-    Envelope (inherited from the deleted regex front-end): GROUP BY required, no table
-    alias (the regex form never admitted one), nothing trailing."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is None
-        or s.alias is not None
-    ):
-        return None
-    return (s.select, s.table, s.where, s.group_by, s.having)
-
-
-def projection_clauses(query: str):
-    """AST front-end for the projection matcher: (select, table, alias,
-    where), or None. Envelope (inherited from the deleted regex front-end): optional
-    alias, optional WHERE, no GROUP BY/HAVING, nothing trailing."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-    ):
-        return None
-    return (s.select, s.table, s.alias, s.where)
-
-
-def global_agg_clauses(query: str):
-    """AST front-end for the no-GROUP-BY global aggregate: (select,
-    table, where), or None. Envelope (inherited from the deleted regex front-end):
-    no alias, no GROUP BY/HAVING, nothing trailing (clause keywords
-    inside string literals are rejected by the shared core, keeping
-    regex-path equivalence during migration)."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.alias is not None
-    ):
-        return None
-    return (s.select, s.table, s.where)
-
-
-def window_clauses(query: str):
-    """AST front-end for the partitioned OVER-window matcher: (select,
-    table, where), or None. Envelope (inherited from the deleted regex front-end):
-    no alias, no GROUP BY/HAVING, nothing trailing."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.alias is not None
-    ):
-        return None
-    return (s.select, s.table, s.where)
-
-
-def distinct_clauses(query: str):
-    """AST front-end for the single-table DISTINCT projection:
-    (select-without-DISTINCT, table, where), or None."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.alias is not None
-    ):
-        return None
-    dm = re.match(r"(?is)^DISTINCT\s+(.*)$", s.select)
-    if dm is None:
-        return None
-    return (dm.group(1), s.table, s.where)
-
-
 @dataclass(frozen=True)
 class JoinClause:
     """One JOIN step: how ∈ {"inner","left","right","full","cross"}
@@ -371,11 +293,13 @@ class JoinClause:
 
 
 @dataclass(frozen=True)
-class JoinSelect:
+class JoinSelect(_Statement):
     """``SELECT items FROM t0 [a0] (JOIN ...)+ [WHERE] [GROUP BY]
     [HAVING]`` — clause texts verbatim. ``tail`` non-None marks trailing
     text the parser doesn't model (set ops, ORDER BY/LIMIT/OFFSET...);
     matchers must require it None."""
+
+    _optional = ("alias", "where", "group_by", "having", "tail")
 
     select: str
     table: str
@@ -571,736 +495,210 @@ def parse_join_select(sql: str) -> JoinSelect | None:
     )
 
 
-def theta_join_clauses(query: str):
-    """AST front-end for the two-sided non-equi join view: (select,
-    left, left_alias, right, right_alias, pred, where), or None.
-    Envelope (inherited from the deleted regex front-end): exactly one INNER join
-    with an ON predicate, optional WHERE, nothing trailing."""
-    s = parse_join_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.group_by is not None
-        or s.having is not None
-        or len(s.joins) != 1
-    ):
-        return None
-    j = s.joins[0]
-    if j.how != "inner" or j.on is None or j.system_time is not None:
-        return None
-    return (s.select, s.table, s.alias, j.table, j.alias, j.on, s.where)
+_REF = r"(?:[A-Za-z_]\w*\s*\.\s*)?[A-Za-z_]\w*"
 
 
-def join_using_clauses(query: str):
-    """AST front-end for the bare inner equi-join USING form: (select,
-    left, right, key), or None. Envelope (inherited from the deleted regex front-end):
-    bare ident select list, no aliases, no WHERE, nothing trailing."""
-    s = parse_join_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.where is not None
-        or s.alias is not None
-        or len(s.joins) != 1
-    ):
-        return None
-    j = s.joins[0]
-    if (
-        j.how != "inner"
-        or j.using is None
-        or j.alias is not None
-        or j.system_time is not None
-    ):
-        return None
-    items = [c.strip() for c in s.select.split(",")]
-    if any(not re.fullmatch(r"[A-Za-z_]\w*", c) for c in items):
-        return None
-    return (s.select, s.table, j.table, j.using)
-
-
-def join_on_clauses(query: str):
-    """AST front-end for the inner equi-join ON form: (select, left,
-    left_alias, right, right_alias, lref, rref, where), or None.
-    Envelope (inherited from the deleted regex front-end): one INNER join whose ON is
-    a single [qual.]col = [qual.]col equality, optional WHERE, nothing
-    trailing."""
-    s = parse_join_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.group_by is not None
-        or s.having is not None
-        or len(s.joins) != 1
-    ):
-        return None
-    j = s.joins[0]
-    if j.how != "inner" or j.on is None or j.system_time is not None:
-        return None
-    ref = r"(?:[A-Za-z_]\w*\s*\.\s*)?[A-Za-z_]\w*"
-    em = re.fullmatch(
-        rf"(?s)\s*({ref})\s*=\s*({ref})\s*", j.on
-    )
-    if em is None:
-        return None
-    return (
-        s.select,
-        s.table,
-        s.alias,
-        j.table,
-        j.alias,
-        em.group(1),
-        em.group(2),
-        s.where,
-    )
-
-
-def full_outer_join_clauses(query: str):
-    """AST front-end for the two-sided preserved equi-join view:
-    (select, left, left_alias, right, right_alias, pairs, where) with
-    ``pairs`` the list of (lref, rref) equality conjuncts, or None.
-    Envelope: exactly one FULL [OUTER] JOIN whose ON is a conjunction
-    of [qual.]col = [qual.]col equalities (composite-key dims join on
-    several), an optional WHERE (validated row-local over the view's
-    OUTPUT by the matcher — SQL evaluates it AFTER the join, so it is
-    the stateless target-side filter, not a preserved-row change),
-    nothing trailing. AST-only — this matcher postdates the regex
-    front-ends' deprecation."""
-    s = parse_join_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.group_by is not None
-        or s.having is not None
-        or len(s.joins) != 1
-    ):
-        return None
-    j = s.joins[0]
-    if j.how != "full" or j.on is None or j.system_time is not None:
-        return None
-    ref = r"(?:[A-Za-z_]\w*\s*\.\s*)?[A-Za-z_]\w*"
+def equality_pairs(expr: str) -> list[tuple[str, str]] | None:
+    """``expr`` as a conjunction of ``[q.]a = [q.]b`` equalities: the
+    (left, right) reference texts in conjunct order, or None when any
+    conjunct is something else."""
     pairs = []
-    for conj in re.split(r"(?is)\bAND\b", j.on):
-        em = re.fullmatch(rf"(?s)\s*({ref})\s*=\s*({ref})\s*", conj)
+    for conj in re.split(r"(?is)\bAND\b", expr):
+        em = re.fullmatch(rf"(?s)\s*({_REF})\s*=\s*({_REF})\s*", conj)
         if em is None:
-            return None  # any non-equality conjunct disqualifies
+            return None
         pairs.append((em.group(1), em.group(2)))
-    return (s.select, s.table, s.alias, j.table, j.alias, pairs, s.where)
+    return pairs
 
 
-def semijoin_clauses(query: str):
-    """AST front-end for the EXISTS / NOT EXISTS / IN / NOT IN
-    existence-filter view. Returns the 12-tuple
+def _take_alias(toks: list[Token], k: int, stop: str) -> tuple[str | None, bool, int] | None:
+    """The optional ``[AS] alias`` at ``toks[k]``: (alias, spelled with
+    AS, index past it), or None on a dangling AS. An identifier equal
+    to ``stop`` is the next keyword, not an alias."""
+    if k < len(toks) and toks[k].kind == "ident":
+        if toks[k].lower() == "as":
+            if k + 1 >= len(toks) or toks[k + 1].kind != "ident":
+                return None
+            return toks[k + 1].text, True, k + 2
+        if toks[k].lower() != stop:
+            return toks[k].text, False, k + 1
+    return None, False, k
 
-        (in_form, select, fact, fa, pre, neg, other, oa,
-         lref, rref, fcol, ocol)
 
-    (EXISTS form: fcol/ocol None; IN form: fa/oa/lref/rref None), or
-    None. Envelope (inherited from the deleted regex front-end): bare ident
-    select list, the subquery term LAST in WHERE, one optional leading
-    conjunct (``pre``)."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.where is None
-    ):
+def _balanced(toks: list[Token]) -> bool:
+    depth = 0
+    for t in toks:
+        if t.text == "(":
+            depth += 1
+        elif t.text == ")":
+            depth -= 1
+            if depth < 0:
+                return False
+    return depth == 0
+
+
+@dataclass(frozen=True)
+class SubqueryTerm:
+    """The subquery term that ends a WHERE clause, one of
+
+        [pre AND] [NOT] EXISTS (SELECT 1|* FROM other [[AS] oa] [WHERE inner])
+        [pre AND] fcol [NOT] IN (SELECT ocol FROM other [[AS] oa] [WHERE inner])
+
+    — texts verbatim. ``fact_col``/``other_col`` are None for EXISTS;
+    ``inner`` is None when the subquery has no WHERE."""
+
+    pre: str | None
+    neg: bool
+    other: str
+    other_alias: str | None
+    inner: str | None
+    fact_col: str | None = None
+    other_col: str | None = None
+
+
+def parse_where_subquery(where: str) -> SubqueryTerm | None:
+    """The term starting at ``where``'s last depth-0 EXISTS or IN, which
+    must run to the end of ``where``; None for anything else. Whatever
+    precedes the term must be one non-empty conjunct joined by AND."""
+    toks = tokenize(where)
+    if not toks:
         return None
-    if any(
-        not re.fullmatch(r"[A-Za-z_]\w*", c.strip()) for c in s.select.split(",")
-    ):
-        return None
-    wtoks = tokenize(s.where)
-    if not wtoks:
-        return None
 
-    def ident(j: int, toks=None) -> str | None:
-        toks = wtoks if toks is None else toks
+    def ident(j: int) -> str | None:
         return toks[j].text if 0 <= j < len(toks) and toks[j].kind == "ident" else None
 
-    # locate the LAST depth-0 EXISTS (mirrors the regex's non-greedy
-    # pre, which grows until the final EXISTS term)
-    depth, epos = 0, None
-    for i, t in enumerate(wtoks):
+    def kw(j: int) -> str:
+        return (ident(j) or "").lower()
+
+    depth, pos = 0, None
+    for i, t in enumerate(toks):
         if t.text == "(":
             depth += 1
         elif t.text == ")":
             depth -= 1
-        elif depth == 0 and t.kind == "ident" and t.lower() == "exists":
-            epos = i
-    if epos is not None:
-        start = epos
-        neg = False
-        if start > 0 and (ident(start - 1) or "").lower() == "not":
-            neg, start = True, start - 1
-        pre = None
-        if start > 0:
-            # the term before [NOT] EXISTS must be a depth-0 AND with a
-            # non-empty conjunct in front of it
-            if (ident(start - 1) or "").lower() != "and" or start - 1 == 0:
-                return None
-            pre = s.where[wtoks[0].start : wtoks[start - 2].end]
-        # EXISTS ( SELECT 1|* FROM other [AS? oa] WHERE lref = rref )
-        j = epos + 1
-        if j >= len(wtoks) or wtoks[j].text != "(":
+        elif depth == 0 and t.kind == "ident" and t.lower() in ("exists", "in"):
+            pos = i
+    if pos is None:
+        return None
+    exists = kw(pos) == "exists"
+    start = pos - 1 if kw(pos - 1) == "not" else pos
+    neg = start != pos
+    fact_col = None
+    if not exists:
+        start -= 1
+        fact_col = ident(start)
+        if fact_col is None or fact_col.lower() in ("and", "or", "not", "in"):
             return None
-        j += 1
-        if (ident(j) or "").lower() != "select":
-            return None
-        j += 1
-        if j >= len(wtoks) or wtoks[j].text not in ("1", "*"):
-            return None
-        j += 1
-        if (ident(j) or "").lower() != "from":
-            return None
-        j += 1
-        other = ident(j)
-        if other is None:
-            return None
-        j += 1
-        oa = None
-        if (ident(j) or "").lower() == "as":
-            oa = ident(j + 1)
-            if oa is None:
-                return None
-            j += 2
-        elif ident(j) is not None and (ident(j) or "").lower() != "where":
-            oa = ident(j)
-            j += 1
-        if (ident(j) or "").lower() != "where":
-            return None
-        j += 1
-
-        def take_ref(j: int) -> tuple[str, int] | None:
-            if ident(j) is None:
-                return None
-            if (
-                j + 2 < len(wtoks)
-                and wtoks[j + 1].text == "."
-                and wtoks[j + 2].kind == "ident"
-            ):
-                return s.where[wtoks[j].start : wtoks[j + 2].end], j + 3
-            return wtoks[j].text, j + 1
-
-        # conjunction of correlation equalities: lref = rref [AND …] —
-        # composite-key EXISTS is the multi-pair form
-        pairs = []
-        while True:
-            tr = take_ref(j)
-            if tr is None:
-                return None
-            lref, j = tr
-            if j >= len(wtoks) or wtoks[j].text != "=":
-                return None
-            tr = take_ref(j + 1)
-            if tr is None:
-                return None
-            rref, j = tr
-            pairs.append((lref, rref))
-            if j < len(wtoks) and (ident(j) or "").lower() == "and":
-                j += 1
-                continue
-            break
-        if j != len(wtoks) - 1 or wtoks[j].text != ")":
-            return None
-        return (
-            False,
-            s.select,
-            s.table,
-            s.alias,
-            pre,
-            neg,
-            other,
-            oa,
-            pairs,
-            None,
-            None,
-            None,
-        )
-
-    # IN form: WHERE must END with: fcol [NOT] IN ( SELECT ocol FROM other )
-    n = len(wtoks)
-    if n < 7 or wtoks[n - 1].text != ")":
-        return None
-    other = ident(n - 2)
-    if other is None or (ident(n - 3) or "").lower() != "from":
-        return None
-    ocol = ident(n - 4)
-    if ocol is None or (ident(n - 5) or "").lower() != "select":
-        return None
-    if wtoks[n - 6].text != "(":
-        return None
-    j = n - 7
-    if (ident(j) or "").lower() != "in":
-        return None
-    j -= 1
-    neg = False
-    if (ident(j) or "").lower() == "not":
-        neg, j = True, j - 1
-    fcol = ident(j)
-    if fcol is None or fcol.lower() in ("and", "or", "not", "in"):
-        return None
-    pre = None
-    if j > 0:
-        if (ident(j - 1) or "").lower() != "and" or j - 1 == 0:
-            return None
-        pre = s.where[wtoks[0].start : wtoks[j - 2].end]
-    return (
-        True,
-        s.select,
-        s.table,
-        s.alias,
-        pre,
-        neg,
-        other,
-        None,
-        None,
-        None,
-        fcol,
-        ocol,
-    )
-
-
-def in_subquery_clauses(query: str):
-    """AST front-end for the IN / NOT IN subquery WITH an inner WHERE:
-
-        SELECT cols FROM fact [AS? fa]
-        WHERE [pre AND] fcol [NOT] IN (
-            SELECT ocol FROM other [AS? oa] WHERE <inner>)
-
-    Returns ``(select, fact, fa, pre, neg, fcol, other, oa, ocol,
-    inner)`` or None. The plain no-inner-WHERE spelling stays on
-    :func:`semijoin_clauses`; this front-end REQUIRES the inner WHERE
-    (round 10 — the correlated/filtered-subquery form)."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.where is None
-    ):
-        return None
-    if any(
-        not re.fullmatch(r"[A-Za-z_]\w*", c.strip()) for c in s.select.split(",")
-    ):
-        return None
-    wtoks = tokenize(s.where)
-    if not wtoks:
-        return None
-
-    def ident(j: int) -> str | None:
-        return (
-            wtoks[j].text
-            if 0 <= j < len(wtoks) and wtoks[j].kind == "ident"
-            else None
-        )
-
-    # locate the LAST depth-0 IN (the subquery term must be the final
-    # conjunct, mirroring semijoin_clauses' envelope)
-    depth, ipos = 0, None
-    for i, t in enumerate(wtoks):
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "ident" and t.lower() == "in":
-            ipos = i
-    if ipos is None:
-        return None
-    j = ipos - 1
-    neg = False
-    if (ident(j) or "").lower() == "not":
-        neg, j = True, j - 1
-    fcol = ident(j)
-    if fcol is None or fcol.lower() in ("and", "or", "not", "in"):
-        return None
-    pre = None
-    if j > 0:
-        if (ident(j - 1) or "").lower() != "and" or j - 1 == 0:
-            return None
-        pre = s.where[wtoks[0].start : wtoks[j - 2].end]
-    # after IN: ( SELECT ocol FROM other [AS? oa] WHERE inner )
-    k = ipos + 1
-    if k >= len(wtoks) or wtoks[k].text != "(":
-        return None
-    k += 1
-    if (ident(k) or "").lower() != "select":
-        return None
-    k += 1
-    ocol = ident(k)
-    if ocol is None or ocol.lower() in ("distinct",):
-        return None
-    k += 1
-    if (ident(k) or "").lower() != "from":
-        return None
-    k += 1
-    other = ident(k)
-    if other is None:
-        return None
-    k += 1
-    oa = None
-    if (ident(k) or "").lower() == "as":
-        oa = ident(k + 1)
-        if oa is None:
-            return None
-        k += 2
-    elif ident(k) is not None and (ident(k) or "").lower() != "where":
-        oa = ident(k)
-        k += 1
-    if (ident(k) or "").lower() != "where":
-        return None
-    k += 1
-    # the inner WHERE body runs to the ")" closing IN's "(", which must
-    # be the last token; parens inside the body must balance
-    if wtoks[-1].text != ")" or k >= len(wtoks) - 1:
-        return None
-    depth = 0
-    for t in wtoks[k:-1]:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-    if depth != 0:
-        return None
-    inner = s.where[wtoks[k].start : wtoks[-2].end]
-    return (s.select, s.table, s.alias, pre, neg, fcol, other, oa, ocol, inner)
-
-
-def exists_subquery_clauses(query: str):
-    """AST front-end for the general [NOT] EXISTS subquery — ANY inner
-    WHERE text (round 10; the equality-only form stays on
-    :func:`semijoin_clauses`):
-
-        SELECT cols FROM fact [AS? fa]
-        WHERE [pre AND] [NOT] EXISTS (
-            SELECT 1|* FROM other [AS? oa] WHERE <inner>)
-
-    Returns ``(select, fact, fa, pre, neg, other, oa, inner)`` or
-    None."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.where is None
-    ):
-        return None
-    if any(
-        not re.fullmatch(r"[A-Za-z_]\w*", c.strip()) for c in s.select.split(",")
-    ):
-        return None
-    wtoks = tokenize(s.where)
-    if not wtoks:
-        return None
-
-    def ident(j: int) -> str | None:
-        return (
-            wtoks[j].text
-            if 0 <= j < len(wtoks) and wtoks[j].kind == "ident"
-            else None
-        )
-
-    depth, epos = 0, None
-    for i, t in enumerate(wtoks):
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "ident" and t.lower() == "exists":
-            epos = i
-    if epos is None:
-        return None
-    start = epos
-    neg = False
-    if start > 0 and (ident(start - 1) or "").lower() == "not":
-        neg, start = True, start - 1
     pre = None
     if start > 0:
-        if (ident(start - 1) or "").lower() != "and" or start - 1 == 0:
+        if kw(start - 1) != "and" or start - 1 == 0:
             return None
-        pre = s.where[wtoks[0].start : wtoks[start - 2].end]
-    k = epos + 1
-    if k >= len(wtoks) or wtoks[k].text != "(":
+        pre = where[toks[0].start : toks[start - 2].end]
+    k = pos + 1
+    if k >= len(toks) or toks[k].text != "(" or kw(k + 1) != "select":
         return None
-    k += 1
-    if (ident(k) or "").lower() != "select":
-        return None
-    k += 1
-    if k >= len(wtoks) or wtoks[k].text not in ("1", "*"):
-        return None
-    k += 1
-    if (ident(k) or "").lower() != "from":
-        return None
-    k += 1
-    other = ident(k)
-    if other is None:
-        return None
-    k += 1
-    oa = None
-    if (ident(k) or "").lower() == "as":
-        oa = ident(k + 1)
-        if oa is None:
+    k += 2
+    other_col = None
+    if exists:
+        if k >= len(toks) or toks[k].text not in ("1", "*"):
             return None
-        k += 2
-    elif ident(k) is not None and (ident(k) or "").lower() != "where":
-        oa = ident(k)
+    else:
+        other_col = ident(k)
+        if other_col is None or other_col.lower() == "distinct":
+            return None
+    if kw(k + 1) != "from" or ident(k + 2) is None:
+        return None
+    other = ident(k + 2)
+    taken = _take_alias(toks, k + 3, "where")
+    if taken is None:
+        return None
+    oa, _, k = taken
+    inner = None
+    if kw(k) == "where":
         k += 1
-    if (ident(k) or "").lower() != "where":
+        if toks[-1].text != ")" or k >= len(toks) - 1 or not _balanced(toks[k:-1]):
+            return None
+        inner = where[toks[k].start : toks[-2].end]
+    elif k != len(toks) - 1 or toks[k].text != ")":
         return None
-    k += 1
-    if wtoks[-1].text != ")" or k >= len(wtoks) - 1:
-        return None
-    depth = 0
-    for t in wtoks[k:-1]:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-    if depth != 0:
-        return None
-    inner = s.where[wtoks[k].start : wtoks[-2].end]
-    return (s.select, s.table, s.alias, pre, neg, other, oa, inner)
+    return SubqueryTerm(pre, neg, other, oa, inner, fact_col, other_col)
 
 
-def corr_count_clauses(query: str):
-    """AST front-end for the correlated scalar-aggregate shape:
+@dataclass(frozen=True)
+class ScalarSubquery:
+    """``SELECT d1[, d2 …], (SELECT agg(x|*) FROM fact [[AS] fa] WHERE
+    inner) AS alias FROM dim [[AS] da]`` — the bare-ident outer select
+    list ``select``, the aggregate ``agg`` over ``arg`` (``*`` or a
+    possibly qualified column), texts verbatim. ``as_alias`` records
+    that a table alias is spelled with AS."""
 
-        SELECT d1[, d2 ...], (SELECT agg(x|*) FROM fact fa
-            WHERE q1.c1 = q2.c2) AS alias FROM dim da
+    select: str
+    agg: str
+    arg: str
+    fact: str
+    fact_alias: str | None
+    inner: str
+    alias: str
+    dim: str
+    dim_alias: str | None
+    as_alias: bool
 
-    → (select, akind, acol, fact, fa, w1, c1, w2, c2, alias, dim, da)
-    or None. Envelope (inherited from the deleted regex front-end) — bare ident outer
-    select items, mandatory table aliases, single equality."""
+
+def parse_scalar_subquery(query: str) -> ScalarSubquery | None:
+    """Parse the select-list scalar-subquery statement, or None."""
     sql = query.strip().rstrip(";")
     toks = tokenize(sql)
     if not toks:
         return None
 
-    def kw(j: int, *words: str) -> bool:
-        return all(
-            j + n < len(toks)
-            and toks[j + n].kind == "ident"
-            and toks[j + n].lower() == w
-            for n, w in enumerate(words)
-        )
+    def kw(j: int, word: str) -> bool:
+        return j < len(toks) and toks[j].kind == "ident" and toks[j].lower() == word
+
+    def text(j: int, kind: str = "ident") -> str | None:
+        return toks[j].text if j < len(toks) and toks[j].kind == kind else None
 
     if not kw(0, "select"):
         return None
-    # outer select: idents "," ... "," "(" — find the depth-0 "(" that
-    # starts the scalar subquery
+    # outer select: ident "," ... ident "," "(" — the depth-0 "(" starts
+    # the subquery
     i = 1
     sel_toks: list[Token] = []
-    while i < len(toks) and toks[i].kind == "ident":
+    while text(i) is not None:
         sel_toks.append(toks[i])
-        if i + 1 < len(toks) and toks[i + 1].text == ",":
-            i += 2
-        else:
+        if text(i + 1, "op") != ",":
             return None
-        if i < len(toks) and toks[i].text == "(":
-            break
-    if not sel_toks or i >= len(toks) or toks[i].text != "(":
-        return None
-    # verbatim text over the ident list (excluding the trailing comma)
-    select = sql[sel_toks[0].start : sel_toks[-1].end]
-    i += 1  # past "("
-    if not kw(i, "select"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
-        return None
-    akind = toks[i].text
-    if akind.lower() not in ("count", "sum", "avg", "min", "max"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].text != "(":
-        return None
-    i += 1
-    # acol: * | [qual .] ident
-    if i < len(toks) and toks[i].text == "*":
-        acol = "*"
-        i += 1
-    elif i < len(toks) and toks[i].kind == "ident":
-        if (
-            i + 2 < len(toks)
-            and toks[i + 1].text == "."
-            and toks[i + 2].kind == "ident"
-        ):
-            acol = sql[toks[i].start : toks[i + 2].end]
-            i += 3
-        else:
-            acol = toks[i].text
-            i += 1
-    else:
-        return None
-    if i >= len(toks) or toks[i].text != ")":
-        return None
-    i += 1
-    if not kw(i, "from"):
-        return None
-    i += 1
-    if i + 1 >= len(toks) or toks[i].kind != "ident" or toks[i + 1].kind != "ident":
-        return None
-    fact, fa = toks[i].text, toks[i + 1].text
-    if fa.lower() == "where":
-        return None
-    i += 2
-    if not kw(i, "where"):
-        return None
-    i += 1
-    # q1.c1 = q2.c2
-    if not (
-        i + 6 < len(toks)
-        and toks[i].kind == "ident"
-        and toks[i + 1].text == "."
-        and toks[i + 2].kind == "ident"
-        and toks[i + 3].text == "="
-        and toks[i + 4].kind == "ident"
-        and toks[i + 5].text == "."
-        and toks[i + 6].kind == "ident"
-    ):
-        return None
-    w1, c1, w2, c2 = (
-        toks[i].text,
-        toks[i + 2].text,
-        toks[i + 4].text,
-        toks[i + 6].text,
-    )
-    i += 7
-    if i >= len(toks) or toks[i].text != ")":
-        return None
-    i += 1
-    if not kw(i, "as"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
-        return None
-    alias = toks[i].text
-    i += 1
-    if not kw(i, "from"):
-        return None
-    i += 1
-    if (
-        i + 1 != len(toks) - 1
-        or toks[i].kind != "ident"
-        or toks[i + 1].kind != "ident"
-    ):
-        return None
-    dim, da = toks[i].text, toks[i + 1].text
-    return (select, akind, acol, fact, fa, w1, c1, w2, c2, alias, dim, da)
-
-
-def scalar_subquery_clauses(query: str):
-    """AST front-end for the correlated scalar-aggregate shape with a
-    GENERAL inner WHERE (round 10; the single-equality flagship form
-    stays on :func:`corr_count_clauses`):
-
-        SELECT d1[, d2 ...], (SELECT agg(x|*) FROM fact fa
-            WHERE <inner>) AS alias FROM dim [AS? da]
-
-    → (select, akind, acol, fact, fa, inner, alias, dim, da) or None.
-    Bare-ident outer select items; both table aliases optional (the
-    table name itself qualifies when absent)."""
-    sql = query.strip().rstrip(";")
-    toks = tokenize(sql)
-    if not toks:
-        return None
-
-    def kw(j: int, *words: str) -> bool:
-        return all(
-            j + n < len(toks)
-            and toks[j + n].kind == "ident"
-            and toks[j + n].lower() == w
-            for n, w in enumerate(words)
-        )
-
-    if not kw(0, "select"):
-        return None
-    i = 1
-    sel_toks: list[Token] = []
-    while i < len(toks) and toks[i].kind == "ident":
-        sel_toks.append(toks[i])
-        if i + 1 < len(toks) and toks[i + 1].text == ",":
-            i += 2
-        else:
-            return None
-        if i < len(toks) and toks[i].text == "(":
-            break
-    if not sel_toks or i >= len(toks) or toks[i].text != "(":
-        return None
-    select = sql[sel_toks[0].start : sel_toks[-1].end]
-    i += 1  # past "("
-    if not kw(i, "select"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
-        return None
-    akind = toks[i].text
-    if akind.lower() not in ("count", "sum", "avg", "min", "max"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].text != "(":
-        return None
-    i += 1
-    if i < len(toks) and toks[i].text == "*":
-        acol = "*"
-        i += 1
-    elif i < len(toks) and toks[i].kind == "ident":
-        if (
-            i + 2 < len(toks)
-            and toks[i + 1].text == "."
-            and toks[i + 2].kind == "ident"
-        ):
-            acol = sql[toks[i].start : toks[i + 2].end]
-            i += 3
-        else:
-            acol = toks[i].text
-            i += 1
-    else:
-        return None
-    if i >= len(toks) or toks[i].text != ")":
-        return None
-    i += 1
-    if not kw(i, "from"):
-        return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
-        return None
-    fact = toks[i].text
-    i += 1
-    fa = None
-    if kw(i, "as"):
-        if i + 1 >= len(toks) or toks[i + 1].kind != "ident":
-            return None
-        fa = toks[i + 1].text
         i += 2
-    elif (
-        i < len(toks)
-        and toks[i].kind == "ident"
-        and toks[i].lower() != "where"
-    ):
-        fa = toks[i].text
-        i += 1
+        if text(i, "op") == "(":
+            break
+    if not sel_toks or text(i, "op") != "(" or not kw(i + 1, "select"):
+        return None
+    agg = text(i + 2)
+    if agg is None or agg.lower() not in ("count", "sum", "avg", "min", "max"):
+        return None
+    if text(i + 3, "op") != "(":
+        return None
+    i += 4
+    if text(i, "op") == "*":
+        arg, i = "*", i + 1
+    elif text(i) is not None:
+        if text(i + 1, "op") == "." and text(i + 2) is not None:
+            arg, i = sql[toks[i].start : toks[i + 2].end], i + 3
+        else:
+            arg, i = toks[i].text, i + 1
+    else:
+        return None
+    if text(i, "op") != ")" or not kw(i + 1, "from") or text(i + 2) is None:
+        return None
+    fact = toks[i + 2].text
+    taken = _take_alias(toks, i + 3, "where")
+    if taken is None:
+        return None
+    fa, fa_as, i = taken
     if not kw(i, "where"):
         return None
-    i += 1
     # inner WHERE: everything until the ")" that closes the subquery
-    depth = 0
-    start = i
+    i += 1
+    depth, start = 0, i
     while i < len(toks):
         if toks[i].text == "(":
             depth += 1
@@ -1312,33 +710,20 @@ def scalar_subquery_clauses(query: str):
     if i >= len(toks) or i == start:
         return None
     inner = sql[toks[start].start : toks[i - 1].end]
-    i += 1  # past the closing ")"
-    if not kw(i, "as"):
+    if not kw(i + 1, "as") or text(i + 2) is None or not kw(i + 3, "from"):
         return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
+    alias = toks[i + 2].text
+    if text(i + 4) is None:
         return None
-    alias = toks[i].text
-    i += 1
-    if not kw(i, "from"):
+    dim = toks[i + 4].text
+    taken = _take_alias(toks, i + 5, "")
+    if taken is None or taken[2] != len(toks):
         return None
-    i += 1
-    if i >= len(toks) or toks[i].kind != "ident":
-        return None
-    dim = toks[i].text
-    i += 1
-    da = None
-    if kw(i, "as"):
-        if i + 1 >= len(toks) or toks[i + 1].kind != "ident":
-            return None
-        da = toks[i + 1].text
-        i += 2
-    elif i < len(toks) and toks[i].kind == "ident":
-        da = toks[i].text
-        i += 1
-    if i != len(toks):
-        return None
-    return (select, akind, acol, fact, fa, inner, alias, dim, da)
+    da, da_as, _ = taken
+    return ScalarSubquery(
+        sql[sel_toks[0].start : sel_toks[-1].end],
+        agg, arg, fact, fa, inner, alias, dim, da, fa_as or da_as,
+    )
 
 
 def topn_clauses(query: str):
@@ -1587,79 +972,6 @@ def setop_parts(query: str):
         return None
     parts.append((prev_op, _slice(sql, toks[prev:])))
     return parts
-
-
-def branch_clauses(branch: str):
-    """AST front-end for one union/set-op branch: ``SELECT cols FROM
-    table [WHERE e]`` → (select, table, where), or None. Mirrors
-    the legacy regex front-end's envelope: no alias, no GROUP BY /
-    HAVING / ORDER BY / LIMIT, nothing trailing."""
-    s = parse_single_select(branch)
-    if (
-        s is None
-        or s.tail is not None
-        or s.order_by is not None
-        or s.limit is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.alias is not None
-    ):
-        return None
-    return (s.select, s.table, s.where)
-
-
-def union_all_branches(query: str):
-    """AST front-end for the multi-branch UNION ALL matcher: the list
-    of (select, table, where) branch triples, or None (mixed operators
-    or any non-conforming branch bail — same totality as the regex
-    path, which also rejects the whole statement)."""
-    parts = setop_parts(query)
-    if parts is None or len(parts) < 2:
-        return None
-    if any(op != "union all" for op, _ in parts[1:]):
-        return None
-    branches = [branch_clauses(text) for _, text in parts]
-    if any(b is None for b in branches):
-        return None
-    return branches
-
-
-def setop_clauses(query: str):
-    """AST front-end for the two-branch INTERSECT/EXCEPT/UNION
-    matcher: (op, left_triple, right_triple), or None. ``op`` has the
-    regex path's spelling: "intersect" | "except" | "union" |
-    "intersect_all" | "except_all" ("union all" is the stateless union
-    route and returns None here)."""
-    parts = setop_parts(query)
-    if parts is None or len(parts) != 2:
-        return None
-    op = parts[1][0]
-    if op == "union all":
-        return None
-    left = branch_clauses(parts[0][1])
-    right = branch_clauses(parts[1][1])
-    if left is None or right is None:
-        return None
-    return (op.replace(" ", "_"), left, right)
-
-
-def order_limit_clauses(query: str):
-    """AST front-end for the global ORDER BY + LIMIT view: (select,
-    table, where, order_body, limit_text), or None. Mirrors
-    the legacy regex front-end's envelope: no alias, no GROUP BY/HAVING,
-    both ORDER BY and LIMIT present, nothing trailing."""
-    s = parse_single_select(query)
-    if (
-        s is None
-        or s.tail is not None
-        or s.group_by is not None
-        or s.having is not None
-        or s.alias is not None
-        or s.order_by is None
-        or s.limit is None
-    ):
-        return None
-    return (s.select, s.table, s.where, s.order_by, s.limit)
 
 
 # -- structural front-ends for the planner's TEXT REWRITES -------------------

@@ -825,17 +825,19 @@ class KeyedParquetStore:
             reader = reader.schema(StructType.fromJson(json.loads(next(iter(sjs)))))
         d = reader.parquet(*[os.path.join(self.path, rel) for rel in deltas])
         # chain position: the CHAIN_COL literal each merge writes into
-        # its delta (data-borne, safe under any plan shape) — a
-        # SINGLE-delta chain (the steady state between folds) needs no
-        # position column at all, which trims both the driver-side
-        # construction (this method runs several times per refresh
-        # batch) and a sort key from the window below. Legacy chains
-        # whose files predate the column recover it from the file path
-        # — correct ONLY while the plan keeps one file source per
-        # stage (input_file_name's documented limitation); every fold
-        # or compact retires such chains.
+        # its delta (data-borne, safe under any plan shape), also when
+        # the members recorded different schemas (a column non-nullable
+        # in one delta and nullable in the next) — a SINGLE-delta chain
+        # (the steady state between folds) needs no position column at
+        # all, which trims both the driver-side construction (this
+        # method runs several times per refresh batch) and a sort key
+        # from the window below. Legacy chains whose files predate the
+        # column recover it from the file path — correct ONLY while the
+        # plan keeps one file source per stage (input_file_name's
+        # documented limitation); every fold or compact retires such
+        # chains.
         if len(deltas) > 1:
-            if uniform and CHAIN_COL in d.columns:
+            if CHAIN_COL in d.columns:
                 d = d.withColumn("__didx", F.col(CHAIN_COL))
             else:
                 d = d.withColumn(
