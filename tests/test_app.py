@@ -2606,8 +2606,8 @@ def test_mvapp_bag_setop_cascade(spark, tmp_path, op):
     EXCEPT ALL) maintains as a cascade. The bag view has no tuple key
     (duplicates are the semantics), so the inner exposes a hidden
     per-copy index — copies deterministically numbered 1..multiplicity
-    — and the store façade turns each tuple's multiplicity transition
-    m0→m1 into tail-copy +I/-D changelogs. Churn hits one side, the
+    — that keys its target, so a multiplicity transition m0→m1 reaches
+    the outer as tail-copy +I/-D change rows. Churn hits one side, the
     other, then BOTH in one batch (the case that catches diff-plan
     bugs), with a replay for idempotence."""
     a0 = [(i, i % 4) for i in range(20)]

@@ -1,4 +1,5 @@
-"""Per-batch Spark job counts of the two benchmark routes, pinned.
+"""Per-batch Spark job counts of the two benchmark routes, a ROLLUP view
+and an agg-over-agg cascade, pinned.
 
 Each view takes one 150-row, hash-spread orders batch (100 ``+U`` that
 move customer and price, 25 ``-D``, 25 ``+I``) — the shape perfbench's
@@ -24,8 +25,17 @@ TOPN_SQL = """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
     FROM ord_jc) t WHERE rn <= 2"""
 
+ROLLUP_SQL = """SELECT o_custkey, count(*) AS cnt
+FROM ord_jc GROUP BY ROLLUP(o_custkey)"""
+
+CASCADE_SQL = """SELECT cnt, count(*) AS n FROM (
+    SELECT o_custkey, count(*) AS cnt FROM ord_jc GROUP BY o_custkey) t
+GROUP BY cnt"""
+
 FLAGSHIP_JOBS = 10
 TOPN_JOBS = 7
+ROLLUP_JOBS = 14
+CASCADE_JOBS = 16
 
 
 def _orders(spark):
@@ -97,3 +107,19 @@ def test_topn_batch_job_count(spark, tmp_path):
     )
     assert app.maintenance_strategy == "IncrementalTopKMV"
     assert jobs == TOPN_JOBS
+
+
+def test_rollup_batch_job_count(spark, tmp_path):
+    jobs, app = _refresh_jobs(
+        spark, tmp_path, ROLLUP_SQL, {"ord_jc": (_orders(spark), ["o_orderkey"])}
+    )
+    assert app.maintenance_strategy == "IncrementalGroupingSetsMV"
+    assert jobs == ROLLUP_JOBS
+
+
+def test_agg_over_agg_cascade_batch_job_count(spark, tmp_path):
+    jobs, app = _refresh_jobs(
+        spark, tmp_path, CASCADE_SQL, {"ord_jc": (_orders(spark), ["o_orderkey"])}
+    )
+    assert app.maintenance_strategy == "CascadeMV"
+    assert jobs == CASCADE_JOBS

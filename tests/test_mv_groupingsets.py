@@ -427,6 +427,69 @@ class TestGroupingSetsKeyHaving:
             assert expn.exceptAll(got).count() == 0, tag
 
 
+def test_rollup_reads_see_a_batch_whole(spark, tmp_path, monkeypatch):
+    """A read taken right after ANY store merge of a ROLLUP batch sees
+    the view before the batch or after it, never some grouping sets at
+    one batch and others at the next. Every other merge waits on a lock
+    until that read ends, so the sets' concurrent passes cannot move
+    the view under it."""
+    import os
+    import threading
+    from collections import Counter
+
+    from tiflink_spark.app import MVApp
+    from tiflink_spark.store import KeyedParquetStore
+
+    q = "SELECT pri, st, count(*) AS n FROM {t} GROUP BY ROLLUP (pri, st)"
+    schema = "k int, pri string, st string"
+    fact = spark.createDataFrame([(i, f"p{i % 3}", f"s{i % 2}") for i in range(24)], schema)
+    root = str(tmp_path / "snap")
+    app = (
+        MVApp.builder(spark)
+        .source("f_snap", fact, pk=["k"])
+        .query(q.format(t="f_snap"))
+        .target(root)
+        .num_buckets(2)
+        .shuffle_partitions(2)
+        .build()
+    )
+    assert app.maintenance_strategy == "IncrementalGroupingSetsMV"
+    app.bootstrap()
+
+    def bag(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    # a cross-set move (new (pri) subtotal), a delete and an insert
+    batch = spark.createDataFrame(
+        [(0, "pX", "s0", "+U", 0), (1, "p1", "s1", "-D", 1), (30, "p0", "s1", "+I", 2)],
+        f"{schema}, {OP_COL} string, {SEQ_COL} long",
+    )
+    fact1 = spark.createDataFrame(
+        [(0, "pX", "s0"), (30, "p0", "s1")]
+        + [(i, f"p{i % 3}", f"s{i % 2}") for i in range(2, 24)],
+        schema,
+    )
+    fact1.createOrReplaceTempView("f_snap_after")
+    before, after = bag(app.read()), bag(spark.sql(q.format(t="f_snap_after")))
+    assert before != after
+
+    lock, seen = threading.Lock(), []
+    merge = KeyedParquetStore.merge
+
+    def spy(store, changes, batch_id):
+        with lock:
+            out = merge(store, changes, batch_id)
+            seen.append((os.path.relpath(store.path, root), bag(app.read())))
+        return out
+
+    monkeypatch.setattr(KeyedParquetStore, "merge", spy)
+    app.refresh({"f_snap": batch}, batch_id=1)
+    monkeypatch.undo()
+    torn = [path for path, got in seen if got not in (before, after)]
+    assert seen and not torn, f"reads mixing batches after merges of {torn}"
+    assert seen[-1][1] == after == bag(app.read())
+
+
 class TestGroupingSetsCascade:
     """A nested aggregate over a rollup routes as CascadeMV through the
     hidden per-set row identity (__set_row) — the bag view's true
@@ -489,7 +552,8 @@ class TestGroupingSetsCascade:
         assert app.refresh({"f_cg": b1}, batch_id=1) is False
 
         # B2: crash between the inner level and the outer level — the
-        # CascadeMV replay path recovers the delta from the version log.
+        # replay reruns the inner level, whose target merge writes the
+        # batch delta the outer level reads.
         b2 = spark.createDataFrame(
             [(2, "pX", "s1", "+U", 0)], "k int, pri string, st string, __op string, __seq long"
         )

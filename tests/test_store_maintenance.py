@@ -33,8 +33,8 @@ def test_compact_and_vacuum(spark, tmp_path):
 
 
 def test_grouping_sets_stores_reachable_by_maintenance(spark, tmp_path):
-    """compact()/vacuum() must reach every per-set sub-MV store of the
-    grouping-sets decomposition (1 shared fact + per-set state+target)."""
+    """compact()/vacuum() must reach every store of the grouping-sets
+    decomposition (1 shared fact + per-set state + the view's one target)."""
     from tiflink_spark.app import MVApp
 
     src = spark.createDataFrame(
@@ -52,11 +52,13 @@ def test_grouping_sets_stores_reachable_by_maintenance(spark, tmp_path):
     )
     app.bootstrap()
     stores = [st for ss in app._store_sets() for st in ss.all]
-    assert len(stores) == 7  # shared fact + 3 sets x (state, target)
-    # the sets are offered the shared fact instead of opening their own
-    assert not any(os.path.isdir(tmp_path / "gs_sa" / f"set{i}" / "fact") for i in range(3))
+    assert len(stores) == 5  # shared fact + 3 set states + one target
+    # the sets are offered the shared fact and a target that writes
+    # nothing instead of opening their own
+    for name in ("fact", "mv"):
+        assert not any(os.path.isdir(tmp_path / "gs_sa" / f"set{i}" / name) for i in range(3))
     app.compact()
-    assert len(app.vacuum()) == 7
+    assert len(app.vacuum()) == 5
     # still readable after maintenance
     assert app.read().count() > 0
 

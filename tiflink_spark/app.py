@@ -431,8 +431,9 @@ class _SharedMirrorStore:
 class CascadeMV(Route):
     """Two-level maintenance for ``SELECT … FROM ( <inner> ) …``: the
     inner query is maintained as its own MV, and the outer query
-    consumes the inner target's version diff as a changelog
-    (KeyedParquetStore.changes_between — the store as a CDC source).
+    consumes the rows the inner target's merge wrote for the batch as
+    its changelog (KeyedParquetStore.batch_delta — the store as a CDC
+    source).
     This is the single-SQL form of MV cascading (the reference chains MVs the same
     way: every MV table is itself a TiKV table another TiFlinkApp can
     consume, README.md:8-16; Flink's update-mode planner nests
@@ -447,8 +448,6 @@ class CascadeMV(Route):
     def __init__(self, inner: "MVApp", outer: "MVApp", alias: str):
         super().__init__(outer.spark, outer.stores, outer._mv.shuffle_partitions)
         self.inner, self.outer, self.alias = inner, outer, alias
-        # None for a grouping-sets outer (one keyed store per grouping
-        # set) — describe() tolerates it; reads go through outer.read().
         self.target = outer._mv.target
 
     def bootstrap(self, batch_id=0) -> None:
@@ -460,9 +459,9 @@ class CascadeMV(Route):
 
         # Split the batch between the levels: tables the inner route
         # maintains flow into it (their effect reaches the outer as the
-        # inner target's version diff); base tables the OUTER references
+        # inner target's batch delta); base tables the OUTER references
         # directly (round 7 — e.g. the theta side of a theta-over-equi
-        # tree) flow straight to the outer alongside that diff. A table
+        # tree) flow straight to the outer alongside that delta. A table
         # maintained at both levels goes to both — each keeps its own
         # store, both see the same changelog. MVApp.refresh already
         # refused tables neither level maintains.
@@ -470,28 +469,28 @@ class CascadeMV(Route):
         outer_tabs = self.outer.maintained_tables() - {self.alias}
         inner_changes = {k: v for k, v in changes.items() if k in inner_tabs}
         outer_changes = {k: v for k, v in changes.items() if k in outer_tabs}
-        tgt = self.inner._cdc_source
-        v_from = tgt.current_version()
         if inner_changes:
             self.inner.refresh(inner_changes, batch_id)
-        v_to = tgt.current_version()
-        if v_to != v_from:
+        tgt = self.inner._mv.target
+        # Build the delta on the session of the outer refresh job, so
+        # the outer route's actions on it run under that job's settings.
+        token = JOB.set(_job_settings(self.outer._mv, refresh=True))
+        try:
+            delta = tgt.batch_delta(batch_id)
+        finally:
+            JOB.reset(token)
+        if delta is not None:
             # Project through the inner query's schema PLUS the target's
-            # own key columns (a bag inner's hidden branch tag completes
-            # the true key the outer stores by); other engine-internal
-            # columns (hidden DISTINCT counts etc.) the outer must not see.
+            # own key columns (a bag inner's hidden branch tag or copy
+            # index completes the true key the outer stores by); other
+            # engine-internal columns (hidden DISTINCT counts etc.) the
+            # outer must not see.
             cols = list(
                 dict.fromkeys(
                     [f.name for f in self.inner.mv_schema.fields] + list(tgt.pk)
                 )
             )
-            # Build the delta on the session of the outer refresh job, so
-            # the outer route's actions on it run under that job's settings.
-            token = JOB.set(_job_settings(self.outer._mv, refresh=True))
-            try:
-                delta = tgt.changes_between(v_from, v_to).select(*cols, OP_COL, SEQ_COL)
-            finally:
-                JOB.reset(token)
+            delta = delta.select(*cols, OP_COL, SEQ_COL)
             outer_changes = {self.alias: delta, **outer_changes}
         if not outer_changes:
             return False
@@ -515,9 +514,6 @@ class _Routed(NamedTuple):
     stores: dict
     feed: Callable
     pk_is_unique: bool = True
-    # the store-shaped CDC façade a cascade's outer level consumes in
-    # place of the target (grouping sets, bag set ops); None: the target
-    cdc: object = None
 
 
 def _dict_feed(mv, changes, batch_id):
@@ -701,9 +697,7 @@ def _grouping_sets(c, s):
         hidden_measures=list(s.hidden), having_gcalls=list(s.having_gcalls),
         **c.kw,
     )
-    return _fact_routed(mv, s.fact, c.default_pk, s.where, s.key_exprs, unique=False)._replace(
-        cdc=mv.cascade_target
-    )
+    return _fact_routed(mv, s.fact, c.default_pk, s.where, s.key_exprs, unique=False)
 
 
 # Global (no GROUP BY) aggregate — the dashboard total, keyed by a
@@ -989,7 +983,7 @@ def _setop(c, s):
     stores = {s.left: mv._sides["a"].fact_store, s.right: mv._sides["b"].fact_store}
     return _Routed(
         mv, c.default_pk if bag else list(s.out_cols), frozenset(stores), stores,
-        _dict_feed, not bag, mv.cascade_target if bag else None,
+        _dict_feed, not bag,
     )
 
 
@@ -1307,7 +1301,7 @@ class MVApp:
 
     def _plan_cascade(self, c: _Ctx, ns, sources) -> _Routed | None:
         """Two-level nesting: SELECT … FROM ( <inner> ) … — an inner MV
-        feeding an outer MV through the store's version-diff changelog
+        feeding an outer MV through the inner target's batch delta
         (CascadeMV). None unless BOTH levels route incrementally."""
         inner_sql, alias, outer_sql = ns
         target, num_buckets = c.stores.root, c.stores.num_buckets
@@ -1333,7 +1327,8 @@ class MVApp:
                 c.spark.sql(inner_sql) if unique else inner_app._mv.cascade_relation()
             )
             if placeholder is not None:
-                inner_key = inner_app.mv_pk if unique else list(inner_app._cdc_source.pk)
+                tgt = inner_app._mv.target
+                inner_key = inner_app.mv_pk if unique else list(tgt.pk)
                 outer_sources = {alias: (placeholder, inner_key)}
                 # The outer level may reference BASE tables besides
                 # the derived one (round 7: one theta edge over an
@@ -1363,15 +1358,12 @@ class MVApp:
                         outer_sources[n2] = (df2, list(spec2.pk))
                 # The inner TARGET can stand in for the outer's mirror
                 # of the derived table (see _SharedMirrorStore) when it
-                # is one plain store keyed like the relation the outer
-                # consumes — not a composite façade (grouping sets, bag
-                # set ops). The outer route takes the offer only where
-                # it merges the alias's changelog verbatim.
-                tgt = inner_app._cdc_source
+                # is keyed like the relation the outer consumes. The
+                # outer route takes the offer only where it merges the
+                # alias's changelog verbatim.
                 mirrors = (
                     {alias: _SharedMirrorStore(tgt, placeholder.columns)}
-                    if isinstance(tgt, KeyedParquetStore)
-                    and [k.lower() for k in inner_key] == [k.lower() for k in tgt.pk]
+                    if [k.lower() for k in inner_key] == [k.lower() for k in tgt.pk]
                     else {}
                 )
                 outer_app = MVApp(
@@ -1490,9 +1482,9 @@ class MVApp:
         # a non-maintainable HAVING — emits subtotal rows with NULL
         # grouping keys, which the first-output-column PK default
         # (TiFlinkApp.java:276-281) would crash on at store load. Such
-        # views diff as BAGS: multiplicity transitions keyed by a hidden
-        # null-safe row encoding + copy index (same shape as the setop
-        # cascade façade's (tuple, __copy) contract).
+        # views diff as BAGS: one row per copy, keyed by a hidden
+        # null-safe row encoding + copy index (the bag set ops'
+        # (tuple, __copy) layout).
         bag = c.pk is None and bool(
             re.search(r"(?is)\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", c.query)
         )
@@ -1517,7 +1509,7 @@ class MVApp:
         """Introspection snapshot: how the view is maintained and where
         it stands — the engine-side answer to the reference's
         coordinator visibility (txn table, GrpcService.java:40-160)."""
-        target = self._mv.target
+        target = self._mv.target  # None until a recompute route bootstraps
         strategy = self.maintenance_strategy
         if isinstance(self._mv, CascadeMV):
             strategy = (
@@ -1550,13 +1542,6 @@ class MVApp:
                 target.recent_commits() if target is not None else []
             ),
         }
-
-    @property
-    def _cdc_source(self):
-        """What a cascade's outer level consumes as this view's
-        changelog source: the route's store-shaped façade when it has
-        one (grouping sets, bag set ops), else its target store."""
-        return self._route.cdc if self._route.cdc is not None else self._mv.target
 
     def _store_sets(self) -> list[StoreSet]:
         """The StoreSets holding this view's stores: its own, or for a

@@ -38,7 +38,6 @@ from tiflink_spark.catalog import Catalog, default_pk
 from tiflink_spark.changelog import (
     OP_COL,
     OP_DELETE,
-    OP_INSERT,
     OP_UPDATE,
     SEQ_COL,
     diff_states,
@@ -171,11 +170,15 @@ def _maintenance(fn):
 class Route:
     """What every maintenance route is to the view that owns it.
 
-    A route keeps one query result current in its ``target`` store
-    (None where the result spans several stores: grouping sets). It
-    opens every keyed store through the view's ``stores``
-    (:class:`~tiflink_spark.store.StoreSet`); ``shuffle_partitions`` is
-    its job sizing (see :func:`_maintenance`). It provides:
+    A route keeps one query result current in ONE ``target`` store,
+    merged once per batch (a recompute route opens it at bootstrap).
+    What that merge wrote is the batch's change rows of the view: a
+    cascade's outer level consumes them as its changelog
+    (``target.batch_delta(batch_id)``), and a read of the view sees a
+    batch whole or not at all. It opens every keyed store through the
+    view's ``stores`` (:class:`~tiflink_spark.store.StoreSet`);
+    ``shuffle_partitions`` is its job sizing (see :func:`_maintenance`).
+    It provides:
 
     - ``bootstrap(batch_id=0)`` and a ``refresh(..., batch_id)`` taking
       the route's changelogs, both wrapped in :func:`_maintenance`.
@@ -216,10 +219,10 @@ class RecomputeMV(Route):
     all: a grouping-body query past the incremental matcher (multi-table
     ROLLUP, CUBE(7)+) emits subtotal rows whose grouping keys are NULL,
     so even the first-column default crashes the keyed store. The view
-    is maintained as a BAG: per-batch diff compares old/new tuple
-    multiplicities and emits tail-copy +I/-D transitions, the same
-    (tuple, __copy) contract the set-op cascade façade proved out
-    (_SetOpBagCascadeTarget.changes_between).
+    is maintained as a BAG: one row per copy, copies numbered
+    1..multiplicity, so a refresh diffs old and new rows by that key
+    (``diff_states``) like any keyed view — a multiplicity change adds
+    or drops tail copies, the bag set ops' (tuple, __copy) contract.
     """
 
     BAG_ID = "__row_id"
@@ -240,7 +243,6 @@ class RecomputeMV(Route):
         self.query = query
         self._declared_pk = pk
         self._bag = bag
-        self._out_cols: list[str] | None = None
         # keyed by the query's result schema: opened at bootstrap
         self.target: KeyedParquetStore | None = None
 
@@ -259,32 +261,22 @@ class RecomputeMV(Route):
             store.read().coalesce(1 << 30).createOrReplaceTempView(name)
         return ms.sql(self.query)
 
-    def _bag_counts(self, result: DataFrame) -> DataFrame:
-        """Distinct tuples + multiplicity ``__m``, each encoded
-        null-safely into one non-NULL string key ``__row_id`` (NULL →
-        \\x00 sentinel, same reasoning as the grouping-sets route's
-        ``__set_row``)."""
+    def _bag_rows(self, result: DataFrame) -> DataFrame:
+        """The result as copy-indexed keyed rows: each distinct tuple,
+        encoded null-safely into one non-NULL string key ``__row_id``
+        (NULL → \\x00 sentinel, same reasoning as the grouping-sets
+        route's ``__set_row``), exploded into copies 1..multiplicity so
+        (``__row_id``, ``__copy``) is a true unique key."""
         out = list(result.columns)
-        counts = result.groupBy(*out).agg(F.count(F.lit(1)).alias("__m"))
         parts = [
-            F.when(F.col(c).isNull(), F.lit("\x00")).otherwise(
-                F.col(c).cast("string")
-            )
+            F.when(F.col(c).isNull(), F.lit("\x00")).otherwise(F.col(c).cast("string"))
             for c in out
         ]
-        return counts.withColumn(self.BAG_ID, F.concat_ws("\x1f", *parts))
-
-    def _bag_rows(self, result: DataFrame) -> DataFrame:
-        """Tuple multiplicities → copy-indexed keyed rows: explode
-        copies 1..multiplicity so (``__row_id``, ``__copy``) is a true
-        unique key."""
-        out = list(result.columns)
         return (
-            self._bag_counts(result)
-            .withColumn(
-                self.BAG_COPY,
-                F.explode(F.sequence(F.lit(1), F.col("__m").cast("int"))),
-            )
+            result.groupBy(*out)
+            .agg(F.count(F.lit(1)).alias("__m"))
+            .withColumn(self.BAG_ID, F.concat_ws("\x1f", *parts))
+            .withColumn(self.BAG_COPY, F.explode(F.sequence(F.lit(1), F.col("__m").cast("int"))))
             .select(*out, self.BAG_ID, self.BAG_COPY)
         )
 
@@ -292,57 +284,12 @@ class RecomputeMV(Route):
     def bootstrap(self, batch_id=0) -> None:
         result = self._run_query()
         if self._bag:
-            self._out_cols = list(result.columns)
             self.target = self.stores.open("mv", [self.BAG_ID, self.BAG_COPY])
             self.target.bootstrap(self._bag_rows(result), batch_id)
             return
         pk = default_pk(result.schema, self._declared_pk)
         self.target = self.stores.open("mv", pk)
         self.target.bootstrap(result, batch_id)
-
-    def _bag_diff(self, old: DataFrame, new: DataFrame) -> DataFrame:
-        """Multiplicity-transition changelog: old vs new tuple counts,
-        joined on the row encoding, tail copies lo+1..hi emitted +I
-        when the count grew and -D when it shrank — the single-pass
-        shape _SetOpBagCascadeTarget.changes_between uses (a union of
-        two filtered explode branches over one full-outer join was
-        measured to miscompile there; keep this form)."""
-        out = list(self._out_cols or [])
-        old_m = old.groupBy(self.BAG_ID).agg(
-            F.count(F.lit(1)).alias("__m0"),
-            *[F.first(F.col(c)).alias(f"__o{i}") for i, c in enumerate(out)],
-        )
-        new_m = self._bag_counts(new).select(
-            F.col(self.BAG_ID),
-            F.col("__m").cast("int").alias("__m1"),
-            *[F.col(c).alias(f"__n{i}") for i, c in enumerate(out)],
-        )
-        j = old_m.join(new_m, self.BAG_ID, "full_outer").select(
-            F.col(self.BAG_ID),
-            # identical values on both sides by construction (the
-            # encoding is injective per schema) — coalesce picks
-            # whichever side exists
-            *[
-                F.coalesce(F.col(f"__n{i}"), F.col(f"__o{i}")).alias(c)
-                for i, c in enumerate(out)
-            ],
-            F.coalesce(F.col("__m0"), F.lit(0)).cast("int").alias("__m0"),
-            F.coalesce(F.col("__m1"), F.lit(0)).cast("int").alias("__m1"),
-        )
-        lo = F.least(F.col("__m0"), F.col("__m1"))
-        hi = F.greatest(F.col("__m0"), F.col("__m1"))
-        return (
-            j.filter(F.col("__m0") != F.col("__m1"))
-            .withColumn(self.BAG_COPY, F.explode(F.sequence(lo + 1, hi)))
-            .withColumn(
-                OP_COL,
-                F.when(
-                    F.col("__m1") > F.col("__m0"), F.lit(OP_INSERT)
-                ).otherwise(F.lit(OP_DELETE)),
-            )
-            .select(*out, self.BAG_ID, self.BAG_COPY, OP_COL)
-            .withColumn(SEQ_COL, F.monotonically_increasing_id())
-        )
 
     @_maintenance
     def refresh(self, changes: dict[str, DataFrame], batch_id) -> bool:
@@ -357,11 +304,8 @@ class RecomputeMV(Route):
         old = self.target.read()
         new = self._run_query()
         if self._bag:
-            self._out_cols = list(new.columns)
-            mv_changes = self._bag_diff(old, new)
-        else:
-            mv_changes = diff_states(old, new, self.target.pk)
-        self.target.merge(mv_changes, batch_id)
+            new = self._bag_rows(new)
+        self.target.merge(diff_states(old, new, self.target.pk), batch_id)
         return True
 
     def read(self, version: int | None = None) -> DataFrame:
@@ -2447,19 +2391,21 @@ class IncrementalSetOpMV(Route):
     side A and (INTERSECT) live / (EXCEPT) dead on side B. The ALL
     variants evaluate the tuple's MULTIPLICITY from the same counts —
     SQL's bag semantics: INTERSECT ALL emits min(cnt_a, cnt_b) copies,
-    EXCEPT ALL emits max(cnt_a − cnt_b, 0) — held as a hidden
-    ``__mult`` column in the keyed target and expanded by ``read()``
-    (the store stays keyed by the tuple; multiplicity is data, exactly
-    Flink's update-mode representation of a bag-valued view). Per
-    batch, only the TUPLES TOUCHED by the changelog (new values plus
-    displaced old values) have their membership/multiplicity
-    re-evaluated against the two count states — work ∝ batch size,
-    with the probes pruned by semi-joins.
+    EXCEPT ALL emits max(cnt_a − cnt_b, 0) — stored as one row per
+    copy, keyed by (tuple, hidden ``__copy``) with copies numbered
+    1..multiplicity, so a multiplicity change adds or drops tail copies
+    and the target diffs like a set view's. Per batch, only the TUPLES
+    TOUCHED by the changelog (new values plus displaced old values)
+    have their membership/multiplicity re-evaluated against the two
+    count states — work ∝ batch size, with the probes pruned by
+    semi-joins.
 
     Flink's update-mode planner maintains INTERSECT/EXCEPT (ALL) with
     the same dual-count state; the reference gets it by delegation
     (TiFlinkApp.java:270).
     """
+
+    COPY_COL = "__copy"
 
     def __init__(
         self,
@@ -2507,12 +2453,10 @@ class IncrementalSetOpMV(Route):
                 stores=stores.under(tag),
                 shuffle_partitions=shuffle_partitions,
             )
-        self.target = stores.open("mv", list(out_cols))
-        if self.op in ("intersect_all", "except_all"):
-            # bag ops can feed a cascade: the store-shaped façade turns
-            # per-tuple multiplicity transitions into per-copy +I/-D
-            # changelogs keyed by (tuple, __copy) — see cascade_relation
-            self.cascade_target = _SetOpBagCascadeTarget(self)
+        self._bag = op in ("intersect_all", "except_all")
+        self.target = stores.open(
+            "mv", [*out_cols, self.COPY_COL] if self._bag else list(out_cols)
+        )
 
     def _project(self, tag: str, df: DataFrame) -> DataFrame:
         """Side rows (or a side's source-schema changelog) → the shared
@@ -2527,9 +2471,12 @@ class IncrementalSetOpMV(Route):
         return df.select(*sel)
 
     def _bag_rows(self, a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
-        """Bag-semantics rows (out_cols + hidden ``__mult`` > 0) from
-        the two sides' count states — min for INTERSECT ALL, truncated
-        difference for EXCEPT ALL (SQL's bag operators)."""
+        """Bag-semantics rows (out_cols + hidden copy index ``__copy``)
+        from the two sides' count states: min for INTERSECT ALL,
+        truncated difference for EXCEPT ALL (SQL's bag operators), each
+        tuple exploded into copies 1..multiplicity. Per-tuple
+        multiplicity is bounded by one side's per-tuple count, so the
+        sequence stays small under real duplication rates."""
         a = a_counts.select(*self.out_cols, F.col("__cnt").alias("__ca"))
         b = b_counts.select(*self.out_cols, F.col("__cnt").alias("__cb"))
         if self.op == "intersect_all":
@@ -2541,13 +2488,17 @@ class IncrementalSetOpMV(Route):
         return (
             j.withColumn("__mult", mult)
             .filter(F.col("__mult") > 0)
-            .select(*self.out_cols, "__mult")
+            .withColumn(
+                self.COPY_COL,
+                F.explode(F.sequence(F.lit(1), F.col("__mult").cast("int"))),
+            )
+            .select(*self.out_cols, self.COPY_COL)
         )
 
     def _membership(self, dirty: DataFrame) -> DataFrame:
-        """Current membership rows (bag ops: + multiplicity) for the
+        """Current membership rows (bag ops: one per copy) for the
         dirty tuples."""
-        if self.op in ("intersect_all", "except_all"):
+        if self._bag:
             a_cnt = self._sides["a"].read().join(dirty, self.out_cols, "left_semi")
             b_cnt = self._sides["b"].read().join(dirty, self.out_cols, "left_semi")
             return self._bag_rows(a_cnt, b_cnt)
@@ -2567,7 +2518,7 @@ class IncrementalSetOpMV(Route):
     def bootstrap(self, batch_id=0) -> None:
         for side in self._sides.values():
             side.bootstrap(batch_id)
-        if self.op in ("intersect_all", "except_all"):
+        if self._bag:
             rows = self._bag_rows(self._sides["a"].read(), self._sides["b"].read())
             self.target.bootstrap(rows, batch_id)
             return
@@ -2624,31 +2575,17 @@ class IncrementalSetOpMV(Route):
 
     def read(self, version: int | None = None) -> DataFrame:
         out = self.target.read(version)
-        if self.op in ("intersect_all", "except_all"):
-            # expand multiplicities back into bag rows; per-tuple
-            # multiplicity is bounded by one side's per-tuple count,
-            # so the sequence stays small under real duplication rates
-            out = out.withColumn(
-                "__i", F.explode(F.sequence(F.lit(1), F.col("__mult").cast("int")))
-            ).select(*self.out_cols)
-        return out
-
-    COPY_COL = "__copy"
+        return out.drop(self.COPY_COL) if self._bag else out
 
     def cascade_relation(self) -> DataFrame:
-        """The bag view WITH a hidden per-copy index (round 10): an
+        """The bag view WITH its hidden copy index (round 10): an
         INTERSECT ALL / EXCEPT ALL view holds duplicate tuples, so the
-        tuple alone is no key — but copies are DETERMINISTICALLY
-        numbered 1..multiplicity, so (tuple, __copy) is a TRUE unique
-        key an outer cascade level can store by. Multiplicity
-        transitions only ever add or remove the TAIL indices (m0→m1
-        adds copies m0+1..m1 or deletes m1+1..m0 — see
-        _SetOpBagCascadeTarget.changes_between), so the outer's state
-        stays consistent with this bootstrap numbering. Lazy plan over
-        the original (already WHERE-filtered) sources; same rows
-        bootstrap publishes, exactly as IncrementalUnionMV's
-        cascade_relation contract."""
-        if self.op not in ("intersect_all", "except_all"):
+        tuple alone is no key, but (tuple, __copy) is, and an outer
+        cascade level stores by it. Lazy plan over the original
+        (already WHERE-filtered) sources; the same rows bootstrap
+        publishes, exactly as IncrementalUnionMV's cascade_relation
+        contract."""
+        if not self._bag:
             return None  # a set-semantics view's tuple is a true key already
         counts = {
             tag: src.groupBy(*self.out_cols).agg(
@@ -2656,85 +2593,7 @@ class IncrementalSetOpMV(Route):
             )
             for tag, src in self._side_src.items()
         }
-        return (
-            self._bag_rows(counts["a"], counts["b"])
-            .withColumn(
-                self.COPY_COL,
-                F.explode(F.sequence(F.lit(1), F.col("__mult").cast("int"))),
-            )
-            .select(*self.out_cols, self.COPY_COL)
-        )
-
-
-class _SetOpBagCascadeTarget:
-    """IncrementalSetOpMV's multiplicity-keyed target presented as a
-    per-copy CDC source — the store-shaped façade CascadeMV drives
-    (current_version / changes_between / pk). The real store keys
-    (tuple → __mult); the façade advertises (tuple, __copy) and
-    converts each tuple's multiplicity transition m0→m1 into
-    tail-index copy changelogs:
-    +I for copies m0+1..m1, -D for copies m1+1..m0 — matching the
-    deterministic 1..mult numbering cascade_relation bootstrapped."""
-
-    def __init__(self, mv: IncrementalSetOpMV):
-        self._mv = mv
-
-    @property
-    def pk(self) -> list[str]:
-        return [*self._mv.out_cols, IncrementalSetOpMV.COPY_COL]
-
-    def current_version(self):
-        return self._mv.target.current_version()
-
-    def changes_between(self, v_from, v_to) -> DataFrame:
-        mv = self._mv
-        out = mv.out_cols
-        # only the tuples the raw store diff touched — delta-bounded
-        touched = mv.target.changes_between(v_from, v_to).select(*out).distinct()
-        old = (
-            mv.target.read(v_from)
-            .join(touched, out, "left_semi")
-            .select(*out, F.col("__mult").alias("__m0"))
-        )
-        new = (
-            mv.target.read(v_to)
-            .join(touched, out, "left_semi")
-            .select(*out, F.col("__mult").alias("__m1"))
-        )
-        j = old.join(new, out, "full_outer").select(
-            *out,
-            F.coalesce(F.col("__m0"), F.lit(0)).cast("int").alias("__m0"),
-            F.coalesce(F.col("__m1"), F.lit(0)).cast("int").alias("__m1"),
-        )
-        copy = IncrementalSetOpMV.COPY_COL
-        # ONE pass for both directions — tail copies min+1..max, +I when
-        # the multiplicity grew, -D when it shrank. (A union of two
-        # separately-filtered explode branches over the same full-outer
-        # join was measured to MISCOMPILE here: the unioned plan
-        # resolved one branch's m1 as 0 for a tuple both sides held,
-        # while either branch alone — and the bare join — computed
-        # correctly. Single-reference plans are verified sound; keep
-        # this single-pass shape.)
-        lo = F.least(F.col("__m0"), F.col("__m1"))
-        hi = F.greatest(F.col("__m0"), F.col("__m1"))
-        return (
-            j.filter(F.col("__m0") != F.col("__m1"))
-            .withColumn(copy, F.explode(F.sequence(lo + 1, hi)))
-            .withColumn(
-                OP_COL,
-                F.when(
-                    F.col("__m1") > F.col("__m0"), F.lit(OP_INSERT)
-                ).otherwise(F.lit(OP_DELETE)),
-            )
-            .select(*out, copy, OP_COL)
-            # each (tuple, copy) appears at most once per diff, so the
-            # sequence column only needs to exist, not order anything
-            .withColumn(SEQ_COL, F.monotonically_increasing_id())
-            # delta-bounded (touched tuples only): materialize lazily so
-            # the outer level's several actions re-read blocks instead
-            # of re-running the 3-chain-read full-outer plan each time
-            .localCheckpoint(eager=False)
-        )
+        return self._bag_rows(counts["a"], counts["b"])
 
 
 class IncrementalJoinAggMV(Route):
@@ -3731,9 +3590,13 @@ class IncrementalGroupingSetsMV(Route):
     (grouping set, that set's key values), exposed as one synthetic
     non-NULL identity column ``__set_row`` (subtotal rows carry NULL
     visible keys, which a keyed store must reject — same reasoning as
-    the FULL OUTER route's ``f:<pk>`` / ``d:<key>`` identity). The
-    composite per-set target stores are presented to CascadeMV as one
-    CDC source via :class:`_GroupingSetsCascadeTarget`.
+    the FULL OUTER route's ``f:<pk>`` / ``d:<key>`` identity).
+
+    The view keeps ONE target keyed by ``__set_row``: each sub-MV is
+    offered a target that writes nothing and only keeps the rows it is
+    handed (:class:`_HandedRows`); the route NULL-extends and tags
+    those rows and merges every set's change rows in one merge, so a
+    read never sees some sets at one batch and others at the next.
     """
 
     ROWID = "__set_row"
@@ -3828,18 +3691,18 @@ class IncrementalGroupingSetsMV(Route):
                 fact_pk,
                 list(s) if s else ["__g"],
                 list(self._all_measures),
-                # one fact copy for all sets
-                stores=stores.under(f"set{i}", offers={"fact": shared_fact}),
+                # one fact copy for all sets; the set's rows go to the
+                # view's one target
+                stores=stores.under(
+                    f"set{i}", offers={"fact": shared_fact, "mv": _HandedRows()}
+                ),
                 shuffle_partitions=shuffle_partitions,
                 global_group=not s,
                 target_filter=tf,
             )
             self.subs.append(sub)
         self.fact_store = shared_fact
-        # Composite CDC source over the per-set target stores — what a
-        # CascadeMV consumes instead of a (non-existent) single target.
-        self.target = None
-        self.cascade_target = _GroupingSetsCascadeTarget(self)
+        self.target = stores.open("mv", [self.ROWID])
 
     # Per-set sub-MVs maintain DISJOINT state/target stores off one
     # shared fact store, so after the shared fact write commits
@@ -3867,10 +3730,16 @@ class IncrementalGroupingSetsMV(Route):
             ]
             return [f.result() for f in futures]
 
+    def _handed_rows(self, passthrough: tuple[str, ...] = ()) -> DataFrame:
+        """The view's rows from what every sub-MV handed its target in
+        the step just run."""
+        return self._view_rows([sub.target.take() for sub in self.subs], passthrough)
+
     @_maintenance
     def bootstrap(self, batch_id=0) -> None:
         self.fact_store.bootstrap(self._fact0, batch_id)
         self._run_subs(lambda sub: sub.bootstrap(batch_id))
+        self.target.bootstrap(self._handed_rows(), batch_id)
 
     @_maintenance
     def refresh(self, changes: DataFrame, batch_id) -> bool:
@@ -3885,23 +3754,28 @@ class IncrementalGroupingSetsMV(Route):
         # localCheckpoint here was a whole extra analysis + job per
         # batch materializing the same rows the merge writes.
         changes = self.fact_store.merge(changes, batch_id).changes()
-        return any(self._run_subs(lambda sub: sub.refresh(changes, batch_id)))
+        self._run_subs(lambda sub: sub.refresh(changes, batch_id))
+        # Rows of different sets never share a __set_row (the set index
+        # is embedded), so each set's own __seq order is complete.
+        self.target.merge(self._handed_rows(passthrough=(OP_COL, SEQ_COL)), batch_id)
+        return True
 
-    def _extend(
-        self,
-        i: int,
-        s: tuple[str, ...],
-        rows: DataFrame,
-        rowid: bool = False,
-        passthrough: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """Per-set rows (sub-MV target schema: that set's keys + every
-        measure alias) → the full NULL-extended grouping-sets schema in
-        read() column order. ``rowid`` appends the synthetic per-set
+    def _view_rows(self, rows: list[DataFrame], passthrough: tuple[str, ...] = ()) -> DataFrame:
+        """Per-set rows (one frame per grouping set, in the sub-MV
+        target schema: that set's keys + every measure alias) → the
+        view's rows, unioned: NULL-extended to the full key set in
+        read() column order and tagged with the synthetic per-set
         identity ``__set_row`` = set index ⊕ null-safely-encoded key
-        values — the TRUE unique key of the bag view, which lets an
-        outer cascade level key its stores by one non-NULL column even
-        though subtotal rows carry NULL visible keys."""
+        values. The identity is the TRUE unique key of the bag view:
+        the target is keyed by it, and so is an outer cascade level's
+        store, although subtotal rows carry NULL visible keys."""
+        return functools.reduce(
+            DataFrame.unionByName,
+            [self._extend(i, s, r, passthrough) for i, (s, r) in enumerate(zip(self.sets, rows))],
+        )
+
+    def _extend(self, i: int, s: tuple[str, ...], rows: DataFrame, passthrough) -> DataFrame:
+        """One set's rows as the view's rows (see :meth:`_view_rows`)."""
         gcol = {a: c for a, c in self.grouping_items}
         gidcols = {a: cs for a, cs in self.gid_items}
         cols = []
@@ -3925,18 +3799,17 @@ class IncrementalGroupingSetsMV(Route):
                 cols.append(
                     F.lit(0 if gcol[a] in s else 1).cast("tinyint").alias(a)
                 )
-        if rowid:
-            parts = [F.lit(str(i))]
-            for k in s:
-                # The keyed sub-stores already reject NULL grouping keys,
-                # but encode null-safely anyway: concat_ws silently drops
-                # NULLs, which would alias distinct key tuples.
-                parts.append(
-                    F.when(F.col(k).isNull(), F.lit("\x00")).otherwise(
-                        F.col(k).cast("string")
-                    )
+        parts = [F.lit(str(i))]
+        for k in s:
+            # The keyed sub-stores already reject NULL grouping keys,
+            # but encode null-safely anyway: concat_ws silently drops
+            # NULLs, which would alias distinct key tuples.
+            parts.append(
+                F.when(F.col(k).isNull(), F.lit("\x00")).otherwise(
+                    F.col(k).cast("string")
                 )
-            cols.append(F.concat_ws("\x1f", *parts).alias(self.ROWID))
+            )
+        cols.append(F.concat_ws("\x1f", *parts).alias(self.ROWID))
         for c in passthrough:
             cols.append(F.col(c))
         return rows.select(*cols)
@@ -3949,78 +3822,42 @@ class IncrementalGroupingSetsMV(Route):
         bootstrap publishes (all measures incl. hidden HAVING ones,
         then the per-set NULL-substituted filter), NULL-extended and
         identity-tagged."""
-        parts = []
-        for i, (s, sub) in enumerate(zip(self.sets, self.subs)):
+        rows = []
+        for s, sub in zip(self.sets, self.subs):
             if s:
                 state = aggregate_state(self._fact0, list(s), self._all_measures)
-                rows = present_measures(state, self._all_measures)
             else:
-                state = aggregate_global_state(
-                    self._fact0.drop("__g"), self._all_measures
-                )
-                rows = present_measures(state, self._all_measures)
+                state = aggregate_global_state(self._fact0.drop("__g"), self._all_measures)
+            r = present_measures(state, self._all_measures)
             if sub.target_filter is not None:
-                rows = rows.filter(F.expr(sub.target_filter))
-            parts.append(self._extend(i, s, rows, rowid=True))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                r = r.filter(F.expr(sub.target_filter))
+            rows.append(r)
+        return self._view_rows(rows)
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Bag union of per-set rows, NULL-extended to the full key
-        set — exactly the rows `GROUP BY GROUPING SETS (...)` emits."""
-        parts = [
-            self._extend(i, s, sub.read(version))
-            for i, (s, sub) in enumerate(zip(self.sets, self.subs))
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        """The rows `GROUP BY GROUPING SETS (...)` emits: the target
+        without its row identity."""
+        return self.target.read(version).drop(self.ROWID)
 
 
-class _GroupingSetsCascadeTarget:
-    """The grouping-sets MV's per-set target stores presented as ONE
-    versioned CDC source keyed by the synthetic row identity — the
-    store-shaped façade CascadeMV drives (current_version /
-    changes_between / pk). A composite "version" is the tuple of
-    per-set store versions."""
+class _HandedRows:
+    """A grouping set's target: it writes nothing and keeps the rows
+    its IncrementalAggMV hands it (the bootstrap rows, then one
+    batch's change rows) until IncrementalGroupingSetsMV takes them
+    into the view's one target."""
 
-    def __init__(self, mv: IncrementalGroupingSetsMV):
-        self._mv = mv
+    def __init__(self):
+        self._rows = None
 
-    @property
-    def pk(self) -> list[str]:
-        return [IncrementalGroupingSetsMV.ROWID]
+    def bootstrap(self, df: DataFrame, batch_id=0) -> None:
+        self._rows = df
 
-    def current_version(self):
-        return tuple(sub.target.current_version() for sub in self._mv.subs)
+    def merge(self, changes: DataFrame, batch_id) -> None:
+        self._rows = changes
 
-    def changes_between(self, v_from, v_to) -> DataFrame:
-        mv = self._mv
-        parts = []
-        for i, (s, sub, vf, vt) in enumerate(
-            zip(mv.sets, mv.subs, v_from, v_to)
-        ):
-            if vf == vt:
-                continue
-            parts.append(
-                mv._extend(
-                    i, s, sub.target.changes_between(vf, vt),
-                    rowid=True, passthrough=(OP_COL, SEQ_COL),
-                )
-            )
-        if not parts:
-            raise RuntimeError(
-                "changes_between called with identical composite versions"
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            # Rows from different sets never share a __set_row (the set
-            # index is embedded), so per-sub __seq ordering is complete.
-            out = out.unionByName(p)
-        return out
+    def take(self) -> DataFrame:
+        rows, self._rows = self._rows, None
+        return rows
 
 
 class IncrementalAggMV(Route):
@@ -4180,6 +4017,17 @@ class IncrementalAggMV(Route):
         relation, for non-invertible dirty-group recompute); no fact
         store is written or read here, and ``fact_changes`` executes
         exactly once, inside the state merge's delta write."""
+        pinned: list[DataFrame] = []
+        try:
+            return self._refresh(
+                fact_changes, batch_id, dim_changes, old_rows, new_base, pinned
+            )
+        finally:
+            for df in pinned:
+                df.unpersist()
+
+    def _refresh(self, fact_changes, batch_id, dim_changes, old_rows, new_base, pinned) -> bool:
+        """:meth:`refresh`'s body; frames it caches go on ``pinned``."""
         parts: list[DataFrame] = []
         from concurrent.futures import ThreadPoolExecutor
 
@@ -4233,12 +4081,16 @@ class IncrementalAggMV(Route):
                 # target merge) instead of blocking the driver here for
                 # its own job — concurrent first-users may compute it
                 # twice before the blocks land (same cost as no
-                # checkpoint), every later use reads the blocks.
-                # (new_state itself stays unmaterialized — an eager
-                # checkpoint THERE cost ~40% of refresh latency, r8
-                # measurement.)
+                # cache), every later use reads the blocks. A cache,
+                # not a lazy localCheckpoint: the checkpoint's lock
+                # order (RDD vs RDDCheckpointData) deadlocked two of
+                # those overlapping jobs. Unpersisted when refresh
+                # returns. (new_state itself stays unmaterialized — an
+                # eager checkpoint THERE cost ~40% of refresh latency,
+                # r8 measurement.)
                 if fact.rows is not None and fact.rows <= CODEGEN_DELTA_ROWS:
-                    old_rows = old_rows.localCheckpoint(eager=False)
+                    old_rows = old_rows.cache()
+                    pinned.append(old_rows)
                 new_base = self.fact_store.read
             else:
                 # virtual fact: old rows and the recompute base come

@@ -624,8 +624,8 @@ class SetOpShape:
     count-per-tuple state on each side; set semantics re-evaluate
     boolean membership for the tuples each batch touches, the ALL
     variants re-evaluate the tuple's MULTIPLICITY (min of counts /
-    truncated difference of counts — SQL's bag INTERSECT/EXCEPT) held
-    in a hidden ``__mult`` column and expanded on read. Flink's
+    truncated difference of counts — SQL's bag INTERSECT/EXCEPT),
+    stored as one row per copy under a hidden ``__copy`` index. Flink's
     update-mode planner uses the same dual-count state; the reference
     gets it by delegation (TiFlinkApp.java:270)."""
 
@@ -1397,7 +1397,8 @@ def match_correlated_count_shape(
         return None
     fa, da = q.fact_alias.lower(), q.dim_alias.lower()
     sides = {qm.group(1).lower(): qm.group(2) for qm in refs}
-    if set(sides) != {fa, da}:
+    # one alias for both tables leaves the correlation unattributable
+    if fa == da or set(sides) != {fa, da}:
         return None
     fact_key, dim_corr = sides[fa], sides[da]
     pk = dim_pk.get(dim) or []
@@ -1410,7 +1411,9 @@ def match_correlated_count_shape(
     if agg is None:
         return None
     sel = [c.strip() for c in q.select.split(",")]
-    if pk[0].lower() not in [c.lower() for c in sel]:
+    sel_l = [c.lower() for c in sel]
+    # the aggregate's alias must not repeat a selected dim column
+    if pk[0].lower() not in sel_l or q.alias.lower() in sel_l:
         return None
     dim_cols = tuple(c for c in sel if c.lower() != pk[0].lower())
     return CorrelatedCountShape(
@@ -1854,6 +1857,9 @@ def match_corr_exists_shape(
     theta terms as the join residual."""
     f = _subquery_filter(query, source_names, source_columns)
     if f is None or f.term.fact_col is not None or f.term.inner is None:
+        return None
+    # an empty conjunct (``… dk = g AND``) is text Spark cannot parse
+    if "" in (_split_conjuncts(f.term.inner, keep_empty=True) or ()):
         return None
     cls = _classify_inner_conjuncts(
         f.term.inner, f.fact_alias, f.other_alias, f.fcols, f.ocols
@@ -2911,10 +2917,11 @@ def match_projection_shape(
     )
 
 
-def _split_conjuncts(expr: str) -> list[str] | None:
+def _split_conjuncts(expr: str, keep_empty: bool = False) -> list[str] | None:
     """Split ``expr`` on top-level ANDs (string-literal and paren
     aware). Returns None when a top-level OR is present — the whole
-    expression is then one disjunction and must not be torn apart."""
+    expression is then one disjunction and must not be torn apart.
+    Empty conjuncts (a dangling AND) are dropped unless ``keep_empty``."""
     parts, depth, in_str = [], 0, False
     start = 0
     i = 0
@@ -2946,7 +2953,7 @@ def _split_conjuncts(expr: str) -> list[str] | None:
     parts.append(expr[start:].strip())
     if ors:
         return None
-    return [p for p in parts if p]
+    return parts if keep_empty else [p for p in parts if p]
 
 
 def _rewrite_comma_joins(query: str, source_columns: dict[str, list[str]]) -> str:
@@ -3498,7 +3505,7 @@ def split_nested_query(query: str) -> tuple[str, str, str] | None:
     """Split ``SELECT … FROM ( <inner> ) [alias] <rest>`` into
     (inner_sql, derived_name, outer_sql) — the two-level nesting the
     cascade route decomposes into an inner MV feeding an outer MV via
-    the store's version-diff changelog. Returns None when the query is
+    the inner target's batch delta. Returns None when the query is
     not of this form (no derived table, the derived table is joined or
     comma-listed with others, or the parenthesized block is not a
     SELECT). Token-based (sqlast.nested_from_subquery): the FROM is

@@ -3057,8 +3057,8 @@ def mvapp_auto_window_multi_partition(spark: SparkSession, sf_dir: str) -> DataF
         "Two-level nested aggregate (the Q13-flavor distribution of "
         "per-customer order counts) auto-routed to CascadeMV: the inner "
         "GROUP BY maintains as its own IncrementalAggMV, and the outer "
-        "GROUP BY consumes the inner target's version diff as a "
-        "changelog (KeyedParquetStore.changes_between — the store as a CDC source). "
+        "GROUP BY consumes the inner target's batch delta as a "
+        "changelog (KeyedParquetStore.batch_delta — the store as a CDC source). "
         "Per-batch work is the inner delta plus the outer's state merge "
         "over THAT delta; neither level ever recomputes. A customer "
         "whose count moves n -> n' retracts from bucket n and adds to "
@@ -3119,7 +3119,7 @@ def mvapp_auto_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the nested form and routed through CascadeMV: inner "
         "IncrementalAggMV maintains the per-customer aggregate, outer "
         "IncrementalGlobalTopKMV maintains the top-k over the inner's "
-        "version-diff changelog (rising-bound candidate merges; full "
+        "batch-delta changelog (rising-bound candidate merges; full "
         "re-rank only when a current member's aggregate changes). The "
         "ORDER BY ranks on the exact integer count (float aggregates "
         "rank on incrementally-summed values, which can differ from a "
@@ -3284,7 +3284,7 @@ def mvapp_semijoin_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rewrite composes with the join-tree matcher, so the inner "
         "level maintains the joined aggregate by dirty-join-key "
         "re-derivation and the outer level maintains the top-k over the "
-        "aggregate's version-diff changelog. Ranking is on the exact "
+        "aggregate's batch-delta changelog. Ranking is on the exact "
         "integer count with the group key tie-break; the float revenue "
         "rides along (rounded for the cross-engine hash). Churn: fact "
         "deletes + dim group-moves that reshuffle the ranking. The fn "
@@ -3572,7 +3572,7 @@ def mvapp_auto_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "A WITH-CTE filter feeding an aggregate — normalize_query "
         "inlines the single CTE into the nested form, the cascade pairs "
         "a stateless projection inner MV with an aggregate outer MV "
-        "(inner store version-diffs become the outer's changelog), and "
+        "(the inner store's batch deltas become the outer's changelog), and "
         "the whole chain stays incremental. The fn raises unless routed "
         "to CascadeMV[IncrementalProjectionMV -> IncrementalAggMV]."
     ),
@@ -4610,8 +4610,8 @@ def mvapp_auto_gid_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "IncrementalSetOpMV: the same dual count-per-tuple state as the "
         "set variants, but the membership rule extends from boolean to "
         "the tuple's MULTIPLICITY — min(cnt_a, cnt_b) for INTERSECT "
-        "ALL, max(cnt_a - cnt_b, 0) for EXCEPT ALL — held as a hidden "
-        "__mult column in the keyed target and expanded on read. This "
+        "ALL, max(cnt_a - cnt_b, 0) for EXCEPT ALL — stored as one row "
+        "per copy, keyed by the tuple and a hidden __copy index. This "
         "completes the set-operation catalog (UNION ALL stateless, "
         "UNION/INTERSECT/EXCEPT boolean-count, the ALL variants "
         "multiplicity-count). Churn deletes whole key ranges per side "
@@ -4699,7 +4699,7 @@ def mvapp_auto_setops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the join through its PK) auto-rewritten to the nested cascade "
         "the planner maintains: inner two-sided IncrementalJoinMV keyed "
         "by both PKs, outer IncrementalAggMV fed by the inner store's "
-        "version diffs (planner.rewrite_mn_join_agg). Previously this "
+        "batch deltas (planner.rewrite_mn_join_agg). Previously this "
         "spelling fell back to full recompute — the user had to write "
         "the nesting by hand. Per-batch work = dirty-join-key recompute "
         "+ the outer merge over the inner's delta. The fn raises unless "
@@ -5625,7 +5625,7 @@ def _run_theta_tree(spark, sf_dir, query: str) -> DataFrame:
         "equi join (supplier enriched with its nation) is its own "
         "incremental MV, and the outer BAND join (acctbal BETWEEN a "
         "band's bounds — the non-equi edge) consumes the inner "
-        "target's version diff PLUS the band table's own changelog, "
+        "target's batch delta PLUS the band table's own changelog, "
         "which CascadeMV now splits per level. This is how Flink's "
         "planner shapes the same tree (equi hash-join feeding a "
         "band-predicate join, each keeping its own state; the "
@@ -5725,7 +5725,7 @@ def mvapp_auto_theta_tree_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cascade outer and recurses on the rest, so the plan is "
         "CascadeMV(inner=CascadeMV(equi join -> theta), outer=theta) "
         "— a cascade CHAIN, each theta level consuming the level "
-        "below's version diff plus its own band table's changelog "
+        "below's batch delta plus its own band table's changelog "
         "(Flink shapes the same tree as chained non-equi joins by "
         "delegation, TiFlinkApp.java:270). Churn hits every level: "
         "nation-moving + balance-moving supplier updates through the "
@@ -5861,9 +5861,9 @@ def mvapp_auto_theta_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "('bag-semantics set ops inside cascades'), closed in round "
         "10. The bag view's duplicates ARE the semantics, so there is "
         "no tuple key; the inner exposes its hidden per-copy index "
-        "(copies deterministically numbered 1..multiplicity) and a "
-        "store facade converts each tuple's multiplicity transition "
-        "m0->m1 into tail-copy +I/-D changelogs — the outer aggregate "
+        "(copies deterministically numbered 1..multiplicity) that keys "
+        "its target, so a multiplicity transition m0->m1 reaches the "
+        "outer as tail-copy +I/-D change rows — the outer aggregate "
         "keys its state by (tuple, copy) and counts every copy, "
         "exactly SQL's INTERSECT ALL min(cnt_a, cnt_b) semantics "
         "(Flink's update-mode planner represents the same bag as "
@@ -5976,7 +5976,7 @@ def mvapp_auto_cascade_bag_setop(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a derived-table aggregate joined to the dim. Routes through "
         "the round-7 cascade pass-through (inner IncrementalAggMV "
         "feeding an outer IncrementalJoinProjectionMV via the store's "
-        "version diff, with the dim's own changelog going straight to "
+        "batch delta, with the dim's own changelog going straight to "
         "the outer level). Churn hits BOTH levels: scripted order "
         "+I/-D/+U (group-moving custkey rewrites) through the inner, "
         "and dim renames + deletes through the outer (a deleted "
@@ -6674,10 +6674,10 @@ def mvapp_auto_rollup_over_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "HAVINGs take). Subtotal rows carry NULL grouping keys, so the "
         "first-output-column PK default (TiFlinkApp.java:276-281) "
         "CRASHED the keyed store before this round; the view now diffs "
-        "as a bag — old/new tuple multiplicities keyed by a hidden "
-        "null-safe row encoding + copy index, tail-copy +I/-D "
-        "transitions in the single-pass shape the set-op cascade "
-        "façade proved out. Same churn script as the cascade gate; the "
+        "as a bag — one row per copy, keyed by a hidden null-safe row "
+        "encoding + copy index, so a multiplicity change diffs as "
+        "tail-copy +I/-D rows, the bag set ops' (tuple, __copy) "
+        "layout. Same churn script as the cascade gate; the "
         "fn raises unless the bag mode engaged."
     ),
     tags=("mv", "recompute", "grouping-sets", "bag"),

@@ -613,6 +613,7 @@ def streaming_rate_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     TOTAL, KEYS = 3000, 500
     work = tempfile.mkdtemp(prefix="rate_cl_")
+    store = None
     try:
         stream = get_connector("rate-changelog").read_stream(
             spark,
@@ -649,6 +650,10 @@ def streaming_rate_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return store.read().localCheckpoint(eager=True)
     finally:
+        # a merge that reached the delta-chain bound scheduled a fold;
+        # it must land before its directory is removed
+        if store is not None:
+            store._await_fold()
         shutil.rmtree(work, ignore_errors=True)
 
 

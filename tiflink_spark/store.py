@@ -30,8 +30,9 @@ through their view's :class:`StoreSet` and then call only
 :meth:`~KeyedParquetStore.read`, :meth:`~KeyedParquetStore.read_keys`,
 :meth:`~KeyedParquetStore.read_before`,
 :meth:`~KeyedParquetStore.bootstrap_rows` and, as a cascade's CDC
-source, :meth:`~KeyedParquetStore.current_version` and
-:meth:`~KeyedParquetStore.changes_between`. ``merge`` returns a
+source, :meth:`~KeyedParquetStore.batch_delta`: a route keeps its view
+in one target store merged once per batch, so the rows that merge
+wrote are the view's changelog for the batch. ``merge`` returns a
 :class:`MergedBatch`: the batch's recorded row count, its change rows
 (``changes()``), the pre-batch rows they displaced (``displaced()``)
 and the distinct values of a column among them (``column_values()``).
@@ -651,7 +652,10 @@ class KeyedParquetStore:
         delta parquet that merge's single write action produced —
         re-read as a DataFrame (bucket column dropped); None when the
         batch wrote none, or it was vacuumed. Routes reach it through
-        :meth:`MergedBatch.changes`."""
+        :meth:`MergedBatch.changes`; a cascade's outer level reads the
+        inner target's as its changelog (the store as a CDC SOURCE —
+        the reference chains MVs the same way: every MV table is itself
+        a TiKV table another TiFlinkApp can consume, README.md:8-16)."""
         found = self._batch_delta_dir(batch_id)
         if found is None:
             return None
@@ -760,13 +764,11 @@ class KeyedParquetStore:
 
     def changes_between(self, from_version: int | None, to_version: int) -> DataFrame:
         """The upsert changelog (+I/+U/-D with __seq) that transforms one
-        committed version into a later one — the store as a CDC SOURCE.
-
-        This is what lets MVs cascade: a downstream MV consumes the diff
-        of an upstream MV's target store exactly like any other
-        changelog (the reference chains MVs the same way — every MV
-        table is itself a TiKV table another TiFlinkApp can consume,
-        README.md:8-16)."""
+        committed version into a later one: a full outer join of the two
+        versions, so its cost grows with the table, not the change. A
+        consumer that follows the store batch by batch (a cascade's
+        outer level) reads :meth:`batch_delta` instead; this diff is for
+        a reader catching up across versions it did not follow."""
         from tiflink_spark.changelog import diff_states, with_insert_ops
 
         new = self.read(to_version)
