@@ -3704,7 +3704,7 @@ class IncrementalGroupingSetsMV(Route):
         self.fact_store = shared_fact
         self.target = stores.open("mv", [self.ROWID])
 
-    # Per-set sub-MVs maintain DISJOINT state/target stores off one
+    # Per-set sub-MVs maintain DISJOINT state stores off one
     # shared fact store, so after the shared fact write commits
     # (serially — every sub's own attempt then replays it) the |sets|
     # maintenance passes are independent and run CONCURRENTLY. This is
