@@ -34,7 +34,7 @@ GROUP BY cnt"""
 
 FLAGSHIP_JOBS = 10
 TOPN_JOBS = 7
-ROLLUP_JOBS = 14
+ROLLUP_JOBS = 9
 CASCADE_JOBS = 16
 
 

@@ -2,7 +2,14 @@
 
 import pytest
 
-from tiflink_spark.changelog import OP_COL, OP_DELETE, OP_INSERT, OP_UPDATE, SEQ_COL
+from tiflink_spark.changelog import (
+    OP_COL,
+    OP_DELETE,
+    OP_INSERT,
+    OP_UPDATE,
+    SEQ_COL,
+    diff_states,
+)
 from tiflink_spark.store import KeyedParquetStore
 
 
@@ -68,10 +75,10 @@ def test_bucket_pruned_merge_rewrites_only_touched_buckets(spark, store):
     assert unchanged >= len(after) - 1  # at most one bucket rewritten
 
 
-def test_changes_between_versions_roundtrip(spark, tmp_path):
-    """store.changes_between(v1, v2) replayed onto the v1 state must
-    reproduce v2 exactly — the MV-cascade edge contract."""
-    from tiflink_spark.changelog import OP_COL, SEQ_COL, merge_changes
+def test_version_diff_roundtrip(spark, tmp_path):
+    """The diff of two committed versions (diff_states) replayed onto
+    the older one must reproduce the newer exactly."""
+    from tiflink_spark.changelog import merge_changes, with_insert_ops
     from tiflink_spark.store import KeyedParquetStore
 
     st = KeyedParquetStore(spark, str(tmp_path / "s"), ["k"], num_buckets=2)
@@ -86,14 +93,31 @@ def test_changes_between_versions_roundtrip(spark, tmp_path):
     )
     v2 = st.current_version()
 
-    diff = st.changes_between(v1, v2)
+    diff = diff_states(st.read(v1), st.read(v2), ["k"])
     replayed = merge_changes(st.read(v1), diff, ["k"])
     assert {(r.k, r.v) for r in replayed.collect()} == {
         (r.k, r.v) for r in st.read(v2).collect()
     }
-    # bootstrap-diff form: from_version=None yields an all-insert changelog
-    full = st.changes_between(None, v2)
+    # a diff from nothing is an all-insert changelog
+    full = with_insert_ops(st.read(v2))
     assert {r[0] for r in full.select(OP_COL).distinct().collect()} == {"+I"}
+
+
+def test_bootstrap_refuses_a_store_written_with_another_key(spark, tmp_path):
+    """A store reopened with a key column its committed schema lacks (a
+    view's layout from before a key change) refuses to attach instead
+    of merging rows keyed by a column the base does not hold."""
+    path = str(tmp_path / "s")
+    KeyedParquetStore(spark, path, ["k"], num_buckets=2).bootstrap(
+        spark.createDataFrame([(1, 3)], "k int, mult int")
+    )
+    reopened = KeyedParquetStore(spark, path, ["k", "copy"], num_buckets=2)
+    with pytest.raises(ValueError, match="no key column"):
+        reopened.bootstrap(spark.createDataFrame([(1, 1)], "k int, copy int"))
+    # the same key attaches as before
+    assert not KeyedParquetStore(spark, path, ["K"], num_buckets=2).bootstrap(
+        spark.createDataFrame([(1, 3)], "k int, mult int")
+    )
 
 
 def test_auto_num_buckets_scales_with_table_size():
@@ -144,7 +168,7 @@ def test_merge_on_read_delta_chain(spark, store):
     files (base buckets untouched) until the chain hits
     MAX_PENDING_DELTAS, when the merge FOLDS — rewriting exactly the
     touched buckets and clearing the chain. Reads, time travel,
-    changes_between, replay idempotence, and vacuum all reconcile the
+    version diffs, replay idempotence, and vacuum all reconcile the
     chain exactly."""
     store.bootstrap(
         spark.createDataFrame([(i, "x") for i in range(1, 101)], "k int, v string")
@@ -168,7 +192,8 @@ def test_merge_on_read_delta_chain(spark, store):
     v2 = {r.k: r.v for r in store.read(2).collect()}
     assert v2[1] == "A" and v2[2] == "x" and v2[101] == "new" and len(v2) == 101
     # CDC diff across delta-carrying versions
-    ops = {r.k: r[OP_COL] for r in store.changes_between(2, 4).collect()}
+    diff = diff_states(store.read(2), store.read(4), store.pk)
+    ops = {r.k: r[OP_COL] for r in diff.collect()}
     assert ops.get(3) == OP_DELETE and ops.get(2) == OP_UPDATE
     # 5th merge trips the chain bound: the BATCH commits as a plain
     # delta (compaction never sits on a batch's latency) and schedules

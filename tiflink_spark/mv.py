@@ -38,6 +38,7 @@ from tiflink_spark.catalog import Catalog, default_pk
 from tiflink_spark.changelog import (
     OP_COL,
     OP_DELETE,
+    OP_INSERT,
     OP_UPDATE,
     SEQ_COL,
     diff_states,
@@ -284,10 +285,9 @@ class RecomputeMV(Route):
     def bootstrap(self, batch_id=0) -> None:
         result = self._run_query()
         if self._bag:
-            self.target = self.stores.open("mv", [self.BAG_ID, self.BAG_COPY])
-            self.target.bootstrap(self._bag_rows(result), batch_id)
-            return
-        pk = default_pk(result.schema, self._declared_pk)
+            pk, result = [self.BAG_ID, self.BAG_COPY], self._bag_rows(result)
+        else:
+            pk = default_pk(result.schema, self._declared_pk)
         self.target = self.stores.open("mv", pk)
         self.target.bootstrap(result, batch_id)
 
@@ -311,9 +311,7 @@ class RecomputeMV(Route):
     def read(self, version: int | None = None) -> DataFrame:
         assert self.target is not None
         out = self.target.read(version)
-        if self._bag:
-            return out.drop(self.BAG_ID, self.BAG_COPY)
-        return out
+        return out.drop(self.BAG_ID, self.BAG_COPY) if self._bag else out
 
 
 class IncrementalJoinMV(Route):
@@ -2393,8 +2391,8 @@ class IncrementalSetOpMV(Route):
     SQL's bag semantics: INTERSECT ALL emits min(cnt_a, cnt_b) copies,
     EXCEPT ALL emits max(cnt_a − cnt_b, 0) — stored as one row per
     copy, keyed by (tuple, hidden ``__copy``) with copies numbered
-    1..multiplicity, so a multiplicity change adds or drops tail copies
-    and the target diffs like a set view's. Per batch, only the TUPLES
+    1..multiplicity, so a multiplicity change adds or drops tail copies:
+    a batch writes only the copies that change. Per batch, only the TUPLES
     TOUCHED by the changelog (new values plus displaced old values)
     have their membership/multiplicity re-evaluated against the two
     count states — work ∝ batch size, with the probes pruned by
@@ -2470,13 +2468,10 @@ class IncrementalSetOpMV(Route):
         sel += [F.col(c) for c in (OP_COL, SEQ_COL) if c in df.columns]
         return df.select(*sel)
 
-    def _bag_rows(self, a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
-        """Bag-semantics rows (out_cols + hidden copy index ``__copy``)
-        from the two sides' count states: min for INTERSECT ALL,
-        truncated difference for EXCEPT ALL (SQL's bag operators), each
-        tuple exploded into copies 1..multiplicity. Per-tuple
-        multiplicity is bounded by one side's per-tuple count, so the
-        sequence stays small under real duplication rates."""
+    def _mults(self, a_counts: DataFrame, b_counts: DataFrame, name="__mult") -> DataFrame:
+        """Per-tuple bag multiplicity ``name`` > 0 from the two sides'
+        count states: min for INTERSECT ALL, truncated difference for
+        EXCEPT ALL (SQL's bag operators)."""
         a = a_counts.select(*self.out_cols, F.col("__cnt").alias("__ca"))
         b = b_counts.select(*self.out_cols, F.col("__cnt").alias("__cb"))
         if self.op == "intersect_all":
@@ -2485,34 +2480,62 @@ class IncrementalSetOpMV(Route):
         else:  # except_all
             j = a.join(b, self.out_cols, "left")
             mult = F.col("__ca") - F.coalesce(F.col("__cb"), F.lit(0))
-        return (
-            j.withColumn("__mult", mult)
-            .filter(F.col("__mult") > 0)
-            .withColumn(
-                self.COPY_COL,
-                F.explode(F.sequence(F.lit(1), F.col("__mult").cast("int"))),
-            )
-            .select(*self.out_cols, self.COPY_COL)
+        return j.select(*self.out_cols, mult.alias(name)).filter(F.col(name) > 0)
+
+    def _bag_rows(self, a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
+        """Bag-semantics rows (out_cols + hidden copy index ``__copy``):
+        each tuple exploded into copies 1..multiplicity."""
+        copies = F.explode(F.sequence(F.lit(1), F.col("__mult").cast("int")))
+        return self._mults(a_counts, b_counts).select(
+            *self.out_cols, copies.alias(self.COPY_COL)
         )
 
-    def _membership(self, dirty: DataFrame) -> DataFrame:
-        """Current membership rows (bag ops: one per copy) for the
-        dirty tuples."""
-        if self._bag:
-            a_cnt = self._sides["a"].read().join(dirty, self.out_cols, "left_semi")
-            b_cnt = self._sides["b"].read().join(dirty, self.out_cols, "left_semi")
-            return self._bag_rows(a_cnt, b_cnt)
-        a_live = self._sides["a"].read().select(*self.out_cols)
-        b_live = self._sides["b"].read().select(*self.out_cols)
-        if self.op == "union":
-            # set-semantics UNION: present on EITHER side
-            return dirty.join(
-                a_live.unionByName(b_live), self.out_cols, "left_semi"
+    def _bag_changes(self, dirty: DataFrame, batch_id) -> DataFrame:
+        """The dirty tuples' copy changes: multiplicity m0 from the
+        sides' count states before the batch, m1 from the current ones;
+        copies min+1..max are inserted when it grew and deleted when it
+        shrank, so work ∝ changed copies, not copies held. One pass for
+        both directions: a union of two filtered explodes over one full
+        outer join was measured to miscompile."""
+
+        def mults(read, name):
+            a, b = (
+                read(self._sides[t].target).join(dirty, self.out_cols, "left_semi")
+                for t in "ab"
             )
-        in_a = dirty.join(a_live, self.out_cols, "left_semi")
-        if self.op == "intersect":
-            return in_a.join(b_live, self.out_cols, "left_semi")
-        return in_a.join(b_live, self.out_cols, "left_anti")
+            return self._mults(a, b, name)
+
+        j = mults(lambda st: st.read_before(batch_id), "__m0").join(
+            mults(lambda st: st.read(), "__m1"), self.out_cols, "full_outer"
+        ).na.fill(0, ["__m0", "__m1"])
+        m0, m1 = F.col("__m0").cast("int"), F.col("__m1").cast("int")
+        return (
+            j.filter(m0 != m1)
+            .select(
+                *self.out_cols,
+                F.explode(F.sequence(F.least(m0, m1) + 1, F.greatest(m0, m1))).alias(
+                    self.COPY_COL
+                ),
+                F.when(m1 > m0, F.lit(OP_INSERT)).otherwise(F.lit(OP_DELETE)).alias(OP_COL),
+            )
+            # each (tuple, copy) appears once: the sequence orders nothing
+            .withColumn(SEQ_COL, F.monotonically_increasing_id())
+        )
+
+    def _set_rows(self, dirty: DataFrame | None = None) -> DataFrame:
+        """The set-semantics view's rows: all of them, or only the dirty
+        tuples'."""
+        a = self._sides["a"].read().select(*self.out_cols)
+        b = self._sides["b"].read().select(*self.out_cols)
+        if self.op == "union":  # present on EITHER side
+            both = a.unionByName(b)
+            if dirty is None:
+                return both.distinct()
+            return dirty.join(both, self.out_cols, "left_semi")
+        if dirty is not None:
+            a = dirty.join(a, self.out_cols, "left_semi")
+        how = "left_semi" if self.op == "intersect" else "left_anti"
+        return a.join(b, self.out_cols, how)
 
     @_maintenance
     def bootstrap(self, batch_id=0) -> None:
@@ -2520,16 +2543,8 @@ class IncrementalSetOpMV(Route):
             side.bootstrap(batch_id)
         if self._bag:
             rows = self._bag_rows(self._sides["a"].read(), self._sides["b"].read())
-            self.target.bootstrap(rows, batch_id)
-            return
-        a = self._sides["a"].read().select(*self.out_cols)
-        b = self._sides["b"].read().select(*self.out_cols)
-        if self.op == "union":
-            rows = a.unionByName(b).distinct()
-        elif self.op == "intersect":
-            rows = a.join(b, self.out_cols, "left_semi")
         else:
-            rows = a.join(b, self.out_cols, "left_anti")
+            rows = self._set_rows()
         self.target.bootstrap(rows, batch_id)
 
     def _dirty_tuples(self, side) -> DataFrame:
@@ -2567,9 +2582,12 @@ class IncrementalSetOpMV(Route):
             dirty = dirty.unionByName(p)
         dirty = dirty.distinct().localCheckpoint(eager=True)
 
-        live = self._membership(dirty)
-        old_rows = self.target.read().join(dirty, self.out_cols, "left_semi")
-        mv_changes = diff_states(old_rows, live, self.target.pk)
+        if self._bag:
+            mv_changes = self._bag_changes(dirty, batch_id)
+        else:
+            live = self._set_rows(dirty)
+            old_rows = self.target.read().join(dirty, self.out_cols, "left_semi")
+            mv_changes = diff_states(old_rows, live, self.target.pk)
         self.target.merge(mv_changes, batch_id)
         return True
 
@@ -4017,17 +4035,6 @@ class IncrementalAggMV(Route):
         relation, for non-invertible dirty-group recompute); no fact
         store is written or read here, and ``fact_changes`` executes
         exactly once, inside the state merge's delta write."""
-        pinned: list[DataFrame] = []
-        try:
-            return self._refresh(
-                fact_changes, batch_id, dim_changes, old_rows, new_base, pinned
-            )
-        finally:
-            for df in pinned:
-                df.unpersist()
-
-    def _refresh(self, fact_changes, batch_id, dim_changes, old_rows, new_base, pinned) -> bool:
-        """:meth:`refresh`'s body; frames it caches go on ``pinned``."""
         parts: list[DataFrame] = []
         from concurrent.futures import ThreadPoolExecutor
 
@@ -4035,272 +4042,281 @@ class IncrementalAggMV(Route):
         concurrent = False
         state_changes = None
         state_pool = state_future = None
-        if fact_changes is not None:
-            # Merge first, then ask the merged batch for the rows it
-            # displaced — read FROM BEFORE this batch's commit
-            # (versioned time travel — correct also when a shared fact
-            # store merged it already). Merging first lets the lookup
-            # use the commit's recorded batch buckets:
-            # the old rows of the changed keys live only in the buckets
-            # those keys hash into, so the lookup scans O(touched
-            # buckets), not the table — at scale the difference between
-            # a bounded probe and a full-store scan per refresh. The
-            # merge runs in a worker thread; the old-state read
-            # construction — independent of the fact store — overlaps
-            # it instead of queueing behind it.
-            if self.fact_store is not None:
-                with ThreadPoolExecutor(max_workers=1) as fact_pool:
-                    fact_merge_future = fact_pool.submit(
-                        contextvars.copy_context().run,
-                        self.fact_store.merge, fact_changes, batch_id,
-                    )
+        cached = None  # old_rows, cached below; unpersisted on every exit
+        try:
+            if fact_changes is not None:
+                # Merge first, then ask the merged batch for the rows it
+                # displaced — read FROM BEFORE this batch's commit
+                # (versioned time travel — correct also when a shared fact
+                # store merged it already). Merging first lets the lookup
+                # use the commit's recorded batch buckets:
+                # the old rows of the changed keys live only in the buckets
+                # those keys hash into, so the lookup scans O(touched
+                # buckets), not the table — at scale the difference between
+                # a bounded probe and a full-store scan per refresh. The
+                # merge runs in a worker thread; the old-state read
+                # construction — independent of the fact store — overlaps
+                # it instead of queueing behind it.
+                if self.fact_store is not None:
+                    with ThreadPoolExecutor(max_workers=1) as fact_pool:
+                        fact_merge_future = fact_pool.submit(
+                            contextvars.copy_context().run,
+                            self.fact_store.merge, fact_changes, batch_id,
+                        )
+                        old_state = self.state_store.read_before(batch_id)
+                        fact = fact_merge_future.result()
+                    # Re-bind to the merge's materialized delta: the raw
+                    # changelog lineage (often a multi-join derivation)
+                    # executed exactly once, inside the merge write; the
+                    # retraction lookup, delta aggregate, and state merge
+                    # below then scan a micro-batch-sized parquet instead
+                    # of re-running it.
+                    fact_changes = fact.changes()
+                    # Size the rest of the batch's shuffles to the measured
+                    # delta (dirty-group recompute volume is ∝ δ × group
+                    # width; DELTA_ROWS_PER_TASK keeps those tasks small).
+                    _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
+                    final = last_change_per_key(fact_changes, self.fact_pk)
+                    old_rows = fact.displaced()
+                    # Materialize the (δ-bounded) displaced-row set ONCE:
+                    # every downstream consumer — the retraction delta in
+                    # BOTH the state and target executions, and the dirty
+                    # group-key broadcasts — otherwise re-runs this bucket
+                    # chain read per job (measured 3-5 executions/batch).
+                    # Gated on the recorded delta size so a backfill-scale
+                    # batch never pins a table-scale frame in executor
+                    # memory. LAZY: the materialization rides inside the
+                    # first action that needs it (the overlapped state or
+                    # target merge) instead of blocking the driver here for
+                    # its own job — concurrent first-users may compute it
+                    # twice before the blocks land (same cost as no
+                    # cache), every later use reads the blocks. A cache,
+                    # not a lazy localCheckpoint: the checkpoint's lock
+                    # order (RDD vs RDDCheckpointData) deadlocked two of
+                    # those overlapping jobs. Unpersisted when refresh
+                    # returns. (new_state itself stays unmaterialized — an
+                    # eager checkpoint THERE cost ~40% of refresh latency,
+                    # r8 measurement.)
+                    if fact.rows is not None and fact.rows <= CODEGEN_DELTA_ROWS:
+                        old_rows = cached = old_rows.cache()
+                    new_base = self.fact_store.read
+                else:
+                    # virtual fact: old rows and the recompute base come
+                    # from the caller (the join route derives them from its
+                    # own versioned stores)
+                    if old_rows is None or new_base is None:
+                        raise ValueError(
+                            "external_fact refresh needs old_rows and new_base"
+                        )
                     old_state = self.state_store.read_before(batch_id)
-                    fact = fact_merge_future.result()
-                # Re-bind to the merge's materialized delta: the raw
-                # changelog lineage (often a multi-join derivation)
-                # executed exactly once, inside the merge write; the
-                # retraction lookup, delta aggregate, and state merge
-                # below then scan a micro-batch-sized parquet instead
-                # of re-running it.
-                fact_changes = fact.changes()
-                # Size the rest of the batch's shuffles to the measured
-                # delta (dirty-group recompute volume is ∝ δ × group
-                # width; DELTA_ROWS_PER_TASK keeps those tasks small).
-                _tune_delta_shuffle(self.shuffle_partitions, fact.rows)
-                final = last_change_per_key(fact_changes, self.fact_pk)
-                old_rows = fact.displaced()
-                # Materialize the (δ-bounded) displaced-row set ONCE:
-                # every downstream consumer — the retraction delta in
-                # BOTH the state and target executions, and the dirty
-                # group-key broadcasts — otherwise re-runs this bucket
-                # chain read per job (measured 3-5 executions/batch).
-                # Gated on the recorded delta size so a backfill-scale
-                # batch never pins a table-scale frame in executor
-                # memory. LAZY: the materialization rides inside the
-                # first action that needs it (the overlapped state or
-                # target merge) instead of blocking the driver here for
-                # its own job — concurrent first-users may compute it
-                # twice before the blocks land (same cost as no
-                # cache), every later use reads the blocks. A cache,
-                # not a lazy localCheckpoint: the checkpoint's lock
-                # order (RDD vs RDDCheckpointData) deadlocked two of
-                # those overlapping jobs. Unpersisted when refresh
-                # returns. (new_state itself stays unmaterialized — an
-                # eager checkpoint THERE cost ~40% of refresh latency,
-                # r8 measurement.)
-                if fact.rows is not None and fact.rows <= CODEGEN_DELTA_ROWS:
-                    old_rows = old_rows.cache()
-                    pinned.append(old_rows)
-                new_base = self.fact_store.read
-            else:
-                # virtual fact: old rows and the recompute base come
-                # from the caller (the join route derives them from its
-                # own versioned stores)
-                if old_rows is None or new_base is None:
-                    raise ValueError(
-                        "external_fact refresh needs old_rows and new_base"
+                    final = last_change_per_key(fact_changes, self.fact_pk)
+
+                delta = compute_delta(
+                    fact_changes,
+                    old_rows,
+                    self.fact_pk,
+                    final=final,
+                    # own-fact path built old_rows as exactly the changed-key
+                    # semi-join above, so the defensive re-prune is skipped;
+                    # external (join-route) frames keep it — their old-J
+                    # derivation has WHERE/match legs whose key set is not
+                    # locally provable to be ⊆ the changelog's keys
+                    old_rows_pruned=self.fact_store is not None,
+                )
+
+                # The delta's distinct group keys, from the CHEAPEST exact
+                # lineage: the changed rows' old ∪ new group memberships.
+                # Identical to the delta aggregate's key set (retracts are
+                # the old rows, adds are the final non-delete rows), but
+                # materializing this frame skips the delta aggregation —
+                # it feeds the state prune AND the dim lookup below, each
+                # of which would otherwise re-execute the heavy delta plan
+                # just to broadcast its keys.
+                dirty_gk = (
+                    old_rows.select(*self.group_keys)
+                    .unionByName(
+                        final.filter(F.col(OP_COL) != OP_DELETE).select(*self.group_keys)
                     )
-                old_state = self.state_store.read_before(batch_id)
-                final = last_change_per_key(fact_changes, self.fact_pk)
-
-            delta = compute_delta(
-                fact_changes,
-                old_rows,
-                self.fact_pk,
-                final=final,
-                # own-fact path built old_rows as exactly the changed-key
-                # semi-join above, so the defensive re-prune is skipped;
-                # external (join-route) frames keep it — their old-J
-                # derivation has WHERE/match legs whose key set is not
-                # locally provable to be ⊆ the changelog's keys
-                old_rows_pruned=self.fact_store is not None,
-            )
-
-            # The delta's distinct group keys, from the CHEAPEST exact
-            # lineage: the changed rows' old ∪ new group memberships.
-            # Identical to the delta aggregate's key set (retracts are
-            # the old rows, adds are the final non-delete rows), but
-            # materializing this frame skips the delta aggregation —
-            # it feeds the state prune AND the dim lookup below, each
-            # of which would otherwise re-execute the heavy delta plan
-            # just to broadcast its keys.
-            dirty_gk = (
-                old_rows.select(*self.group_keys)
-                .unionByName(
-                    final.filter(F.col(OP_COL) != OP_DELETE).select(*self.group_keys)
+                    .distinct()
                 )
-                .distinct()
-            )
 
-            new_state = merge_delta_state(
-                old_state,
-                delta,
-                new_base,  # lazy: only non-invertible measures pay it
-                self.group_keys,
-                self.measures,
-                dirty_keys=dirty_gk,
-            )
+                new_state = merge_delta_state(
+                    old_state,
+                    delta,
+                    new_base,  # lazy: only non-invertible measures pay it
+                    self.group_keys,
+                    self.measures,
+                    dirty_keys=dirty_gk,
+                )
 
-            # State store: vanished groups (__rows == 0) are deleted —
-            # except under the global shape, whose single row stays
-            # alive at the zero state (empty-input aggregate is one
-            # row, not zero rows).
-            vanish_op = (
-                F.lit(OP_UPDATE)
-                if self.global_group
-                else F.when(F.col("__rows") <= 0, F.lit(OP_DELETE)).otherwise(
+                # State store: vanished groups (__rows == 0) are deleted —
+                # except under the global shape, whose single row stays
+                # alive at the zero state (empty-input aggregate is one
+                # row, not zero rows).
+                vanish_op = (
                     F.lit(OP_UPDATE)
+                    if self.global_group
+                    else F.when(F.col("__rows") <= 0, F.lit(OP_DELETE)).otherwise(
+                        F.lit(OP_UPDATE)
+                    )
                 )
-            )
-            state_changes = new_state.withColumns(
-                {OP_COL: vanish_op, SEQ_COL: F.monotonically_increasing_id()}
-            )
-            # Fact-only own-store batches overlap the state and target
-            # merges (see the tail of this method): the target legs
-            # below then derive from the UNMATERIALIZED new-state
-            # lineage — executed a second time, concurrently, instead
-            # of waiting for the state delta to land. Safe only for
-            # order-insensitive measures (counts, integral/decimal
-            # sums, min/max, exact median): float SUM/AVG/STDDEV can
-            # diverge by ulps between the two executions because
-            # reduce-side combine order follows shuffle-fetch arrival
-            # — those shapes keep the serial form (``_concurrent_ok``).
-            # Every other shape keeps the serial form, where the state
-            # merge's delta write is the lineage's single execution
-            # point and everything downstream re-binds to the merged
-            # micro-batch parquet. (An eager localCheckpoint variant
-            # of the overlap was measured and rejected in r8: the
-            # checkpoint itself cost ~40% of refresh latency.)
-            concurrent = (
-                dim_changes is None
-                and self.fact_store is not None
-                # float SUM/AVG/STDDEV measures may differ by ulps
-                # between the two executions — those shapes keep the
-                # serial form, whose state delta write is the single
-                # execution point (see _concurrent_ok in __init__)
-                and self._concurrent_ok
-            )
-            state_rebound = False
-            if concurrent:
-                # Submit the state merge BEFORE constructing the target
-                # legs: the ~0.15s of driver-side target-plan
-                # construction below then overlaps the state write job
-                # instead of delaying it.
-                state_pool = ThreadPoolExecutor(max_workers=1)
-                state_future = state_pool.submit(
-                    contextvars.copy_context().run,
-                    self.state_store.merge, state_changes, batch_id,
+                state_changes = new_state.withColumns(
+                    {OP_COL: vanish_op, SEQ_COL: F.monotonically_increasing_id()}
                 )
-            else:
-                state = self.state_store.merge(state_changes, batch_id)
-                # a merge that wrote no delta has no cheaper re-read
-                state_rebound = bool(state.rows)
-                if state_rebound:
-                    new_state = state.changes().drop(OP_COL, SEQ_COL)
-                if self.fact_store is None:
-                    # external_fact batches (the join route, incl. dim
-                    # churn) never hit the fact-delta tune above — size
-                    # the target legs to the MEASURED state delta
-                    # instead, now that the state merge recorded it.
-                    _tune_delta_shuffle(self.shuffle_partitions, state.rows)
-
-            # Target rows for dirty groups.
-            if self.dim is None:
-                if self.global_group:
-                    parts.append(
-                        present_measures(
-                            new_state, self.measures, keep=(self.group_key,)
-                        ).withColumn(OP_COL, F.lit(OP_UPDATE))
+                # Fact-only own-store batches overlap the state and target
+                # merges (see the tail of this method): the target legs
+                # below then derive from the UNMATERIALIZED new-state
+                # lineage — executed a second time, concurrently, instead
+                # of waiting for the state delta to land. Safe only for
+                # order-insensitive measures (counts, integral/decimal
+                # sums, min/max, exact median): float SUM/AVG/STDDEV can
+                # diverge by ulps between the two executions because
+                # reduce-side combine order follows shuffle-fetch arrival
+                # — those shapes keep the serial form (``_concurrent_ok``).
+                # Every other shape keeps the serial form, where the state
+                # merge's delta write is the lineage's single execution
+                # point and everything downstream re-binds to the merged
+                # micro-batch parquet. (An eager localCheckpoint variant
+                # of the overlap was measured and rejected in r8: the
+                # checkpoint itself cost ~40% of refresh latency.)
+                concurrent = (
+                    dim_changes is None
+                    and self.fact_store is not None
+                    # float SUM/AVG/STDDEV measures may differ by ulps
+                    # between the two executions — those shapes keep the
+                    # serial form, whose state delta write is the single
+                    # execution point (see _concurrent_ok in __init__)
+                    and self._concurrent_ok
+                    # a grouping set's target writes nothing: the legs it
+                    # is handed run only in the view's merge, after this
+                    # one — serial re-binds them to the state delta
+                    # instead of running the new-state lineage again
+                    and isinstance(self.target, KeyedParquetStore)
+                )
+                state_rebound = False
+                if concurrent:
+                    # Submit the state merge BEFORE constructing the target
+                    # legs: the ~0.15s of driver-side target-plan
+                    # construction below then overlaps the state write job
+                    # instead of delaying it.
+                    state_pool = ThreadPoolExecutor(max_workers=1)
+                    state_future = state_pool.submit(
+                        contextvars.copy_context().run,
+                        self.state_store.merge, state_changes, batch_id,
                     )
                 else:
-                    live = new_state.filter(F.col("__rows") > 0)
-                    gone = new_state.filter(F.col("__rows") <= 0)
-                    upserts = present_measures(live, self.measures).withColumn(
-                        OP_COL, F.lit(OP_UPDATE)
+                    state = self.state_store.merge(state_changes, batch_id)
+                    # a merge that wrote no delta has no cheaper re-read
+                    state_rebound = bool(state.rows)
+                    if state_rebound:
+                        new_state = state.changes().drop(OP_COL, SEQ_COL)
+                    if self.fact_store is None:
+                        # external_fact batches (the join route, incl. dim
+                        # churn) never hit the fact-delta tune above — size
+                        # the target legs to the MEASURED state delta
+                        # instead, now that the state merge recorded it.
+                        _tune_delta_shuffle(self.shuffle_partitions, state.rows)
+
+                # Target rows for dirty groups.
+                if self.dim is None:
+                    if self.global_group:
+                        parts.append(
+                            present_measures(
+                                new_state, self.measures, keep=(self.group_key,)
+                            ).withColumn(OP_COL, F.lit(OP_UPDATE))
+                        )
+                    else:
+                        live = new_state.filter(F.col("__rows") > 0)
+                        gone = new_state.filter(F.col("__rows") <= 0)
+                        upserts = present_measures(live, self.measures).withColumn(
+                            OP_COL, F.lit(OP_UPDATE)
+                        )
+                        # -D rows only need the PK; measure values ride along typed.
+                        deletes = present_measures(gone, self.measures).withColumn(
+                            OP_COL, F.lit(OP_DELETE)
+                        )
+                        parts.append(upserts.unionByName(deletes))
+                else:
+                    # Dirty-dim probe keys: after a serial state merge the
+                    # materialized state delta is the cheapest source; on
+                    # the concurrent path new_state is still the heavy
+                    # unmaterialized lineage, and dirty_gk (same exact key
+                    # set, O(δ) plan) avoids executing it a third time
+                    # just to fill this broadcast.
+                    probe = (
+                        new_state.select(
+                            F.col(self.group_key).alias(self.dim_key)
+                        ).distinct()
+                        if state_rebound
+                        else dirty_gk.select(F.col(self.group_key).alias(self.dim_key))
                     )
-                    # -D rows only need the PK; measure values ride along typed.
-                    deletes = present_measures(gone, self.measures).withColumn(
-                        OP_COL, F.lit(OP_DELETE)
+                    dirty_dim = self.dim_store.read().join(
+                        F.broadcast(probe), [self.dim_key], "left_semi"
                     )
-                    parts.append(upserts.unionByName(deletes))
-            else:
-                # Dirty-dim probe keys: after a serial state merge the
-                # materialized state delta is the cheapest source; on
-                # the concurrent path new_state is still the heavy
-                # unmaterialized lineage, and dirty_gk (same exact key
-                # set, O(δ) plan) avoids executing it a third time
-                # just to fill this broadcast.
-                probe = (
-                    new_state.select(
-                        F.col(self.group_key).alias(self.dim_key)
-                    ).distinct()
-                    if state_rebound
-                    else dirty_gk.select(F.col(self.group_key).alias(self.dim_key))
-                )
-                dirty_dim = self.dim_store.read().join(
-                    F.broadcast(probe), [self.dim_key], "left_semi"
-                )
-                live_state = new_state.filter(F.col("__rows") > 0)
+                    live_state = new_state.filter(F.col("__rows") > 0)
+                    parts.append(
+                        self._mv_rows_for_state(live_state, dirty_dim).withColumn(
+                            OP_COL, F.lit(OP_UPDATE)
+                        )
+                    )
+
+            if dim_changes is not None:
+                if self.dim_store is None:
+                    raise ValueError("dim_changes on an MV without a dimension")
+                dim_changes = self.dim_store.merge(dim_changes, batch_id).changes()
+                dim_now = self.dim_store.read()
+                dirty_dk = last_change_per_key(dim_changes, [self.dim_key]).select(self.dim_key)
+                # upserted/renamed dims: rebuild their rows from current
+                # state (dirty keys δ-bounded → broadcast; the dim scan
+                # stays map-side)
+                live_dim = dim_now.join(F.broadcast(dirty_dk), [self.dim_key], "left_semi")
                 parts.append(
-                    self._mv_rows_for_state(live_state, dirty_dim).withColumn(
+                    self._mv_rows_for_state(self.state_store.read(), live_dim).withColumn(
                         OP_COL, F.lit(OP_UPDATE)
                     )
                 )
-
-        if dim_changes is not None:
-            if self.dim_store is None:
-                raise ValueError("dim_changes on an MV without a dimension")
-            dim_changes = self.dim_store.merge(dim_changes, batch_id).changes()
-            dim_now = self.dim_store.read()
-            dirty_dk = last_change_per_key(dim_changes, [self.dim_key]).select(self.dim_key)
-            # upserted/renamed dims: rebuild their rows from current
-            # state (dirty keys δ-bounded → broadcast; the dim scan
-            # stays map-side)
-            live_dim = dim_now.join(F.broadcast(dirty_dk), [self.dim_key], "left_semi")
-            parts.append(
-                self._mv_rows_for_state(self.state_store.read(), live_dim).withColumn(
-                    OP_COL, F.lit(OP_UPDATE)
+                # deleted dims: drop their MV rows (typed via existing
+                # target rows). Anti-join against the already-pruned
+                # live_dim keys, not the full dim — broadcastable build
+                # side (a broadcast anti against dim_now would ship the
+                # whole dimension).
+                deleted = dirty_dk.join(
+                    F.broadcast(live_dim.select(self.dim_key)), [self.dim_key], "left_anti"
                 )
-            )
-            # deleted dims: drop their MV rows (typed via existing
-            # target rows). Anti-join against the already-pruned
-            # live_dim keys, not the full dim — broadcastable build
-            # side (a broadcast anti against dim_now would ship the
-            # whole dimension).
-            deleted = dirty_dk.join(
-                F.broadcast(live_dim.select(self.dim_key)), [self.dim_key], "left_anti"
-            )
-            gone_rows = self.target.read().join(
-                F.broadcast(deleted), [self.dim_key], "left_semi"
-            )
-            parts.append(gone_rows.withColumn(OP_COL, F.lit(OP_DELETE)))
+                gone_rows = self.target.read().join(
+                    F.broadcast(deleted), [self.dim_key], "left_semi"
+                )
+                parts.append(gone_rows.withColumn(OP_COL, F.lit(OP_DELETE)))
 
-        if not parts:
-            return False
-        if self.target_filter is not None:
-            from tiflink_spark.changelog import apply_filter
+            if not parts:
+                return False
+            if self.target_filter is not None:
+                from tiflink_spark.changelog import apply_filter
 
-            parts = [apply_filter(p, self.target_filter) for p in parts]
-        # Later parts supersede earlier ones for the same key (the dim part
-        # carries fresher dim values than the fact part). The part index IS
-        # the sequence: explicit, rather than relying on
-        # monotonically_increasing_id growing across union legs.
-        mv_changes = parts[0].withColumn(SEQ_COL, F.lit(0).cast("long"))
-        for i, p in enumerate(parts[1:], start=1):
-            mv_changes = mv_changes.unionByName(
-                p.withColumn(SEQ_COL, F.lit(i).cast("long"))
-            )
-        if state_future is not None:
-            # state ∥ target: two δ-sized write jobs over the same
-            # deterministic lineage run side by side — per-batch wall
-            # drops by ~the smaller merge (see the comment above the
-            # serial branch). The state merge was submitted before the
-            # target legs were constructed.
-            try:
+                parts = [apply_filter(p, self.target_filter) for p in parts]
+            # Later parts supersede earlier ones for the same key (the dim part
+            # carries fresher dim values than the fact part). The part index IS
+            # the sequence: explicit, rather than relying on
+            # monotonically_increasing_id growing across union legs.
+            mv_changes = parts[0].withColumn(SEQ_COL, F.lit(0).cast("long"))
+            for i, p in enumerate(parts[1:], start=1):
+                mv_changes = mv_changes.unionByName(
+                    p.withColumn(SEQ_COL, F.lit(i).cast("long"))
+                )
+            if state_future is not None:
+                # state ∥ target: two δ-sized write jobs over the same
+                # deterministic lineage run side by side — per-batch wall
+                # drops by ~the smaller merge (see the comment above the
+                # serial branch). The state merge was submitted before the
+                # target legs were constructed.
+                try:
+                    self.target.merge(mv_changes, batch_id)
+                    state_future.result()
+                finally:
+                    state_pool.shutdown(wait=True)
+            else:
                 self.target.merge(mv_changes, batch_id)
-                state_future.result()
-            finally:
-                state_pool.shutdown(wait=True)
-        else:
-            self.target.merge(mv_changes, batch_id)
-        return True
+            return True
+        finally:
+            if cached is not None:
+                cached.unpersist()

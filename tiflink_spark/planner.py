@@ -46,7 +46,7 @@ that layer, in two stages:
      recompute for OVER functions, skew-guarded)
    - match_projection_shape → IncrementalProjectionMV (stateless Calc)
    - split_nested_query / split_group_order_limit / rewrite_mn_join_agg
-     → CascadeMV (inner MV feeding an outer MV through store diffs;
+     → CascadeMV (inner MV feeding an outer MV its batch delta;
      top-group reporting and flat M:N join-aggregates are internally
      rewritten into this nested form)
 
@@ -3383,7 +3383,7 @@ def rewrite_mn_join_agg(
 
     into the NESTED spelling the cascade route already maintains —
     inner two-sided join MV keyed by both PKs feeding an outer
-    single-table aggregate through store diffs:
+    single-table aggregate its batch delta:
 
         SELECT keys, aggs FROM (
             SELECT <both PKs + join keys + needed cols>

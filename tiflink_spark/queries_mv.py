@@ -637,8 +637,8 @@ def mv_multikey_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "MV CASCADE: an upstream join MV (orders x customer, dirty-key "
         "incremental) feeds a downstream aggregate MV through "
-        "KeyedParquetStore.changes_between — the upstream target's version diff IS the "
-        "downstream changelog, exactly how the reference chains MVs "
+        "KeyedParquetStore.batch_delta — the rows the upstream target's merge wrote "
+        "for a batch ARE the downstream changelog, exactly how the reference chains MVs "
         "(every MV table is consumable as a source, README.md:8-16). "
         "Scripted inserts + deletes flow through both stages incrementally."
     ),
@@ -699,14 +699,17 @@ def mv_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn(SEQ_COL, F.monotonically_increasing_id())
         )
         for bid, batch in (("b1", b1), ("b2", b2)):
-            v_before = join_mv.target.current_version()
             join_mv.refresh(batch, None, batch_id=bid)
-            v_after = join_mv.target.current_version()
-            # The cascade edge: upstream target diff -> downstream changelog.
-            downstream = join_mv.target.changes_between(v_before, v_after).select(
-                "o_orderkey", "custkey", "o_totalprice", OP_COL, SEQ_COL
-            )
-            agg_mv.refresh(downstream, batch_id=bid)
+            # The cascade edge: the rows the upstream target's merge
+            # wrote are the downstream changelog (none: no change).
+            downstream = join_mv.target.batch_delta(bid)
+            if downstream is not None:
+                agg_mv.refresh(
+                    downstream.select(
+                        "o_orderkey", "custkey", "o_totalprice", OP_COL, SEQ_COL
+                    ),
+                    batch_id=bid,
+                )
 
         return (
             agg_mv.read()

@@ -762,20 +762,6 @@ class KeyedParquetStore:
             base, deltas, bucket_filter=want, key_filter=key_filter
         )
 
-    def changes_between(self, from_version: int | None, to_version: int) -> DataFrame:
-        """The upsert changelog (+I/+U/-D with __seq) that transforms one
-        committed version into a later one: a full outer join of the two
-        versions, so its cost grows with the table, not the change. A
-        consumer that follows the store batch by batch (a cascade's
-        outer level) reads :meth:`batch_delta` instead; this diff is for
-        a reader catching up across versions it did not follow."""
-        from tiflink_spark.changelog import diff_states, with_insert_ops
-
-        new = self.read(to_version)
-        if from_version is None:
-            return with_insert_ops(new)
-        return diff_states(self.read(from_version), new, self.pk)
-
     def _read_base(self, commit: dict) -> DataFrame:
         paths = sorted(
             {os.path.join(self.path, rel) for rel in commit["buckets"].values()}
@@ -1007,8 +993,16 @@ class KeyedParquetStore:
         return rel
 
     def bootstrap(self, df: DataFrame, batch_id=0) -> bool:
-        """Publish the initial full state (MV bootstrap, TiFlinkApp.java:105-116)."""
+        """Publish the initial full state (MV bootstrap, TiFlinkApp.java:105-116).
+        An existing store attaches, unless it was written with another key."""
         if batch_id in self.committed_batches():
+            fields = json.loads(self._commit_at(None)["schema"])["fields"]
+            missing = set(k.lower() for k in self.pk) - {f["name"].lower() for f in fields}
+            if missing:
+                raise ValueError(
+                    f"store at {self.path} has no key column {sorted(missing)}: it was "
+                    "written with another key; delete the view and bootstrap it again"
+                )
             return False
         df = rehome(df, self.spark)  # write runs under the job's session
         if self.num_buckets is None:
